@@ -138,6 +138,16 @@ def resolution_for(n_rows: int, target: int = TARGET_CELL_OCCUPANCY) -> int:
     return max(res, 4)
 
 
+def all_finite(*cols: str) -> Column:
+    """True where every named column holds a finite number (NaN, ±inf and
+    null all fail).  Grid bounds are aggregated over such rows only, so one
+    non-finite coordinate can neither collapse nor stretch the grid."""
+    out = F.lit(True)
+    for c in cols:
+        out = out & (F.abs(F.col(c)) < F.lit(float("inf")))
+    return out
+
+
 def grid_from_points(
     df: DataFrame,
     x: str = "x",
@@ -148,11 +158,14 @@ def grid_from_points(
     """Derive the grid from data bounds — one cheap agg job (the reference's
     root-box reduce, ``/root/reference/locus/_core/r.py:103``).
 
+    Rows with a non-finite coordinate are left out of the bounds and of the
+    row count below.
+
     ``resolution=None`` picks it from the row count (same agg pass), keeping
     mean cell occupancy near ``target`` at any scale — the engine's analogue
     of the reference's ``max_children`` packing knob
     (``/root/reference/locus/r.py:37``)."""
-    row = df.agg(
+    row = df.filter(all_finite(x, y)).agg(
         F.min(x).alias("mnx"), F.max(x).alias("mxx"),
         F.min(y).alias("mny"), F.max(y).alias("mxy"),
         F.count(F.lit(1)).alias("n"),
@@ -172,7 +185,7 @@ def grid_from_boxes(
     max_y: str = "max_y",
     resolution: int = DEFAULT_RESOLUTION,
 ) -> GridSpec:
-    row = df.agg(
+    row = df.filter(all_finite(min_x, max_x, min_y, max_y)).agg(
         F.min(min_x).alias("mnx"), F.max(max_x).alias("mxx"),
         F.min(min_y).alias("mny"), F.max(max_y).alias("mxy"),
     ).collect()[0]

@@ -144,63 +144,3 @@ def sql_box_is_subset(
 def expr(sql: str) -> Column:
     """Evaluate one of the templates above on the Spark side."""
     return F.expr(sql)
-
-
-# --------------------------------------------------------------------------
-# numpy mirrors of the SQL trees above, for the kNN planner's cogrouped
-# local-top-k kernels (plans/knn.py).  Each follows the SQL expression
-# operation-for-operation: +,-,*,/ are correctly-rounded IEEE-754 doubles in
-# both engines and min/max are exact, so results stay bit-identical to the
-# Spark/DuckDB evaluation.  All arguments are broadcastable float64 arrays.
-# --------------------------------------------------------------------------
-
-import numpy as np  # noqa: E402
-
-
-def np_dist2_point_point(ax, ay, bx, by):
-    dx = ax - bx
-    dy = ay - by
-    return dx * dx + dy * dy
-
-
-def np_dist2_point_box(px, py, min_x, max_x, min_y, max_y):
-    dx = np.maximum(0.0, np.maximum(min_x - px, px - max_x))
-    dy = np.maximum(0.0, np.maximum(min_y - py, py - max_y))
-    return dx * dx + dy * dy
-
-
-def np_dist2_point_segment(px, py, x1, y1, x2, y2):
-    ex, ey = x2 - x1, y2 - y1
-    len2 = ex * ex + ey * ey
-    dot = (px - x1) * ex + (py - y1) * ey
-    with np.errstate(divide="ignore", invalid="ignore"):
-        t = np.where(len2 <= 0.0, 0.0, np.minimum(1.0, np.maximum(0.0, dot / len2)))
-    cx = x1 + t * ex
-    cy = y1 + t * ey
-    dx, dy = px - cx, py - cy
-    return dx * dx + dy * dy
-
-
-def _np_cross(ox, oy, ax, ay, bx, by):
-    return (ax - ox) * (by - oy) - (ay - oy) * (bx - ox)
-
-
-def np_dist2_segment_segment(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2):
-    d = np.minimum(
-        np.minimum(
-            np_dist2_point_segment(ax1, ay1, bx1, by1, bx2, by2),
-            np_dist2_point_segment(ax2, ay2, bx1, by1, bx2, by2),
-        ),
-        np.minimum(
-            np_dist2_point_segment(bx1, by1, ax1, ay1, ax2, ay2),
-            np_dist2_point_segment(bx2, by2, ax1, ay1, ax2, ay2),
-        ),
-    )
-    o1 = _np_cross(ax1, ay1, ax2, ay2, bx1, by1)
-    o2 = _np_cross(ax1, ay1, ax2, ay2, bx2, by2)
-    o3 = _np_cross(bx1, by1, bx2, by2, ax1, ay1)
-    o4 = _np_cross(bx1, by1, bx2, by2, ax2, ay2)
-    cross = (((o1 > 0.0) & (o2 < 0.0)) | ((o1 < 0.0) & (o2 > 0.0))) & (
-        ((o3 > 0.0) & (o4 < 0.0)) | ((o3 < 0.0) & (o4 > 0.0))
-    )
-    return np.where(cross, 0.0, d)

@@ -219,18 +219,9 @@ def box_knn_join(
         F.col("min_x"), F.col("max_x"), F.col("min_y"), F.col("max_y"),
     )
 
-    def local_d2(t, q):
-        from locus_spark.functions.metrics import np_dist2_point_box
-
-        return np_dist2_point_box(
-            q["_qx"].to_numpy()[None, :], q["_qy"].to_numpy()[None, :],
-            t["min_x"].to_numpy()[:, None], t["max_x"].to_numpy()[:, None],
-            t["min_y"].to_numpy()[:, None], t["max_y"].to_numpy()[:, None],
-        )
-
     out = generic_knn_join(
         b, b_cells, pr, k, grid, d2,
-        tie_desc_id=True, dedup=True, max_rounds=max_rounds, local_dist2=local_d2,
+        tie_desc_id=True, dedup=True, max_rounds=max_rounds,
     )
     return out.select("qid", *BOX_COLS, "dist2", "rn")
 

@@ -170,15 +170,9 @@ def knn_join(
     )
     d2 = dist2_point_point(F.col("x"), F.col("y"), F.col("_qx"), F.col("_qy"))
 
-    def local_d2(targets_pdf, probes_pdf):
-        # same IEEE mult/add tree as dist2_point_point → bit-identical float64
-        dx = targets_pdf["x"].to_numpy()[:, None] - probes_pdf["_qx"].to_numpy()[None, :]
-        dy = targets_pdf["y"].to_numpy()[:, None] - probes_pdf["_qy"].to_numpy()[None, :]
-        return dx * dx + dy * dy
-
     out = generic_knn_join(
         pts, pts_cells, pr, k, grid, d2,
-        tie_desc_id=False, max_rounds=max_rounds, local_dist2=local_d2,
+        tie_desc_id=False, max_rounds=max_rounds,
     )
     return out.select("qid", "id", "x", "y", "dist2", "rn")
 

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from locus_spark.cells import DEFAULT_RESOLUTION, GridSpec
+from locus_spark.cells import DEFAULT_RESOLUTION, GridSpec, all_finite
 from locus_spark.functions.metrics import (
     sql_dist2_point_segment,
     sql_dist2_segment_segment,
@@ -45,7 +45,7 @@ def _with_bbox(segments: DataFrame) -> DataFrame:
 def grid_from_segments(
     segments: DataFrame, resolution: int = DEFAULT_RESOLUTION
 ) -> GridSpec:
-    row = _with_bbox(segments).agg(
+    row = _with_bbox(segments.filter(all_finite("x1", "y1", "x2", "y2"))).agg(
         F.min("_bmin_x").alias("mnx"), F.max("_bmax_x").alias("mxx"),
         F.min("_bmin_y").alias("mny"), F.max("_bmax_y").alias("mxy"),
     ).collect()[0]
@@ -82,18 +82,9 @@ def segment_knn_to_point_join(
     )
     d2 = F.expr(sql_dist2_point_segment("_qx", "_qy", "x1", "y1", "x2", "y2"))
 
-    def local_d2(t, q):
-        from locus_spark.functions.metrics import np_dist2_point_segment
-
-        return np_dist2_point_segment(
-            q["_qx"].to_numpy()[None, :], q["_qy"].to_numpy()[None, :],
-            t["x1"].to_numpy()[:, None], t["y1"].to_numpy()[:, None],
-            t["x2"].to_numpy()[:, None], t["y2"].to_numpy()[:, None],
-        )
-
     out = generic_knn_join(
         segs, _seg_cells(segments, grid), pr, k, grid, d2,
-        tie_desc_id=False, dedup=True, max_rounds=max_rounds, local_dist2=local_d2,
+        tie_desc_id=False, dedup=True, max_rounds=max_rounds,
     )
     return out.select("qid", *SEG_COLS, "dist2", "rn")
 
@@ -136,19 +127,9 @@ def segment_knn_join(
         )
     )
 
-    def local_d2(t, q):
-        from locus_spark.functions.metrics import np_dist2_segment_segment
-
-        return np_dist2_segment_segment(
-            q["_qx1"].to_numpy()[None, :], q["_qy1"].to_numpy()[None, :],
-            q["_qx2"].to_numpy()[None, :], q["_qy2"].to_numpy()[None, :],
-            t["x1"].to_numpy()[:, None], t["y1"].to_numpy()[:, None],
-            t["x2"].to_numpy()[:, None], t["y2"].to_numpy()[:, None],
-        )
-
     out = generic_knn_join(
         segs, _seg_cells(segments, grid), pr, k, grid, d2,
-        tie_desc_id=False, dedup=True, max_rounds=max_rounds, local_dist2=local_d2,
+        tie_desc_id=False, dedup=True, max_rounds=max_rounds,
     )
     return out.select("qid", *SEG_COLS, "dist2", "rn")
 

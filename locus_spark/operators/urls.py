@@ -8,9 +8,10 @@ the decomposition below is plain substring/regexp so the DuckDB oracle
 mirrors it in its own dialect).  Canonical form:
 
 * fragment dropped (``#…``),
-* ``utm_*`` tracking parameters dropped (dangling ``?``/``&`` cleaned; an
-  orphaned leading ``&`` left by a stripped FIRST param is promoted back
-  to ``?`` so parameter order can't split one logical url into two keys),
+* ``utm_*`` tracking parameters dropped (dangling ``?``/``&`` cleaned;
+  leading utm params are stripped together with their trailing ``&`` so
+  the query keeps its ``?`` and parameter order can't split one logical
+  url into two keys; an ``&`` in a query-less path is left alone),
 * explicit default port ``:443`` dropped,
 * host lowercased (DNS is case-insensitive; paths are NOT touched),
 * trailing ``/index.html`` collapsed to ``/``.
@@ -33,12 +34,12 @@ from pyspark.sql import functions as F
 
 #: strips of the canonicalization pipeline, in application order
 _FRAGMENT_RE = "#.*$"
+#: utm params at the START of the query go with their trailing '&' and keep
+#: the '?' ('?utm_s=x&id=7' -> '?id=7'), so param order can't split one
+#: logical url into two dedup keys ('?utm_s=x&id=7' vs '?id=7&utm_s=x')
+_LEADING_UTM_RE = "\\?(utm_[^&#]*&)+"
 _UTM_RE = "[?&]utm_[^&#]*"
 _DANGLING_RE = "[?&]$"
-#: a LEADING utm param strip leaves '…/p&id=7' — promote the orphaned '&'
-#: separator back to '?' so param order can't split one logical url into
-#: two dedup keys ('?utm_s=x&id=7' vs '?id=7&utm_s=x')
-_ORPHAN_AMP_RE = "^(https://[^?]*)&"
 _PORT_RE = ":443$"
 _INDEX_RE = "/index\\.html$"
 
@@ -56,9 +57,9 @@ def _host_path(u: Column) -> tuple[Column, Column]:
 def canonical_url(u: Column) -> Column:
     """Canonical form of an https url (see module docstring)."""
     u1 = F.regexp_replace(u, _FRAGMENT_RE, "")
-    u2 = F.regexp_replace(u1, _UTM_RE, "")
-    u3a = F.regexp_replace(u2, _DANGLING_RE, "")
-    u3 = F.regexp_replace(u3a, _ORPHAN_AMP_RE, "$1?")
+    u2 = F.regexp_replace(u1, _LEADING_UTM_RE, "?")
+    u2 = F.regexp_replace(u2, _UTM_RE, "")
+    u3 = F.regexp_replace(u2, _DANGLING_RE, "")
     host_raw, path = _host_path(u3)
     host = F.regexp_replace(F.lower(host_raw), _PORT_RE, "")
     path2 = F.regexp_replace(path, _INDEX_RE, "/")
@@ -90,13 +91,13 @@ DUCK_CANONICAL_TMPL = """
 """
 
 #: DuckDB's regexp_replace is FIRST-match-only unless passed the 'g'
-#: option (Spark's replaces all) — the utm strip must be global or the
+#: option (Spark's replaces all) — both utm strips are global, or the
 #: second tracking parameter survives
 DUCK_U3_TMPL = """
 regexp_replace(regexp_replace(regexp_replace(regexp_replace({u}, '#.*$', ''),
+                                             '\\?(utm_[^&#]*&)+', '?', 'g'),
                               '[?&]utm_[^&#]*', '', 'g'),
-               '[?&]$', ''),
-               '^(https://[^?]*)&', '\\1?')
+               '[?&]$', '')
 """
 
 DUCK_MESSY_TMPL = """

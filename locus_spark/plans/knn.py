@@ -15,13 +15,14 @@ because (a) the exact dist² is evaluated on every candidate and (b) the
 settle bound is conservative (shrunk by a float-fuzz margin far above ULP
 scale, far below cell scale).
 
-Every round is one distributed broadcast-hash join (probe annuli are tiny
-relative to targets) + one window; the driver loop only synchronizes rounds —
+Every round is one distributed hash join (probe annuli are tiny relative to
+targets and are broadcast; frames too wide for that are shuffled instead) +
+one per-probe top-k aggregation; the driver loop only synchronizes rounds —
 ring counts stay O(log gridsize) thanks to geometric annulus growth, so the
 pattern holds at 1000-executor scale where each round is a full-cluster job.
 
 Targets that span multiple cells (boxes, segments) may surface in several
-annuli; rounds therefore dedup on (qid, id) before the top-k window.
+annuli; rounds therefore dedup on (qid, id) before the top-k cut.
 """
 
 from __future__ import annotations
@@ -29,7 +30,6 @@ from __future__ import annotations
 import os
 import sys
 import time
-from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -39,58 +39,54 @@ from locus_spark.cells import GridSpec
 #: set LOCUS_KNN_DEBUG=1 to print per-round ring/unsettled diagnostics
 _DEBUG = os.environ.get("LOCUS_KNN_DEBUG", "") not in ("", "0")
 
-#: below this target count none of the large-scale machinery arms: no
-#: per-cell occupancy histogram, no probe-frame checkpointing, no cogroup
-#: kernel availability, no sampled-cap prefilter — the plain broadcast-join
-#: + window evaluator handles everything (the whole target side fits a few
-#: partitions, so per-round fixed jobs would dominate any cleverness).
+#: target-count threshold between the two materialization policies.  Below
+#: it the exploded target side is persisted across rounds.  At or above it
+#: targets are re-scanned each round instead (why: see `persist_targets` in
+#: generic_knn_join), and the probe frame is checkpointed and counted once up
+#: front, so round one's annulus frame size is known before the round's join
+#: strategy is picked.
 LOCAL_TOPK_MIN_TARGETS = 2_000_000
 
-#: annulus frames wider than this are not broadcast (sparse grids: many
-#: cells per probe, few candidates) — the cogroup kernel shuffles instead.
-#: This width guard is the ONLY route to the cogroup kernel: with cap-based
-#: row pruning (`_cap` carried across rounds, or the sampled-cap prefilter
-#: below for probes that don't have one yet) the broadcast evaluator's
-#: window input is bounded at any candidate volume, and the join itself is
-#: a linear whole-stage-codegen stream that scales with cores — whereas the
-#: kernel pays two shuffles + an Arrow round-trip + Python-worker churn per
-#: candidate row (measured scaling ~0.5 from 2 to 8 cores at 32-128M rows;
-#: a candidate-volume crossover of 256M routed the 128M-row flagship's
-#: first round — 579M exact candidates — back to the kernel and capped the
-#: whole stage's two-level scaling at 0.44).
+#: annulus frames estimated wider than this many (probe, cell) rows are not
+#: broadcast (sparse grids: many cells per probe, few candidates): the same
+#: round evaluator then hash-joins them against the targets after a shuffle
+#: (``shuffle_hash`` hint) instead.  The estimate is unsettled probes × ring
+#: cells, known from round two on, or from round one when probes are counted
+#: up front (LOCAL_TOPK_MIN_TARGETS).  Everything else about the round — the
+#: fused ``_jc`` key, ``_cap``/``_scap`` row pruning, dedup, sentinels and
+#: settling — is shared by both join strategies.
 ANN_BROADCAST_MAX_ROWS = 4_000_000
 
 #: sampled-cap prefilter: when a round has probes with no carried `_cap`
 #: (always in round one; later for probes that found < k candidates so far)
-#: at large scale (LOCAL_TOPK_MIN_TARGETS armed), derive a per-probe upper
-#: bound of the true k-th distance from a 1/CAP_SAMPLE_RATE deterministic
-#: target sample and row-prune the full join with it before the window.
-#: The bound is exact-safe (k-th smallest within a subset >= k-th smallest
-#: overall; probes with < k sampled candidates keep a null cap = no
-#: pruning), and it bounds the window's input at ~CAP_SAMPLE_RATE*k rows
-#: per probe regardless of cell density — measured at 32M rows / 24k
-#: probes / 143M first-round candidates: 30 s window -> ~6 s total, pure
-#: JVM.  (An exact candidate-volume gate — per-cell occupancy histogram +
-#: a per-round volume job — used to decide this; at 128M rows the gate's
-#: own jobs cost more than the prefilter ever saves, so capless probes at
-#: scale now always take it.)
+#: from SCAP_MIN_TARGETS on, derive a per-probe upper bound of the true k-th
+#: distance from a 1/CAP_SAMPLE_RATE deterministic target sample and
+#: row-prune the full join with it before the top-k aggregation.  The bound
+#: is exact-safe (k-th smallest within a subset >= k-th smallest overall;
+#: probes with < k sampled candidates keep a null cap = no pruning), and it
+#: bounds the aggregation's input at ~CAP_SAMPLE_RATE*k rows per probe
+#: regardless of cell density — measured at 32M rows / 24k probes / 143M
+#: first-round candidates: 30 s window -> ~6 s total, pure JVM.  (An exact
+#: candidate-volume gate — per-cell occupancy histogram + a per-round volume
+#: job — used to decide this; at 128M rows the gate's own jobs cost more
+#: than the prefilter ever saves, so capless probes at scale always take it.)
 CAP_SAMPLE_RATE = 16
 
-#: arm the sampled-cap prefilter for the BROADCAST evaluator from this
-#: target count on, even below the LOCAL_TOPK_MIN_TARGETS full-machinery
-#: threshold: at sf0.1 (~600k segments, 1000 probe segments, one 3x3-ish
-#: ring) the un-prefiltered collect_list aggregation ingests the full
-#: candidate volume and its walls turn ERRATIC under memory pressure —
-#: measured min-of-reps 6.0 s but 15.4 s on 2 of 4 warm reps (and 25-55 s
-#: whole-query outliers in the round-4 board), vs a flat 5.4 s with the
-#: prefilter on.  Below this count the sampled pass is pure overhead
-#: (and toy-scale tests pin the plain-broadcast plan).
+#: arm the sampled-cap prefilter from this target count on: at sf0.1
+#: (~600k segments, 1000 probe segments, one 3x3-ish ring) the
+#: un-prefiltered collect_list aggregation ingests the full candidate volume
+#: and its walls turn ERRATIC under memory pressure — measured min-of-reps
+#: 6.0 s but 15.4 s on 2 of 4 warm reps (and 25-55 s whole-query outliers in
+#: the round-4 board), vs a flat 5.4 s with the prefilter on.  Below this
+#: count the sampled pass is pure overhead (and toy-scale tests pin the
+#: plain-broadcast plan).
 SCAP_MIN_TARGETS = 100_000
 
-#: evaluator choice of each round of the most recent generic_knn_join call
-#: ("cogroup" | "broadcast" | "broadcast+scap") — introspection for tests,
-#: so a forced-path test can assert the forced path actually ran instead of
-#: being silently defanged by a policy change.
+#: join strategy of each round of the most recent generic_knn_join call
+#: ("broadcast" | "shuffle", suffixed "+scap" when the sampled-cap prefilter
+#: ran) — introspection for tests, so a forced-path test can assert the
+#: forced path actually ran instead of being silently defanged by a policy
+#: change.
 LAST_ROUND_EVALUATORS: list[str] = []
 
 #: probe-side internal columns: cell-range of the probe geometry's bbox and
@@ -199,33 +195,6 @@ def _truncate_lineage(df: DataFrame) -> DataFrame:
     return _fresh_stats(out)
 
 
-def _small_state(df: DataFrame) -> DataFrame:
-    """Materialize a ROUND's state below the large-scale threshold.
-
-    Mode knob ``spark.locus.knn.smallstate`` (kept as A/B instrumentation
-    from the round-5 seg_knn investigation):
-
-    * ``eager``       — ``_truncate_lineage`` (eager checkpoint + fresh
-      stats).  The DEFAULT since round 5: the round-4 ``lazy`` gate made
-      seg_knn's walls erratic (sf0.1 min-of-3 A/B, fresh JVM per mode:
-      lazy [25.9, 8.2, 31.8] s vs eager [26.9(cold-codegen), 9.5, 9.1] s —
-      the lazy plan re-evaluates the wide seg-seg dist² nondeterministically
-      when checkpoint blocks materialize inside a consuming job), while for
-      kd/r/seg-to-point eager measured equal-or-faster (kd_knn 1.01 vs
-      1.12, r_knn 4.94 vs 5.63, seg_to_point 4.43 vs 5.17).
-    * ``lazy``        — ``localCheckpoint(eager=False)`` (the round-4 gate).
-    * ``lazy_fresh``  — lazy + ``_fresh_stats`` (measured WORST: seg_knn
-      min 18.7 s — kept only so the A/B remains reproducible).
-    """
-    mode = df.sparkSession.conf.get("spark.locus.knn.smallstate", "eager")
-    if mode == "eager":
-        return _truncate_lineage(df)
-    out = df.localCheckpoint(eager=False)
-    if mode == "lazy_fresh":
-        out = _fresh_stats(out)
-    return out
-
-
 def probe_frame(
     probes: DataFrame,
     grid: GridSpec,
@@ -301,77 +270,11 @@ def _annulus_cells(
     )
 
 
-def _cogroup_topk(
-    target_cells: DataFrame,
-    ann: DataFrame,
-    k: int,
-    local_dist2: Callable,
-    tie_desc_id: bool,
-    probe_out: list[str],
-    target_out: list[str],
-) -> DataFrame:
-    """Per-cell local top-k: candidates never materialize as JVM rows.
-
-    The naive round evaluator (broadcast-join every (probe, annulus-cell)
-    pair against the cell's targets, then window) materializes |cell| rows
-    PER covering probe; with skewed data a fringe probe next to a hot cell
-    drags the whole cell through the window's sort — measured 2.6·10^8 rows
-    and a >600 s spill for 4k probes over 16M points.  Here targets are
-    cogrouped with the probe-annulus pairs BY CELL and a vectorized numpy
-    kernel emits only the k best rows per (probe, cell), so the downstream
-    global window sees ≤ k·cells_per_probe rows per probe.  This is the
-    distributed analogue of the reference's per-node bounded heap
-    (/root/reference/locus/kd.py:227-237).
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    ann = ann.select(*probe_out, "_jc")
-    cells = ann.select("_jc").distinct()
-    tsub = target_cells.join(F.broadcast(cells), ["_jc"])
-    a_fields = {f.name: f for f in ann.schema.fields}
-    t_fields = {f.name: f for f in target_cells.schema.fields}
-    out_schema = StructType(
-        [a_fields[c] for c in probe_out]
-        + [t_fields[c] for c in target_out]
-        + [StructField("dist2", DoubleType())]
-    )
-    out_names = [*probe_out, *target_out, "dist2"]
-
-    def fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        # left: targets in this cell; right: probes whose annulus covers it
-        if len(left) == 0 or len(right) == 0:
-            return pd.DataFrame({c: pd.Series(dtype="float64") for c in out_names})
-        tie = left["id"].to_numpy()
-        order = np.argsort(-tie if tie_desc_id else tie, kind="stable")
-        left = left.iloc[order].reset_index(drop=True)
-        nt = len(left)
-        k_eff = min(k, nt)
-        target_arrs = {c: left[c].to_numpy() for c in target_out}
-        chunks = []
-        # bound the distance-matrix footprint: metrics allocate up to ~15
-        # (nt x nq) float64 temporaries (segment-segment), so cap entries
-        # per chunk at 8M (~64 MB/array)
-        chunk = max(1, 8_000_000 // nt)
-        for s in range(0, len(right), chunk):
-            rp = right.iloc[s : s + chunk]
-            d2 = local_dist2(left, rp)  # (nt, n_probes) float64
-            # rows are pre-sorted by the tie key, so a stable argsort on
-            # dist2 realizes the exact (dist2, tie) order incl. duplicates
-            sel = np.argsort(d2, axis=0, kind="stable")[:k_eff]
-            block = {
-                c: np.repeat(rp[c].to_numpy()[None, :], k_eff, axis=0).ravel()
-                for c in probe_out
-            }
-            for c in target_out:
-                block[c] = target_arrs[c][sel].ravel()
-            block["dist2"] = np.take_along_axis(d2, sel, axis=0).ravel()
-            chunks.append(pd.DataFrame(block))
-        return pd.concat(chunks, ignore_index=True)
-
-    grouped = tsub.groupBy("_jc").cogroup(ann.groupBy("_jc"))
-    return grouped.applyInPandas(fn, out_schema)
+def _build_side(ann: DataFrame, shuffle: bool) -> DataFrame:
+    """Hint a round's (probe, annulus-cell) frame as the hash-join build
+    side: broadcast, or — for frames too wide to broadcast — built per
+    partition after a shuffle (a ShuffledHashJoin, not a sort-merge join)."""
+    return ann.hint("shuffle_hash") if shuffle else F.broadcast(ann)
 
 
 def generic_knn_join(
@@ -384,7 +287,6 @@ def generic_knn_join(
     tie_desc_id: bool = False,
     dedup: bool = False,
     max_rounds: int = 64,
-    local_dist2: Callable | None = None,
 ) -> DataFrame:
     """Exact top-k join.
 
@@ -440,30 +342,15 @@ def generic_knn_join(
     # own cell already holds that many (dense targets) the window stays a
     # single ring — widening it would multiply candidate-kernel work for no
     # round saved.  Sparse regions still expand geometrically afterwards.
-    #
-    # Only the BROADCAST evaluator benefits: its per-round cost is dominated
-    # by fixed job overhead, so fewer rounds win.  The cogrouped kernel's
-    # cost scales with covered cells (targets shuffled + Arrow-transferred
-    # per cell), so a wider window multiplies real work — measured 3.6x kNN
-    # slowdown at 16M rows — and there the loop starts at a single ring.
+    # At dense shapes the formula itself yields a single cell (128M rows at
+    # resolution 10, k=5: ~122 targets/cell -> hi0 = 0).
     import math
 
-    use_cogroup = local_dist2 is not None and n_targets >= LOCAL_TOPK_MIN_TARGETS
-    if use_cogroup:
-        # Always start at a single cell: the cogroup kernel's dominant cost
-        # is per-(cell, probe) GROUP overhead in applyInPandas, which scales
-        # with the covered-cell count, not with the numpy math.  Measured at
-        # 16M rows / 24k probes: hi0=0 settles 66% of probes in a 15.8 s
-        # round 1 + 12.5 s round 2; hi0=1 (9 cells/probe) makes round 1
-        # alone 94.7 s.  Geometric expansion after round 1 keeps the total
-        # round count at 2 for uniform data.
-        hi0 = 0
-    else:
-        density = n_targets / float(grid.n * grid.n)
-        hi0 = int(
-            math.ceil((math.sqrt((4.0 * k + 8.0) / max(density, 1e-12)) - 1.0) / 2.0)
-        )
-        hi0 = max(0, min(hi0, max(1, grid.n // 4)))
+    density = n_targets / float(grid.n * grid.n)
+    hi0 = int(
+        math.ceil((math.sqrt((4.0 * k + 8.0) / max(density, 1e-12)) - 1.0) / 2.0)
+    )
+    hi0 = max(0, min(hi0, max(1, grid.n // 4)))
 
     # Incremental re-rank: only UNSETTLED probes' rows flow through the
     # per-round dedup/window/stats path.  A probe's top-k is final the round
@@ -496,10 +383,11 @@ def generic_knn_join(
     n_unsettled: int | None = None
     n_nocap: int | None = None  # unsettled probes with no carried _cap yet
     unsettled = probes
-    if use_cogroup:
+    if not persist_targets:
         # materialize the probe frame once: every round touches it several
         # times (annulus build, settle joins), and its raw lineage re-scans
-        # the probe source each time
+        # the probe source each time; the count also sizes round one's
+        # annulus frame for the evaluator choice below
         t_setup = time.monotonic() if _DEBUG else 0.0
         unsettled = _truncate_lineage(probes)
         n_unsettled = unsettled.count()
@@ -556,97 +444,83 @@ def generic_knn_join(
         hi = lo + step - 1
         t_round = time.monotonic() if _DEBUG else 0.0
         ann = _annulus_cells(unsettled, grid, lo, hi, margin=margin)
-        # Evaluator choice: the broadcast-join evaluator is fully
-        # whole-stage-codegen and its window input is bounded either by the
-        # carried `_cap` (probes with >= k candidates) or the sampled-cap
-        # prefilter (probes without one), so it is the plan at ANY exact
-        # candidate volume — the join is a linear stream that parallelizes
-        # with cores.  The cogrouped numpy kernel (k rows per (probe, cell),
-        # but two shuffles + an Arrow round-trip + Python workers per
-        # candidate row, measured two-level scaling ~0.5) remains only for
-        # annulus frames too wide to broadcast (sparse grids: many cells
-        # per probe, few candidates).
+        # The round evaluator: equi-join the (probe, annulus-cell) frame
+        # against the targets on `_jc`, then the per-probe top-k aggregation
+        # below.  It is fully whole-stage-codegen and its aggregation input
+        # is bounded by the carried `_cap` (probes with >= k candidates) or
+        # the sampled-cap prefilter (probes without one), so it is the plan
+        # at ANY exact candidate volume.  Only the join strategy varies:
+        # broadcast, or a shuffled hash join once the frame is known to
+        # exceed ANN_BROADCAST_MAX_ROWS.
         ring_cells = (2 * hi + 1) ** 2 - ((2 * lo - 1) ** 2 if lo > 0 else 0)
         ann_rows = None if n_unsettled is None else n_unsettled * ring_cells
-        round_cogroup = use_cogroup and (
-            ann_rows is not None and ann_rows > ANN_BROADCAST_MAX_ROWS
+        wide = ann_rows is not None and ann_rows > ANN_BROADCAST_MAX_ROWS
+        has_cap = "_cap" in ann.columns
+        cand = (
+            _build_side(ann, wide)
+            .join(target_cells, ["_jc"])
+            .withColumn("dist2", dist2)
         )
-        if round_cogroup:
-            LAST_ROUND_EVALUATORS.append("cogroup")
-            cand = _cogroup_topk(
-                target_cells, ann, k, local_dist2, tie_desc_id,
-                base_probe_cols,
-                target_payload,
+        if has_cap:
+            # branch-and-bound at ROW level: a candidate farther than the
+            # probe's current k-th best can never displace it (ties at equal
+            # dist2 still pass — id order can displace)
+            cand = cand.filter(
+                F.col("_cap").isNull() | (F.col("dist2") <= F.col("_cap"))
             )
-        else:
-            has_cap = "_cap" in ann.columns
-            cand = (
-                F.broadcast(ann)
-                .join(target_cells, ["_jc"])
+        # Arm the sampled-cap prefilter whenever capless probes exist from
+        # SCAP_MIN_TARGETS on.  An exact candidate-volume probe job used to
+        # gate this (a per-cell occupancy histogram + a per-round count
+        # job); measured at 128M rows the histogram build plus the extra
+        # blocking job cost more than the prefilter's sampled pass ever
+        # saves, and probes sampled from skewed data make a density
+        # *estimate* under-count by orders of magnitude (200x measured) —
+        # so at scale the prefilter is simply always worth it.
+        use_scap = n_targets >= SCAP_MIN_TARGETS and (
+            n_nocap is None or n_nocap > 0
+        )
+        if use_scap:
+            # capless probes over dense cells (all of them in round one;
+            # later, probes that still found < k candidates): derive a
+            # per-probe UPPER bound of the true k-th distance from a
+            # deterministic 1/CAP_SAMPLE_RATE target sample and prune with
+            # it, so the aggregation never sees the dense cells' full
+            # candidate volume.  Safe: the k-th smallest within a subset >=
+            # the k-th smallest overall; fewer than k sampled candidates =>
+            # null cap => no pruning; <= keeps distance ties (id order may
+            # still displace).
+            ann_nocap = ann.filter(F.col("_cap").isNull()) if has_cap else ann
+            sampled = target_cells.filter(
+                F.pmod(F.xxhash64(F.col("id")), F.lit(CAP_SAMPLE_RATE)) == 0
+            )
+            scand = (
+                _build_side(ann_nocap, wide)
+                .join(sampled, ["_jc"])
                 .withColumn("dist2", dist2)
             )
-            if has_cap:
-                # branch-and-bound at ROW level: a candidate farther than
-                # the probe's current k-th best can never displace it
-                # (ties at equal dist2 still pass — id order can displace)
-                cand = cand.filter(
-                    F.col("_cap").isNull() | (F.col("dist2") <= F.col("_cap"))
-                )
-            # Arm the sampled-cap prefilter whenever capless probes exist at
-            # large scale.  An exact candidate-volume probe job used to gate
-            # this (a per-cell occupancy histogram + a per-round count job);
-            # measured at 128M rows the histogram build plus the extra
-            # blocking job cost more than the prefilter's sampled pass ever
-            # saves, and probes sampled from skewed data make a density
-            # *estimate* under-count by orders of magnitude (200x measured)
-            # — so at scale the prefilter is simply always worth it.
-            use_scap = (use_cogroup or n_targets >= SCAP_MIN_TARGETS) and (
-                n_nocap is None or n_nocap > 0
+            sorted_d = F.sort_array(F.collect_list("dist2"))
+            if dedup:
+                # multi-cell targets surface once per covering cell; a
+                # duplicated near target would understate the sampled k-th
+                # and over-prune.  Distinct distances only shift the k-th
+                # element toward larger values, so the bound stays a valid
+                # upper bound — and it removes the dropDuplicates shuffle a
+                # row-level dedup would need.
+                sorted_d = F.array_distinct(sorted_d)
+            caps = (
+                scand.groupBy("qid")
+                .agg(F.slice(sorted_d, k, 1).alias("_ck"))
+                .select("qid", F.get("_ck", 0).alias("_scap"))
             )
-            if use_scap:
-                # capless probes over dense cells (all of them in round one;
-                # later, probes that still found < k candidates): derive a
-                # per-probe UPPER bound of the true k-th distance from a
-                # deterministic 1/CAP_SAMPLE_RATE target sample and prune
-                # with it, so the window never sees the dense cells' full
-                # candidate volume.  Safe: the k-th smallest within a subset
-                # >= the k-th smallest overall; fewer than k sampled
-                # candidates => null cap => no pruning; <= keeps distance
-                # ties (id order may still displace).
-                ann_nocap = (
-                    ann.filter(F.col("_cap").isNull()) if has_cap else ann
-                )
-                sampled = target_cells.filter(
-                    F.pmod(F.xxhash64(F.col("id")), F.lit(CAP_SAMPLE_RATE)) == 0
-                )
-                scand = (
-                    F.broadcast(ann_nocap)
-                    .join(sampled, ["_jc"])
-                    .withColumn("dist2", dist2)
-                )
-                sorted_d = F.sort_array(F.collect_list("dist2"))
-                if dedup:
-                    # multi-cell targets surface once per covering cell; a
-                    # duplicated near target would understate the sampled
-                    # k-th and over-prune.  Distinct distances only shift
-                    # the k-th element toward larger values, so the bound
-                    # stays a valid upper bound — and it removes the
-                    # dropDuplicates shuffle a row-level dedup would need.
-                    sorted_d = F.array_distinct(sorted_d)
-                caps = (
-                    scand.groupBy("qid")
-                    .agg(F.slice(sorted_d, k, 1).alias("_ck"))
-                    .select("qid", F.get("_ck", 0).alias("_scap"))
-                )
-                # probes with a carried _cap aren't in `caps` => null _scap
-                # => pass through (they are already row-pruned above)
-                cand = cand.join(F.broadcast(caps), "qid", "left").filter(
-                    F.col("_scap").isNull() | (F.col("dist2") <= F.col("_scap"))
-                )
-            LAST_ROUND_EVALUATORS.append(
-                "broadcast+scap" if use_scap else "broadcast"
+            # probes with a carried _cap aren't in `caps` => null _scap
+            # => pass through (they are already row-pruned above)
+            cand = cand.join(F.broadcast(caps), "qid", "left").filter(
+                F.col("_scap").isNull() | (F.col("dist2") <= F.col("_scap"))
             )
-            cand = cand.select(*state_cols)
+        LAST_ROUND_EVALUATORS.append(
+            ("shuffle" if wide else "broadcast") + ("+scap" if use_scap else "")
+        )
+        cand = cand.select(*state_cols)
         merged = cand if carried is None else carried.unionByName(cand)
         # one sentinel per in-play probe: guarantees every probe has a row in
         # `merged` (rn == 1), so the termination agg and the next round's
@@ -680,12 +554,10 @@ def generic_knn_join(
                 ),
             )
         )
-        # Round-state materialization: below the large-scale threshold the
-        # mode is picked by _small_state (default EAGER since round 5 — the
-        # round-4 lazy localCheckpoint made the wide-dist² segment family's
-        # walls erratic; measurements in _small_state's docstring).  At
-        # scale, _truncate_lineage keeps the eager persist-first protocol
-        # the reliable-checkpoint mode needs.
+        # Round-state materialization: always the eager _truncate_lineage
+        # protocol.  A lazy localCheckpoint (the round-4 small-scale mode)
+        # made the wide-dist² segment family's walls erratic, and eager
+        # measured equal-or-faster for every other family (BENCH.md).
         merged_plan = (
             top.select(
                 "qid",
@@ -701,10 +573,7 @@ def generic_knn_join(
                 "_s._p.*",
             )
         )
-        if persist_targets:
-            merged = _small_state(merged_plan)
-        else:
-            merged = _truncate_lineage(merged_plan)
+        merged = _truncate_lineage(merged_plan)
         if _DEBUG:
             print(
                 f"[knn] ring [{lo},{hi}] topk-join {time.monotonic() - t_round:.1f}s",
@@ -781,6 +650,3 @@ def generic_knn_join(
         *out_cols, F.row_number().over(w).cast("long").alias("rn")
     )
 
-
-def make_dist2(fn: Callable[..., Column], *cols: str) -> Column:
-    return fn(*[F.col(c) for c in cols])

@@ -112,9 +112,9 @@ def test_nearest_duplicate_points_tie_by_id(spark):
 def test_knn_hot_cluster_skew(spark):
     """Regression for the hot-cell candidate explosion: half the points in one
     dense cluster, probes both inside and on the fringe — exercises the _cap
-    branch-and-bound pruning in the broadcast round evaluator (the cogroup
-    kernel itself is covered by test_cogroup_local_topk_path_matches_broadcast,
-    which forces it via LOCAL_TOPK_MIN_TARGETS)."""
+    branch-and-bound pruning in the round evaluator (its join strategies
+    and the sampled-cap prefilter are forced and compared by
+    test_knn_round_evaluators_agree)."""
     rng = np.random.RandomState(7)
     hot = rng.uniform(-1.0, 1.0, size=(400, 2))
     cold = rng.uniform(-100.0, 100.0, size=(400, 2))
@@ -136,11 +136,14 @@ def test_knn_hot_cluster_skew(spark):
         assert [(d, i) for _, d, i in rows] == want[qid]
 
 
-def test_cogroup_local_topk_path_matches_broadcast(spark, monkeypatch):
-    """Force the cogrouped numpy local-top-k kernel (normally gated behind
-    LOCAL_TOPK_MIN_TARGETS = 2M targets, unreachable by test-sized inputs)
-    and assert it matches the broadcast round evaluator for all three kNN
-    families — points, boxes, segments — including duplicate-geometry ties."""
+def test_knn_round_evaluators_agree(spark, monkeypatch):
+    """Four-way evaluator equivalence: the round evaluator's broadcast and
+    shuffled-hash join strategies, each with and without the sampled-cap
+    prefilter, must return identical results for three kNN families —
+    points, boxes, segment-to-point — including duplicate-geometry ties,
+    and the points family must match brute force.  Each configuration
+    asserts the label it actually ran, so a policy change cannot silently
+    route a forced path elsewhere."""
     import locus_spark.plans.knn as knnplan
     from locus_spark.operators.boxes import box_knn_join
     from locus_spark.operators.segments import segment_knn_to_point_join
@@ -170,62 +173,54 @@ def test_cogroup_local_topk_path_matches_broadcast(spark, monkeypatch):
     sdf = spark.createDataFrame(
         segs, "id long, x1 double, y1 double, x2 double, y2 double"
     )
+    families = {
+        "pts": lambda: knn_join(pdf, qdf, 3, grid=grid),
+        "boxes": lambda: box_knn_join(bdf, qdf, 3, grid=grid),
+        "segs": lambda: segment_knn_to_point_join(sdf, qdf, 3, grid=grid),
+    }
 
-    def run_all():
+    def run_all(join, scap):
+        """Run every family; each must have joined with ``join`` in every
+        round and, iff ``scap``, run the sampled-cap prefilter."""
         out = {}
-        out["pts"] = sorted(
-            (r.qid, r.rn, r.id, r.dist2)
-            for r in knn_join(pdf, qdf, 3, grid=grid).collect()
-        )
-        out["boxes"] = sorted(
-            (r.qid, r.rn, r.id, r.dist2)
-            for r in box_knn_join(bdf, qdf, 3, grid=grid).collect()
-        )
-        out["segs"] = sorted(
-            (r.qid, r.rn, r.id, r.dist2)
-            for r in segment_knn_to_point_join(sdf, qdf, 3, grid=grid).collect()
-        )
+        for name, run in families.items():
+            out[name] = sorted(
+                (r.qid, r.rn, r.id, r.dist2) for r in run().collect()
+            )
+            labels = set(knnplan.LAST_ROUND_EVALUATORS)
+            assert {lb.split("+")[0] for lb in labels} == {join}, (name, labels)
+            assert (f"{join}+scap" in labels) == scap, (name, labels)
         return out
 
-    # arming use_cogroup alone doesn't force the kernel (only annulus frames
-    # too wide to broadcast route there) — drop the width guard to -1 so
-    # every round takes the cogrouped kernel, and assert it actually did
-    monkeypatch.setattr(knnplan, "LOCAL_TOPK_MIN_TARGETS", 1)
-    monkeypatch.setattr(knnplan, "ANN_BROADCAST_MAX_ROWS", -1)
-    got_cogroup = run_all()
-    assert set(knnplan.LAST_ROUND_EVALUATORS) == {"cogroup"}
-    monkeypatch.setattr(knnplan, "LOCAL_TOPK_MIN_TARGETS", 10**12)
-    monkeypatch.setattr(knnplan, "ANN_BROADCAST_MAX_ROWS", 4_000_000)
-    got_broadcast = run_all()
-    assert set(knnplan.LAST_ROUND_EVALUATORS) == {"broadcast"}
-    assert got_cogroup == got_broadcast
-    # third path: broadcast evaluator with the sampled-cap prefilter (armed
-    # for every capless probe whenever the large-scale machinery is — rate
-    # 2 so the test-sized sample is non-degenerate) — must stay exact,
-    # including probes whose sampled candidate set is smaller than k.
-    # EVERY round with a capless probe runs the prefilter (tail rounds
-    # included), covering the carried-cap/null-cap merge too.
-    monkeypatch.setattr(knnplan, "LOCAL_TOPK_MIN_TARGETS", 1)
-    monkeypatch.setattr(knnplan, "CAP_SAMPLE_RATE", 2)
-    got_capped = run_all()
-    assert "broadcast+scap" in set(knnplan.LAST_ROUND_EVALUATORS)
-    assert got_capped == got_broadcast
-    # fourth path: the ROUND-5 mid-scale gate — sampled-cap prefilter armed
-    # via SCAP_MIN_TARGETS alone, with the cogroup machinery fully OFF
-    # (LOCAL_TOPK_MIN_TARGETS huge): the configuration every >=100k-target
-    # family runs below the 2M full-machinery threshold (the seg_knn fix).
-    monkeypatch.setattr(knnplan, "LOCAL_TOPK_MIN_TARGETS", 10**12)
+    got_broadcast = run_all("broadcast", scap=False)
+
+    def force_shuffle():
+        # count probes up front (so round one's frame size is known) and
+        # drop the width guard below any frame
+        monkeypatch.setattr(knnplan, "LOCAL_TOPK_MIN_TARGETS", 1)
+        monkeypatch.setattr(knnplan, "ANN_BROADCAST_MAX_ROWS", -1)
+
+    force_shuffle()
+    got_shuffle = run_all("shuffle", scap=False)
+    monkeypatch.undo()
+    # sampled-cap prefilter on (rate 2 so the test-sized sample is
+    # non-degenerate) — must stay exact, including probes whose sampled
+    # candidate set is smaller than k; every round with a capless probe
+    # runs it, covering the carried-cap/null-cap merge too
     monkeypatch.setattr(knnplan, "SCAP_MIN_TARGETS", 1)
-    got_midscale = run_all()
-    assert "broadcast+scap" in set(knnplan.LAST_ROUND_EVALUATORS)
-    assert "cogroup" not in set(knnplan.LAST_ROUND_EVALUATORS)
-    assert got_midscale == got_broadcast
-    monkeypatch.setattr(knnplan, "SCAP_MIN_TARGETS", 100_000)
-    # and both match brute force for the points family
+    monkeypatch.setattr(knnplan, "CAP_SAMPLE_RATE", 2)
+    got_broadcast_scap = run_all("broadcast", scap=True)
+    force_shuffle()
+    got_shuffle_scap = run_all("shuffle", scap=True)
+    assert got_shuffle == got_broadcast
+    assert got_broadcast_scap == got_broadcast
+    assert got_shuffle_scap == got_broadcast
+    # and the points family matches brute force
     want = _brute_knn(pts, probes, 3)
     by_q = {}
-    for qid, rn, i, d in got_cogroup["pts"]:
+    for qid, rn, i, d in got_broadcast["pts"]:
         by_q.setdefault(qid, []).append((rn, d, i))
+    assert set(by_q) == set(want)
     for qid, rows in by_q.items():
         rows.sort()
         assert [(d, i) for _, d, i in rows] == want[qid]

@@ -23,9 +23,15 @@ def test_canonical_url_semantics(spark):
         # all utm params dropped, non-utm params kept
         "https://a.example/p?utm_source=x&utm_medium=y": "https://a.example/p",
         "https://a.example/p?id=7&utm_source=x": "https://a.example/p?id=7",
-        # LEADING utm param: the orphaned '&' is promoted back to '?' so
-        # both param orders map to ONE dedup key (ADVICE r4)
+        # LEADING utm param: stripped with its '&', the '?' stays, so both
+        # param orders map to ONE dedup key (ADVICE r4)
         "https://a.example/p?utm_source=x&id=7": "https://a.example/p?id=7",
+        # several leading utm params: still one '?' before the survivor
+        "https://a.example/p?utm_a=1&utm_b=2&id=7": "https://a.example/p?id=7",
+        # '&' is legal in a path: a query-less or utm-free url is untouched
+        "https://a.example/a&b": "https://a.example/a&b",
+        "https://a.example/a&b?c=1": "https://a.example/a&b?c=1",
+        "https://a.example/a&b?utm_x=1&c=2": "https://a.example/a&b?c=2",
         # default port dropped
         "https://a.example:443/p": "https://a.example/p",
         # host lowercased, path case preserved
