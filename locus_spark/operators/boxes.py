@@ -198,7 +198,6 @@ def box_knn_join(
     probes: DataFrame,
     k: int,
     grid: GridSpec | None = None,
-    max_rounds: int = 64,
 ) -> DataFrame:
     """k nearest boxes to each probe point under the point↔box squared
     distance (0 inside) — ``n_nearest_items`` (``/root/reference/locus/r.py:453-498``)
@@ -221,7 +220,7 @@ def box_knn_join(
 
     out = generic_knn_join(
         b, b_cells, pr, k, grid, d2,
-        tie_desc_id=True, dedup=True, max_rounds=max_rounds,
+        tie_desc_id=True, dedup=True,
     )
     return out.select("qid", *BOX_COLS, "dist2", "rn")
 

@@ -22,12 +22,9 @@ measured difference.)
 Scale shape: each phase is one map-side-combinable min-aggregate + one
 equi-join on the edge frame; no step ever materializes a component as a
 single row/partition, so a 10^9-node component costs the same per-round
-shuffle volume as 10^9 singletons.  Round state is lineage-truncated
-through the same checkpoint machinery as the kNN ring loop (local blocks
-on local masters, reliable checkpoint dir on clusters), which also
-resets the checkpointed frame's plan statistics (plans/knn._fresh_stats
-— without that, size-only stats square per round and Catalyst ends up in
-BigInteger.multiply).
+shuffle volume as 10^9 singletons.  Round state goes through
+``session.materialize`` (checkpoint policy and why plan statistics are
+reset: see there).
 """
 
 from __future__ import annotations
@@ -35,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from locus_spark.plans.knn import _truncate_lineage
+from locus_spark.session import materialize
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -115,13 +112,13 @@ def connected_components(
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    edges = _truncate_lineage(edges)
-    all_nodes = _truncate_lineage(
+    edges = materialize(edges)
+    all_nodes = materialize(
         edges.select("u").union(edges.select("v")).distinct()
     )
     prev_sig, prev_edges = None, None
     for _ in range(max_rounds):
-        edges = _truncate_lineage(_small_star(_large_star(edges)))
+        edges = materialize(_small_star(_large_star(edges)))
         row = edges.agg(
             F.count("*").alias("c"),
             # decimal accumulator: a LONG sum of 2^63-scale hashes

@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from locus_spark.plans.knn import _truncate_lineage
+from locus_spark.session import materialize
 
 
 def eps_neighbor_pairs(points: DataFrame, eps: float) -> DataFrame:
@@ -46,7 +46,7 @@ def eps_neighbor_pairs(points: DataFrame, eps: float) -> DataFrame:
     wants).  Cell width == eps ⇒ the 3x3 neighborhood of a's cell covers
     every candidate b exactly once (b's cell is unique)."""
     eps = float(eps)
-    pts = _truncate_lineage(
+    pts = materialize(
         points.select(
             "id",
             "x",
@@ -106,9 +106,9 @@ def dbscan(points: DataFrame, eps: float, min_pts: int) -> DataFrame:
             "core by definition; this pair-counting plan cannot see "
             "isolated points)"
         )
-    pairs = _truncate_lineage(eps_neighbor_pairs(points, eps))
+    pairs = materialize(eps_neighbor_pairs(points, eps))
     ncnt = pairs.groupBy("a").agg(F.count("*").alias("_n"))
-    core = _truncate_lineage(
+    core = materialize(
         ncnt.where(F.col("_n") + 1 >= F.lit(int(min_pts))).select(
             F.col("a").alias("id")
         )
@@ -120,7 +120,7 @@ def dbscan(points: DataFrame, eps: float, min_pts: int) -> DataFrame:
         .join(core.withColumnRenamed("id", "b"), "b", "semi")
     )
     comp = connected_components(cc_edges, col_a="a", col_b="b")
-    core_labeled = _truncate_lineage(
+    core_labeled = materialize(
         core.join(comp.withColumnRenamed("node", "id"), "id", "left").select(
             "id", F.coalesce("component", "id").alias("cluster")
         )

@@ -19,9 +19,8 @@ Scale shape (the Pregel shuffle pattern):
 - each round is one join (ranks |V| rows x edges |E| rows, both key-
   partitioned on ``src``) + one ``groupBy(dst).sum`` with map-side partial
   aggregation — no component/neighborhood ever funnels through one task;
-- round state is materialized through the same checkpoint machinery as the
-  kNN ring loop and CC (``plans/knn._truncate_lineage``), so lineage stays
-  O(1) across iterations;
+- round state goes through ``session.materialize`` (checkpoint policy:
+  see there), so lineage stays O(1) across iterations;
 - at production scale the weighted edge frame belongs in a bucketed table
   (sources/bucketed.py) keyed by ``src`` so the per-round join co-locates
   without re-shuffling the edges; the rank frame (|V| rows) is the only
@@ -44,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from locus_spark.plans.knn import _truncate_lineage
+from locus_spark.session import materialize
 
 #: standard damping factor (Page et al., 1999).
 PR_DAMPING = 0.85
@@ -184,11 +183,11 @@ def pagerank(
     else:
         base_expr = F.lit(1.0 - damping) * F.col(teleport_col)
         init_expr = F.col(teleport_col)
-    edges_w = edges if edges_are_weighted else _truncate_lineage(weight_edges(edges))
+    edges_w = edges if edges_are_weighted else materialize(weight_edges(edges))
     if init_ranks is not None:
-        ranks = _truncate_lineage(init_ranks.select("v", "r"))
+        ranks = materialize(init_ranks.select("v", "r"))
     else:
-        ranks = _truncate_lineage(nodes.select("v", init_expr.alias("r")))
+        ranks = materialize(nodes.select("v", init_expr.alias("r")))
     for _ in range(iterations):
         contrib = round_contrib(edges_w, ranks)
         stepped = (
@@ -201,7 +200,7 @@ def pagerank(
                 ).alias("r"),
             )
         )
-        stepped = _truncate_lineage(stepped)
+        stepped = materialize(stepped)
         if tol is not None:
             delta = (
                 stepped.withColumnRenamed("r", "_rn")
@@ -252,7 +251,7 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     (the coefficient is undefined below that); ``clustering`` is rounded
     to 6 decimals (pure ratio of exact integers — the rounding is only for
     cross-engine float-division display parity)."""
-    und = _truncate_lineage(undirect_edges(edges))
+    und = materialize(undirect_edges(edges))
     deg = (
         und.select(F.col("a").alias("v"))
         .unionByName(und.select(F.col("b").alias("v")))
@@ -265,7 +264,7 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     a_first = (F.col("da") < F.col("db")) | (
         (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
     )
-    oriented = _truncate_lineage(
+    oriented = materialize(
         e.select(
             F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
             F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("w"),
@@ -476,8 +475,8 @@ def hits(
             )
         )
 
-    e = _truncate_lineage(edges.select("src", "dst"))
-    state = _truncate_lineage(
+    e = materialize(edges.select("src", "dst"))
+    state = materialize(
         nodes.select("v", F.lit(1.0).alias("h"))
     )
     for _ in range(iterations):
@@ -496,7 +495,7 @@ def hits(
         # iterations before materializing re-executes the shared auth/a_raw
         # subplans in every consumer branch (measured 6.2 s vs 4.7 s at
         # sf0.1 with an every-2nd-iteration cadence)
-        state = _truncate_lineage(_l1_normalized(h_raw, "src", "h"))
+        state = materialize(_l1_normalized(h_raw, "src", "h"))
         last_auth = auth
     return state.join(last_auth, "v").select(
         "v", F.round("h", 6).alias("hub"), F.round("a", 6).alias("auth")

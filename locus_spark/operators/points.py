@@ -141,7 +141,6 @@ def knn_join(
     probes: DataFrame,
     k: int,
     grid: GridSpec | None = None,
-    max_rounds: int = 64,
 ) -> DataFrame:
     """Exact k-nearest-neighbor join: for each probe point, the k indexed
     points with smallest squared distance, ties by ascending id.
@@ -172,7 +171,7 @@ def knn_join(
 
     out = generic_knn_join(
         pts, pts_cells, pr, k, grid, d2,
-        tie_desc_id=False, max_rounds=max_rounds,
+        tie_desc_id=False,
     )
     return out.select("qid", "id", "x", "y", "dist2", "rn")
 

@@ -65,7 +65,6 @@ def segment_knn_to_point_join(
     probes: DataFrame,
     k: int,
     grid: GridSpec | None = None,
-    max_rounds: int = 64,
 ) -> DataFrame:
     """k nearest segments to each probe point — ``n_nearest_to_point_items``
     (``/root/reference/locus/segmental.py:341-392``; k=1 ≙
@@ -84,7 +83,7 @@ def segment_knn_to_point_join(
 
     out = generic_knn_join(
         segs, _seg_cells(segments, grid), pr, k, grid, d2,
-        tie_desc_id=False, dedup=True, max_rounds=max_rounds,
+        tie_desc_id=False, dedup=True,
     )
     return out.select("qid", *SEG_COLS, "dist2", "rn")
 
@@ -101,7 +100,6 @@ def segment_knn_join(
     probe_segments: DataFrame,
     k: int,
     grid: GridSpec | None = None,
-    max_rounds: int = 64,
 ) -> DataFrame:
     """k nearest segments to each probe *segment* — ``n_nearest_items``
     (``/root/reference/locus/segmental.py:192-243``; k=1 ≙ ``nearest_item``,
@@ -129,7 +127,7 @@ def segment_knn_join(
 
     out = generic_knn_join(
         segs, _seg_cells(segments, grid), pr, k, grid, d2,
-        tie_desc_id=False, dedup=True, max_rounds=max_rounds,
+        tie_desc_id=False, dedup=True,
     )
     return out.select("qid", *SEG_COLS, "dist2", "rn")
 

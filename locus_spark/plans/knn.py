@@ -23,21 +23,26 @@ pattern holds at 1000-executor scale where each round is a full-cluster job.
 
 Targets that span multiple cells (boxes, segments) may surface in several
 annuli; rounds therefore dedup on (qid, id) before the top-k cut.
+
+Each round emits one DEBUG record on this module's logger
+(``locus_spark.plans.knn``).  Its args are a dict of driver-side values —
+``round, lo, hi, join`` (``broadcast|shuffle``), ``scap`` (sampled-cap
+prefilter ran), ``unsettled`` (probes left after the round) and ``wall_s``
+— so reading it costs no Spark job.
 """
 
 from __future__ import annotations
 
-import os
-import sys
+import logging
 import time
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from locus_spark.cells import GridSpec
+from locus_spark.session import materialize
 
-#: set LOCUS_KNN_DEBUG=1 to print per-round ring/unsettled diagnostics
-_DEBUG = os.environ.get("LOCUS_KNN_DEBUG", "") not in ("", "0")
+_log = logging.getLogger(__name__)
 
 #: target-count threshold between the two materialization policies.  Below
 #: it the exploded target side is persisted across rounds.  At or above it
@@ -82,117 +87,15 @@ CAP_SAMPLE_RATE = 16
 #: plain-broadcast plan).
 SCAP_MIN_TARGETS = 100_000
 
-#: join strategy of each round of the most recent generic_knn_join call
-#: ("broadcast" | "shuffle", suffixed "+scap" when the sampled-cap prefilter
-#: ran) — introspection for tests, so a forced-path test can assert the
-#: forced path actually ran instead of being silently defanged by a policy
-#: change.
-LAST_ROUND_EVALUATORS: list[str] = []
+#: runaway backstop: annulus widths double every round, so the ring covers
+#: any grid long before this; hitting it raises instead of returning a
+#: partial answer.
+MAX_ROUNDS = 64
 
 #: probe-side internal columns: cell-range of the probe geometry's bbox and
 #: the bbox itself in coordinates.
 PROBE_CELL_COLS = ("_bcx0", "_bcx1", "_bcy0", "_bcy1")
 PROBE_BBOX_COLS = ("_sx0", "_sx1", "_sy0", "_sy1")
-
-
-def _fresh_stats(df: DataFrame) -> DataFrame:
-    """Rebuild ``df`` (already materialized by a checkpoint) as a fresh
-    scan WITHOUT the origin plan's statistics.
-
-    Load-bearing for every iterative loop in this engine (kNN rings, CC,
-    PageRank, HITS, DBSCAN): a checkpoint otherwise CARRIES the round
-    plan's estimated ``sizeInBytes`` forward, and size-only estimation
-    multiplies child sizes at every join — so a loop whose round joins
-    the state with itself squares the estimate each round.  The BigInt's
-    bit-length then doubles per round, and from ~20 rounds on Catalyst
-    spends its time in BigInteger.multiply inside stats estimation
-    (measured: 0.3 s/round flat → 2 s/round at round 20 doubling to
-    100+ s/round by round 24; flat 0.3 s with the rebuild).  AQE still
-    makes broadcast decisions from RUNTIME sizes, so dropping the
-    estimate costs nothing here.
-
-    Uses ``internalCreateDataFrame`` (public at the bytecode level; the
-    same hook GraphFrames uses for its iteration state).  Falls back to
-    the input unchanged if the JVM hook is unavailable."""
-    try:
-        jdf = df._jdf
-        jrdd = jdf.queryExecution().toRdd()
-        njdf = df.sparkSession._jsparkSession.internalCreateDataFrame(
-            jrdd, jdf.schema(), False
-        )
-        return DataFrame(njdf, df.sparkSession)
-    except Exception:  # pragma: no cover - depends on Spark internals
-        return df
-
-
-def _truncate_lineage(df: DataFrame) -> DataFrame:
-    """Materialize a round's running state and truncate its lineage.
-
-    Two modes, picked by ``spark.locus.knn.checkpoint`` (default ``auto``):
-
-    * ``reliable`` — persist, then checkpoint to the reliable checkpoint dir,
-      then drop the cache.  This is the CLUSTER mode: executor-memory
-      checkpoints die with their executor, so on a multi-executor cluster a
-      reliable checkpoint removes the ring loop's single point of failure
-      (r1 verdict #5).  The persist-first is load-bearing:
-      ``checkpoint(eager=True)`` otherwise recomputes the full lineage —
-      including the round's whole candidate kernel — a second time during
-      the checkpoint-write job (measured 2.5-4x kNN slowdown).  Set
-      ``sc.setCheckpointDir`` to shared storage; a temp dir is used as a
-      local fallback.
-    * ``local`` — ``localCheckpoint`` (executor-memory blocks).  This is the
-      LOCAL-mode default: driver and executor share one process there, so
-      executor loss isn't a survivable event anyway and the reliable write
-      is pure overhead (measured ~3.5 s/round at local[32]).
-
-    ``auto`` resolves to ``local`` when the master is ``local*``, else
-    ``reliable``.  Reliable mode REQUIRES ``sc.setCheckpointDir`` on shared
-    storage: a driver-local temp dir is not visible to executors on a real
-    cluster (partitions written to per-node filesystems vanish with the
-    node), so with no checkpoint dir configured on a non-local master we
-    log a prominent warning and fall back to ``localCheckpoint`` rather
-    than fake durability; the temp-dir convenience only applies to local
-    masters (single machine — any dir is "shared").
-
-    Checkpointed frames stay referenced until the returned result is
-    consumed (settled probes' rows point at their round's frame); block
-    cleanup is the ContextCleaner's job
-    (``spark.cleaner.referenceTracking.cleanCheckpoints`` is set by
-    ``locus_spark.session``), not an explicit unpersist —
-    ``DataFrame.unpersist`` on a checkpoint-returned frame frees nothing
-    anyway (the blocks aren't registered in the cache manager)."""
-    spark = df.sparkSession
-    mode = spark.conf.get("spark.locus.knn.checkpoint", "auto")
-    sc = spark.sparkContext
-    reliable = mode == "reliable" or (
-        mode == "auto" and not sc.master.startswith("local")
-    )
-    if not reliable:
-        return _fresh_stats(df.localCheckpoint(eager=True))
-    if sc.getCheckpointDir() is None:
-        if sc.master.startswith("local"):
-            import tempfile
-
-            sc.setCheckpointDir(tempfile.mkdtemp(prefix="locus_knn_ck_"))
-        else:
-            import warnings
-
-            warnings.warn(
-                "locus_spark kNN: reliable checkpoint mode requested but no "
-                "checkpoint dir is set; a driver-local temp dir would NOT be "
-                "shared storage on this cluster master, so falling back to "
-                "localCheckpoint (no executor-loss tolerance). Call "
-                "sc.setCheckpointDir(<shared path>) to enable reliable mode.",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-            return _fresh_stats(df.localCheckpoint(eager=True))
-    from pyspark import StorageLevel
-
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    out = df.checkpoint(eager=True)
-    df.unpersist()
-    return _fresh_stats(out)
 
 
 def probe_frame(
@@ -286,7 +189,6 @@ def generic_knn_join(
     dist2: Column,
     tie_desc_id: bool = False,
     dedup: bool = False,
-    max_rounds: int = 64,
 ) -> DataFrame:
     """Exact top-k join.
 
@@ -303,16 +205,9 @@ def generic_knn_join(
     """
     if k < 1:
         raise ValueError("knn: k must be >= 1")
-    t_setup = time.monotonic() if _DEBUG else 0.0
     n_targets = targets.count()
     if n_targets == 0:
         raise ValueError("knn: empty target input")
-    if _DEBUG:
-        print(
-            f"[knn] target count {time.monotonic() - t_setup:.1f}s",
-            file=sys.stderr,
-            flush=True,
-        )
 
     tie = F.col("id").desc() if tie_desc_id else F.col("id").asc()
     w = Window.partitionBy("qid").orderBy(F.col("dist2").asc(), tie)
@@ -388,18 +283,9 @@ def generic_knn_join(
         # times (annulus build, settle joins), and its raw lineage re-scans
         # the probe source each time; the count also sizes round one's
         # annulus frame for the evaluator choice below
-        t_setup = time.monotonic() if _DEBUG else 0.0
-        unsettled = _truncate_lineage(probes)
+        unsettled = materialize(probes)
         n_unsettled = unsettled.count()
         n_nocap = n_unsettled  # round one: nobody has a cap yet
-        if _DEBUG:
-            print(
-                f"[knn] probe checkpoint {time.monotonic() - t_setup:.1f}s"
-                f" ({n_unsettled} probes)",
-                file=sys.stderr,
-                flush=True,
-            )
-    LAST_ROUND_EVALUATORS.clear()
     # Round state is ONE checkpointed frame per round (`merged`): every probe
     # still in play contributes a sentinel row (dist2 = +inf, null target), so
     # per-probe settle statistics are window columns computed inside the same
@@ -440,9 +326,9 @@ def generic_knn_join(
     done: list[DataFrame] = []
     carried: DataFrame | None = None  # unsettled probes' running top-k
     lo, step = 0, hi0 + 1
-    for _ in range(max_rounds):
+    for rnd in range(1, MAX_ROUNDS + 1):
         hi = lo + step - 1
-        t_round = time.monotonic() if _DEBUG else 0.0
+        t_round = time.monotonic()
         ann = _annulus_cells(unsettled, grid, lo, hi, margin=margin)
         # The round evaluator: equi-join the (probe, annulus-cell) frame
         # against the targets on `_jc`, then the per-probe top-k aggregation
@@ -517,9 +403,6 @@ def generic_knn_join(
             cand = cand.join(F.broadcast(caps), "qid", "left").filter(
                 F.col("_scap").isNull() | (F.col("dist2") <= F.col("_scap"))
             )
-        LAST_ROUND_EVALUATORS.append(
-            ("shuffle" if wide else "broadcast") + ("+scap" if use_scap else "")
-        )
         cand = cand.select(*state_cols)
         merged = cand if carried is None else carried.unionByName(cand)
         # one sentinel per in-play probe: guarantees every probe has a row in
@@ -554,7 +437,7 @@ def generic_knn_join(
                 ),
             )
         )
-        # Round-state materialization: always the eager _truncate_lineage
+        # Round-state materialization: always the eager materialize()
         # protocol.  A lazy localCheckpoint (the round-4 small-scale mode)
         # made the wide-dist² segment family's walls erratic, and eager
         # measured equal-or-faster for every other family (BENCH.md).
@@ -573,13 +456,7 @@ def generic_knn_join(
                 "_s._p.*",
             )
         )
-        merged = _truncate_lineage(merged_plan)
-        if _DEBUG:
-            print(
-                f"[knn] ring [{lo},{hi}] topk-join {time.monotonic() - t_round:.1f}s",
-                file=sys.stderr,
-                flush=True,
-            )
+        merged = materialize(merged_plan)
 
         n = grid.n
         big = F.lit(float("inf"))
@@ -602,7 +479,6 @@ def generic_knn_join(
         settled = all_exhausted | F.coalesce(
             (F.col("_cnt") >= k) & (F.col("_kth") <= bound * bound), F.lit(False)
         )
-        t0 = time.monotonic() if _DEBUG else 0.0
         # ONE tiny job decides the round's fate: total unsettled (termination
         # + annulus width guard) and how many still lack a carried _cap
         # (whether the next round needs the prefilter).  Every probe has an
@@ -616,19 +492,25 @@ def generic_knn_join(
         ).first()
         n_unsettled = counts[0]
         n_nocap = n_unsettled - counts[1]
-        if _DEBUG:
-            print(
-                f"[knn] ring [{lo},{hi}] -> unsettled={n_unsettled}"
-                f" (round {time.monotonic() - t0:.1f}s settle-check)",
-                file=sys.stderr,
-                flush=True,
-            )
+        _log.debug(
+            "knn round %(round)d ring [%(lo)d,%(hi)d] join=%(join)s "
+            "scap=%(scap)s unsettled=%(unsettled)d wall_s=%(wall_s).3f",
+            {
+                "round": rnd,
+                "lo": lo,
+                "hi": hi,
+                "join": "shuffle" if wide else "broadcast",
+                "scap": use_scap,
+                "unsettled": n_unsettled,
+                "wall_s": time.monotonic() - t_round,
+            },
+        )
         if n_unsettled == 0:
             done.append(merged.filter(real))  # everyone settled: all final
             break
         # settled/carried/next-probe splits: plain filters over the round
         # checkpoint (block cleanup is the ContextCleaner's job — see
-        # _truncate_lineage)
+        # session.materialize)
         done.append(merged.filter(settled & real))
         carried = merged.filter((~settled) & real).select(*state_cols)
         unsettled = merged.filter((F.col("_rn") == 1) & (~settled)).select(

@@ -7,6 +7,7 @@ import random
 from pyspark.sql import functions as F
 
 from locus_spark.operators.components import assign_clusters, connected_components
+from locus_spark.session import materialize
 
 
 def _union_find(n_nodes, pairs):
@@ -67,3 +68,21 @@ def test_empty_pairs_all_singletons(spark):
     pairs = spark.createDataFrame([], "id_a long, id_b long")
     got = {r.doc_id: r.cluster_id for r in assign_clusters(docs, pairs).collect()}
     assert got == {i: i for i in range(5)}
+
+
+def _plan_size_in_bytes(df):
+    return df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+
+
+def test_materialize_keeps_rows_and_drops_plan_stats(spark):
+    """Every loop's round state goes through materialize(): on a local
+    master it must keep the rows, use no checkpoint dir, and hand back a
+    scan with NO size estimate (Long.MaxValue) — a bare checkpoint carries
+    the origin plan's estimate forward, which squares per self-join round."""
+    df = spark.range(200).select("id", (F.col("id") % 7).alias("g"))
+    joined = df.join(df.withColumnRenamed("id", "id2"), "g")
+    assert _plan_size_in_bytes(joined) != 2**63 - 1
+    out = materialize(joined)
+    assert sorted(out.collect()) == sorted(joined.collect())
+    assert spark.sparkContext.getCheckpointDir() is None
+    assert _plan_size_in_bytes(out) == 2**63 - 1

@@ -15,12 +15,13 @@ Pins two hazards the plan-shape relies on:
 
 from __future__ import annotations
 
+import logging
+
 import pytest
 from pyspark.sql import functions as F
 
 from locus_spark.cells import GridSpec
 from locus_spark.operators.segments import segment_knn_to_point_join
-from locus_spark.plans import knn as knn_plan
 
 GRID = GridSpec(0.0, 0.0, 16.0, 16.0, 4)  # 16x16 cells, cell size 1.0
 
@@ -42,7 +43,7 @@ def _brute_point_seg_d2(px, py, x1, y1, x2, y2):
     return (px - cx) ** 2 + (py - cy) ** 2
 
 
-def test_multicell_target_across_rounds_no_duplicates(spark):
+def test_multicell_target_across_rounds_no_duplicates(spark, caplog):
     """Probe at (0.5, 0.5): round 1 rings [0,4] see nothing, round 2 [5,14]
     finds the long segment via 15 covering cells, round 3 [15,...] re-finds
     the SAME segment via cell (15, 8) while the probe is still unsettled
@@ -50,10 +51,13 @@ def test_multicell_target_across_rounds_no_duplicates(spark):
     merge must collapse to one row per (qid, id)."""
     segs = spark.createDataFrame(SEGS, ["id", "x1", "y1", "x2", "y2"])
     probes = spark.createDataFrame([(1, 0.5, 0.5)], ["qid", "x", "y"])
+    caplog.set_level(logging.DEBUG, logger="locus_spark.plans.knn")
+    caplog.clear()
     out = segment_knn_to_point_join(segs, probes, k=2, grid=GRID).collect()
-    assert len(knn_plan.LAST_ROUND_EVALUATORS) >= 3, (
+    rounds = [r.args for r in caplog.records if r.name == "locus_spark.plans.knn"]
+    assert len(rounds) >= 3, (
         "fixture regression: the resurfacing scenario needs >= 3 rounds, got "
-        f"{knn_plan.LAST_ROUND_EVALUATORS}"
+        f"{rounds}"
     )
     pairs = [(r.qid, r.id) for r in out]
     assert len(pairs) == len(set(pairs)), f"duplicate (qid,id) rows: {sorted(pairs)}"

@@ -4,6 +4,8 @@ for range search, distance equality for nearest, top-k set for n-nearest)."""
 
 from __future__ import annotations
 
+import logging
+
 import numpy as np
 import pytest
 from hypothesis import given, settings
@@ -136,7 +138,7 @@ def test_knn_hot_cluster_skew(spark):
         assert [(d, i) for _, d, i in rows] == want[qid]
 
 
-def test_knn_round_evaluators_agree(spark, monkeypatch):
+def test_knn_round_evaluators_agree(spark, monkeypatch, caplog):
     """Four-way evaluator equivalence: the round evaluator's broadcast and
     shuffled-hash join strategies, each with and without the sampled-cap
     prefilter, must return identical results for three kNN families —
@@ -184,14 +186,20 @@ def test_knn_round_evaluators_agree(spark, monkeypatch):
         round and, iff ``scap``, run the sampled-cap prefilter."""
         out = {}
         for name, run in families.items():
+            caplog.clear()
             out[name] = sorted(
                 (r.qid, r.rn, r.id, r.dist2) for r in run().collect()
             )
-            labels = set(knnplan.LAST_ROUND_EVALUATORS)
+            labels = {
+                r.args["join"] + ("+scap" if r.args["scap"] else "")
+                for r in caplog.records
+                if r.name == "locus_spark.plans.knn"
+            }
             assert {lb.split("+")[0] for lb in labels} == {join}, (name, labels)
             assert (f"{join}+scap" in labels) == scap, (name, labels)
         return out
 
+    caplog.set_level(logging.DEBUG, logger="locus_spark.plans.knn")
     got_broadcast = run_all("broadcast", scap=False)
 
     def force_shuffle():

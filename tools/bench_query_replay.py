@@ -76,8 +76,8 @@ def replay_level(
         sys.stderr.write(proc.stderr[-4000:])
         raise RuntimeError(f"replay failed at cores={cores}")
     # take the LAST parseable JSON object that carries the job marker —
-    # a debug print starting with '{' (e.g. future LOCUS_KNN_DEBUG output)
-    # must not be mistaken for the report
+    # a stray line starting with '{' (e.g. a debug log record) must not be
+    # mistaken for the report
     report = None
     for line in proc.stdout.splitlines():
         line = line.strip()

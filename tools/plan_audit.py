@@ -52,16 +52,28 @@ INTENTIONAL_NESTED_LOOP = {
     "r_find_subsets_persisted": "broadcast small probe boxes x pruned layout scan",
 }
 
+_DBSCAN_LABEL_JOIN = (
+    "final label read-off (points ⟕ border labels on id): BOTH sides are "
+    "data-sized (all points; border points are O(|P|)) at any scale, so a "
+    "shuffle join is the 100-TB-correct shape.  AQE cannot demote it at "
+    "sf0.1 either: the border side is a groupBy(a) whose input shuffle "
+    "already partitions it on the join key, so it has no exchange of its "
+    "own for AQE to size.  The core-core semi-joins feed the checkpointed "
+    "CC input and never reach this plan."
+)
+
 #: queries whose SortMergeJoin is the DOCUMENTED two-data-sized-sides
 #: contract, not a missed broadcast.
 INTENTIONAL_SORTMERGE = {
-    "pages_dbscan": (
-        "core-core semi-join (eps-pairs ⋉ core set): BOTH sides are "
-        "data-sized (O(|P|) rows each) at any scale, so a shuffle join is "
-        "the 100-TB-correct shape — broadcasting the core set would be "
-        "wrong at scale.  kd_dbscan runs the same plan; AQE converts its "
-        "smaller runtime core set to a broadcast join at sf0.001-0.1, and "
-        "may do the same here when the runtime size allows."
+    "pages_dbscan": _DBSCAN_LABEL_JOIN,
+    "kd_dbscan": _DBSCAN_LABEL_JOIN,
+    "dedup_clusters": (
+        "cluster read-off (documents-with-rep ⟕ component labels on _rep): "
+        "BOTH sides are data-sized (O(|D|) documents, up to O(|D|) "
+        "representatives) at any scale.  The component side leaves "
+        "connected_components already partitioned on the key (its own "
+        "node ⟕ min-neighbor join, which AQE does turn into a broadcast "
+        "join), so AQE has no exchange to size and keeps the shuffle join."
     ),
 }
 
