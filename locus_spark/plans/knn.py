@@ -24,16 +24,43 @@ pattern holds at 1000-executor scale where each round is a full-cluster job.
 Targets that span multiple cells (boxes, segments) may surface in several
 annuli; rounds therefore dedup on (qid, id) before the top-k cut.
 
+Sampled radius (from SCAP_MIN_TARGETS targets on).  Before the ring loop,
+ONE pass over a deterministic 1/CAP_SAMPLE_RATE target sample gives each
+probe ``_scap``: the k-th smallest sampled dist² inside a window sized for
+the sample's density.  Round one then searches a radius probe (non-null
+``_scap``) exactly: every cell whose rect distance to the probe bbox is
+<= sqrt(_scap), rows with dist² <= _scap.  Such a probe settles in round
+one by construction:
+
+* the true k-th dist² <= _scap — the k-th smallest over a subset of the
+  targets is >= the k-th smallest over all of them (for multi-cell
+  families the sampled distances are made distinct first, which only
+  raises the k-th value);
+* every target within sqrt(_scap) of the probe has a covering cell whose
+  rect lies within that distance (the point of the target nearest the
+  probe lies in one of its covering cells; the rect test is shrunk by the
+  float-fuzz margin, and edge cells, which also hold clipped targets
+  outside the grid bbox, reach to infinity), so round one evaluates every
+  target that can rank, ties at the k-th distance included.
+
+Probes with fewer than k sampled candidates (null ``_scap``) take the
+ring path: ``[0, hi0]`` in round one, then geometric growth under the
+carried ``_cap``.
+
 Each round emits one DEBUG record on this module's logger
 (``locus_spark.plans.knn``).  Its args are a dict of driver-side values —
-``round, lo, hi, join`` (``broadcast|shuffle``), ``scap`` (sampled-cap
-prefilter ran), ``unsettled`` (probes left after the round) and ``wall_s``
-— so reading it costs no Spark job.
+``round, lo, hi`` (the ring searched by probes without a sampled radius;
+in round one ``[0, hi0]``, while radius probes search their own disc),
+``join`` (``broadcast|shuffle``), ``scap`` (the up-front sampled pass
+ran), ``radius`` (probes the round settled through a sampled radius),
+``unsettled`` (probes left after the round) and ``wall_s`` — so reading
+it costs no Spark job.
 """
 
 from __future__ import annotations
 
 import logging
+import math
 import time
 
 from pyspark.sql import Column, DataFrame, Window
@@ -57,34 +84,33 @@ LOCAL_TOPK_MIN_TARGETS = 2_000_000
 #: round evaluator then hash-joins them against the targets after a shuffle
 #: (``shuffle_hash`` hint) instead.  The estimate is unsettled probes × ring
 #: cells, known from round two on, or from round one when probes are counted
-#: up front (LOCAL_TOPK_MIN_TARGETS).  Everything else about the round — the
-#: fused ``_jc`` key, ``_cap``/``_scap`` row pruning, dedup, sentinels and
-#: settling — is shared by both join strategies.
+#: up front (LOCAL_TOPK_MIN_TARGETS).  With the sampled pass, round one's
+#: ring is the sample window, which also sizes the pass's own frame.
+#: Everything else about the round — the fused ``_jc`` key, ``_cap``/
+#: ``_scap`` row pruning, dedup, sentinels and settling — is shared by both
+#: join strategies.
 ANN_BROADCAST_MAX_ROWS = 4_000_000
 
-#: sampled-cap prefilter: when a round has probes with no carried `_cap`
-#: (always in round one; later for probes that found < k candidates so far)
-#: from SCAP_MIN_TARGETS on, derive a per-probe upper bound of the true k-th
-#: distance from a 1/CAP_SAMPLE_RATE deterministic target sample and
-#: row-prune the full join with it before the top-k aggregation.  The bound
-#: is exact-safe (k-th smallest within a subset >= k-th smallest overall;
-#: probes with < k sampled candidates keep a null cap = no pruning), and it
-#: bounds the aggregation's input at ~CAP_SAMPLE_RATE*k rows per probe
-#: regardless of cell density — measured at 32M rows / 24k probes / 143M
-#: first-round candidates: 30 s window -> ~6 s total, pure JVM.  (An exact
-#: candidate-volume gate — per-cell occupancy histogram + a per-round volume
-#: job — used to decide this; at 128M rows the gate's own jobs cost more
-#: than the prefilter ever saves, so capless probes at scale always take it.)
+#: sampled radius: the up-front pass derives each probe's ``_scap`` from
+#: the targets with ``xxhash64(id) % CAP_SAMPLE_RATE == 0``, in a window
+#: sized by the round-one density formula at 1/CAP_SAMPLE_RATE of the
+#: density (so it expects as many sampled candidates as round one expects
+#: real ones).  ``_scap`` bounds the true k-th dist² from above, so it both
+#: sizes the probe's exact round-one window and row-prunes it: a radius
+#: probe settles in round one and its aggregation sees ~CAP_SAMPLE_RATE*k
+#: rows whatever the cell density (see the module docstring).  Why a
+#: sample: an exact per-cell occupancy histogram + volume job was measured
+#: at 128M rows to cost more than the pruning saves, and a mean-density
+#: estimate under-counted skewed probes by 200x.
 CAP_SAMPLE_RATE = 16
 
-#: arm the sampled-cap prefilter from this target count on: at sf0.1
-#: (~600k segments, 1000 probe segments, one 3x3-ish ring) the
-#: un-prefiltered collect_list aggregation ingests the full candidate volume
-#: and its walls turn ERRATIC under memory pressure — measured min-of-reps
-#: 6.0 s but 15.4 s on 2 of 4 warm reps (and 25-55 s whole-query outliers in
-#: the round-4 board), vs a flat 5.4 s with the prefilter on.  Below this
-#: count the sampled pass is pure overhead (and toy-scale tests pin the
-#: plain-broadcast plan).
+#: run the sampled pass from this target count on: at sf0.1 (~600k
+#: segments, 1000 probe segments, one 3x3-ish ring) the unpruned
+#: collect_list aggregation ingests the full candidate volume and its walls
+#: turn ERRATIC under memory pressure — measured min-of-reps 6.0 s but
+#: 15.4 s on 2 of 4 warm reps, vs a flat 5.4 s with sampled pruning.  Below
+#: this count the sampled pass is pure overhead (and toy-scale tests pin
+#: the plain-broadcast plan), so every probe takes the ring path.
 SCAP_MIN_TARGETS = 100_000
 
 #: runaway backstop: annulus widths double every round, so the ring covers
@@ -127,11 +153,14 @@ def _annulus_cells(
     probes: DataFrame, grid: GridSpec, lo: int, hi: int, margin: float = 0.0
 ) -> DataFrame:
     """(probe, cell) pairs for cells whose Chebyshev distance to the probe's
-    cell-rectangle lies in [lo, hi], clipped to the grid.
+    cell-rectangle lies in [lo, hi], clipped to the grid.  A probe row with
+    a non-null ``_scap`` (sampled radius, round one only) instead gets every
+    cell whose rect lies within sqrt(_scap) of its bbox.
 
     When the probe row carries a ``_cap`` column (the running k-th-best
-    squared distance from earlier rounds), cells whose squared distance to
-    the probe's bbox exceeds the cap are pruned — the distributed form of
+    squared distance from earlier rounds) or a ``_scap`` (its sampled
+    upper bound), cells whose squared distance to the probe's bbox exceeds
+    that bound are pruned — the distributed form of
     the reference's branch-and-bound bound (``/root/reference/locus/kd.py:368``,
     ``r.py:592-606``): an already-found k-th neighbor caps how far the search
     ever needs to look, which keeps fringe probes from dragging whole dense
@@ -141,6 +170,13 @@ def _annulus_cells(
     cx1 = F.least(F.lit(n - 1), F.col("_bcx1") + F.lit(hi))
     cy0 = F.greatest(F.lit(0), F.col("_bcy0") - F.lit(hi))
     cy1 = F.least(F.lit(n - 1), F.col("_bcy1") + F.lit(hi))
+    if "_scap" in probes.columns:
+        has_r = F.col("_scap").isNotNull()
+        r = F.sqrt(F.col("_scap")) + F.lit(margin)
+        cx0 = F.when(has_r, grid.cell_x_col(F.col("_sx0") - r)).otherwise(cx0)
+        cx1 = F.when(has_r, grid.cell_x_col(F.col("_sx1") + r)).otherwise(cx1)
+        cy0 = F.when(has_r, grid.cell_y_col(F.col("_sy0") - r)).otherwise(cy0)
+        cy1 = F.when(has_r, grid.cell_y_col(F.col("_sy1") + r)).otherwise(cy1)
     out = (
         probes.withColumn("_cx", F.explode(F.sequence(cx0, cx1)))
         .withColumn("_cy", F.explode(F.sequence(cy0, cy1)))
@@ -151,17 +187,23 @@ def _annulus_cells(
             F.greatest(F.col("_bcy0") - F.col("_cy"), F.col("_cy") - F.col("_bcy1"), F.lit(0)),
         )
         out = out.filter(dist_rect >= F.lit(lo))
-    if "_cap" in probes.columns:
-        # squared coordinate distance from the probe bbox to the cell rect
+    cap = _cap_col(probes)
+    if cap is not None:
+        # squared coordinate distance from the probe bbox to the cell rect;
+        # edge cells also hold the targets clipped into them from outside
+        # the grid bbox, so their outer sides reach to infinity
+        inf = F.lit(float("inf"))
         cell_x0 = F.lit(grid.min_x) + F.col("_cx") * F.lit(grid.cell_w)
-        cell_x1 = cell_x0 + F.lit(grid.cell_w)
         cell_y0 = F.lit(grid.min_y) + F.col("_cy") * F.lit(grid.cell_h)
-        cell_y1 = cell_y0 + F.lit(grid.cell_h)
+        cell_x1 = F.when(F.col("_cx") == n - 1, inf).otherwise(cell_x0 + F.lit(grid.cell_w))
+        cell_y1 = F.when(F.col("_cy") == n - 1, inf).otherwise(cell_y0 + F.lit(grid.cell_h))
+        cell_x0 = F.when(F.col("_cx") == 0, -inf).otherwise(cell_x0)
+        cell_y0 = F.when(F.col("_cy") == 0, -inf).otherwise(cell_y0)
         dx = F.greatest(F.lit(0.0), cell_x0 - F.col("_sx1"), F.col("_sx0") - cell_x1)
         dy = F.greatest(F.lit(0.0), cell_y0 - F.col("_sy1"), F.col("_sy0") - cell_y1)
         d2_cell = (F.greatest(F.lit(0.0), dx - F.lit(margin)) ** 2
                    + F.greatest(F.lit(0.0), dy - F.lit(margin)) ** 2)
-        out = out.filter(F.col("_cap").isNull() | (d2_cell <= F.col("_cap")))
+        out = out.filter(cap.isNull() | (d2_cell <= cap))
     # fuse (cx, cy) into ONE long join key: a single-long equi-join key gives
     # the broadcast join a LongHashedRelation (dense, allocation-free probes)
     # instead of the composite-key BytesToBytesMap relation, whose lookup
@@ -171,6 +213,29 @@ def _annulus_cells(
     return out.withColumn("_jc", grid.pack(F.col("_cx"), F.col("_cy"))).drop(
         "_cx", "_cy"
     )
+
+
+def _cap_col(frame: DataFrame) -> Column | None:
+    """The probe's upper bound on its k-th dist²: the carried ``_cap`` or the
+    sampled radius ``_scap`` (a probe never has both), None when the frame
+    carries neither column."""
+    caps = [F.col(c) for c in ("_cap", "_scap") if c in frame.columns]
+    return F.coalesce(*caps) if caps else None
+
+
+def _first_ring(k: int, density: float, n: int) -> int:
+    """Chebyshev half-width of a first window expected to hold ~4k+8
+    targets at ``density`` targets per cell, clamped to [0, max(1, n//4)].
+
+    It sizes round one so the typical probe settles there — every extra
+    round costs a fixed number of Spark jobs, which dominates wall time
+    when the data per round is small.  When the probe's own cell already
+    holds that many (dense targets) the window stays a single ring —
+    widening it would multiply candidate work for no round saved (128M
+    rows at resolution 10, k=5: ~122 targets/cell -> 0).  Sparse regions
+    still expand geometrically afterwards."""
+    h = int(math.ceil((math.sqrt((4.0 * k + 8.0) / max(density, 1e-12)) - 1.0) / 2.0))
+    return max(0, min(h, max(1, n // 4)))
 
 
 def _build_side(ann: DataFrame, shuffle: bool) -> DataFrame:
@@ -230,22 +295,8 @@ def generic_knn_join(
     )
     margin = 1e-9 * scale
 
-    # size the FIRST window from mean cell density so the typical probe
-    # settles in round one — every extra round costs a fixed number of Spark
-    # jobs, which dominates wall time when the data per round is small.  The
-    # (2·hi+1)² window aims for ≥ ~4k expected candidates; when the probe's
-    # own cell already holds that many (dense targets) the window stays a
-    # single ring — widening it would multiply candidate-kernel work for no
-    # round saved.  Sparse regions still expand geometrically afterwards.
-    # At dense shapes the formula itself yields a single cell (128M rows at
-    # resolution 10, k=5: ~122 targets/cell -> hi0 = 0).
-    import math
-
     density = n_targets / float(grid.n * grid.n)
-    hi0 = int(
-        math.ceil((math.sqrt((4.0 * k + 8.0) / max(density, 1e-12)) - 1.0) / 2.0)
-    )
-    hi0 = max(0, min(hi0, max(1, grid.n // 4)))
+    hi0 = _first_ring(k, density, grid.n)
 
     # Incremental re-rank: only UNSETTLED probes' rows flow through the
     # per-round dedup/window/stats path.  A probe's top-k is final the round
@@ -276,16 +327,54 @@ def generic_knn_join(
     if persist_targets:
         target_cells = target_cells.persist(StorageLevel.MEMORY_AND_DISK)
     n_unsettled: int | None = None
-    n_nocap: int | None = None  # unsettled probes with no carried _cap yet
     unsettled = probes
     if not persist_targets:
         # materialize the probe frame once: every round touches it several
         # times (annulus build, settle joins), and its raw lineage re-scans
-        # the probe source each time; the count also sizes round one's
-        # annulus frame for the evaluator choice below
+        # the probe source each time; the count also sizes the sampled
+        # pass's and round one's frames for the join strategy choice below
         unsettled = materialize(probes)
         n_unsettled = unsettled.count()
-        n_nocap = n_unsettled  # round one: nobody has a cap yet
+    # round one's frame estimate: the [0, hi0] ring, or with the sampled
+    # pass the sample window — a radius disc holds k of the ~4k+8 sampled
+    # candidates that window expects, so it typically lies inside it
+    ring1 = hi0
+    use_scap = n_targets >= SCAP_MIN_TARGETS
+    if use_scap:
+        # the ONE sampled pass: each probe's k-th smallest dist² over the
+        # 1/CAP_SAMPLE_RATE target sample, in a window sized for the
+        # sample's density.  Fewer than k sampled candidates => null _scap
+        # => the probe takes the ring path.
+        hs = _first_ring(k, density / CAP_SAMPLE_RATE, grid.n)
+        sampled = target_cells.filter(
+            F.pmod(F.xxhash64(F.col("id")), F.lit(CAP_SAMPLE_RATE)) == 0
+        )
+        s_wide = (
+            n_unsettled is not None
+            and n_unsettled * (2 * hs + 1) ** 2 > ANN_BROADCAST_MAX_ROWS
+        )
+        scand = (
+            _build_side(_annulus_cells(unsettled, grid, 0, hs), s_wide)
+            .join(sampled, ["_jc"])
+            .withColumn("dist2", dist2)
+        )
+        sorted_d = F.sort_array(F.collect_list("dist2"))
+        if dedup:
+            # multi-cell targets surface once per covering cell; a
+            # duplicated near target would understate the sampled k-th.
+            # Distinct distances only shift the k-th element toward larger
+            # values, so the bound stays a valid upper bound — and it
+            # removes the dropDuplicates shuffle a row-level dedup needs.
+            sorted_d = F.array_distinct(sorted_d)
+        kth = F.get("_ck", 0)
+        caps = (
+            scand.groupBy("qid")
+            .agg(F.slice(sorted_d, k, 1).alias("_ck"))
+            # a NaN k-th (non-finite geometry) sizes no window
+            .select("qid", F.when(~F.isnan(kth), kth).alias("_scap"))
+        )
+        unsettled = unsettled.join(F.broadcast(caps), "qid", "left")
+        ring1 = hs
     # Round state is ONE checkpointed frame per round (`merged`): every probe
     # still in play contributes a sentinel row (dist2 = +inf, null target), so
     # per-probe settle statistics are window columns computed inside the same
@@ -296,7 +385,7 @@ def generic_knn_join(
     # every extra per-round job pays a fixed scheduling floor at EVERY
     # parallelism level, which is what caps two-cluster-size scaling once the
     # data-sized work is parallel.
-    base_probe_cols = list(probes.columns)
+    base_probe_cols = list(unsettled.columns)
     state_cols = [*base_probe_cols, *target_payload, "dist2"]
     state_cols_noq = [c for c in state_cols if c != "qid"]
     null_targets = [
@@ -334,75 +423,25 @@ def generic_knn_join(
         # against the targets on `_jc`, then the per-probe top-k aggregation
         # below.  It is fully whole-stage-codegen and its aggregation input
         # is bounded by the carried `_cap` (probes with >= k candidates) or
-        # the sampled-cap prefilter (probes without one), so it is the plan
-        # at ANY exact candidate volume.  Only the join strategy varies:
-        # broadcast, or a shuffled hash join once the frame is known to
-        # exceed ANN_BROADCAST_MAX_ROWS.
-        ring_cells = (2 * hi + 1) ** 2 - ((2 * lo - 1) ** 2 if lo > 0 else 0)
+        # the sampled radius `_scap`, so it is the plan at ANY exact
+        # candidate volume.  Only the join strategy varies: broadcast, or a
+        # shuffled hash join once the frame is known to exceed
+        # ANN_BROADCAST_MAX_ROWS.
+        outer = ring1 if lo == 0 else hi
+        ring_cells = (2 * outer + 1) ** 2 - ((2 * lo - 1) ** 2 if lo > 0 else 0)
         ann_rows = None if n_unsettled is None else n_unsettled * ring_cells
         wide = ann_rows is not None and ann_rows > ANN_BROADCAST_MAX_ROWS
-        has_cap = "_cap" in ann.columns
         cand = (
             _build_side(ann, wide)
             .join(target_cells, ["_jc"])
             .withColumn("dist2", dist2)
         )
-        if has_cap:
-            # branch-and-bound at ROW level: a candidate farther than the
-            # probe's current k-th best can never displace it (ties at equal
-            # dist2 still pass — id order can displace)
-            cand = cand.filter(
-                F.col("_cap").isNull() | (F.col("dist2") <= F.col("_cap"))
-            )
-        # Arm the sampled-cap prefilter whenever capless probes exist from
-        # SCAP_MIN_TARGETS on.  An exact candidate-volume probe job used to
-        # gate this (a per-cell occupancy histogram + a per-round count
-        # job); measured at 128M rows the histogram build plus the extra
-        # blocking job cost more than the prefilter's sampled pass ever
-        # saves, and probes sampled from skewed data make a density
-        # *estimate* under-count by orders of magnitude (200x measured) —
-        # so at scale the prefilter is simply always worth it.
-        use_scap = n_targets >= SCAP_MIN_TARGETS and (
-            n_nocap is None or n_nocap > 0
-        )
-        if use_scap:
-            # capless probes over dense cells (all of them in round one;
-            # later, probes that still found < k candidates): derive a
-            # per-probe UPPER bound of the true k-th distance from a
-            # deterministic 1/CAP_SAMPLE_RATE target sample and prune with
-            # it, so the aggregation never sees the dense cells' full
-            # candidate volume.  Safe: the k-th smallest within a subset >=
-            # the k-th smallest overall; fewer than k sampled candidates =>
-            # null cap => no pruning; <= keeps distance ties (id order may
-            # still displace).
-            ann_nocap = ann.filter(F.col("_cap").isNull()) if has_cap else ann
-            sampled = target_cells.filter(
-                F.pmod(F.xxhash64(F.col("id")), F.lit(CAP_SAMPLE_RATE)) == 0
-            )
-            scand = (
-                _build_side(ann_nocap, wide)
-                .join(sampled, ["_jc"])
-                .withColumn("dist2", dist2)
-            )
-            sorted_d = F.sort_array(F.collect_list("dist2"))
-            if dedup:
-                # multi-cell targets surface once per covering cell; a
-                # duplicated near target would understate the sampled k-th
-                # and over-prune.  Distinct distances only shift the k-th
-                # element toward larger values, so the bound stays a valid
-                # upper bound — and it removes the dropDuplicates shuffle a
-                # row-level dedup would need.
-                sorted_d = F.array_distinct(sorted_d)
-            caps = (
-                scand.groupBy("qid")
-                .agg(F.slice(sorted_d, k, 1).alias("_ck"))
-                .select("qid", F.get("_ck", 0).alias("_scap"))
-            )
-            # probes with a carried _cap aren't in `caps` => null _scap
-            # => pass through (they are already row-pruned above)
-            cand = cand.join(F.broadcast(caps), "qid", "left").filter(
-                F.col("_scap").isNull() | (F.col("dist2") <= F.col("_scap"))
-            )
+        cap = _cap_col(ann)
+        if cap is not None:
+            # branch-and-bound at ROW level: a candidate farther than an
+            # upper bound of the probe's k-th best can never rank (ties at
+            # equal dist2 still pass — id order can displace)
+            cand = cand.filter(cap.isNull() | (F.col("dist2") <= cap))
         cand = cand.select(*state_cols)
         merged = cand if carried is None else carried.unionByName(cand)
         # one sentinel per in-play probe: guarantees every probe has a row in
@@ -476,31 +515,37 @@ def generic_knn_join(
         )
         bound = F.greatest(F.lit(0.0), gap - F.lit(margin))
         all_exhausted = exh_l & exh_r & exh_b & exh_t
+        # reach2: every target within this dist² of the probe has been
+        # evaluated — the ring's gap, or a radius probe's whole disc
+        reach2 = bound * bound
+        by_radius = F.lit(False)
+        if use_scap:
+            by_radius = F.col("_scap").isNotNull()
+            reach2 = F.coalesce(F.col("_scap"), reach2)
+            all_exhausted = ~by_radius & all_exhausted
         settled = all_exhausted | F.coalesce(
-            (F.col("_cnt") >= k) & (F.col("_kth") <= bound * bound), F.lit(False)
+            (F.col("_cnt") >= k) & (F.col("_kth") <= reach2), F.lit(False)
         )
-        # ONE tiny job decides the round's fate: total unsettled (termination
-        # + annulus width guard) and how many still lack a carried _cap
-        # (whether the next round needs the prefilter).  Every probe has an
-        # rn == 1 row (sentinels), so this is a keyless agg over the
-        # checkpoint — no join.
+        # ONE tiny job decides the round's fate: total unsettled
+        # (termination + annulus width guard) and how many settled through
+        # a sampled radius.  Every probe has an rn == 1 row (sentinels), so
+        # this is a keyless agg over the checkpoint — no join.
         counts = merged.filter(F.col("_rn") == 1).agg(
             F.count(F.when(~settled, F.lit(1))).alias("_n"),
-            F.count(
-                F.when((~settled) & (F.col("_cnt") >= k), F.lit(1))
-            ).alias("_nc"),
+            F.count(F.when(settled & by_radius, F.lit(1))).alias("_nr"),
         ).first()
         n_unsettled = counts[0]
-        n_nocap = n_unsettled - counts[1]
         _log.debug(
             "knn round %(round)d ring [%(lo)d,%(hi)d] join=%(join)s "
-            "scap=%(scap)s unsettled=%(unsettled)d wall_s=%(wall_s).3f",
+            "scap=%(scap)s radius=%(radius)d unsettled=%(unsettled)d "
+            "wall_s=%(wall_s).3f",
             {
                 "round": rnd,
                 "lo": lo,
                 "hi": hi,
                 "join": "shuffle" if wide else "broadcast",
                 "scap": use_scap,
+                "radius": counts[1],
                 "unsettled": n_unsettled,
                 "wall_s": time.monotonic() - t_round,
             },

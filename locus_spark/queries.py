@@ -64,15 +64,13 @@ def register(name: str, oracle: str | None):
 
 
 #: names hoisted to the FRONT of the exported registry order: the driver's
-#: correctness harness checks a bounded prefix of ``queries()`` (50 rows in
-#: r3/r4).  Round-5 rotation policy (VERDICT r4 item 2, now explicit): the
-#: window holds (a) every row whose last hash-green round is >= 2 rounds
-#: stale — all 47 r3-green rows this round, spatial family first because
-#: the kNN planner (plans/knn.py) changed in BOTH r4 and r5 — plus (b)
-#: rows whose operator module changed this round while green last round
-#: (doc_hits: normalizer rework; pages_canonical_dedup: orphan-'&' fix +
-#: oracle mirror; pages_knn: planner small-state change on the geocoded
-#: twin).  No row is ever left stale >= 3 rounds.
+#: correctness harness checks a bounded prefix of ``queries()``.  Rotation
+#: policy: the window holds (a) every row that reaches a module changed
+#: since its last hash-green check — the spatial family first, because the
+#: kNN planner (plans/knn.py) changed again: every kNN/nearest row, its
+#: persisted twins, ``pages_knn`` and both incremental/upsert kNN rows —
+#: and (b) the rows that have been stale longest.  No row is left stale
+#: for more than two rotations.
 _CHECK_FIRST = [
     "kd_find_box",
     "kd_find_ball",
@@ -81,6 +79,8 @@ _CHECK_FIRST = [
     "kd_nearest",
     "kd_find_box_persisted",
     "kd_knn_persisted",
+    "kd_knn_incremental",
+    "kd_knn_upsert",
     "r_find_subsets",
     "r_find_subsets_persisted",
     "r_find_supersets",
@@ -126,14 +126,11 @@ _CHECK_FIRST = [
     "media_features",
 ]
 
-#: names sunk to the TAIL: hash-green in CORRECTNESS_r04 on code untouched
-#: in round 5 — the safest rows to leave outside the bounded check window
-#: (each is at most 1 round stale; they rotate back in next round by the
-#: policy above).
+#: names sunk to the TAIL: hash-green at their last check and reaching no
+#: module changed since — the safest rows to leave outside the bounded
+#: check window (they rotate back in by the policy above).
 _CHECK_LAST = [
     "kd_find_box_incremental",
-    "kd_knn_incremental",
-    "kd_knn_upsert",
     "kd_dbscan",
     "r_overlaps",
     "dedup_incremental",

@@ -1,6 +1,8 @@
 """Multi-round invariants of the generic kNN ring planner.
 
-Pins two hazards the plan-shape relies on:
+Pins the sampled-radius contract (a probe with a sampled radius settles in
+round one; one without keeps the ring rounds) and two hazards the
+plan-shape relies on:
 
 * a multi-cell target that surfaces in DIFFERENT rounds via different
   covering cells must appear at most once per probe in the output — the
@@ -20,7 +22,9 @@ import logging
 import pytest
 from pyspark.sql import functions as F
 
+import locus_spark.plans.knn as knnplan
 from locus_spark.cells import GridSpec
+from locus_spark.operators.points import knn_join
 from locus_spark.operators.segments import segment_knn_to_point_join
 
 GRID = GridSpec(0.0, 0.0, 16.0, 16.0, 4)  # 16x16 cells, cell size 1.0
@@ -68,6 +72,91 @@ def test_multicell_target_across_rounds_no_duplicates(spark, caplog):
     )[:2]
     got = sorted((r.dist2, r.id) for r in out)
     assert got == pytest.approx(expect)
+
+
+def _radius_fixture():
+    """Targets only in the lower-left [0, 9)² of GRID: a dense cluster over
+    cells (3..5, 3..5) holding five identical points / segments (ids
+    900..904, a tie straddling the k-th rank), plus a sparse spread.
+    Probes: four in the cluster (one on the tie, so its k = 3 answer is
+    the three smallest tied ids) and one isolated in the far corner cell,
+    where no target lies within the sampled window — so it has no sampled
+    radius and must take the ring rounds."""
+    import numpy as np
+
+    rng = np.random.RandomState(5)
+    xy = np.vstack([rng.uniform(3.0, 6.0, (150, 2)), rng.uniform(0.0, 9.0, (50, 2))])
+    pts = [(i, float(x), float(y)) for i, (x, y) in enumerate(xy)]
+    pts += [(900 + j, 4.5, 4.5) for j in range(5)]
+    segs = [
+        (i, x, y, x + 0.05 * (1 + i % 7), y + 0.3 * (i % 3))
+        for i, x, y in pts[:200]
+    ]
+    segs += [(900 + j, 4.25, 4.5, 4.75, 4.5) for j in range(5)]
+    segs += [(990, 0.5, 8.5, 8.5, 8.5)]  # spans 9 cells of row 8
+    probes = [(0, 4.5, 4.5), (1, 3.3, 5.7), (2, 5.1, 3.2), (3, 4.0, 4.9),
+              (4, 15.5, 15.5)]
+    return pts, segs, probes
+
+
+def test_sampled_radius_settles_in_one_round(spark, monkeypatch, caplog):
+    """With the sampled pass armed, every probe that got a sampled radius
+    settles in round one (radius == 4 cluster probes, nothing else settles
+    there through a radius later), while the isolated probe with fewer than
+    k sampled candidates still needs later ring rounds — and both families
+    (points; segments, which dedup multi-cell targets) equal brute force,
+    duplicate-geometry ties included.  Without the pass the same fixture
+    needs >= 2 rounds for every family."""
+    pts, segs, probes = _radius_fixture()
+    pdf = spark.createDataFrame(pts, "id long, x double, y double")
+    sdf = spark.createDataFrame(
+        segs, "id long, x1 double, y1 double, x2 double, y2 double"
+    )
+    qdf = spark.createDataFrame(probes, "qid long, x double, y double")
+    k = 3
+    families = {
+        "pts": (
+            lambda: knn_join(pdf, qdf, k, grid=GRID),
+            lambda px, py, t: (t[1] - px) ** 2 + (t[2] - py) ** 2,
+            pts,
+        ),
+        "segs": (
+            lambda: segment_knn_to_point_join(sdf, qdf, k, grid=GRID),
+            lambda px, py, t: _brute_point_seg_d2(px, py, *t[1:]),
+            segs,
+        ),
+    }
+    caplog.set_level(logging.DEBUG, logger="locus_spark.plans.knn")
+
+    def run(name):
+        query, d2, targets = families[name]
+        caplog.clear()
+        out = query().collect()
+        recs = [r.args for r in caplog.records if r.name == "locus_spark.plans.knn"]
+        got = {}
+        for r in out:
+            got.setdefault(r.qid, []).append((r.rn, r.dist2, r.id))
+        for qid, px, py in probes:
+            want = sorted((d2(px, py, t), t[0]) for t in targets)[:k]
+            rows = sorted(got[qid])
+            assert [i for _, _, i in rows] == [i for _, i in want], (name, qid)
+            assert [d for _, d, _ in rows] == pytest.approx([d for d, _ in want])
+        return got, recs
+
+    for name in families:
+        plain, recs = run(name)
+        assert len(recs) >= 2, f"fixture regression: {name} ring path {recs}"
+        # the tie straddling rank k resolves to the smallest ids
+        assert [i for *_, i in sorted(plain[0])] == [900, 901, 902]
+    monkeypatch.setattr(knnplan, "SCAP_MIN_TARGETS", 1)
+    monkeypatch.setattr(knnplan, "CAP_SAMPLE_RATE", 2)
+    for name in families:
+        _, recs = run(name)
+        first, later = recs[0], recs[1:]
+        assert first["scap"] and first["radius"] == 4, (name, recs)
+        assert first["unsettled"] == 1, (name, recs)  # the isolated probe
+        assert later and all(r["radius"] == 0 for r in later), (name, recs)
+        assert recs[-1]["unsettled"] == 0
 
 
 def test_desc_id_tie_encoding_is_order_reversing(spark):

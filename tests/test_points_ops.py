@@ -47,6 +47,18 @@ def _brute_knn(pts, probes, k):
     return out
 
 
+def _assert_matches_brute(got, pts, probes, k):
+    """kNN output rows equal brute force per probe: ranks, ids, dist²."""
+    want = _brute_knn(pts, probes, k)
+    by_q = {}
+    for r in got:
+        by_q.setdefault(r.qid, []).append((r.rn, r.dist2, r.id))
+    assert set(by_q) == set(want)
+    for qid, rows in by_q.items():
+        rows.sort()
+        assert [(d, i) for _, d, i in rows] == want[qid]
+
+
 @settings(max_examples=6, deadline=None)
 @given(
     st.lists(st.tuples(coord, coord), min_size=1, max_size=60),
@@ -61,14 +73,7 @@ def test_knn_join_matches_brute(spark, pts, probes, k, res):
             min(p[0] for p in pts), min(p[1] for p in pts),
             max(p[0] for p in pts), max(p[1] for p in pts), res),
     ).collect()
-    want = _brute_knn(pts, probes, k)
-    by_q = {}
-    for r in got:
-        by_q.setdefault(r.qid, []).append((r.rn, r.dist2, r.id))
-    assert set(by_q) == set(want)
-    for qid, rows in by_q.items():
-        rows.sort()
-        assert [(d, i) for _, d, i in rows] == want[qid]
+    _assert_matches_brute(got, pts, probes, k)
 
 
 def test_knn_short_circuit_k_ge_size(spark):
@@ -115,7 +120,7 @@ def test_knn_hot_cluster_skew(spark):
     """Regression for the hot-cell candidate explosion: half the points in one
     dense cluster, probes both inside and on the fringe — exercises the _cap
     branch-and-bound pruning in the round evaluator (its join strategies
-    and the sampled-cap prefilter are forced and compared by
+    and the sampled-radius pass are forced and compared by
     test_knn_round_evaluators_agree)."""
     rng = np.random.RandomState(7)
     hot = rng.uniform(-1.0, 1.0, size=(400, 2))
@@ -128,20 +133,13 @@ def test_knn_hot_cluster_skew(spark):
     ])]
     grid = GridSpec(-100.0, -100.0, 100.0, 100.0, 6)
     got = knn_join(_points_df(spark, pts), _probes_df(spark, probes), 3, grid=grid).collect()
-    want = _brute_knn(pts, probes, 3)
-    by_q = {}
-    for r in got:
-        by_q.setdefault(r.qid, []).append((r.rn, r.dist2, r.id))
-    assert set(by_q) == set(want)
-    for qid, rows in by_q.items():
-        rows.sort()
-        assert [(d, i) for _, d, i in rows] == want[qid]
+    _assert_matches_brute(got, pts, probes, 3)
 
 
 def test_knn_round_evaluators_agree(spark, monkeypatch, caplog):
     """Four-way evaluator equivalence: the round evaluator's broadcast and
-    shuffled-hash join strategies, each with and without the sampled-cap
-    prefilter, must return identical results for three kNN families —
+    shuffled-hash join strategies, each with and without the up-front
+    sampled-radius pass, must return identical results for three kNN families —
     points, boxes, segment-to-point — including duplicate-geometry ties,
     and the points family must match brute force.  Each configuration
     asserts the label it actually ran, so a policy change cannot silently
@@ -183,20 +181,21 @@ def test_knn_round_evaluators_agree(spark, monkeypatch, caplog):
 
     def run_all(join, scap):
         """Run every family; each must have joined with ``join`` in every
-        round and, iff ``scap``, run the sampled-cap prefilter."""
+        round and, iff ``scap``, run the up-front sampled pass and settled
+        some probes through a sampled radius."""
         out = {}
         for name, run in families.items():
             caplog.clear()
             out[name] = sorted(
                 (r.qid, r.rn, r.id, r.dist2) for r in run().collect()
             )
-            labels = {
-                r.args["join"] + ("+scap" if r.args["scap"] else "")
-                for r in caplog.records
+            recs = [
+                r.args for r in caplog.records
                 if r.name == "locus_spark.plans.knn"
-            }
-            assert {lb.split("+")[0] for lb in labels} == {join}, (name, labels)
-            assert (f"{join}+scap" in labels) == scap, (name, labels)
+            ]
+            assert {a["join"] for a in recs} == {join}, (name, recs)
+            assert {a["scap"] for a in recs} == {scap}, (name, recs)
+            assert (sum(a["radius"] for a in recs) > 0) == scap, (name, recs)
         return out
 
     caplog.set_level(logging.DEBUG, logger="locus_spark.plans.knn")
@@ -211,10 +210,9 @@ def test_knn_round_evaluators_agree(spark, monkeypatch, caplog):
     force_shuffle()
     got_shuffle = run_all("shuffle", scap=False)
     monkeypatch.undo()
-    # sampled-cap prefilter on (rate 2 so the test-sized sample is
+    # sampled radius on (rate 2 so the test-sized sample is
     # non-degenerate) — must stay exact, including probes whose sampled
-    # candidate set is smaller than k; every round with a capless probe
-    # runs it, covering the carried-cap/null-cap merge too
+    # candidate set is smaller than k and so take the ring path
     monkeypatch.setattr(knnplan, "SCAP_MIN_TARGETS", 1)
     monkeypatch.setattr(knnplan, "CAP_SAMPLE_RATE", 2)
     got_broadcast_scap = run_all("broadcast", scap=True)
@@ -232,6 +230,73 @@ def test_knn_round_evaluators_agree(spark, monkeypatch, caplog):
     for qid, rows in by_q.items():
         rows.sort()
         assert [(d, i) for _, d, i in rows] == want[qid]
+
+
+small = st.floats(min_value=-50, max_value=50, allow_nan=False, allow_infinity=False)
+edge = st.integers(min_value=0, max_value=16).map(float)  # GRID16 cell edges
+GRID16 = GridSpec(0.0, 0.0, 16.0, 16.0, 4)
+
+
+@st.composite
+def _radius_layout(draw, kind):
+    """(points, probes, grid) for one adversarial layout; grid None means
+    derived from the points."""
+    if kind == "duplicates":
+        base = draw(st.lists(st.tuples(small, small), min_size=1, max_size=8))
+        pts = base * draw(st.integers(min_value=2, max_value=4))
+        probes = draw(st.lists(st.sampled_from(base), min_size=1, max_size=4))
+        return pts, probes, None
+    if kind == "identical":
+        p = draw(st.tuples(small, small))
+        pts = [p] * draw(st.integers(min_value=2, max_value=30))
+        other = draw(st.tuples(small, small))
+        return pts, [p, other], None
+    if kind == "zero_extent_axis":
+        x = draw(small)
+        ys = draw(st.lists(small, min_size=2, max_size=40))
+        probes = draw(st.lists(st.tuples(small, small), min_size=1, max_size=4))
+        return [(x, y) for y in ys], probes, None
+    if kind == "cell_edges":
+        pts = draw(st.lists(st.tuples(edge, edge), min_size=2, max_size=60))
+        probes = draw(st.lists(st.tuples(edge, edge), min_size=1, max_size=4))
+        return pts, probes, GRID16
+    if kind == "targets_outside":
+        # targets beyond the grid bbox are clipped into its edge cells
+        wide = st.floats(min_value=-40, max_value=56)
+        pts = draw(st.lists(st.tuples(wide, wide), min_size=20, max_size=60))
+        probes = draw(st.lists(st.tuples(wide, wide), min_size=2, max_size=6))
+        return pts, probes, GRID16
+    if kind == "probes_outside":
+        pts = draw(st.lists(st.tuples(small, small), min_size=2, max_size=60))
+        far = st.floats(min_value=60, max_value=1e4) | st.floats(min_value=-1e4, max_value=-60)
+        probes = draw(st.lists(st.tuples(far, small | far), min_size=1, max_size=4))
+        return pts, probes, None
+    # dist² overflow: the far points' dist² is +inf, tied at the k-th rank
+    pts = [(-2e154, -2e154), (2e154, 2e154), (-2e154, 2e154), (2e154, -2e154)]
+    return pts, [(-2e154, -2e154)], GridSpec(-3e154, -3e154, 3e154, 3e154, 4)
+
+
+@pytest.mark.parametrize("kind", [
+    "duplicates", "identical", "zero_extent_axis", "cell_edges",
+    "targets_outside", "probes_outside", "overflow",
+])
+@settings(max_examples=3, deadline=None)
+@given(data=st.data())
+def test_knn_radius_path_matches_brute(spark, kind, data):
+    """Property test with the sampled-radius pass armed on every input:
+    adversarial layouts must equal brute force, ranks and tie order
+    included."""
+    import locus_spark.plans.knn as knnplan
+
+    pts, probes, grid = data.draw(_radius_layout(kind))
+    k = data.draw(st.integers(min_value=1, max_value=len(pts) - 1))
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(knnplan, "SCAP_MIN_TARGETS", 1)
+        mp.setattr(knnplan, "CAP_SAMPLE_RATE", 2)
+        got = knn_join(
+            _points_df(spark, pts), _probes_df(spark, probes), k, grid=grid
+        ).collect()
+    _assert_matches_brute(got, pts, probes, k)
 
 
 @settings(max_examples=6, deadline=None)

@@ -9,9 +9,10 @@ Writes PLAN_AUDIT.md.  This is the repo's standing answer to "did you
 
     python tools/plan_audit.py [sf_dir]
 
-Counters come from the INITIAL physical plan (no query execution beyond
-what side-state builds need; AQE may further coalesce at runtime, never
-add exchanges).
+Counters come from the top-level FINAL physical plan: each query is
+executed so AQE's runtime rewrites (broadcast conversions, coalesced
+exchanges) are counted, and AQE initial plans — top-level or nested under
+a cached frame — are not.
 """
 
 from __future__ import annotations
@@ -89,6 +90,30 @@ PATTERNS = {
 }
 
 
+def final_plan(plan: str) -> str:
+    """The plan that ran.  A finalized AdaptiveSparkPlan prints its final
+    plan, then ``+- == Initial Plan ==`` and the initial plan.  A cached
+    frame inside it (InMemoryRelation) prints its own AQE plan with the
+    same markers, indented: only the column-0 marker ends the plan, and an
+    indented one drops just the nested initial plan below it."""
+    out, nested_at = [], None
+    for line in plan.splitlines(keepends=True):
+        if nested_at is not None:
+            # tree lines below the nested marker start their node text
+            # deeper than the marker's own column
+            if len(line) - len(line.lstrip(" :|+-")) > nested_at:
+                continue
+            nested_at = None
+        at = line.find("+- == Initial Plan ==")
+        if at == 0:
+            break
+        if at > 0:
+            nested_at = at
+            continue
+        out.append(line)
+    return "".join(out)
+
+
 def audit(plan: str, codegen_plan: str) -> dict[str, int]:
     out = {}
     for k, pat in PATTERNS.items():
@@ -117,9 +142,8 @@ def main() -> None:
             # not the pre-runtime guess.  Result sets are small at sf0.001.
             df.collect()
             qe = df._jdf.queryExecution()
-            # a finalized AdaptiveSparkPlan prints "== Final Plan ==" AND
-            # "== Initial Plan ==" — count only the plan that ran
-            plan = qe.executedPlan().toString().split("== Initial Plan ==")[0]
+            # count only the plan that ran, not AQE's initial plan
+            plan = final_plan(qe.executedPlan().toString())
             mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                 "codegen"
             )
