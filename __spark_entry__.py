@@ -21,7 +21,7 @@ from locus_spark import queries as _q  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query: exact kNN join (cell-ring expansion) at sf0.001."""
+    """Flagship query: exact kNN join (sampled bound, one exact join) at sf0.001."""
     return _q.kd_knn(spark, "/root/testdata/sf0.001")
 
 

@@ -124,7 +124,7 @@ class GridSpec:
 
 #: auto-resolution target: mean points per cell.  Hot-cell occupancy is what
 #: bounds candidate-join fan-out, so the mean is chosen low; skew beyond it
-#: is handled by salting + the ring planner's per-round top-k.
+#: is handled by salting + the kNN planner's per-probe top-k.
 TARGET_CELL_OCCUPANCY = 16
 
 

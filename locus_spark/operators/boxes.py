@@ -12,7 +12,7 @@ point (``r.py:369-635``).  Distributed form:
 * supersets → probe box's *min-corner cell* equi-joined against the indexed
   boxes' exploded covering cells (a containing box must cover the probe's
   min corner), then the reversed predicate;
-* nearest / k-NN → generic cell-ring planner with the point↔box metric and
+* nearest / k-NN → generic kNN planner with the point↔box metric and
   the R-family tie rule: among equal distances the LARGEST id wins
   (heap keys at ``/root/reference/locus/r.py:599-606``; doctest
   ``r.py:581-590``).

@@ -172,8 +172,9 @@ def upsert_serving(
     stay untouched exactly like a Delta/Iceberg deletion vector.  The
     replaced rows' cells may now be EMPTY of live rows — correctness-
     neutral for every consumer (range/ball joins just match nothing
-    there; the kNN ring planner's settle bound counts covered CELLS, not
-    rows, and empty cells only delay settling, never skip a neighbor).
+    there; the kNN planner's bounds come from the live rows it samples and
+    its exact join searches cells by distance, so empty cells only widen a
+    bound, never skip a neighbor).
 
     ``broadcast_batch=False`` falls back to a shuffle anti-join on the id
     key for batches beyond broadcast reach (same disclosed fallback

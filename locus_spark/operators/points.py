@@ -10,16 +10,16 @@ so each query family becomes a join:
 * range / ball → covering-cell equi-join + exact closed predicate
   (cell pruning plays the role of tree descent; the exact predicate at the
   end means pruning can never lose rows — safe-superset, SURVEY.md §4 O10);
-* nearest / k-NN → iterative **cell-ring expansion**: join probes against
-  points in Chebyshev-ring annuli of cells, keep a running per-probe top-k,
-  stop a probe once its k-th best squared distance is ≤ the squared distance
-  to the nearest *uncovered* region (the distributed analogue of the kd
-  branch-and-bound prune, ``kd.py:368``, and of the R-tree best-first
-  frontier, ``r.py:592-610``).
+* nearest / k-NN → **sampled bound, then one exact join**: one
+  aggregation over nested target samples bounds every probe's k-th squared
+  distance from above, then one join over the cells within that bound and
+  one per-probe top-k aggregation answer every probe exactly (the
+  distributed analogue of the kd branch-and-bound prune, ``kd.py:368``,
+  and of the R-tree best-first frontier, ``r.py:592-610``).
 
-All distance math is native Column expressions (whole-stage codegen).  The
-driver-side loop only synchronizes ring rounds — every round is a fully
-distributed broadcast join + window.
+All distance math is native Column expressions (whole-stage codegen).  A
+kNN join runs one eager count job; the rest is one lazy plan, with no
+round loop.
 """
 
 from __future__ import annotations
@@ -147,7 +147,7 @@ def knn_join(
 
     Table form of ``n_nearest_items`` (``/root/reference/locus/kd.py:176-253``;
     ``nearest_item`` = k=1, ``kd.py:320-374``).  The reference's bounded
-    max-heap + hyperplane prune becomes the generic cell-ring-expansion
+    max-heap + hyperplane prune becomes the generic sampled-bound kNN
     planner (locus_spark/plans/knn.py).
 
     Returns ``(qid, id, x, y, dist2, rn)``; raises ``ValueError`` on empty

@@ -10,7 +10,7 @@ Tie rule: among equal distances the SMALLEST id wins (heap keys at
 Distributed form: segments indexed by the covering cells of their bounding
 boxes (derived exactly like the reference derives them at build,
 ``segmental.py:53-66``); probes (points or segments) run through the generic
-cell-ring planner with the exact point↔segment / segment↔segment squared
+kNN planner with the exact point↔segment / segment↔segment squared
 metrics — SQL-template expressions shared verbatim with the DuckDB oracle
 (locus_spark/functions/metrics.py).
 """

@@ -256,7 +256,7 @@ FROM ranked WHERE rn <= {{k}}
 @register("kd_knn", _KNN_ORACLE_TMPL.format(k=KNN_K, rn_col=", rn"))
 def kd_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K4 n_nearest_items (/root/reference/locus/kd.py:176-253) as an exact
-    kNN join via cell-ring expansion."""
+    kNN join (sampled bound, then one exact join)."""
     pts = derived.load(spark, sf_dir, "points")
     qp = derived.load(spark, sf_dir, "query_points")
     return knn_join(pts, qp, KNN_K, grid=WORLD_GRID)
@@ -356,7 +356,7 @@ def kd_find_box_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("kd_knn_persisted", _KNN_ORACLE_TMPL.format(k=KNN_K, rn_col=", rn"))
 def kd_knn_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K4 kNN answered from the persisted layout (ring planner scans the
+    """K4 kNN answered from the persisted layout (the kNN planner scans the
     checkpointed clustered parquet instead of re-deriving geometry)."""
     layout = _persisted_points_layout(spark, sf_dir).select("id", "x", "y")
     qp = derived.load(spark, sf_dir, "query_points")
@@ -692,7 +692,7 @@ def seg_knn_to_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     _knn_oracle("segments", "query_points", _SEG_OUT, _D2_PS, KNN_K),
 )
 def seg_knn_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S7 kNN answered from the PERSISTED Hilbert segments layout (the ring
+    """S7 kNN answered from the PERSISTED Hilbert segments layout (the kNN
     planner scans the checkpointed clustered parquet instead of re-deriving
     geometry through the DISTINCT shuffle every query) — the reference's
     build-once segmental tree (``/root/reference/locus/segmental.py:28-77``)."""

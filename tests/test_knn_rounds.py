@@ -1,15 +1,15 @@
-"""Multi-round invariants of the generic kNN ring planner.
+"""Invariants of the generic kNN planner (``plans/knn.py``): the sampled
+bound and the one exact round behind it.
 
-Pins the sampled-radius contract (a probe with a sampled radius settles in
-round one; one without keeps the ring rounds) and two hazards the
-plan-shape relies on:
+Pins that every probe is answered exactly in one round whichever level
+bounds it — an isolated probe with no sampled candidate near it, a sparse
+tail, a probe outside the grid — plus two hazards the plan shape relies on:
 
-* a multi-cell target that surfaces in DIFFERENT rounds via different
-  covering cells must appear at most once per probe in the output — the
-  round merge dedups with ``array_distinct`` over the full state struct,
-  which silently emits duplicates instead of failing if any state column
-  ever stops being bit-identical across a carried-state checkpoint
-  round-trip (e.g. a future dist² expression referencing cell-derived or
+* a multi-cell target reached through several disc cells must appear once
+  per probe in the output — the top-k dedups with ``array_distinct`` over
+  the full row struct, which silently emits duplicates instead of failing
+  if any struct column ever stops being bit-identical across covering
+  cells (e.g. a future dist² expression referencing cell-derived or
   nondeterministic columns);
 * ``tile_pyramid``'s level persists are scoped to the call — repeated
   invocations must not pin orphan entries in the CacheManager.
@@ -18,12 +18,15 @@ plan-shape relies on:
 from __future__ import annotations
 
 import logging
+import math
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 import locus_spark.plans.knn as knnplan
 from locus_spark.cells import GridSpec
+from locus_spark.operators.boxes import box_knn_join
 from locus_spark.operators.points import knn_join
 from locus_spark.operators.segments import segment_knn_to_point_join
 
@@ -31,7 +34,7 @@ GRID = GridSpec(0.0, 0.0, 16.0, 16.0, 4)  # 16x16 cells, cell size 1.0
 
 #: one long segment covering 16 cells of row y=8 (ids sort after the short
 #: fillers so tie order never hides a duplicate), plus two short segments in
-#: the far corner that only round 3's ring reaches.
+#: the far corners.
 SEGS = [
     (10, 0.5, 8.5, 15.5, 8.5),   # long: cells (0..15, 8)
     (20, 0.2, 15.8, 0.4, 15.8),  # cell (0, 15)
@@ -47,31 +50,39 @@ def _brute_point_seg_d2(px, py, x1, y1, x2, y2):
     return (px - cx) ** 2 + (py - cy) ** 2
 
 
-def test_multicell_target_across_rounds_no_duplicates(spark, caplog):
-    """Probe at (0.5, 0.5): round 1 rings [0,4] see nothing, round 2 [5,14]
-    finds the long segment via 15 covering cells, round 3 [15,...] re-finds
-    the SAME segment via cell (15, 8) while the probe is still unsettled
-    (k=2, only 1 candidate so far) — the carried-state + fresh-candidate
-    merge must collapse to one row per (qid, id)."""
+def _records(caplog):
+    return [r.args for r in caplog.records if r.name == "locus_spark.plans.knn"]
+
+
+def test_multicell_target_reached_through_many_disc_cells_no_duplicates(
+    spark, caplog
+):
+    """Probe at (0.5, 0.5), k=2: its true 2nd distance is to segment 20
+    (~15.3), so its disc holds every cell of row 8 within that distance —
+    the long segment 10 is joined once per such covering cell, and the
+    top-k must collapse those rows to one per (qid, id)."""
     segs = spark.createDataFrame(SEGS, ["id", "x1", "y1", "x2", "y2"])
     probes = spark.createDataFrame([(1, 0.5, 0.5)], ["qid", "x", "y"])
+    want = sorted(
+        ((_brute_point_seg_d2(0.5, 0.5, *s[1:]), s[0]) for s in SEGS)
+    )[:2]
+    # fixture check: the disc (radius >= the true 2nd distance) reaches the
+    # long segment through several of its covering cells (x, 8)
+    reach = want[-1][0] ** 0.5
+    cells = [
+        cx for cx in range(16)
+        if (max(0.0, cx - 0.5) ** 2 + (8.0 - 0.5) ** 2) ** 0.5 <= reach
+    ]
+    assert len(cells) >= 2, cells
     caplog.set_level(logging.DEBUG, logger="locus_spark.plans.knn")
     caplog.clear()
     out = segment_knn_to_point_join(segs, probes, k=2, grid=GRID).collect()
-    rounds = [r.args for r in caplog.records if r.name == "locus_spark.plans.knn"]
-    assert len(rounds) >= 3, (
-        "fixture regression: the resurfacing scenario needs >= 3 rounds, got "
-        f"{rounds}"
-    )
+    assert len(_records(caplog)) == 1
     pairs = [(r.qid, r.id) for r in out]
     assert len(pairs) == len(set(pairs)), f"duplicate (qid,id) rows: {sorted(pairs)}"
     assert sorted(r.rn for r in out) == [1, 2]
-    # exactness against brute force
-    expect = sorted(
-        ((_brute_point_seg_d2(0.5, 0.5, *s[1:]), s[0]) for s in SEGS)
-    )[:2]
     got = sorted((r.dist2, r.id) for r in out)
-    assert got == pytest.approx(expect)
+    assert got == pytest.approx(want)
 
 
 def _radius_fixture():
@@ -80,10 +91,7 @@ def _radius_fixture():
     900..904, a tie straddling the k-th rank), plus a sparse spread.
     Probes: four in the cluster (one on the tie, so its k = 3 answer is
     the three smallest tied ids) and one isolated in the far corner cell,
-    where no target lies within the sampled window — so it has no sampled
-    radius and must take the ring rounds."""
-    import numpy as np
-
+    where no target lies within the sampled windows."""
     rng = np.random.RandomState(5)
     xy = np.vstack([rng.uniform(3.0, 6.0, (150, 2)), rng.uniform(0.0, 9.0, (50, 2))])
     pts = [(i, float(x), float(y)) for i, (x, y) in enumerate(xy)]
@@ -99,14 +107,14 @@ def _radius_fixture():
     return pts, segs, probes
 
 
-def test_sampled_radius_settles_in_one_round(spark, monkeypatch, caplog):
-    """With the sampled pass armed, every probe that got a sampled radius
-    settles in round one (radius == 4 cluster probes, nothing else settles
-    there through a radius later), while the isolated probe with fewer than
-    k sampled candidates still needs later ring rounds — and both families
-    (points; segments, which dedup multi-cell targets) equal brute force,
-    duplicate-geometry ties included.  Without the pass the same fixture
-    needs >= 2 rounds for every family."""
+def test_isolated_probe_answered_through_coarse_levels(spark, monkeypatch, caplog):
+    """The isolated corner probe has fewer than k level-1 candidates in its
+    level-1 window, so its bound comes from level 2 or 3, and it is still
+    answered exactly in the one round, as are the cluster probes.  Both
+    families (points; segments, which dedup
+    multi-cell targets) equal brute force, duplicate-geometry ties
+    included, at the default sample rate and at rate 2, with one record
+    per operation."""
     pts, segs, probes = _radius_fixture()
     pdf = spark.createDataFrame(pts, "id long, x double, y double")
     sdf = spark.createDataFrame(
@@ -128,11 +136,29 @@ def test_sampled_radius_settles_in_one_round(spark, monkeypatch, caplog):
     }
     caplog.set_level(logging.DEBUG, logger="locus_spark.plans.knn")
 
-    def run(name):
+    def level1_candidates(targets, rate):
+        """Level-1 sampled targets whose bbox meets the isolated probe's
+        level-1 window (slid inside the grid from the probe's corner
+        cell)."""
+        ids = [t[0] for t in targets]
+        keep = {
+            r.id for r in spark.createDataFrame([(i,) for i in ids], "id long")
+            .filter(F.pmod(F.xxhash64("id"), F.lit(rate)) == 0).collect()
+        }
+        density = len(targets) / float(GRID.n * GRID.n)
+        h = knnplan._half_width(k, density / rate, GRID.n)
+        lo = GRID.n - (2 * h + 1)  # the probe sits in the corner cell
+        return [
+            t for t in targets
+            if t[0] in keep and max(t[1::2]) >= lo and max(t[2::2]) >= lo
+        ]
+
+    def run(name, rate):
         query, d2, targets = families[name]
+        assert len(level1_candidates(targets, rate)) < k, (name, rate)
         caplog.clear()
         out = query().collect()
-        recs = [r.args for r in caplog.records if r.name == "locus_spark.plans.knn"]
+        assert len(_records(caplog)) == 1, (name, _records(caplog))
         got = {}
         for r in out:
             got.setdefault(r.qid, []).append((r.rn, r.dist2, r.id))
@@ -141,22 +167,132 @@ def test_sampled_radius_settles_in_one_round(spark, monkeypatch, caplog):
             rows = sorted(got[qid])
             assert [i for _, _, i in rows] == [i for _, i in want], (name, qid)
             assert [d for _, d, _ in rows] == pytest.approx([d for d, _ in want])
-        return got, recs
+        # the tie straddling rank k resolves to the smallest ids
+        assert [i for *_, i in sorted(got[0])] == [900, 901, 902]
 
     for name in families:
-        plain, recs = run(name)
-        assert len(recs) >= 2, f"fixture regression: {name} ring path {recs}"
-        # the tie straddling rank k resolves to the smallest ids
-        assert [i for *_, i in sorted(plain[0])] == [900, 901, 902]
-    monkeypatch.setattr(knnplan, "SCAP_MIN_TARGETS", 1)
+        run(name, knnplan.CAP_SAMPLE_RATE)
     monkeypatch.setattr(knnplan, "CAP_SAMPLE_RATE", 2)
     for name in families:
-        _, recs = run(name)
-        first, later = recs[0], recs[1:]
-        assert first["scap"] and first["radius"] == 4, (name, recs)
-        assert first["unsettled"] == 1, (name, recs)  # the isolated probe
-        assert later and all(r["radius"] == 0 for r in later), (name, recs)
-        assert recs[-1]["unsettled"] == 0
+        run(name, 2)
+
+
+#: no target meets [EMPTY_X, 100] x [-100, EMPTY_Y] of the sparse-tail grid
+EMPTY_X, EMPTY_Y = -25.0, 25.0
+
+
+def _sparse_tail_layout():
+    """Gaussian clusters with sparse gaussian tails over GridSpec(-100,
+    -100, 100, 100, 5), as points, small boxes and short segments, with the
+    lower-right rectangle [EMPTY_X, 100] x [-100, EMPTY_Y] left empty.
+    Probes: in the clusters, in the tails, isolated, outside the grid, and
+    in the empty corner, whose level-1 and level-2 windows lie inside the
+    empty rectangle."""
+    rng = np.random.RandomState(3)
+    centers = [(-60.0, -50.0), (-55.0, 50.0), (40.0, 60.0)]
+    xy = np.vstack(
+        [rng.normal(c, 4.0, (700, 2)) for c in centers]
+        + [rng.normal((-40.0, 20.0), 25.0, (200, 2))]
+    )
+    pts, boxes, segs = [], [], []
+    for i, (x, y) in enumerate(xy):
+        w, h = rng.uniform(0.0, 1.5, 2)
+        dx, dy = rng.uniform(-1.0, 1.0, 2)
+        if max(x, x + dx, x + w) >= EMPTY_X and min(y, y + dy) <= EMPTY_Y:
+            continue
+        pts.append((i, float(x), float(y)))
+        boxes.append((i, float(x), float(x + w), float(y), float(y + h)))
+        segs.append((i, float(x), float(y), float(x + dx), float(y + dy)))
+    probes = [
+        (0, -60.0, -50.0), (1, 41.0, 59.0), (2, -54.0, 52.0),    # clusters
+        (3, -80.0, -10.0), (4, -20.0, 40.0), (5, 5.0, 80.0),     # tails
+        (6, 99.0, -99.0),                                        # empty corner
+        (7, 99.0, 99.0), (8, -99.0, 99.0), (9, 20.0, 10.0),      # isolated
+        (10, 180.0, -30.0), (11, -250.0, -400.0), (12, 30.0, 1e4),  # outside
+    ]
+    return pts, boxes, segs, probes
+
+
+def test_sparse_tail_layout_one_exact_round(spark, caplog):
+    """Points, boxes and segments over clusters with sparse tails: every
+    probe — in a cluster, in a tail, isolated, outside the grid, or with no
+    target in its level-1 or level-2 window, so only the exact-k level
+    bounds it — equals brute force, and each operation is one planner
+    record."""
+    pts, boxes, segs, probes = _sparse_tail_layout()
+    grid = GridSpec(-100.0, -100.0, 100.0, 100.0, 5)
+    k = 4
+    # fixture check: the empty-corner probe's level-1 window (fine cells)
+    # and level-2 window (coarse cells), each slid inside the grid, lie
+    # inside the empty rectangle
+    n, rate = grid.n, knnplan.CAP_SAMPLE_RATE
+    density = len(pts) / float(n * n)
+    coarse = math.isqrt(rate)
+    nc = (n - 1) // coarse + 1
+    w1 = 2 * knnplan._half_width(k, density / rate, n) + 1
+    w2 = 2 * knnplan._half_width(k, density * coarse**2 / rate**2, nc) + 1
+    x_lo = min(n - w1, (nc - w2) * coarse)  # lowest window cell
+    y_hi = max(w1, w2 * coarse)  # one past the highest window cell
+    assert grid.min_x + x_lo * grid.cell_w >= EMPTY_X, (w1, w2)
+    assert grid.min_y + y_hi * grid.cell_h <= EMPTY_Y, (w1, w2)
+
+    qdf = spark.createDataFrame(probes, "qid long, x double, y double")
+
+    def box_d2(px, py, b):
+        dx = max(0.0, b[1] - px, px - b[2])
+        dy = max(0.0, b[3] - py, py - b[4])
+        return dx * dx + dy * dy
+
+    families = {
+        "points": (
+            lambda: knn_join(
+                spark.createDataFrame(pts, "id long, x double, y double"),
+                qdf, k, grid=grid,
+            ),
+            lambda px, py, t: (t[1] - px) ** 2 + (t[2] - py) ** 2,
+            pts, False,
+        ),
+        "boxes": (
+            lambda: box_knn_join(
+                spark.createDataFrame(
+                    boxes,
+                    "id long, min_x double, max_x double, min_y double, max_y double",
+                ),
+                qdf, k, grid=grid,
+            ),
+            box_d2, boxes, True,
+        ),
+        "segments": (
+            lambda: segment_knn_to_point_join(
+                spark.createDataFrame(
+                    segs, "id long, x1 double, y1 double, x2 double, y2 double"
+                ),
+                qdf, k, grid=grid,
+            ),
+            lambda px, py, t: _brute_point_seg_d2(px, py, *t[1:]),
+            segs, False,
+        ),
+    }
+    caplog.set_level(logging.DEBUG, logger="locus_spark.plans.knn")
+    for name, (query, d2, targets, desc) in families.items():
+        caplog.clear()
+        out = query().collect()
+        recs = _records(caplog)
+        assert len(recs) == 1 and recs[0]["probes"] == len(probes), (name, recs)
+        got = {}
+        for r in out:
+            got.setdefault(r.qid, []).append((r.rn, r.dist2, r.id))
+        assert set(got) == {q for q, *_ in probes}, name
+        for qid, px, py in probes:
+            scored = sorted(
+                (d2(px, py, t), -t[0] if desc else t[0], t[0]) for t in targets
+            )[:k]
+            rows = sorted(got[qid])
+            assert [r[0] for r in rows] == list(range(1, k + 1)), (name, qid)
+            assert [i for *_, i in rows] == [i for *_, i in scored], (name, qid)
+            assert [d for _, d, _ in rows] == pytest.approx(
+                [d for d, *_ in scored], rel=1e-12
+            ), (name, qid)
 
 
 def test_desc_id_tie_encoding_is_order_reversing(spark):

@@ -92,9 +92,7 @@ def test_knn_empty_points_raises(spark):
 
 def test_knn_overflow_dist2_not_displaced_by_sentinel(spark):
     """A real candidate whose dist² overflows float64 to +inf must still be
-    returned: the ring loop's per-probe sentinel rows (dist2 = +inf, null id)
-    sort strictly AFTER real rows via an explicit null-id flag in the top-k
-    sort key, not by distance alone."""
+    returned and ranked after the finite one, not dropped."""
     # max float64 ~1.8e308; a (4e154)² term overflows to inf
     pts = [(-2e154, -2e154), (2e154, 2e154)]
     probes = [(-2e154, -2e154)]
@@ -105,8 +103,7 @@ def test_knn_overflow_dist2_not_displaced_by_sentinel(spark):
     by_rn = {r.rn: r for r in got}
     assert len(got) == 2
     assert by_rn[1].id == 0 and by_rn[1].dist2 == 0.0
-    # the far point's dist² overflowed, and it is still ranked (not dropped
-    # in favor of the sentinel)
+    # the far point's dist² overflowed, and it is still ranked
     assert by_rn[2].id == 1 and by_rn[2].dist2 == float("inf")
 
 
@@ -118,10 +115,9 @@ def test_nearest_duplicate_points_tie_by_id(spark):
 
 def test_knn_hot_cluster_skew(spark):
     """Regression for the hot-cell candidate explosion: half the points in one
-    dense cluster, probes both inside and on the fringe — exercises the _cap
-    branch-and-bound pruning in the round evaluator (its join strategies
-    and the sampled-radius pass are forced and compared by
-    test_knn_round_evaluators_agree)."""
+    dense cluster, probes both inside and on the fringe — exercises the
+    ``_scap`` disc pruning (its join strategies and sample rates are forced
+    and compared by test_knn_round_evaluators_agree)."""
     rng = np.random.RandomState(7)
     hot = rng.uniform(-1.0, 1.0, size=(400, 2))
     cold = rng.uniform(-100.0, 100.0, size=(400, 2))
@@ -136,14 +132,27 @@ def test_knn_hot_cluster_skew(spark):
     _assert_matches_brute(got, pts, probes, 3)
 
 
+def _knn_records(caplog):
+    return [r.args for r in caplog.records if r.name == "locus_spark.plans.knn"]
+
+
+def _force_shuffle(monkeypatch):
+    # drop the width guard below any frame
+    import locus_spark.plans.knn as knnplan
+
+    monkeypatch.setattr(knnplan, "ANN_BROADCAST_MAX_ROWS", -1)
+
+
 def test_knn_round_evaluators_agree(spark, monkeypatch, caplog):
-    """Four-way evaluator equivalence: the round evaluator's broadcast and
-    shuffled-hash join strategies, each with and without the up-front
-    sampled-radius pass, must return identical results for three kNN families —
-    points, boxes, segment-to-point — including duplicate-geometry ties,
-    and the points family must match brute force.  Each configuration
-    asserts the label it actually ran, so a policy change cannot silently
-    route a forced path elsewhere."""
+    """Four-way evaluator equivalence: the broadcast and shuffled-hash join
+    strategies, each at the default sample rate (test-sized samples are
+    nearly empty, so the exact-k level bounds most probes) and at rate 2
+    (both sampled levels bound probes), must return identical results for
+    three kNN families — points, boxes, segment-to-point — including
+    duplicate-geometry ties, and the points family must match brute force.
+    Each operation logs exactly one record, and it names the join strategy
+    that ran, so a policy change cannot silently route a forced path
+    elsewhere."""
     import locus_spark.plans.knn as knnplan
     from locus_spark.operators.boxes import box_knn_join
     from locus_spark.operators.segments import segment_knn_to_point_join
@@ -179,48 +188,33 @@ def test_knn_round_evaluators_agree(spark, monkeypatch, caplog):
         "segs": lambda: segment_knn_to_point_join(sdf, qdf, 3, grid=grid),
     }
 
-    def run_all(join, scap):
-        """Run every family; each must have joined with ``join`` in every
-        round and, iff ``scap``, run the up-front sampled pass and settled
-        some probes through a sampled radius."""
+    def run_all(join):
+        """Run every family; each must log one record that joined with
+        ``join``."""
         out = {}
         for name, run in families.items():
             caplog.clear()
             out[name] = sorted(
                 (r.qid, r.rn, r.id, r.dist2) for r in run().collect()
             )
-            recs = [
-                r.args for r in caplog.records
-                if r.name == "locus_spark.plans.knn"
-            ]
-            assert {a["join"] for a in recs} == {join}, (name, recs)
-            assert {a["scap"] for a in recs} == {scap}, (name, recs)
-            assert (sum(a["radius"] for a in recs) > 0) == scap, (name, recs)
+            recs = _knn_records(caplog)
+            assert [a["join"] for a in recs] == [join], (name, recs)
+            assert recs[0]["probes"] == len(probes), (name, recs)
         return out
 
     caplog.set_level(logging.DEBUG, logger="locus_spark.plans.knn")
-    got_broadcast = run_all("broadcast", scap=False)
-
-    def force_shuffle():
-        # count probes up front (so round one's frame size is known) and
-        # drop the width guard below any frame
-        monkeypatch.setattr(knnplan, "LOCAL_TOPK_MIN_TARGETS", 1)
-        monkeypatch.setattr(knnplan, "ANN_BROADCAST_MAX_ROWS", -1)
-
-    force_shuffle()
-    got_shuffle = run_all("shuffle", scap=False)
+    got_broadcast = run_all("broadcast")
+    _force_shuffle(monkeypatch)
+    got_shuffle = run_all("shuffle")
     monkeypatch.undo()
-    # sampled radius on (rate 2 so the test-sized sample is
-    # non-degenerate) — must stay exact, including probes whose sampled
-    # candidate set is smaller than k and so take the ring path
-    monkeypatch.setattr(knnplan, "SCAP_MIN_TARGETS", 1)
+    # rate 2 so both test-sized sample levels are non-degenerate
     monkeypatch.setattr(knnplan, "CAP_SAMPLE_RATE", 2)
-    got_broadcast_scap = run_all("broadcast", scap=True)
-    force_shuffle()
-    got_shuffle_scap = run_all("shuffle", scap=True)
+    got_broadcast_dense = run_all("broadcast")
+    _force_shuffle(monkeypatch)
+    got_shuffle_dense = run_all("shuffle")
     assert got_shuffle == got_broadcast
-    assert got_broadcast_scap == got_broadcast
-    assert got_shuffle_scap == got_broadcast
+    assert got_broadcast_dense == got_broadcast
+    assert got_shuffle_dense == got_broadcast
     # and the points family matches brute force
     want = _brute_knn(pts, probes, 3)
     by_q = {}
@@ -230,6 +224,68 @@ def test_knn_round_evaluators_agree(spark, monkeypatch, caplog):
     for qid, rows in by_q.items():
         rows.sort()
         assert [(d, i) for _, d, i in rows] == want[qid]
+
+
+def test_knn_non_finite_probes_get_k_rows_in_nan_largest_order(
+    spark, monkeypatch, caplog
+):
+    """A probe with a NaN or infinite coordinate still gets k rows, ranked
+    in Spark's order (NaN sorts largest), identically under the broadcast
+    and shuffled-hash joins.  Every dist² of the ``inf`` probe is +inf and
+    every dist² of the ``nan`` probe is NaN, so both tie on distance and
+    take the k smallest ids; a finite probe beside them is unaffected."""
+    rng = np.random.RandomState(0)
+    pts = [tuple(map(float, p)) for p in rng.uniform(-50, 50, size=(300, 2))]
+    probes = [(float("nan"), 1.0), (float("inf"), 2.0), (3.0, 4.0)]
+    grid = GridSpec(-50.0, -50.0, 50.0, 50.0, 4)
+    pdf, qdf = _points_df(spark, pts), _probes_df(spark, probes)
+    k = 3
+    caplog.set_level(logging.DEBUG, logger="locus_spark.plans.knn")
+
+    def run():
+        caplog.clear()
+        by_q = {}
+        for r in knn_join(pdf, qdf, k, grid=grid).collect():
+            by_q.setdefault(r.qid, []).append((r.rn, r.id, r.dist2))
+        return {q: sorted(rows) for q, rows in by_q.items()}
+
+    got = run()
+    assert set(got) == {0, 1, 2}
+    nan_rows, inf_rows = got[0], got[1]
+    assert [(rn, i) for rn, i, _ in nan_rows] == [(1, 0), (2, 1), (3, 2)]
+    assert all(np.isnan(d) for *_, d in nan_rows)
+    assert inf_rows == [(1, 0, np.inf), (2, 1, np.inf), (3, 2, np.inf)]
+    want = _brute_knn(pts, probes[2:], k)[0]
+    assert [(d, i) for _, i, d in got[2]] == want
+    assert [a["join"] for a in _knn_records(caplog)] == ["broadcast"]
+    _force_shuffle(monkeypatch)
+    shuffled = run()
+    assert [a["join"] for a in _knn_records(caplog)] == ["shuffle"]
+    assert shuffled.keys() == got.keys()
+    for q in got:
+        # NaN != NaN, so compare the rows' reprs
+        assert repr(shuffled[q]) == repr(got[q]), q
+
+
+def test_knn_probe_and_targets_beyond_the_same_grid_edge(spark, monkeypatch):
+    """Targets beyond the grid's right edge are clipped into its edge
+    cells, and a probe farther out on the same side is nearer to them than
+    to those cells' in-grid rects: the edge cells must reach to infinity,
+    or the exact round prunes the probe's true neighbors.  Sample rate 2
+    makes the sampled bound tight enough for that pruning to bite."""
+    import locus_spark.plans.knn as knnplan
+
+    monkeypatch.setattr(knnplan, "CAP_SAMPLE_RATE", 2)
+    rng = np.random.RandomState(2)
+    inside = rng.uniform(0.0, 16.0, size=(10, 2))
+    beyond = np.column_stack([rng.uniform(40.0, 60.0, 40), rng.uniform(0.0, 16.0, 40)])
+    pts = [tuple(map(float, p)) for p in np.vstack([inside, beyond])]
+    probes = [(100.0, 8.0), (70.0, 2.0), (8.0, 8.0)]
+    got = knn_join(
+        _points_df(spark, pts), _probes_df(spark, probes), 3,
+        grid=GridSpec(0.0, 0.0, 16.0, 16.0, 4),
+    ).collect()
+    _assert_matches_brute(got, pts, probes, 3)
 
 
 small = st.floats(min_value=-50, max_value=50, allow_nan=False, allow_infinity=False)
@@ -283,15 +339,14 @@ def _radius_layout(draw, kind):
 @settings(max_examples=3, deadline=None)
 @given(data=st.data())
 def test_knn_radius_path_matches_brute(spark, kind, data):
-    """Property test with the sampled-radius pass armed on every input:
-    adversarial layouts must equal brute force, ranks and tie order
-    included."""
+    """Property test at sample rate 2, so both sampled levels bound probes
+    on these small inputs: adversarial layouts must equal brute force,
+    ranks and tie order included."""
     import locus_spark.plans.knn as knnplan
 
     pts, probes, grid = data.draw(_radius_layout(kind))
     k = data.draw(st.integers(min_value=1, max_value=len(pts) - 1))
     with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(knnplan, "SCAP_MIN_TARGETS", 1)
         mp.setattr(knnplan, "CAP_SAMPLE_RATE", 2)
         got = knn_join(
             _points_df(spark, pts), _probes_df(spark, probes), k, grid=grid

@@ -20,8 +20,8 @@ taken from the fresh run; this tool reports ONLY the query stages, best of
 ``--reps`` replays per level.
 
 Usage: python tools/bench_query_replay.py --rows 128000000 --probes 96000 \
-          --low 2 --high 8 --reps 2
-Requires /tmp/locus_scaling_ck_{low,high}/r{rows}_c{level} checkpoints.
+          --low 2 --high 8 --reps 2 [--ck-root /tmp]
+Requires {ck-root}/locus_scaling_ck_{low,high}/r{rows}_c{level} checkpoints.
 """
 
 from __future__ import annotations
@@ -42,9 +42,9 @@ STAGE_METRICS = {
 
 def replay_level(
     rows: int, probes: int, cores: int, query_reps: int = 4,
-    stages: str = "box,ball,knn",
+    stages: str = "box,ball,knn", ck_root: str = "/tmp",
 ) -> dict:
-    ck = pathlib.Path(f"/tmp/locus_scaling_ck_{cores}/r{rows}_c{cores}")
+    ck = pathlib.Path(f"{ck_root}/locus_scaling_ck_{cores}/r{rows}_c{cores}")
     if not ck.is_dir():
         raise SystemExit(
             f"missing build checkpoints at {ck} — run tools/bench_scaling.py "
@@ -58,7 +58,7 @@ def replay_level(
         "--rows", str(rows),
         "--probes", str(probes),
         "--cores", str(cores),
-        "--checkpoint", f"/tmp/locus_scaling_ck_{cores}",
+        "--checkpoint", str(ck.parent),
         # 4 timed reps per query stage: whole-stage-codegen JIT keeps
         # improving the kNN wall through the third rep at the high level
         # (measured at 128M/96k: 8-core reps 78.7 -> 44.5 -> 30.7 -> 32.0 s;
@@ -96,10 +96,10 @@ def replay_level(
 
 def best_of(
     rows: int, probes: int, cores: int, reps: int, query_reps: int,
-    stages: str, metrics: list[str],
+    stages: str, metrics: list[str], ck_root: str,
 ) -> dict:
     runs = [
-        replay_level(rows, probes, cores, query_reps, stages)
+        replay_level(rows, probes, cores, query_reps, stages, ck_root)
         for _ in range(reps)
     ]
     return {m: max(r[m] for r in runs) for m in metrics}
@@ -131,15 +131,19 @@ def main() -> None:
         "jobs/run.py); alternate-load datapoints pass 'knn' so probe-capped "
         "box/ball walls are not re-paid",
     )
+    ap.add_argument(
+        "--ck-root", default="/tmp",
+        help="directory holding the locus_scaling_ck_{cores} build checkpoints",
+    )
     args = ap.parse_args()
     factor = args.high / args.low
     stage_list = [s.strip() for s in args.stages.split(",") if s.strip()]
     metrics = [STAGE_METRICS[s] for s in stage_list]
 
     lo = best_of(args.rows, args.probes, args.low, args.reps,
-                 args.query_reps, args.stages, metrics)
+                 args.query_reps, args.stages, metrics, args.ck_root)
     hi = best_of(args.rows, args.probes, args.high, args.reps,
-                 args.query_reps, args.stages, metrics)
+                 args.query_reps, args.stages, metrics, args.ck_root)
     eff = {m: round(hi[m] / (factor * lo[m]), 3) for m in metrics}
     report = {
         "metric": "query_stage_scaling_replay",

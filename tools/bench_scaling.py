@@ -215,7 +215,7 @@ def main() -> None:
         "",
         "Job: `jobs/run.py` — synth pages → extract text (byte-identity) →",
         "geocode (xxhash64) → Hilbert cell index (salted hot cells) →",
-        "box-range join → ball join → exact kNN join (cell-ring expansion).",
+        "box-range join → ball join → exact kNN join (sampled bound, one exact join).",
         "",
         "| stage | rows/s @ "
         f"local[{args.low}] | rows/s @ local[{args.high}] | efficiency (tput_4N / {factor:g}·tput_N) | vs host ceiling |",
