@@ -10,9 +10,10 @@ so each query family becomes a join:
 * range / ball → covering-cell equi-join + exact closed predicate
   (cell pruning plays the role of tree descent; the exact predicate at the
   end means pruning can never lose rows — safe-superset, SURVEY.md §4 O10);
-* nearest / k-NN → **sampled bound, then one exact join**: one
-  aggregation over nested target samples bounds every probe's k-th squared
-  distance from above, then one join over the cells within that bound and
+* nearest / k-NN → **sampled bound, then one exact join**: nested
+  target samples bound every probe's k-th squared distance from above (a
+  second aggregation only for the probes the finest sample leaves
+  unbound), then one join over the cells within that bound and
   one per-probe top-k aggregation answer every probe exactly (the
   distributed analogue of the kd branch-and-bound prune, ``kd.py:368``,
   and of the R-tree best-first frontier, ``r.py:592-610``).

@@ -1,4 +1,4 @@
-"""Generic exact kNN join in two lazy phases, with no round loop — the one
+"""Generic exact kNN join in two phases, with no round loop — the one
 planner behind every nearest/n-nearest family in the reference:
 
 * kd points  (K1/K4: ``/root/reference/locus/kd.py:176-374``)
@@ -10,36 +10,45 @@ The reference prunes with per-node lower bounds on a heap frontier
 distributed analogue bounds every probe's k-th squared distance from above
 ONCE, from samples, then answers every probe exactly inside that bound.
 
-Phase 1 — a bound ``_scap`` for every probe, from one aggregation over
-three candidate levels:
+Phase 1 — a bound ``_scap`` for every probe, from nested target samples
+(:func:`_levels`): level j keeps the targets with ``xxhash64(id) %
+CAP_SAMPLE_RATE**j == 0`` on a grid coarsened level by level, and searches
+a Chebyshev window sized to hold ~4k+8 of them at the mean density, so
+each level's window holds about as many cells while covering a wider area.
 
-1. the targets with ``xxhash64(id) % CAP_SAMPLE_RATE == 0``, in the
-   Chebyshev cell window sized (:func:`_half_width`) to hold ~4k+8 of them;
-2. the nested coarser sample (``% CAP_SAMPLE_RATE**2 == 0``), in the window
-   sized for its own density on a grid of isqrt(CAP_SAMPLE_RATE)-times
-   coarser cells, so its window holds about as many cells as level 1's;
-3. exactly k distinct targets (the k smallest by ``(xxhash64(id), id)``),
-   which every probe meets through one shared join key.
-
-The levels share one pass over the probes, one over the targets and one
-hash join: each probe row expands to its level-1 cells, its level-2 cells
-and one level-3 row, with the level fused into the long join key, and each
-level-2 target row is emitted once per level.
-
-Per probe and level, the k-th smallest candidate dist² (null with fewer
-than k candidates), and ``_scap = least(...)`` over the levels; the
-one-row-per-probe bounds are broadcast back onto the probes.
+1a. Every probe: the k-th smallest dist² over the level-1 sample in its
+    window (null with fewer than k candidates) — one probe pass, one
+    sampled target pass, one hash join, one aggregation, materialized (one
+    job), so the driver counts the probes it left without a bound.  Dense
+    probes, the bulk, stop here and carry no coarser rows.
+1b. Planned only when that count is not zero, for those probes alone
+    (sparse regions, edges, probes outside the grid): one pass over them
+    and one hash join against every coarser level's window at once, plus
+    two whole-grid sources behind one shared (salted) key — the sparsest
+    level sample still expected to hold 4k+8 targets (all targets when
+    none is), and exactly k fixed targets (the k smallest by
+    ``(xxhash64(id), id)``).  ``_scap = least(...)`` of the per-level k-th
+    values.
 
 Why ``_scap`` is a valid upper bound on the probe's true k-th dist²: each
 level is a set of targets, each counted once, and the k-th smallest over a
 subset of the targets is >= the k-th smallest over all of them.  Multi-cell
-families (boxes, segments) surface a target once per covering cell in
-levels 1-2 (level 2 also once per fine cell inside a coarse one), so
-there a level's distances are made distinct first, which only raises its
-k-th value.  Level 3 reads one row per target and always holds k of
-them, so every probe gets a bound.  The minimum of upper bounds
-is an upper bound.  Level 2 is what keeps sparse probes cheap: with level 3
-alone, an isolated probe's bound spans most of the grid.
+families (boxes, segments) surface a target once per covering cell in the
+windowed levels (once per fine cell inside a coarse one, too), so there a
+level's distances are made distinct first, which only raises its k-th
+value; the whole-grid sources read one row per target.  The k fixed
+targets always hold k, so every probe gets a bound.  The minimum of upper
+bounds is an upper bound.
+
+Why the bound stays local: a probe bound at level j had fewer than k
+level-(j-1) samples in its level-(j-1) window, and its level-j window
+covers ~CAP_SAMPLE_RATE times that area, so its disc holds ~k ×
+CAP_SAMPLE_RATE**j targets around it rather than a share of the whole
+grid.  Only a probe whose widest window is empty — its region is most of
+the grid — falls to the whole-grid sample, whose disc holds ~k/(sample
+size) <= ~k/(4k+8) of all targets; the k fixed targets bind only when that
+sample holds fewer than k (inputs of a few hundred targets, or a hash draw
+that is vanishingly rare above that).
 
 Phase 2 — the exact answer: for each probe every cell whose rect lies
 within sqrt(_scap) of the probe's bbox, one hash join against the targets,
@@ -63,10 +72,12 @@ prunes.
 
 Each operation emits ONE DEBUG record on this module's logger
 (``locus_spark.plans.knn``).  Its args are a dict of driver-side values —
-``join`` (``broadcast|shuffle``, or ``cross`` for the k >= targets
-short-circuit), ``rows`` (the estimated window frame that picked it),
-``targets``, ``probes`` and ``wall_s`` (wall time to plan, including the
-one count job) — so reading it costs no Spark job.
+``join`` (phase 2's ``broadcast|shuffle``, or ``cross`` for the k >=
+targets short-circuit), ``rows`` (the estimated phase-2 frame that picked
+it, see :data:`ANN_BROADCAST_MAX_ROWS`), ``levels`` (windowed sample levels; 0 for ``cross``), ``unbound``
+(probes that took phase 1b), ``targets``, ``probes`` and ``wall_s`` (wall
+time to plan, including the eager count and level-1 jobs) — so reading it
+costs no Spark job.
 """
 
 from __future__ import annotations
@@ -74,39 +85,39 @@ from __future__ import annotations
 import logging
 import math
 import time
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from locus_spark.cells import GridSpec
+from locus_spark.session import materialize
 
 _log = logging.getLogger(__name__)
 
 #: window frames estimated wider than this many (probe, cell) rows are not
-#: broadcast (sparse grids: many cells per probe, few candidates): both
-#: phases then hash-join them against the targets after a shuffle
-#: (``shuffle_hash`` hint) instead.  The estimate is probes × the level-1
-#: and level-2 window cells, from the one count job that also counts the
-#: targets.
+#: broadcast (sparse grids: many cells per probe, few candidates): that
+#: phase then hash-joins them against the targets after a shuffle
+#: (``shuffle_hash`` hint) instead.  Phase 1's estimate is probes × the
+#: level-1 window cells, from the one count job that also counts the
+#: targets; it is also the order of the phase-2 frame of a probe level 1
+#: bounds.  Phase 2 adds, per probe phase 1b bounded, the fine cells of
+#: the deepest level's window.
 ANN_BROADCAST_MAX_ROWS = 4_000_000
 
-#: level-1 sample rate (level 2 samples at its square): level 1 keeps the
-#: targets with ``xxhash64(id) % CAP_SAMPLE_RATE == 0``, in a window sized
-#: for 1/CAP_SAMPLE_RATE of the density, so it expects as many sampled
-#: candidates as a full-density window of ~4k+8 targets.  Why a sample: an
-#: exact per-cell occupancy histogram + volume job was measured at 128M
-#: rows to cost more than the pruning saves, and a mean-density estimate
-#: under-counted skewed probes by 200x.
+#: level-1 sample rate (level j samples at its j-th power): level 1 keeps
+#: the targets with ``xxhash64(id) % CAP_SAMPLE_RATE == 0``, in a window
+#: sized for 1/CAP_SAMPLE_RATE of the density, so it expects as many
+#: sampled candidates as a full-density window of ~4k+8 targets.  Why a
+#: sample: an exact per-cell occupancy histogram + volume job was measured
+#: at 128M rows to cost more than the pruning saves, and a mean-density
+#: estimate under-counted skewed probes by 200x.
 CAP_SAMPLE_RATE = 16
 
 #: probe-side internal columns: cell-range of the probe geometry's bbox and
 #: the bbox itself in coordinates.
 PROBE_CELL_COLS = ("_bcx0", "_bcx1", "_bcy0", "_bcy1")
 PROBE_BBOX_COLS = ("_sx0", "_sx1", "_sy0", "_sy1")
-
-#: the join key every probe's level-3 row shares with the k level-3 targets
-#: (cell keys are >= 0)
-_LEVEL3_KEY = -1
 
 
 def probe_frame(
@@ -134,45 +145,87 @@ def probe_frame(
     )
 
 
-def _bound_cells(
-    probes: DataFrame, n: int, h1: int, coarse: int, nc: int, h2: int
+class _Level(NamedTuple):
+    rate: int  # keeps the targets with xxhash64(id) % rate == 0
+    coarse: int  # cells of the fine grid per cell side
+    nc: int  # cells a side
+    h: int  # window half-width, in the level's cells
+
+
+def _levels(k: int, n_targets: int, n: int) -> list[_Level]:
+    """The windowed sample levels: level j keeps the targets with
+    ``xxhash64(id) % CAP_SAMPLE_RATE**j == 0`` (so each level is a subset
+    of the one before), on a grid of ``coarse``-times coarser cells, in a
+    window of half-width ``h`` sized (:func:`_half_width`) to hold ~4k+8 of
+    them at the mean density.  The coarsening keeps that window at about as
+    many cells on every level, while the area it covers grows level by
+    level.  Levels stop at the first whose window spans its grid, or whose
+    next level would sample fewer than 4k+8 targets in all."""
+    rate = CAP_SAMPLE_RATE
+    step = max(2, math.isqrt(rate))
+    out = []
+    r, c = rate, 1
+    while True:
+        nc = (n - 1) // c + 1
+        h = _half_width(k, n_targets / float(nc * nc * r), nc)
+        out.append(_Level(r, c, nc, h))
+        if 2 * h + 1 >= nc or n_targets < (4 * k + 8) * r * rate:
+            return out
+        r, c = r * rate, c * step
+
+
+def _per_level(vals: list[int], lv: Column | None = None) -> Column:
+    """``vals[lv - 1]``, by default for the row's level ``_lv`` (1 past the
+    end)."""
+    lv = F.col("_lv") if lv is None else lv
+    return F.element_at(F.array(*[F.lit(v) for v in [*vals, 1]]), lv)
+
+
+def _level_key(
+    cx: Column, cy: Column, levels: list[_Level], lv: Column | None = None
+) -> Column:
+    """Cell (cx, cy) of level ``lv``'s grid (default: the row's ``_lv``) as
+    ONE long join key (see :func:`_disc_cells` for why a single long key):
+    the cells of the levels before it, plus its row-major cell."""
+    offs = [sum(lv_.nc * lv_.nc for lv_ in levels[:i]) for i in range(len(levels))]
+    nc = _per_level([lv_.nc for lv_ in levels], lv)
+    return (_per_level(offs, lv) + cx * nc + cy).cast("long")
+
+
+def _window_keys(
+    probes: DataFrame, levels: list[_Level], shared: Column | None = None
 ) -> DataFrame:
-    """The phase-1 (probe, key) frame from ONE pass over the probes: the
-    level-1 window on the grid, the level-2 window on the ``coarse``-times
-    coarser grid, and one level-3 row keyed :data:`_LEVEL3_KEY`.  A window
-    is the probe's cell-rectangle widened by the level's half-width each
-    way, slid back inside the grid where it would cross an edge so that a
-    probe near an edge (or outside the grid) keeps as many cells.  The
-    coarse grid has ``nc`` cells a side."""
-    lv = F.col("_lv")
-    h = F.when(lv == 1, h1).otherwise(h2)
-    c = F.when(lv == 1, 1).otherwise(coarse)
-    m = F.when(lv == 1, n).otherwise(nc)
+    """A (probe, ``_jk``) frame from ONE pass over the probes: the probe's
+    window cells on every level of ``levels``, keyed by
+    :func:`_level_key`, and, when ``shared`` is given, one more row keyed
+    by it.  A window is the probe's cell-rectangle on the level's grid
+    widened by ``h`` each way, slid back inside the grid where it would
+    cross an edge, so that a probe near an edge (or outside the grid) keeps
+    as many cells."""
+    c = _per_level([lv.coarse for lv in levels])
+    m = _per_level([lv.nc for lv in levels])
+    h = _per_level([lv.h for lv in levels])
+    windowed = F.col("_lv") <= len(levels)
 
     def span(c0: str, c1: str) -> Column:
         lo = F.floor(F.col(c0) / c)
         width = F.floor(F.col(c1) / c) - lo + 2 * h + 1
         start = F.greatest(F.lit(0), F.least(lo - h, m - width))
         end = F.least(m - 1, start + width - 1)
-        return F.when(lv == 3, F.array(F.lit(0))).otherwise(F.sequence(start, end))
+        return F.when(windowed, F.sequence(start, end)).otherwise(
+            F.array(F.lit(0).cast("long"))
+        )
 
+    n_lv = len(levels) + (shared is not None)
     cells = (
-        probes.withColumn("_lv", F.explode(F.array(F.lit(1), F.lit(2), F.lit(3))))
+        probes.withColumn("_lv", F.explode(F.sequence(F.lit(1), F.lit(n_lv))))
         .withColumn("_cx", F.explode(span("_bcx0", "_bcx1")))
         .withColumn("_cy", F.explode(span("_bcy0", "_bcy1")))
     )
-    return cells.withColumn(
-        "_jk",
-        F.when(lv == 3, _LEVEL3_KEY).otherwise(
-            _level_key(F.col("_cx"), F.col("_cy"), m, lv)
-        ),
-    ).drop("_lv", "_cx", "_cy")
-
-
-def _level_key(cx: Column, cy: Column, nc: int | Column, level: Column) -> Column:
-    """A cell of an ``nc``-a-side grid and the sample level (1|2) as ONE
-    long join key (see :func:`_disc_cells` for why a single long key)."""
-    return (cx * nc + cy) * 2 + level - 1
+    key = _level_key(F.col("_cx"), F.col("_cy"), levels)
+    if shared is not None:
+        key = F.when(windowed, key).otherwise(shared)
+    return cells.withColumn("_jk", key).drop("_lv", "_cx", "_cy")
 
 
 def _disc_cells(probes: DataFrame, grid: GridSpec, margin: float) -> DataFrame:
@@ -243,6 +296,133 @@ def _build_side(frame: DataFrame, shuffle: bool) -> DataFrame:
     return frame.hint("shuffle_hash") if shuffle else F.broadcast(frame)
 
 
+def _bound(
+    targets: DataFrame,
+    target_cells: DataFrame,
+    probes: DataFrame,
+    k: int,
+    grid: GridSpec,
+    dist2: Column,
+    dedup: bool,
+    levels: list[_Level],
+    n_targets: int,
+    n_probes: int,
+    wide: bool,
+) -> tuple[DataFrame, int]:
+    """Phase 1 over ``levels`` (:func:`_levels`): ``probes`` with
+    ``_scap``, a valid upper bound on each probe's k-th dist² (see the
+    module docstring), and the number of probes that took phase 1b.  Runs
+    the level-1 pass; the rest stays lazy."""
+    hid = F.xxhash64(F.col("id"))
+
+    def kth(d: Column, distinct: bool) -> Column:
+        d = F.sort_array(F.collect_list(d))
+        if distinct:
+            # a multi-cell target surfaces once per covering cell in the
+            # windowed levels; distinct distances only raise the k-th
+            d = F.array_distinct(d)
+        return F.get(d, k - 1)
+
+    # ---- phase 1a: level 1 for every probe — one probe pass, one sampled
+    # target pass, one hash join, one aggregation.  Plain double lists, not
+    # row structs: a bound needs only the k-th distance.  The probe columns
+    # rejoin through the one-row-per-probe bounds: carrying them through
+    # this aggregate with first() doubled its executor time (4M targets,
+    # 10k probes, local[4]: 35 s vs 17 s).
+    sample1 = target_cells.filter(F.pmod(hid, F.lit(levels[0].rate)) == 0).select(
+        *targets.columns, grid.pack(F.col("_cx"), F.col("_cy")).alias("_jk")
+    )
+    caps1 = (
+        _build_side(_window_keys(probes, levels[:1]), wide)
+        .join(sample1, ["_jk"])
+        # dist² in a projection (whole-stage codegen), not inside the
+        # aggregate, which evaluates its inputs interpreted
+        .select("qid", dist2.alias("dist2"))
+        .groupBy("qid")
+        .agg(kth(F.col("dist2"), dedup).alias("_scap"))
+    )
+    # materialized, so the driver can count the probes it bounds: when it
+    # bounds them all, phase 1b is not planned at all
+    caps1 = materialize(caps1)
+    unbound = n_probes - caps1.filter(F.col("_scap").isNotNull()).count()
+    if unbound == 0:
+        return probes.join(F.broadcast(caps1), "qid"), 0
+    bound1 = probes.join(F.broadcast(caps1), "qid", "left")
+
+    # ---- phase 1b: only the probes level 1 left without a bound (fewer
+    # than k sampled candidates in the window: sparse regions, edges), one
+    # pass over them and one join, against every coarser level, a
+    # whole-grid sample and k fixed targets.  The last two share one join
+    # key, salted on the shuffled path so that no single task takes every
+    # such probe.
+    coarse = levels[1:]
+    top = len(coarse) + 1
+    top_rate = max(
+        [lv.rate for lv in levels if n_targets >= (4 * k + 8) * lv.rate] or [1]
+    )
+    salts = (
+        int(probes.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        if wide else 1
+    )
+    # ONE pass over the sampled target cells (when there are coarse levels,
+    # the top sample is the deepest one): each row once per coarse level it
+    # belongs to (the levels nest), and once per salt on the top level
+    def entry(lv: Column, jk: Column) -> Column:
+        return F.struct(lv.alias("lv"), jk.cast("long").alias("jk"))
+
+    entries = F.when(
+        F.pmod(hid, F.lit(top_rate)) == 0,
+        F.transform(
+            F.sequence(F.lit(-salts), F.lit(-1)), lambda s: entry(F.lit(top), s)
+        ),
+    ).otherwise(F.array())
+    if coarse:
+        deepest = sum(
+            F.when(F.pmod(hid, F.lit(lv.rate)) == 0, 1).otherwise(0) for lv in coarse
+        )
+        c = [lv.coarse for lv in coarse]
+
+        def coarse_entry(lv: Column) -> Column:
+            cx = F.floor(F.col("_cx") / _per_level(c, lv))
+            cy = F.floor(F.col("_cy") / _per_level(c, lv))
+            return entry(lv, _level_key(cx, cy, coarse, lv))
+
+        entries = F.concat(
+            F.transform(F.sequence(F.lit(1), deepest), coarse_entry), entries
+        )
+    sample2 = target_cells.filter(
+        F.pmod(hid, F.lit(coarse[0].rate if coarse else top_rate)) == 0
+    ).select(*targets.columns, F.explode(entries).alias("_e")).select(
+        *targets.columns, F.col("_e.lv").alias("_lv"), F.col("_e.jk").alias("_jk")
+    ).unionByName(targets.orderBy(hid, F.col("id")).limit(k).select(
+        *targets.columns,
+        F.lit(top + 1).alias("_lv"),
+        F.explode(F.sequence(
+            F.lit(-salts).cast("long"), F.lit(-1).cast("long")
+        )).alias("_jk"),
+    ))
+    shared = F.lit(-1) - F.pmod(F.xxhash64(F.col("qid")), F.lit(salts))
+    cand2 = (
+        _build_side(
+            _window_keys(bound1.filter(F.col("_scap").isNull()), coarse, shared),
+            wide,
+        )
+        .join(sample2, ["_jk"])
+        .select("qid", "_lv", dist2.alias("dist2"))
+    )
+    # the k fixed targets are read one row per target; the sampled levels
+    # may hold a multi-cell target once per covering cell
+    caps2 = cand2.groupBy("qid").agg(F.least(*[
+        kth(F.when(F.col("_lv") == i, F.col("dist2")), dedup and i <= top)
+        for i in range(1, top + 2)
+    ]).alias("_scap2"))
+    bounded = bound1.join(F.broadcast(caps2), "qid", "left").select(
+        *probes.columns,
+        F.coalesce(F.col("_scap"), F.col("_scap2")).alias("_scap"),
+    )
+    return bounded, unbound
+
+
 def generic_knn_join(
     targets: DataFrame,
     target_cells: DataFrame,
@@ -270,8 +450,8 @@ def generic_knn_join(
     if k < 1:
         raise ValueError("knn: k must be >= 1")
     t0 = time.monotonic()
-    # the ONE eager job: sizes the sample windows and the frame
-    # estimate that picks the join strategy
+    # the first eager job: sizes the sample windows and the frame estimate
+    # that picks the join strategy
     counts = (
         targets.select(F.lit(True).alias("_t"))
         .unionByName(probes.select(F.lit(False).alias("_t")))
@@ -288,13 +468,16 @@ def generic_knn_join(
     target_payload = targets.columns
     out_cols = [*probe_payload, *target_payload, "dist2"]
 
-    def record(join: str, rows: int) -> None:
+    def record(join: str, rows: int, levels: int, unbound: int) -> None:
         _log.debug(
-            "knn join=%(join)s rows=%(rows)d targets=%(targets)d "
-            "probes=%(probes)d wall_s=%(wall_s).3f",
+            "knn join=%(join)s rows=%(rows)d levels=%(levels)d "
+            "unbound=%(unbound)d targets=%(targets)d probes=%(probes)d "
+            "wall_s=%(wall_s).3f",
             {
                 "join": join,
                 "rows": rows,
+                "levels": levels,
+                "unbound": unbound,
                 "targets": n_targets,
                 "probes": n_probes,
                 "wall_s": time.monotonic() - t0,
@@ -306,7 +489,7 @@ def generic_knn_join(
         tie = F.col("id").desc() if tie_desc_id else F.col("id").asc()
         w = Window.partitionBy("qid").orderBy(F.col("dist2").asc(), tie)
         pairs = F.broadcast(probes.drop(*PROBE_CELL_COLS)).join(targets)
-        record("cross", n_probes * n_targets)
+        record("cross", n_probes * n_targets, 0, 0)
         return (
             pairs.withColumn("dist2", dist2)
             .select(*out_cols, F.row_number().over(w).cast("long").alias("rn"))
@@ -317,64 +500,17 @@ def generic_knn_join(
         grid.cell_w * grid.n, grid.cell_h * grid.n,
     )
     margin = 1e-9 * scale
-    rate = CAP_SAMPLE_RATE
-    n = grid.n
-    density = n_targets / float(n * n)
-    h1 = _half_width(k, density / rate, n)
-    # level 2 searches a grid of coarse x coarse cells, so its window holds
-    # about as many cells as level 1's (a fine window sized for 1/rate² of
-    # the density would hold ~rate times as many)
-    coarse = max(1, math.isqrt(rate))
-    nc = (n - 1) // coarse + 1
-    h2 = _half_width(k, density * coarse * coarse / rate**2, nc)
-    rows = n_probes * ((2 * h1 + 1) ** 2 + (2 * h2 + 1) ** 2)
+    levels = _levels(k, n_targets, grid.n)
+    rows = n_probes * (2 * levels[0].h + 1) ** 2
     wide = rows > ANN_BROADCAST_MAX_ROWS
-
-    # ---- phase 1: every level in one probe pass, one target pass + the k
-    # level-3 targets, and one hash join
-    hid = F.xxhash64(F.col("id"))
-    level = F.col("_lv")
-    sampled = target_cells.filter(F.pmod(hid, F.lit(rate)) == 0).withColumn(
-        "_lv",
-        F.explode(F.sequence(
-            F.lit(1), F.when(F.pmod(hid, F.lit(rate * rate)) == 0, 2).otherwise(1)
-        )),
+    bounded, unbound = _bound(
+        targets, target_cells, probes, k, grid, dist2, dedup, levels, n_targets,
+        n_probes, wide,
     )
-    sampled = sampled.withColumn("_jk", F.when(
-        level == 1, _level_key(F.col("_cx"), F.col("_cy"), n, level)
-    ).otherwise(_level_key(
-        F.floor(F.col("_cx") / coarse), F.floor(F.col("_cy") / coarse), nc, level
-    )))
-    seeds = targets.orderBy(hid, F.col("id")).limit(k).select(
-        *targets.columns,
-        F.lit(3).alias("_lv"),
-        F.lit(_LEVEL3_KEY).cast("long").alias("_jk"),
-    )
-    bound_cand = (
-        _build_side(_bound_cells(probes, n, h1, coarse, nc, h2), wide)
-        .join(
-            sampled.select(*targets.columns, "_lv", "_jk").unionByName(seeds),
-            ["_jk"],
-        )
-        .select("qid", "_lv", dist2.alias("dist2"))
-    )
-
-    def kth(lv: int) -> Column:
-        d = F.sort_array(F.collect_list(F.when(level == lv, F.col("dist2"))))
-        if dedup and lv < 3:
-            # a multi-cell target surfaces once per covering cell in the
-            # sampled levels; distinct distances only raise the k-th
-            d = F.array_distinct(d)
-        return F.get(d, k - 1)
-
-    # plain double lists, not row structs: a bound needs only each level's
-    # k-th distance.  The probe columns rejoin through the one-row-per-probe
-    # bounds: carrying them through this aggregate with first() doubled its
-    # executor time (4M targets, 10k probes, local[4]: 35 s vs 17 s).
-    caps = bound_cand.groupBy("qid").agg(
-        F.least(kth(1), kth(2), kth(3)).alias("_scap")
-    )
-    bounded = probes.join(F.broadcast(caps), "qid")
+    # a probe phase 1b bounded searches a disc up to its deepest window
+    deep = levels[-1]
+    rows += unbound * min(grid.n, (2 * deep.h + 1) * deep.coarse) ** 2
+    wide = rows > ANN_BROADCAST_MAX_ROWS
 
     # ---- phase 2: one join over each probe's disc, one top-k aggregation
     cand = (
@@ -398,11 +534,15 @@ def generic_knn_join(
     # Long.MIN_VALUE.
     tie_key = F.bitwise_not(F.col("id")) if tie_desc_id else F.col("id")
     payload = [c for c in out_cols if c not in ("qid", "dist2")]
-    top = cand.groupBy("qid").agg(F.array_sort(F.collect_list(F.struct(
+    # the row structs are built in a projection (whole-stage codegen), not
+    # inside the aggregate, which evaluates its inputs interpreted
+    top = cand.select("qid", F.struct(
         F.col("dist2").alias("_d"),
         tie_key.alias("_t"),
         F.struct(*payload).alias("_p"),
-    ))).alias("_top"))
+    ).alias("_s")).groupBy("qid").agg(
+        F.array_sort(F.collect_list("_s")).alias("_top")
+    )
     if dedup:
         # a multi-cell target surfaces once per covering cell with a
         # BIT-IDENTICAL struct (same geometry → same dist², same payload),
@@ -414,7 +554,7 @@ def generic_knn_join(
             "_top",
             lambda x, i: (i == 0) | (x != F.get(F.col("_top"), i - 1)),
         ))
-    record("shuffle" if wide else "broadcast", rows)
+    record("shuffle" if wide else "broadcast", rows, len(levels), unbound)
     return (
         top.select("qid", F.posexplode(F.slice("_top", 1, k)).alias("_rn", "_s"))
         .select(

@@ -3,14 +3,15 @@ bound and the one exact round behind it.
 
 Pins that every probe is answered exactly in one round whichever level
 bounds it — an isolated probe with no sampled candidate near it, a sparse
-tail, a probe outside the grid — plus two hazards the plan shape relies on:
+tail, a probe outside the grid — that the bound of a probe in an empty
+region stays local to it, plus two hazards the plan shape relies on:
 
 * a multi-cell target reached through several disc cells must appear once
-  per probe in the output — the top-k dedups with ``array_distinct`` over
-  the full row struct, which silently emits duplicates instead of failing
-  if any struct column ever stops being bit-identical across covering
-  cells (e.g. a future dist² expression referencing cell-derived or
-  nondeterministic columns);
+  per probe in the output — the top-k sorts each probe's row structs and
+  drops every element equal to its predecessor, which silently emits
+  duplicates instead of failing if any struct column ever stops being
+  bit-identical across covering cells (e.g. a future dist² expression
+  referencing cell-derived or nondeterministic columns);
 * ``tile_pyramid``'s level persists are scoped to the call — repeated
   invocations must not pin orphan entries in the CacheManager.
 """
@@ -18,7 +19,6 @@ tail, a probe outside the grid — plus two hazards the plan shape relies on:
 from __future__ import annotations
 
 import logging
-import math
 
 import numpy as np
 import pytest
@@ -109,8 +109,8 @@ def _radius_fixture():
 
 def test_isolated_probe_answered_through_coarse_levels(spark, monkeypatch, caplog):
     """The isolated corner probe has fewer than k level-1 candidates in its
-    level-1 window, so its bound comes from level 2 or 3, and it is still
-    answered exactly in the one round, as are the cluster probes.  Both
+    level-1 window, so its bound comes from a coarser source, and it is
+    still answered exactly in the one round, as are the cluster probes.  Both
     families (points; segments, which dedup
     multi-cell targets) equal brute force, duplicate-geometry ties
     included, at the default sample rate and at rate 2, with one record
@@ -158,7 +158,9 @@ def test_isolated_probe_answered_through_coarse_levels(spark, monkeypatch, caplo
         assert len(level1_candidates(targets, rate)) < k, (name, rate)
         caplog.clear()
         out = query().collect()
-        assert len(_records(caplog)) == 1, (name, _records(caplog))
+        recs = _records(caplog)
+        # only the isolated probe takes phase 1b
+        assert [r["unbound"] for r in recs] == [1], (name, recs)
         got = {}
         for r in out:
             got.setdefault(r.qid, []).append((r.rn, r.dist2, r.id))
@@ -186,8 +188,8 @@ def _sparse_tail_layout():
     -100, 100, 100, 5), as points, small boxes and short segments, with the
     lower-right rectangle [EMPTY_X, 100] x [-100, EMPTY_Y] left empty.
     Probes: in the clusters, in the tails, isolated, outside the grid, and
-    in the empty corner, whose level-1 and level-2 windows lie inside the
-    empty rectangle."""
+    in the empty corner, whose windows on every level lie inside the empty
+    rectangle."""
     rng = np.random.RandomState(3)
     centers = [(-60.0, -50.0), (-55.0, 50.0), (40.0, 60.0)]
     xy = np.vstack(
@@ -216,25 +218,19 @@ def _sparse_tail_layout():
 def test_sparse_tail_layout_one_exact_round(spark, caplog):
     """Points, boxes and segments over clusters with sparse tails: every
     probe — in a cluster, in a tail, isolated, outside the grid, or with no
-    target in its level-1 or level-2 window, so only the exact-k level
-    bounds it — equals brute force, and each operation is one planner
-    record."""
+    target in any level's window, so only a whole-grid source bounds it —
+    equals brute force, and each operation is one planner record."""
     pts, boxes, segs, probes = _sparse_tail_layout()
     grid = GridSpec(-100.0, -100.0, 100.0, 100.0, 5)
     k = 4
-    # fixture check: the empty-corner probe's level-1 window (fine cells)
-    # and level-2 window (coarse cells), each slid inside the grid, lie
-    # inside the empty rectangle
-    n, rate = grid.n, knnplan.CAP_SAMPLE_RATE
-    density = len(pts) / float(n * n)
-    coarse = math.isqrt(rate)
-    nc = (n - 1) // coarse + 1
-    w1 = 2 * knnplan._half_width(k, density / rate, n) + 1
-    w2 = 2 * knnplan._half_width(k, density * coarse**2 / rate**2, nc) + 1
-    x_lo = min(n - w1, (nc - w2) * coarse)  # lowest window cell
-    y_hi = max(w1, w2 * coarse)  # one past the highest window cell
-    assert grid.min_x + x_lo * grid.cell_w >= EMPTY_X, (w1, w2)
-    assert grid.min_y + y_hi * grid.cell_h <= EMPTY_Y, (w1, w2)
+    # fixture check: the empty-corner probe's window on every level, slid
+    # inside that level's grid, lies inside the empty rectangle
+    for _, c, nc, h in knnplan._levels(k, len(pts), grid.n):
+        w = min(2 * h + 1, nc)
+        x_lo = (nc - w) * c  # lowest fine cell of the window
+        y_hi = w * c  # one past its highest fine cell
+        assert grid.min_x + x_lo * grid.cell_w >= EMPTY_X, (c, nc, h)
+        assert grid.min_y + y_hi * grid.cell_h <= EMPTY_Y, (c, nc, h)
 
     qdf = spark.createDataFrame(probes, "qid long, x double, y double")
 
@@ -279,6 +275,7 @@ def test_sparse_tail_layout_one_exact_round(spark, caplog):
         out = query().collect()
         recs = _records(caplog)
         assert len(recs) == 1 and recs[0]["probes"] == len(probes), (name, recs)
+        assert recs[0]["unbound"] >= 1, (name, recs)  # the empty corner
         got = {}
         for r in out:
             got.setdefault(r.qid, []).append((r.rn, r.dist2, r.id))
@@ -293,6 +290,98 @@ def test_sparse_tail_layout_one_exact_round(spark, caplog):
             assert [d for _, d, _ in rows] == pytest.approx(
                 [d for d, *_ in scored], rel=1e-12
             ), (name, qid)
+
+
+def test_multicell_target_counted_once_per_coarse_level(spark, monkeypatch):
+    """At sample rate 2 (coarse cells 2x2 fine ones), a sampled segment over
+    fine cells 9-11 of row 12 meets the isolated probe's level-2 window
+    three times, twice inside one coarse cell.  It is the only target in
+    the probe's level-1 and level-2 windows: counted once it leaves both
+    levels below k and the whole-grid sample bounds the probe; counted per
+    row it would set a level-2 bound below the true 3rd distance, and the
+    probe would get fewer than k rows."""
+    monkeypatch.setattr(knnplan, "CAP_SAMPLE_RATE", 2)
+    rng = np.random.RandomState(2)
+    segs = [
+        (i, float(x), float(y), float(x + 0.3), float(y))
+        for i, (x, y) in enumerate(rng.uniform(0.0, 4.5, (100, 2)))
+    ]
+    long_id = next(
+        r.id for r in spark.range(1000, 1100)
+        .filter(F.pmod(F.xxhash64("id"), F.lit(4)) == 0).orderBy("id").collect()
+    )
+    segs.append((long_id, 9.2, 12.5, 11.8, 12.5))
+    k = 3
+    levels = knnplan._levels(k, len(segs), GRID.n)
+    assert [lv.coarse for lv in levels] == [1, 2], levels
+    sdf = spark.createDataFrame(
+        segs, "id long, x1 double, y1 double, x2 double, y2 double"
+    )
+    qdf = spark.createDataFrame([(0, 10.5, 14.5)], "qid long, x double, y double")
+    got = sorted(
+        (r.rn, r.dist2, r.id)
+        for r in segment_knn_to_point_join(sdf, qdf, k, grid=GRID).collect()
+    )
+    want = sorted((_brute_point_seg_d2(10.5, 14.5, *s[1:]), s[0]) for s in segs)[:k]
+    assert [i for *_, i in got] == [i for _, i in want]
+    assert [d for _, d, _ in got] == pytest.approx([d for d, _ in want])
+
+
+def test_bound_of_a_probe_in_an_empty_region_stays_local(spark, monkeypatch):
+    """6,000 uniform points over a 64 x 64 grid, none within 20 of (40, 40).
+    The probe at the hole's centre has no target in its level-1 or level-2
+    window, so its bound comes from a coarser level or the whole-grid
+    sample; it must still be valid (>= the true k-th dist²) and local: its
+    disc holds a small share of the targets, not most of the grid as a
+    bound from k fixed targets would.  Also a dense probe, one on the
+    hole's rim and one outside the grid; the broadcast and the salted
+    shuffled plans give the same bounds."""
+    from locus_spark.functions.metrics import dist2_point_point
+
+    monkeypatch.setattr(knnplan, "CAP_SAMPLE_RATE", 4)
+    grid = GridSpec(0.0, 0.0, 64.0, 64.0, 6)
+    rng = np.random.RandomState(11)
+    xy = rng.uniform(0.0, 64.0, (9000, 2))
+    xy = xy[np.hypot(xy[:, 0] - 40.0, xy[:, 1] - 40.0) > 20.0][:6000]
+    assert len(xy) == 6000
+    k = 5
+    levels = knnplan._levels(k, len(xy), grid.n)
+    assert len(levels) >= 3, levels
+    # fixture check: no target at all in the hole probe's level-1 and
+    # level-2 windows (interior, so not slid)
+    for _, c, _, h in levels[:2]:
+        lo, hi = (40 // c - h) * c, (40 // c + h + 1) * c
+        inside = (xy >= lo) & (xy < hi)
+        assert not np.any(inside[:, 0] & inside[:, 1]), (c, h)
+    pts = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(xy)],
+        "id long, x double, y double",
+    )
+    cells = pts.withColumn("_cx", grid.cell_x_col(F.col("x"))).withColumn(
+        "_cy", grid.cell_y_col(F.col("y"))
+    )
+    probes = [(0, 40.0, 40.0), (1, 10.0, 10.0), (2, 40.0, 19.0), (3, 200.0, 40.0)]
+    qdf = spark.createDataFrame(probes, "qid long, _qx double, _qy double")
+    pr = knnplan.probe_frame(
+        qdf, grid, F.col("_qx"), F.col("_qx"), F.col("_qy"), F.col("_qy"),
+        payload=["_qx", "_qy"],
+    )
+    d2 = dist2_point_point(F.col("x"), F.col("y"), F.col("_qx"), F.col("_qy"))
+
+    def bounds(wide):
+        out, unbound = knnplan._bound(
+            pts, cells, pr, k, grid, d2, False, levels, len(xy), len(probes), wide
+        )
+        assert unbound >= 1  # the hole's probe
+        return {r.qid: r._scap for r in out.select("qid", "_scap").collect()}
+
+    got = bounds(False)
+    assert got == bounds(True)
+    for qid, px, py in probes:
+        d = np.sort((xy[:, 0] - px) ** 2 + (xy[:, 1] - py) ** 2)
+        assert got[qid] >= d[k - 1], qid
+        # a bound from k fixed targets would hold most of them
+        assert np.count_nonzero(d <= got[qid]) <= 0.1 * len(xy), (qid, got[qid])
 
 
 def test_desc_id_tie_encoding_is_order_reversing(spark):
