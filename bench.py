@@ -20,7 +20,7 @@ import time
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent))
 
 from locus_spark import queries as q  # noqa: E402
-from locus_spark.session import get_spark  # noqa: E402
+from locus_spark.session import codegen_counters, get_spark  # noqa: E402
 
 #: headline set — one per operator family + the pipeline ops.  The
 #: *_persisted and pages_* entries time the WARM query over an
@@ -191,13 +191,21 @@ def main() -> None:
     # varied 2-8x across consecutive bench invocations); two samples taken
     # minutes apart decorrelate the bursts where back-to-back reruns don't.
     samples: dict[str, list[float]] = {n: [] for n in HEADLINE}
+    # each query's codegen bill per pass (classes compiled, compile ms):
+    # a warm pass B should compile nothing
+    compiles: dict[str, list[int]] = {n: [] for n in HEADLINE}
+    compile_ms: dict[str, list[float]] = {n: [] for n in HEADLINE}
     rows: dict[str, int] = {}
     for _pass in range(2):
         for name in HEADLINE:
             fn = registry[name]
+            c0, ms0 = codegen_counters(spark)
             t0 = time.monotonic()
             rows[name] = fn(spark, sf_dir).count()
             samples[name].append(round(time.monotonic() - t0, 3))
+            c1, ms1 = codegen_counters(spark)
+            compiles[name].append(c1 - c0)
+            compile_ms[name].append(round(ms1 - ms0, 1))
             if name in RING_STATE:
                 _release_ring_state(spark)
             if name in CLEARS_CACHE:
@@ -219,6 +227,13 @@ def main() -> None:
                 "builds": builds,
                 "build_total_s": round(sum(builds.values()), 3),
                 "queries_run1": run1,
+                # per query [pass A, pass B]; totals per pass
+                "codegen_compiles": compiles,
+                "codegen_ms": compile_ms,
+                "codegen_pass_compiles": [sum(c[i] for c in compiles.values()) for i in (0, 1)],
+                "codegen_pass_ms": [
+                    round(sum(m[i] for m in compile_ms.values()), 1) for i in (0, 1)
+                ],
                 # session is pre-warmed before timing; persisted/pages
                 # queries time the warm query over a pre-built checkpoint
                 # (builds reported separately); each query runs twice and

@@ -93,13 +93,13 @@ def _hkey_boundaries(base: DataFrame, num_ranges: int) -> list[int]:
 
 
 def _range_id(col, boundaries: list[int]):
-    """0-based range id of ``col`` under ``boundaries`` — a literal CASE
-    chain (whole-stage-codegen'd; boundary count is the partition count,
-    so the chain stays tiny)."""
-    expr = F.lit(len(boundaries))  # last range
-    for i in range(len(boundaries) - 1, -1, -1):
-        expr = F.when(col < F.lit(boundaries[i]), F.lit(i)).otherwise(expr)
-    return expr
+    """0-based range id of ``col`` under ``boundaries``: the number of
+    boundaries at or below it.  The boundaries ride as one array literal,
+    which generated code reads as a reference object, so the compiled
+    class is the same whatever the base's quantiles are (as constants in
+    the Java source, every batch would compile anew)."""
+    bounds = F.lit(boundaries).cast("array<bigint>")
+    return F.size(F.filter(bounds, lambda b: b <= col))
 
 
 def compact(
@@ -135,7 +135,9 @@ def compact(
             "rewritten_rows": 0, "passthrough_rows": None,
         }
 
-    in_touched = rid.isin([int(t) for t in touched])
+    # an array literal, not ``isin``: ``In`` writes each id into the
+    # generated code, so a batch touching other ranges would compile anew
+    in_touched = F.array_contains(F.lit(touched).cast("array<int>"), rid)
     keep = base.filter(~in_touched)
     rewrite = merged_layout(base.filter(in_touched), delta)
     rewritten = (

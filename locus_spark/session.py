@@ -2,8 +2,9 @@
 
 AQE on (runtime skew-join splitting + partition coalescing), Arrow on
 (vectorized pandas UDF transfer), shuffle partitions sized to the local core
-count instead of the 200 default. On a real cluster the same builder is used
-with ``master`` unset (taken from spark-submit).
+count instead of the 200 default, and a codegen class cache that holds the
+engine's working set, so warm operations run warm code. On a real cluster
+the same builder is used with ``master`` unset (taken from spark-submit).
 """
 
 from __future__ import annotations
@@ -62,6 +63,17 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Spark's JVM-wide cache of generated classes.  Static: it is sized
+        # at the first codegen in the JVM.  The 100-entry default is smaller
+        # than one perfbench ingest_range cycle (126 classes with setup), so
+        # every warm cycle recompiled 82 of them and ran them cold in the
+        # interpreter.  Distinct classes measured with the cache unbounded:
+        # 3247 over the pytest suite, 1290 over pass A of the bench.py
+        # board; this is the next round number above twice the larger.
+        # Metaspace (jcmd VM.metaspace, committed): 166.6 MB after
+        # ingest_range setup + 4 cycles at both 100 and 10000 entries;
+        # 241 MB at the end of the pytest suite with all 3247 classes kept.
+        .config("spark.sql.codegen.cache.maxEntries", "8000")
         # local mode shares one JVM between driver and executor: under full
         # CPU saturation the heartbeat thread can starve for minutes, and the
         # default 120 s timeout then kills the executor mid-job (seen in the
@@ -77,6 +89,18 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_counters(spark: SparkSession) -> tuple[int, float]:
+    """Classes compiled and milliseconds spent compiling them so far in
+    this JVM, from Spark's own codegen counters (``CodegenMetrics`` and
+    ``CodeGenerator.compileTime``).  Reading them runs no Spark job; the
+    difference of two readings is the codegen bill of what ran between
+    them.  A class served from the codegen cache is not counted."""
+    jvm = spark.sparkContext._jvm
+    compiled = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return int(compiled.getCount()), nanos / 1e6
 
 
 def materialize(df: DataFrame) -> DataFrame:

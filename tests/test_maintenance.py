@@ -137,3 +137,31 @@ def test_upsert_serving_replaces_by_id_and_stays_broadcast(spark):
     # shuffle fallback serves the identical view
     served2 = upsert_serving(base, batch, broadcast_batch=False)
     assert {tuple(r) for r in served2.collect()} == {tuple(r) for r in served.collect()}
+
+
+def test_compact_code_does_not_depend_on_the_batch(spark):
+    """The range boundaries and the touched-range set reach generated code
+    as reference objects, not as constants in its source: once one
+    compaction has run, a second over a different base and a delta that
+    touches other ranges compiles no new class."""
+    from locus_spark.session import codegen_counters
+
+    def inputs(seed, base_hi, lo, hi):
+        # built (and checkpointed) before the measured window: the seeds
+        # are constants in the generators' own code
+        base = cluster_by_hilbert(
+            _points(spark, 1500, seed, hi=base_hi), GRID, num_partitions=4
+        )
+        delta = delta_layout(_points(spark, 40, seed + 1, lo=lo, hi=hi), GRID)
+        return base.localCheckpoint(), delta.localCheckpoint()
+
+    b1, d1 = inputs(21, 100.0, 0.0, 15.0)
+    b2, d2 = inputs(23, 60.0, 80.0, 100.0)
+    out1, s1 = compact(b1, d1, num_ranges=8)
+    assert len(out1.collect()) == 1540
+    before = codegen_counters(spark)
+    out2, s2 = compact(b2, d2, num_ranges=8)
+    assert len(out2.collect()) == 1540
+    compiled = codegen_counters(spark)[0] - before[0]
+    assert s1["touched"] != s2["touched"] and s1["boundaries"] != s2["boundaries"]
+    assert compiled == 0, f"{compiled} classes compiled for a second batch"
