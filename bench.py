@@ -14,13 +14,15 @@ from __future__ import annotations
 import json
 import os
 import pathlib
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent))
 
 from locus_spark import queries as q  # noqa: E402
-from locus_spark.session import codegen_counters, get_spark  # noqa: E402
+from locus_spark.session import codegen_counters, get_spark, py4j_calls  # noqa: E402
 
 #: headline set — one per operator family + the pipeline ops.  The
 #: *_persisted and pages_* entries time the WARM query over an
@@ -145,23 +147,14 @@ BUILDS = [
 ]
 
 
-def _wipe_checkpoints(sf_dir: str) -> None:
-    """Remove persisted-stage checkpoints so builds measure a real build,
-    not a manifest-resume parquet read."""
-    import shutil
-    import tempfile
-
-    tag = sf_dir.strip("/").replace("/", "_")
-    for root in (
-        f"{tempfile.gettempdir()}/locus_spark_index/{tag}",
-        q._PAGES_CK_ROOT,
-    ):
-        shutil.rmtree(root, ignore_errors=True)
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # persisted layouts and bucketed tables go to a private, empty temp dir:
+    # builds measure a real build, not a manifest resume, and runs side by
+    # side (a plan audit, another bench) neither wipe nor read them
+    run_tmp = tempfile.mkdtemp(prefix="locus_bench_")
+    tempfile.tempdir = run_tmp
     spark = get_spark(
         app_name="locus_spark_bench",
         master=f"local[{cpus}]",
@@ -178,7 +171,6 @@ def main() -> None:
 
     # build-once stages first (fresh), reported separately — the persisted
     # queries below then measure the warm resume (parquet read + query).
-    _wipe_checkpoints(sf_dir)
     builds: dict[str, float] = {}
     for label, builder in BUILDS:
         t0 = time.monotonic()
@@ -195,14 +187,18 @@ def main() -> None:
     # a warm pass B should compile nothing
     compiles: dict[str, list[int]] = {n: [] for n in HEADLINE}
     compile_ms: dict[str, list[float]] = {n: [] for n in HEADLINE}
+    # and its driver planning bill: py4j commands sent to the JVM
+    calls: dict[str, list[int]] = {n: [] for n in HEADLINE}
     rows: dict[str, int] = {}
     for _pass in range(2):
         for name in HEADLINE:
             fn = registry[name]
             c0, ms0 = codegen_counters(spark)
             t0 = time.monotonic()
-            rows[name] = fn(spark, sf_dir).count()
+            with py4j_calls(spark) as sent:
+                rows[name] = fn(spark, sf_dir).count()
             samples[name].append(round(time.monotonic() - t0, 3))
+            calls[name].append(sent[0])
             c1, ms1 = codegen_counters(spark)
             compiles[name].append(c1 - c0)
             compile_ms[name].append(round(ms1 - ms0, 1))
@@ -234,6 +230,8 @@ def main() -> None:
                 "codegen_pass_ms": [
                     round(sum(m[i] for m in compile_ms.values()), 1) for i in (0, 1)
                 ],
+                "py4j_calls": calls,
+                "py4j_pass_calls": [sum(c[i] for c in calls.values()) for i in (0, 1)],
                 # session is pre-warmed before timing; persisted/pages
                 # queries time the warm query over a pre-built checkpoint
                 # (builds reported separately); each query runs twice and
@@ -244,6 +242,7 @@ def main() -> None:
         )
     )
     spark.stop()
+    shutil.rmtree(run_tmp, ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -17,8 +17,9 @@ Design (Spark-first, NOT a port):
   Hilbert-keyed range partitioning (space-filling-curve clustering);
 * tree traversal pruning (``locus/kd.py:368``, ``locus/_core/r.py:164-183``)
   becomes explicit grid-cell candidate pruning + Parquet min/max skipping;
-* all distances are squared Euclidean, float64, computed with native Column
-  expressions (JVM codegen) — Python only in vectorized Arrow/pandas UDFs.
+* all distances are squared Euclidean, float64, computed by Spark SQL
+  expressions (JVM codegen; the spatial planners hand them over as SQL
+  text) — Python only in vectorized Arrow/pandas UDFs.
 """
 
 __version__ = "0.2.0"

@@ -7,12 +7,15 @@ the Hilbert key of that cell (``repartitionByRange``) plays the role of tree
 packing, and enumerating candidate cells plays the role of branch-and-bound
 descent (``/root/reference/locus/kd.py:368``, ``_core/r.py:164-183``).
 
-Everything is native Column math (floor/least/greatest) so Catalyst codegens
-it; the Hilbert key itself is an Arrow pandas UDF (see functions/hilbert.py).
+Each cell formula is rendered ONCE as Spark SQL text (floor/least/greatest,
+exact double literals), so Catalyst codegens it and the driver hands it to
+the JVM in one call rather than building a Column tree call by call; the
+Hilbert key itself is an Arrow pandas UDF (see functions/hilbert.py).
 """
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
@@ -61,32 +64,29 @@ class GridSpec:
         cy = int((y - self.min_y) / self.cell_h)
         return (min(max(cx, 0), self.n - 1), min(max(cy, 0), self.n - 1))
 
-    # -- Column builders -----------------------------------------------------
-    def cell_x_col(self, x: Column) -> Column:
-        raw = F.floor((x - F.lit(self.min_x)) / F.lit(self.cell_w))
-        return F.least(F.lit(self.n - 1), F.greatest(F.lit(0), raw)).cast("long")
+    # -- SQL renders (each formula once; the Column forms wrap them) --------
+    def cell_x_sql(self, x: str) -> str:
+        """Clamped cell column of the SQL expression ``x``."""
+        return _cell_sql(x, self.min_x, self.cell_w, self.n)
 
-    def cell_y_col(self, y: Column) -> Column:
-        raw = F.floor((y - F.lit(self.min_y)) / F.lit(self.cell_h))
-        return F.least(F.lit(self.n - 1), F.greatest(F.lit(0), raw)).cast("long")
+    def cell_y_sql(self, y: str) -> str:
+        return _cell_sql(y, self.min_y, self.cell_h, self.n)
 
-    def cell_col(self, x: Column, y: Column) -> Column:
+    def pack_sql(self, cx: str, cy: str) -> str:
         """Row-major packed cell id: cx * n + cy."""
-        return self.cell_x_col(x) * F.lit(self.n) + self.cell_y_col(y)
+        return f"({cx}) * {self.n} + ({cy})"
 
-    def pack(self, cx: Column, cy: Column) -> Column:
-        return cx * F.lit(self.n) + cy
+    def cell_x_col(self, x: str) -> Column:
+        return F.expr(self.cell_x_sql(x))
 
-    def covering_range_cols(
-        self, min_x: Column, max_x: Column, min_y: Column, max_y: Column
-    ) -> tuple[Column, Column, Column, Column]:
-        """(cx0, cx1, cy0, cy1) cell-coordinate range covering a box."""
-        return (
-            self.cell_x_col(min_x),
-            self.cell_x_col(max_x),
-            self.cell_y_col(min_y),
-            self.cell_y_col(max_y),
-        )
+    def cell_y_col(self, y: str) -> Column:
+        return F.expr(self.cell_y_sql(y))
+
+    def cell_col(self, x: str, y: str) -> Column:
+        return F.expr(self.pack_sql(self.cell_x_sql(x), self.cell_y_sql(y)))
+
+    def pack(self, cx: str, cy: str) -> Column:
+        return F.expr(self.pack_sql(cx, cy))
 
     def explode_covering(
         self,
@@ -99,27 +99,36 @@ class GridSpec:
     ) -> DataFrame:
         """One output row per (input row, covering cell) — equi-join key
         generation for containment / range joins."""
-        cx0, cx1, cy0, cy1 = self.covering_range_cols(
-            F.col(min_x), F.col(max_x), F.col(min_y), F.col(max_y)
-        )
-        return (
-            df.withColumn("_cx", F.explode(F.sequence(cx0, cx1)))
-            .withColumn("_cy", F.explode(F.sequence(cy0, cy1)))
-            .withColumn(cell_name, self.pack(F.col("_cx"), F.col("_cy")))
-            .drop("_cx", "_cy")
+        return self.explode_covering_xy(df, min_x, max_x, min_y, max_y).selectExpr(
+            *[f"`{c}`" for c in df.columns],
+            f"{self.pack_sql('_cx', '_cy')} AS `{cell_name}`",
         )
 
     def explode_covering_xy(
         self, df: DataFrame, min_x: str, max_x: str, min_y: str, max_y: str
     ) -> DataFrame:
         """Like :meth:`explode_covering` but keeps unpacked ``_cx``/``_cy``
-        (the join keys the kNN planner uses)."""
-        cx0, cx1, cy0, cy1 = self.covering_range_cols(
-            F.col(min_x), F.col(max_x), F.col(min_y), F.col(max_y)
+        (the join keys the kNN planner uses).  One select per generator."""
+        cx = f"sequence({self.cell_x_sql(min_x)}, {self.cell_x_sql(max_x)})"
+        cy = f"sequence({self.cell_y_sql(min_y)}, {self.cell_y_sql(max_y)})"
+        return df.selectExpr("*", f"explode({cx}) AS _cx").selectExpr(
+            "*", f"explode({cy}) AS _cy"
         )
-        return df.withColumn("_cx", F.explode(F.sequence(cx0, cx1))).withColumn(
-            "_cy", F.explode(F.sequence(cy0, cy1))
-        )
+
+
+def sql_double(v: float) -> str:
+    """``v`` as a Spark SQL literal of exactly that double: ``repr`` round-
+    trips, and the ``D`` suffix keeps Spark from reading ``0.5`` as a
+    DECIMAL; ±inf and NaN have no literal form, so they are cast."""
+    if math.isfinite(v):
+        return f"({v!r}D)"
+    name = "NaN" if math.isnan(v) else ("Infinity" if v > 0 else "-Infinity")
+    return f"CAST('{name}' AS DOUBLE)"
+
+
+def _cell_sql(v: str, origin: float, width: float, n: int) -> str:
+    raw = f"floor((({v}) - {sql_double(origin)}) / {sql_double(width)})"
+    return f"CAST(least({n - 1}, greatest(0, {raw})) AS BIGINT)"
 
 
 #: auto-resolution target: mean points per cell.  Hot-cell occupancy is what
@@ -142,10 +151,8 @@ def all_finite(*cols: str) -> Column:
     """True where every named column holds a finite number (NaN, ±inf and
     null all fail).  Grid bounds are aggregated over such rows only, so one
     non-finite coordinate can neither collapse nor stretch the grid."""
-    out = F.lit(True)
-    for c in cols:
-        out = out & (F.abs(F.col(c)) < F.lit(float("inf")))
-    return out
+    inf = sql_double(float("inf"))
+    return F.expr(" AND ".join(f"abs(`{c}`) < {inf}" for c in cols))
 
 
 def grid_from_points(
@@ -206,10 +213,10 @@ def cluster_by_hilbert(
     range-partitioning on the Hilbert key puts spatially-near rows in the same
     partition, so Parquet row-group min/max stats prune like R-tree MBRs."""
     hilbert = make_hilbert_udf(grid.resolution)
-    out = df.withColumn("cell", grid.cell_col(F.col(x), F.col(y))).withColumn(
-        "hkey",
-        hilbert(grid.cell_x_col(F.col(x)), grid.cell_y_col(F.col(y))),
-    )
+    out = df.withColumns({
+        "cell": grid.cell_col(x, y),
+        "hkey": hilbert(grid.cell_x_col(x), grid.cell_y_col(y)),
+    })
     if num_partitions:
         return out.repartitionByRange(num_partitions, "hkey")
     return out.repartitionByRange("hkey")

@@ -6,11 +6,13 @@ metrics from the ``ground`` library — ``/root/reference/locus/kd.py:53``,
 ``locus/_core/box.py:6-27``).  All distances are SQUARED — no sqrt on the hot
 path (the reference never takes one either).
 
-Each metric is defined ONCE as a SQL expression template over column names.
-The engine evaluates it with ``F.expr`` (Catalyst parses it → whole-stage
-codegen, JVM-side), and the DuckDB oracle evaluates the *same text* — both are
-IEEE-754 float64 engines evaluating the same operation tree, so results are
-bit-identical, which is what the driver's value-hash comparison needs.
+Each metric is defined ONCE as a SQL expression template over column names,
+and there is no Column twin.  The engine hands the text to Spark as is
+(``selectExpr``/``F.expr``: Catalyst parses it → whole-stage codegen,
+JVM-side, one py4j call), and the DuckDB oracle evaluates the *same text* —
+both are IEEE-754 float64 engines evaluating the same operation tree, so
+results are bit-identical, which is what the driver's value-hash comparison
+needs.
 
 Only common-dialect SQL is used: ``+ - * /``, ``least``, ``greatest``,
 ``CASE WHEN``, ``abs`` — all with identical semantics in Spark SQL and DuckDB.
@@ -18,20 +20,12 @@ Only common-dialect SQL is used: ``+ - * /``, ``least``, ``greatest``,
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 
 # --------------------------------------------------------------------------
 # point <-> point  (C4: ground.points_squared_distance, /root/reference/locus/kd.py:53)
 # --------------------------------------------------------------------------
 def sql_dist2_point_point(ax: str, ay: str, bx: str, by: str) -> str:
     return f"(({ax})-({bx}))*(({ax})-({bx})) + (({ay})-({by}))*(({ay})-({by}))"
-
-
-def dist2_point_point(ax, ay, bx, by) -> Column:
-    ax, ay, bx, by = (F.col(c) if isinstance(c, str) else c for c in (ax, ay, bx, by))
-    return (ax - bx) * (ax - bx) + (ay - by) * (ay - by)
 
 
 # --------------------------------------------------------------------------
@@ -44,14 +38,6 @@ def sql_dist2_point_box(
     dx = f"greatest(0.0, ({min_x})-({px}), ({px})-({max_x}))"
     dy = f"greatest(0.0, ({min_y})-({py}), ({py})-({max_y}))"
     return f"({dx})*({dx}) + ({dy})*({dy})"
-
-
-def dist2_point_box(px, py, min_x, max_x, min_y, max_y) -> Column:
-    cols = [F.col(c) if isinstance(c, str) else c for c in (px, py, min_x, max_x, min_y, max_y)]
-    px, py, min_x, max_x, min_y, max_y = cols
-    dx = F.greatest(F.lit(0.0), min_x - px, px - max_x)
-    dy = F.greatest(F.lit(0.0), min_y - py, py - max_y)
-    return dx * dx + dy * dy
 
 
 # --------------------------------------------------------------------------
@@ -139,8 +125,3 @@ def sql_box_is_subset(
         f"(({g_min_x}) <= ({t_min_x}) AND ({t_max_x}) <= ({g_max_x})"
         f" AND ({g_min_y}) <= ({t_min_y}) AND ({t_max_y}) <= ({g_max_y}))"
     )
-
-
-def expr(sql: str) -> Column:
-    """Evaluate one of the templates above on the Spark side."""
-    return F.expr(sql)

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from locus_spark.cells import GridSpec, grid_from_boxes
-from locus_spark.functions.metrics import dist2_point_box
+from locus_spark.functions.metrics import sql_dist2_point_box
 from locus_spark.plans.knn import generic_knn_join, probe_frame
 
 BOX_COLS = ["id", "min_x", "max_x", "min_y", "max_y"]
@@ -52,9 +52,7 @@ def find_subsets_join(
     if grid is None:
         grid = grid_from_boxes(boxes)
     # one key cell per indexed box: its min corner (contained ⇒ corner inside)
-    b = boxes.withColumn(
-        "_cell", grid.cell_col(F.col("min_x"), F.col("min_y"))
-    )
+    b = boxes.withColumn("_cell", grid.cell_col("min_x", "min_y"))
     q = query_boxes.select(
         "qid",
         F.col("min_x").alias("_qmin_x"),
@@ -136,7 +134,7 @@ def find_supersets_join(
         F.col("max_x").alias("_qmax_x"),
         F.col("min_y").alias("_qmin_y"),
         F.col("max_y").alias("_qmax_y"),
-        grid.cell_col(F.col("min_x"), F.col("min_y")).alias("_cell"),
+        grid.cell_col("min_x", "min_y").alias("_cell"),
     )
     if broadcast_queries:
         q = F.broadcast(q)
@@ -185,9 +183,7 @@ def find_overlaps_join(
         & (F.col("_qmin_y") < F.col("max_y"))
         & (F.col("min_y") < F.col("_qmax_y"))
     )
-    canonical = grid.cell_col(
-        F.greatest("min_x", "_qmin_x"), F.greatest("min_y", "_qmin_y")
-    )
+    canonical = grid.cell_col("greatest(min_x, _qmin_x)", "greatest(min_y, _qmin_y)")
     return joined.filter(strict & (F.col("_cell") == canonical)).select(
         "qid", *BOX_COLS
     )
@@ -208,15 +204,10 @@ def box_knn_join(
     b = boxes.select(*BOX_COLS)
     b_cells = grid.explode_covering_xy(b, "min_x", "max_x", "min_y", "max_y")
     pr = probe_frame(
-        probes.select("qid", F.col("x").alias("_qx"), F.col("y").alias("_qy")),
-        grid,
-        F.col("_qx"), F.col("_qx"), F.col("_qy"), F.col("_qy"),
-        payload=["_qx", "_qy"],
+        probes.selectExpr("qid", "x AS _qx", "y AS _qy"),
+        grid, "_qx", "_qx", "_qy", "_qy", payload=["_qx", "_qy"],
     )
-    d2 = dist2_point_box(
-        F.col("_qx"), F.col("_qy"),
-        F.col("min_x"), F.col("max_x"), F.col("min_y"), F.col("max_y"),
-    )
+    d2 = sql_dist2_point_box("_qx", "_qy", "min_x", "max_x", "min_y", "max_y")
 
     out = generic_knn_join(
         b, b_cells, pr, k, grid, d2,

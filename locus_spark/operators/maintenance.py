@@ -58,9 +58,10 @@ def delta_layout(
     base, so a handful of partitions keeps its files from fragmenting the
     layout directory)."""
     hilbert = make_hilbert_udf(grid.resolution)
-    out = new_rows.withColumn(
-        "cell", grid.cell_col(F.col(x), F.col(y))
-    ).withColumn("hkey", hilbert(grid.cell_x_col(F.col(x)), grid.cell_y_col(F.col(y))))
+    out = new_rows.withColumns({
+        "cell": grid.cell_col(x, y),
+        "hkey": hilbert(grid.cell_x_col(x), grid.cell_y_col(y)),
+    })
     return out.repartitionByRange(num_partitions, "hkey").sortWithinPartitions("hkey")
 
 

@@ -18,7 +18,8 @@ so each query family becomes a join:
   distributed analogue of the kd branch-and-bound prune, ``kd.py:368``,
   and of the R-tree best-first frontier, ``r.py:592-610``).
 
-All distance math is native Column expressions (whole-stage codegen).  A
+All distance and cell math is Spark SQL text (whole-stage codegen, one
+py4j call per projection).  A
 kNN join runs one eager count job; the rest is one lazy plan, with no
 round loop.
 """
@@ -29,7 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from locus_spark.cells import GridSpec, grid_from_points
-from locus_spark.functions.metrics import dist2_point_point
+from locus_spark.functions.metrics import sql_dist2_point_point
 
 RESULT_COLS = ("qid", "id", "x", "y", "dist2")
 
@@ -49,7 +50,7 @@ def find_box_join(
     """
     if grid is None:
         grid = grid_from_points(points)
-    pts = points.withColumn("_cell", grid.cell_col(F.col("x"), F.col("y")))
+    pts = points.withColumn("_cell", grid.cell_col("x", "y"))
     qcells = grid.explode_covering(
         query_boxes, "min_x", "max_x", "min_y", "max_y", cell_name="_cell"
     )
@@ -78,7 +79,7 @@ def find_ball_join(
     """
     if grid is None:
         grid = grid_from_points(points)
-    pts = points.withColumn("_cell", grid.cell_col(F.col("x"), F.col("y")))
+    pts = points.withColumn("_cell", grid.cell_col("x", "y"))
     qboxes = query_circles.select(
         "qid",
         F.col("x").alias("_qx"),
@@ -95,7 +96,7 @@ def find_ball_join(
     if broadcast_queries:
         qcells = F.broadcast(qcells)
     joined = qcells.join(pts, "_cell")
-    d2 = dist2_point_point(F.col("x"), F.col("y"), F.col("_qx"), F.col("_qy"))
+    d2 = F.expr(sql_dist2_point_point("x", "y", "_qx", "_qy"))
     return (
         joined.withColumn("dist2", d2)
         .filter(F.col("dist2") <= F.col("_r") * F.col("_r"))
@@ -159,16 +160,14 @@ def knn_join(
     if grid is None:
         grid = grid_from_points(points)
     pts = points.select("id", "x", "y")
-    pts_cells = pts.withColumn("_cx", grid.cell_x_col(F.col("x"))).withColumn(
-        "_cy", grid.cell_y_col(F.col("y"))
+    pts_cells = pts.selectExpr(
+        "*", f"{grid.cell_x_sql('x')} AS _cx", f"{grid.cell_y_sql('y')} AS _cy"
     )
     pr = probe_frame(
-        probes.select("qid", F.col("x").alias("_qx"), F.col("y").alias("_qy")),
-        grid,
-        F.col("_qx"), F.col("_qx"), F.col("_qy"), F.col("_qy"),
-        payload=["_qx", "_qy"],
+        probes.selectExpr("qid", "x AS _qx", "y AS _qy"),
+        grid, "_qx", "_qx", "_qy", "_qy", payload=["_qx", "_qy"],
     )
-    d2 = dist2_point_point(F.col("x"), F.col("y"), F.col("_qx"), F.col("_qy"))
+    d2 = sql_dist2_point_point("x", "y", "_qx", "_qy")
 
     out = generic_knn_join(
         pts, pts_cells, pr, k, grid, d2,

@@ -33,12 +33,12 @@ SEG_COLS = ["id", "x1", "y1", "x2", "y2"]
 def _with_bbox(segments: DataFrame) -> DataFrame:
     """Derive per-segment bounding boxes (least/greatest of endpoints) — the
     reference does the same at build (``/root/reference/locus/segmental.py:53-66``)."""
-    return segments.select(
+    return segments.selectExpr(
         *SEG_COLS,
-        F.least("x1", "x2").alias("_bmin_x"),
-        F.greatest("x1", "x2").alias("_bmax_x"),
-        F.least("y1", "y2").alias("_bmin_y"),
-        F.greatest("y1", "y2").alias("_bmax_y"),
+        "least(x1, x2) AS _bmin_x",
+        "greatest(x1, x2) AS _bmax_x",
+        "least(y1, y2) AS _bmin_y",
+        "greatest(y1, y2) AS _bmax_y",
     )
 
 
@@ -74,12 +74,10 @@ def segment_knn_to_point_join(
         grid = grid_from_segments(segments)
     segs = segments.select(*SEG_COLS)
     pr = probe_frame(
-        probes.select("qid", F.col("x").alias("_qx"), F.col("y").alias("_qy")),
-        grid,
-        F.col("_qx"), F.col("_qx"), F.col("_qy"), F.col("_qy"),
-        payload=["_qx", "_qy"],
+        probes.selectExpr("qid", "x AS _qx", "y AS _qy"),
+        grid, "_qx", "_qx", "_qy", "_qy", payload=["_qx", "_qy"],
     )
-    d2 = F.expr(sql_dist2_point_segment("_qx", "_qy", "x1", "y1", "x2", "y2"))
+    d2 = sql_dist2_point_segment("_qx", "_qy", "x1", "y1", "x2", "y2")
 
     out = generic_knn_join(
         segs, _seg_cells(segments, grid), pr, k, grid, d2,
@@ -109,20 +107,16 @@ def segment_knn_join(
         grid = grid_from_segments(segments)
     segs = segments.select(*SEG_COLS)
     pr = probe_frame(
-        probe_segments.select(
-            "qid",
-            F.col("x1").alias("_qx1"), F.col("y1").alias("_qy1"),
-            F.col("x2").alias("_qx2"), F.col("y2").alias("_qy2"),
+        probe_segments.selectExpr(
+            "qid", "x1 AS _qx1", "y1 AS _qy1", "x2 AS _qx2", "y2 AS _qy2"
         ),
         grid,
-        F.least("_qx1", "_qx2"), F.greatest("_qx1", "_qx2"),
-        F.least("_qy1", "_qy2"), F.greatest("_qy1", "_qy2"),
+        "least(_qx1, _qx2)", "greatest(_qx1, _qx2)",
+        "least(_qy1, _qy2)", "greatest(_qy1, _qy2)",
         payload=["_qx1", "_qy1", "_qx2", "_qy2"],
     )
-    d2 = F.expr(
-        sql_dist2_segment_segment(
-            "_qx1", "_qy1", "_qx2", "_qy2", "x1", "y1", "x2", "y2"
-        )
+    d2 = sql_dist2_segment_segment(
+        "_qx1", "_qy1", "_qx2", "_qy2", "x1", "y1", "x2", "y2"
     )
 
     out = generic_knn_join(

@@ -26,11 +26,10 @@ from pyspark.sql import functions as F
 from locus_spark.cells import GridSpec
 
 
-def tile_cols(grid: GridSpec, x, y) -> tuple:
-    """(tile_x, tile_y) long columns at the grid's resolution (zoom)."""
-    return grid.cell_x_col(F.col(x) if isinstance(x, str) else x), grid.cell_y_col(
-        F.col(y) if isinstance(y, str) else y
-    )
+def tile_cols(grid: GridSpec, x: str, y: str) -> tuple:
+    """(tile_x, tile_y) long columns at the grid's resolution (zoom) of the
+    SQL expressions ``x`` and ``y``."""
+    return grid.cell_x_col(x), grid.cell_y_col(y)
 
 
 def tile_point_counts(points: DataFrame, grid: GridSpec) -> DataFrame:
@@ -83,7 +82,7 @@ def point_in_polygon_join(
         F.greatest(F.max("y1"), F.max("y2")).alias("_bmax_y"),
     )
     if grid is not None:
-        pts = points.withColumn("_cell", grid.cell_col(F.col("x"), F.col("y")))
+        pts = points.withColumn("_cell", grid.cell_col("x", "y"))
         qcells = grid.explode_covering(
             bboxes, "_bmin_x", "_bmax_x", "_bmin_y", "_bmax_y", cell_name="_cell"
         )
@@ -125,10 +124,10 @@ def raster_vector_assignment(
         # fused single-long tile key: keeps the tile equi-join on a
         # LongHashedRelation (composite-key broadcast relations were
         # measured in plans/knn.py to stop scaling with cores)
-        "id", grid.pack(F.col("_cx"), F.col("_cy")).alias("_tile"),
+        "id", grid.pack("_cx", "_cy").alias("_tile"),
     )
     pcounts = tile_point_counts(points, grid).select(
-        grid.pack(F.col("tile_x"), F.col("tile_y")).alias("_tile"), "n"
+        grid.pack("tile_x", "tile_y").alias("_tile"), "n"
     )
     joined = tiles.join(pcounts, ["_tile"], "left")
     return joined.groupBy("id").agg(

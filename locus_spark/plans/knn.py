@@ -78,6 +78,11 @@ it, see :data:`ANN_BROADCAST_MAX_ROWS`), ``levels`` (windowed sample levels; 0 f
 (probes that took phase 1b), ``targets``, ``probes`` and ``wall_s`` (wall
 time to plan, including the eager count and level-1 jobs) — so reading it
 costs no Spark job.
+
+Every expression of the plan is Spark SQL text, handed to the JVM once per
+projection (``selectExpr``/``F.expr``): composing ``Column`` trees costs
+one py4j round trip per function and operator, which made planning, not
+the Spark jobs, the bulk of an operation's wall.
 """
 
 from __future__ import annotations
@@ -87,10 +92,10 @@ import math
 import time
 from typing import NamedTuple
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from locus_spark.cells import GridSpec
+from locus_spark.cells import GridSpec, sql_double
 from locus_spark.session import materialize
 
 _log = logging.getLogger(__name__)
@@ -119,29 +124,36 @@ CAP_SAMPLE_RATE = 16
 PROBE_CELL_COLS = ("_bcx0", "_bcx1", "_bcy0", "_bcy1")
 PROBE_BBOX_COLS = ("_sx0", "_sx1", "_sy0", "_sy1")
 
+_HID = "xxhash64(`id`)"
+
+
+def _names(cols) -> list[str]:
+    return [f"`{c}`" for c in cols]
+
 
 def probe_frame(
     probes: DataFrame,
     grid: GridSpec,
-    min_x: Column,
-    max_x: Column,
-    min_y: Column,
-    max_y: Column,
+    min_x: str,
+    max_x: str,
+    min_y: str,
+    max_y: str,
     payload: list[str],
 ) -> DataFrame:
-    """Attach bbox + cell-range columns to a probe table.  For point probes
-    pass the point for all four bounds."""
-    return probes.select(
+    """Attach bbox + cell-range columns to a probe table; the bounds are
+    SQL expressions over its columns.  For point probes pass the point for
+    all four bounds."""
+    return probes.selectExpr(
         "qid",
-        *payload,
-        min_x.alias("_sx0"),
-        max_x.alias("_sx1"),
-        min_y.alias("_sy0"),
-        max_y.alias("_sy1"),
-        grid.cell_x_col(min_x).alias("_bcx0"),
-        grid.cell_x_col(max_x).alias("_bcx1"),
-        grid.cell_y_col(min_y).alias("_bcy0"),
-        grid.cell_y_col(max_y).alias("_bcy1"),
+        *_names(payload),
+        f"{min_x} AS _sx0",
+        f"{max_x} AS _sx1",
+        f"{min_y} AS _sy0",
+        f"{max_y} AS _sy1",
+        f"{grid.cell_x_sql(min_x)} AS _bcx0",
+        f"{grid.cell_x_sql(max_x)} AS _bcx1",
+        f"{grid.cell_y_sql(min_y)} AS _bcy0",
+        f"{grid.cell_y_sql(max_y)} AS _bcy1",
     )
 
 
@@ -174,26 +186,23 @@ def _levels(k: int, n_targets: int, n: int) -> list[_Level]:
         r, c = r * rate, c * step
 
 
-def _per_level(vals: list[int], lv: Column | None = None) -> Column:
+def _per_level(vals: list[int], lv: str = "_lv") -> str:
     """``vals[lv - 1]``, by default for the row's level ``_lv`` (1 past the
     end)."""
-    lv = F.col("_lv") if lv is None else lv
-    return F.element_at(F.array(*[F.lit(v) for v in [*vals, 1]]), lv)
+    return f"element_at(array({', '.join(map(str, [*vals, 1]))}), {lv})"
 
 
-def _level_key(
-    cx: Column, cy: Column, levels: list[_Level], lv: Column | None = None
-) -> Column:
+def _level_key(cx: str, cy: str, levels: list[_Level], lv: str = "_lv") -> str:
     """Cell (cx, cy) of level ``lv``'s grid (default: the row's ``_lv``) as
     ONE long join key (see :func:`_disc_cells` for why a single long key):
     the cells of the levels before it, plus its row-major cell."""
     offs = [sum(lv_.nc * lv_.nc for lv_ in levels[:i]) for i in range(len(levels))]
     nc = _per_level([lv_.nc for lv_ in levels], lv)
-    return (_per_level(offs, lv) + cx * nc + cy).cast("long")
+    return f"CAST({_per_level(offs, lv)} + ({cx}) * {nc} + ({cy}) AS BIGINT)"
 
 
 def _window_keys(
-    probes: DataFrame, levels: list[_Level], shared: Column | None = None
+    probes: DataFrame, levels: list[_Level], shared: str | None = None
 ) -> DataFrame:
     """A (probe, ``_jk``) frame from ONE pass over the probes: the probe's
     window cells on every level of ``levels``, keyed by
@@ -205,27 +214,29 @@ def _window_keys(
     c = _per_level([lv.coarse for lv in levels])
     m = _per_level([lv.nc for lv in levels])
     h = _per_level([lv.h for lv in levels])
-    windowed = F.col("_lv") <= len(levels)
+    windowed = f"_lv <= {len(levels)}"
 
-    def span(c0: str, c1: str) -> Column:
-        lo = F.floor(F.col(c0) / c)
-        width = F.floor(F.col(c1) / c) - lo + 2 * h + 1
-        start = F.greatest(F.lit(0), F.least(lo - h, m - width))
-        end = F.least(m - 1, start + width - 1)
-        return F.when(windowed, F.sequence(start, end)).otherwise(
-            F.array(F.lit(0).cast("long"))
+    def span(c0: str, c1: str) -> str:
+        lo = f"floor({c0} / {c})"
+        width = f"(floor({c1} / {c}) - {lo} + 2 * {h} + 1)"
+        start = f"greatest(0, least({lo} - {h}, {m} - {width}))"
+        end = f"least({m} - 1, {start} + {width} - 1)"
+        return (
+            f"CASE WHEN {windowed} THEN sequence({start}, {end}) "
+            "ELSE array(CAST(0 AS BIGINT)) END"
         )
 
     n_lv = len(levels) + (shared is not None)
-    cells = (
-        probes.withColumn("_lv", F.explode(F.sequence(F.lit(1), F.lit(n_lv))))
-        .withColumn("_cx", F.explode(span("_bcx0", "_bcx1")))
-        .withColumn("_cy", F.explode(span("_bcy0", "_bcy1")))
-    )
-    key = _level_key(F.col("_cx"), F.col("_cy"), levels)
+    key = _level_key("_cx", "_cy", levels)
     if shared is not None:
-        key = F.when(windowed, key).otherwise(shared)
-    return cells.withColumn("_jk", key).drop("_lv", "_cx", "_cy")
+        key = f"CASE WHEN {windowed} THEN {key} ELSE {shared} END"
+    # a select holds one generator: one projection per explode
+    return (
+        probes.selectExpr("*", f"explode(sequence(1, {n_lv})) AS _lv")
+        .selectExpr("*", f"explode({span('_bcx0', '_bcx1')}) AS _cx")
+        .selectExpr("*", f"explode({span('_bcy0', '_bcy1')}) AS _cy")
+        .selectExpr(*_names(probes.columns), f"{key} AS _jk")
+    )
 
 
 def _disc_cells(probes: DataFrame, grid: GridSpec, margin: float) -> DataFrame:
@@ -235,46 +246,42 @@ def _disc_cells(probes: DataFrame, grid: GridSpec, margin: float) -> DataFrame:
     ``r.py:592-606``): a bound on the k-th neighbor caps how far the search
     ever needs to look."""
     n = grid.n
-    inf = float("inf")
-    r = F.sqrt(F.col("_scap")) + F.lit(margin)
-
+    inf, neg_inf = sql_double(float("inf")), sql_double(float("-inf"))
+    mg = sql_double(margin)
+    r = f"(sqrt(_scap) + {mg})"
     # a NaN reach (NaN coordinates, or inf - inf) spans the whole grid
-    def reach(c: Column, edge: float) -> Column:
-        return F.nanvl(c, F.lit(edge))
-
-    cx0 = grid.cell_x_col(reach(F.col("_sx0") - r, -inf))
-    cx1 = grid.cell_x_col(reach(F.col("_sx1") + r, inf))
-    cy0 = grid.cell_y_col(reach(F.col("_sy0") - r, -inf))
-    cy1 = grid.cell_y_col(reach(F.col("_sy1") + r, inf))
-    out = (
-        probes.withColumn("_cx", F.explode(F.sequence(cx0, cx1)))
-        .withColumn("_cy", F.explode(F.sequence(cy0, cy1)))
-    )
+    cx0 = grid.cell_x_sql(f"nanvl(_sx0 - {r}, {neg_inf})")
+    cx1 = grid.cell_x_sql(f"nanvl(_sx1 + {r}, {inf})")
+    cy0 = grid.cell_y_sql(f"nanvl(_sy0 - {r}, {neg_inf})")
+    cy1 = grid.cell_y_sql(f"nanvl(_sy1 + {r}, {inf})")
     # squared coordinate distance from the probe bbox to the cell rect;
     # edge cells also hold the targets clipped into them from outside the
     # grid bbox, so their outer sides reach to infinity
-    big = F.lit(inf)
-    cell_x0 = F.lit(grid.min_x) + F.col("_cx") * F.lit(grid.cell_w)
-    cell_y0 = F.lit(grid.min_y) + F.col("_cy") * F.lit(grid.cell_h)
-    cell_x1 = F.when(F.col("_cx") == n - 1, big).otherwise(cell_x0 + F.lit(grid.cell_w))
-    cell_y1 = F.when(F.col("_cy") == n - 1, big).otherwise(cell_y0 + F.lit(grid.cell_h))
-    cell_x0 = F.when(F.col("_cx") == 0, -big).otherwise(cell_x0)
-    cell_y0 = F.when(F.col("_cy") == 0, -big).otherwise(cell_y0)
-    dx = F.greatest(F.lit(0.0), cell_x0 - F.col("_sx1"), F.col("_sx0") - cell_x1)
-    dy = F.greatest(F.lit(0.0), cell_y0 - F.col("_sy1"), F.col("_sy0") - cell_y1)
-    d2_cell = (F.greatest(F.lit(0.0), dx - F.lit(margin)) ** 2
-               + F.greatest(F.lit(0.0), dy - F.lit(margin)) ** 2)
+    x0 = f"({sql_double(grid.min_x)} + _cx * {sql_double(grid.cell_w)})"
+    y0 = f"({sql_double(grid.min_y)} + _cy * {sql_double(grid.cell_h)})"
+    x1 = f"CASE WHEN _cx = {n - 1} THEN {inf} ELSE {x0} + {sql_double(grid.cell_w)} END"
+    y1 = f"CASE WHEN _cy = {n - 1} THEN {inf} ELSE {y0} + {sql_double(grid.cell_h)} END"
+    x0 = f"CASE WHEN _cx = 0 THEN {neg_inf} ELSE {x0} END"
+    y0 = f"CASE WHEN _cy = 0 THEN {neg_inf} ELSE {y0} END"
+    dx = f"greatest(0.0D, ({x0}) - _sx1, _sx0 - ({x1}))"
+    dy = f"greatest(0.0D, ({y0}) - _sy1, _sy0 - ({y1}))"
+    d2_cell = (
+        f"(power(greatest(0.0D, {dx} - {mg}), 2)"
+        f" + power(greatest(0.0D, {dy} - {mg}), 2))"
+    )
     # a NaN gap (an infinite probe coordinate against an edge cell) cannot
-    # prune
-    out = out.filter(F.isnan(d2_cell) | (d2_cell <= F.col("_scap")))
-    # fuse (cx, cy) into ONE long join key: a single-long equi-join key gives
-    # the broadcast join a LongHashedRelation (dense, allocation-free probes)
-    # instead of the composite-key BytesToBytesMap relation, whose lookup
-    # path was measured to stop scaling with cores entirely (570M-row
-    # candidate join at 128M targets: 13.6 s @2 cores -> 12.6 s @8; the
-    # fused key: 5.0 s -> 1.4 s, at the host's own parallel ceiling)
-    return out.withColumn("_jc", grid.pack(F.col("_cx"), F.col("_cy"))).drop(
-        "_cx", "_cy"
+    # prune.  (cx, cy) fuse into ONE long join key: a single-long equi-join
+    # key gives the broadcast join a LongHashedRelation (dense,
+    # allocation-free probes) instead of the composite-key BytesToBytesMap
+    # relation, whose lookup path was measured to stop scaling with cores
+    # entirely (570M-row candidate join at 128M targets: 13.6 s @2 cores ->
+    # 12.6 s @8; the fused key: 5.0 s -> 1.4 s, at the host's own parallel
+    # ceiling)
+    return (
+        probes.selectExpr("*", f"explode(sequence({cx0}, {cx1})) AS _cx")
+        .selectExpr("*", f"explode(sequence({cy0}, {cy1})) AS _cy")
+        .filter(f"isnan({d2_cell}) OR {d2_cell} <= _scap")
+        .selectExpr(*_names(probes.columns), f"{grid.pack_sql('_cx', '_cy')} AS _jc")
     )
 
 
@@ -296,13 +303,23 @@ def _build_side(frame: DataFrame, shuffle: bool) -> DataFrame:
     return frame.hint("shuffle_hash") if shuffle else F.broadcast(frame)
 
 
+def _kth(k: int, d: str, distinct: bool) -> str:
+    """The k-th smallest of a group's values ``d`` (null with fewer)."""
+    d = f"sort_array(collect_list({d}))"
+    if distinct:
+        # a multi-cell target surfaces once per covering cell in the
+        # windowed levels; distinct distances only raise the k-th
+        d = f"array_distinct({d})"
+    return f"get({d}, {k - 1})"
+
+
 def _bound(
     targets: DataFrame,
     target_cells: DataFrame,
     probes: DataFrame,
     k: int,
     grid: GridSpec,
-    dist2: Column,
+    dist2: str,
     dedup: bool,
     levels: list[_Level],
     n_targets: int,
@@ -313,15 +330,7 @@ def _bound(
     ``_scap``, a valid upper bound on each probe's k-th dist² (see the
     module docstring), and the number of probes that took phase 1b.  Runs
     the level-1 pass; the rest stays lazy."""
-    hid = F.xxhash64(F.col("id"))
-
-    def kth(d: Column, distinct: bool) -> Column:
-        d = F.sort_array(F.collect_list(d))
-        if distinct:
-            # a multi-cell target surfaces once per covering cell in the
-            # windowed levels; distinct distances only raise the k-th
-            d = F.array_distinct(d)
-        return F.get(d, k - 1)
+    tcols = _names(targets.columns)
 
     # ---- phase 1a: level 1 for every probe — one probe pass, one sampled
     # target pass, one hash join, one aggregation.  Plain double lists, not
@@ -329,22 +338,22 @@ def _bound(
     # rejoin through the one-row-per-probe bounds: carrying them through
     # this aggregate with first() doubled its executor time (4M targets,
     # 10k probes, local[4]: 35 s vs 17 s).
-    sample1 = target_cells.filter(F.pmod(hid, F.lit(levels[0].rate)) == 0).select(
-        *targets.columns, grid.pack(F.col("_cx"), F.col("_cy")).alias("_jk")
+    sample1 = target_cells.filter(f"pmod({_HID}, {levels[0].rate}) = 0").selectExpr(
+        *tcols, f"{grid.pack_sql('_cx', '_cy')} AS _jk"
     )
     caps1 = (
         _build_side(_window_keys(probes, levels[:1]), wide)
         .join(sample1, ["_jk"])
         # dist² in a projection (whole-stage codegen), not inside the
         # aggregate, which evaluates its inputs interpreted
-        .select("qid", dist2.alias("dist2"))
+        .selectExpr("qid", f"{dist2} AS dist2")
         .groupBy("qid")
-        .agg(kth(F.col("dist2"), dedup).alias("_scap"))
+        .agg(F.expr(f"{_kth(k, 'dist2', dedup)} AS _scap"))
     )
-    # materialized, so the driver can count the probes it bounds: when it
+    # materialized, and the bound probes counted by the same job: when it
     # bounds them all, phase 1b is not planned at all
-    caps1 = materialize(caps1)
-    unbound = n_probes - caps1.filter(F.col("_scap").isNotNull()).count()
+    caps1, seen = materialize(caps1, [F.expr("count(_scap) AS bound")])
+    unbound = n_probes - seen["bound"]
     if unbound == 0:
         return probes.join(F.broadcast(caps1), "qid"), 0
     bound1 = probes.join(F.broadcast(caps1), "qid", "left")
@@ -364,61 +373,51 @@ def _bound(
         int(probes.sparkSession.conf.get("spark.sql.shuffle.partitions"))
         if wide else 1
     )
+
     # ONE pass over the sampled target cells (when there are coarse levels,
     # the top sample is the deepest one): each row once per coarse level it
     # belongs to (the levels nest), and once per salt on the top level
-    def entry(lv: Column, jk: Column) -> Column:
-        return F.struct(lv.alias("lv"), jk.cast("long").alias("jk"))
+    def entry(lv: str, jk: str) -> str:
+        return f"named_struct('_lv', {lv}, '_jk', CAST({jk} AS BIGINT))"
 
-    entries = F.when(
-        F.pmod(hid, F.lit(top_rate)) == 0,
-        F.transform(
-            F.sequence(F.lit(-salts), F.lit(-1)), lambda s: entry(F.lit(top), s)
-        ),
-    ).otherwise(F.array())
+    entries = (
+        f"CASE WHEN pmod({_HID}, {top_rate}) = 0 THEN transform("
+        f"sequence({-salts}, -1), _s -> {entry(str(top), '_s')}) ELSE array() END"
+    )
     if coarse:
-        deepest = sum(
-            F.when(F.pmod(hid, F.lit(lv.rate)) == 0, 1).otherwise(0) for lv in coarse
+        deepest = " + ".join(
+            f"CASE WHEN pmod({_HID}, {lv.rate}) = 0 THEN 1 ELSE 0 END" for lv in coarse
         )
-        c = [lv.coarse for lv in coarse]
-
-        def coarse_entry(lv: Column) -> Column:
-            cx = F.floor(F.col("_cx") / _per_level(c, lv))
-            cy = F.floor(F.col("_cy") / _per_level(c, lv))
-            return entry(lv, _level_key(cx, cy, coarse, lv))
-
-        entries = F.concat(
-            F.transform(F.sequence(F.lit(1), deepest), coarse_entry), entries
+        c = _per_level([lv.coarse for lv in coarse], "_l")
+        key = _level_key(f"floor(_cx / {c})", f"floor(_cy / {c})", coarse, "_l")
+        entries = (
+            f"concat(transform(sequence(1, {deepest}), _l -> {entry('_l', key)}), "
+            f"{entries})"
         )
     sample2 = target_cells.filter(
-        F.pmod(hid, F.lit(coarse[0].rate if coarse else top_rate)) == 0
-    ).select(*targets.columns, F.explode(entries).alias("_e")).select(
-        *targets.columns, F.col("_e.lv").alias("_lv"), F.col("_e.jk").alias("_jk")
-    ).unionByName(targets.orderBy(hid, F.col("id")).limit(k).select(
-        *targets.columns,
-        F.lit(top + 1).alias("_lv"),
-        F.explode(F.sequence(
-            F.lit(-salts).cast("long"), F.lit(-1).cast("long")
-        )).alias("_jk"),
-    ))
-    shared = F.lit(-1) - F.pmod(F.xxhash64(F.col("qid")), F.lit(salts))
-    cand2 = (
-        _build_side(
-            _window_keys(bound1.filter(F.col("_scap").isNull()), coarse, shared),
-            wide,
+        f"pmod({_HID}, {coarse[0].rate if coarse else top_rate}) = 0"
+    ).selectExpr(*tcols, f"inline({entries})").unionByName(
+        targets.orderBy(F.expr(_HID), "id").limit(k).selectExpr(
+            *tcols,
+            f"{top + 1} AS _lv",
+            f"explode(sequence(CAST({-salts} AS BIGINT), CAST(-1 AS BIGINT))) AS _jk",
         )
+    )
+    shared = f"-1 - pmod(xxhash64(qid), {salts})"
+    cand2 = (
+        _build_side(_window_keys(bound1.filter("_scap IS NULL"), coarse, shared), wide)
         .join(sample2, ["_jk"])
-        .select("qid", "_lv", dist2.alias("dist2"))
+        .selectExpr("qid", "_lv", f"{dist2} AS dist2")
     )
     # the k fixed targets are read one row per target; the sampled levels
     # may hold a multi-cell target once per covering cell
-    caps2 = cand2.groupBy("qid").agg(F.least(*[
-        kth(F.when(F.col("_lv") == i, F.col("dist2")), dedup and i <= top)
+    kths = ", ".join(
+        _kth(k, f"CASE WHEN _lv = {i} THEN dist2 END", dedup and i <= top)
         for i in range(1, top + 2)
-    ]).alias("_scap2"))
-    bounded = bound1.join(F.broadcast(caps2), "qid", "left").select(
-        *probes.columns,
-        F.coalesce(F.col("_scap"), F.col("_scap2")).alias("_scap"),
+    )
+    caps2 = cand2.groupBy("qid").agg(F.expr(f"least({kths}) AS _scap2"))
+    bounded = bound1.join(F.broadcast(caps2), "qid", "left").selectExpr(
+        *_names(probes.columns), "coalesce(_scap, _scap2) AS _scap"
     )
     return bounded, unbound
 
@@ -429,7 +428,7 @@ def generic_knn_join(
     probes: DataFrame,
     k: int,
     grid: GridSpec,
-    dist2: Column,
+    dist2: str,
     tie_desc_id: bool = False,
     dedup: bool = False,
 ) -> DataFrame:
@@ -439,7 +438,8 @@ def generic_knn_join(
     ``target_cells``  — same rows with ``_cx``/``_cy`` (exploded covering
                         cells for multi-cell geometries).
     ``probes``        — output of :func:`probe_frame`.
-    ``dist2``         — squared-distance Column over the joined row.
+    ``dist2``         — squared distance over the joined row, as Spark SQL
+                        text (a ``functions/metrics.py`` template).
     ``tie_desc_id``   — R-tree family breaks distance ties by *largest* id
                         (``/root/reference/locus/r.py:599-606``); kd and
                         segmental by smallest.
@@ -452,21 +452,19 @@ def generic_knn_join(
     t0 = time.monotonic()
     # the first eager job: sizes the sample windows and the frame estimate
     # that picks the join strategy
-    counts = (
-        targets.select(F.lit(True).alias("_t"))
-        .unionByName(probes.select(F.lit(False).alias("_t")))
-        .agg(F.count(F.when(F.col("_t"), 1)), F.count(F.when(~F.col("_t"), 1)))
+    n_targets, n_probes = (
+        targets.selectExpr("true AS _t")
+        .unionByName(probes.selectExpr("false AS _t"))
+        .selectExpr("count(CASE WHEN _t THEN 1 END)", "count(CASE WHEN NOT _t THEN 1 END)")
         .first()
     )
-    n_targets, n_probes = counts[0], counts[1]
     if n_targets == 0:
         raise ValueError("knn: empty target input")
 
     probe_payload = [
         c for c in probes.columns if c not in PROBE_CELL_COLS + PROBE_BBOX_COLS
     ]
-    target_payload = targets.columns
-    out_cols = [*probe_payload, *target_payload, "dist2"]
+    out_cols = [*probe_payload, *targets.columns, "dist2"]
 
     def record(join: str, rows: int, levels: int, unbound: int) -> None:
         _log.debug(
@@ -484,15 +482,15 @@ def generic_knn_join(
             },
         )
 
+    tie = "DESC" if tie_desc_id else "ASC"
     if k >= n_targets:
         # O3 short-circuit (/root/reference/locus/kd.py:216-220 etc.)
-        tie = F.col("id").desc() if tie_desc_id else F.col("id").asc()
-        w = Window.partitionBy("qid").orderBy(F.col("dist2").asc(), tie)
         pairs = F.broadcast(probes.drop(*PROBE_CELL_COLS)).join(targets)
         record("cross", n_probes * n_targets, 0, 0)
-        return (
-            pairs.withColumn("dist2", dist2)
-            .select(*out_cols, F.row_number().over(w).cast("long").alias("rn"))
+        return pairs.selectExpr("*", f"{dist2} AS dist2").selectExpr(
+            *_names(out_cols),
+            "CAST(row_number() OVER (PARTITION BY qid "
+            f"ORDER BY dist2 ASC, `id` {tie}) AS BIGINT) AS rn",
         )
 
     scale = max(
@@ -513,16 +511,6 @@ def generic_knn_join(
     wide = rows > ANN_BROADCAST_MAX_ROWS
 
     # ---- phase 2: one join over each probe's disc, one top-k aggregation
-    cand = (
-        _build_side(_disc_cells(bounded, grid, margin), wide)
-        .join(
-            target_cells.withColumn("_jc", grid.pack(F.col("_cx"), F.col("_cy"))),
-            ["_jc"],
-        )
-        .withColumn("dist2", dist2)
-        # ties at equal dist2 still pass — id order can displace
-        .filter(F.col("dist2") <= F.col("_scap"))
-    )
     # Per-probe top-k is a hash AGGREGATION (collect_list → array_sort →
     # slice), not a window: WindowExec sorts every partition's full row set
     # outside whole-stage codegen and was measured scaling only ~2.1x from 2
@@ -532,17 +520,28 @@ def generic_knn_join(
     # sort ascending on ~id (bitwise complement): strictly order-reversing
     # over the whole long range, unlike -id which overflows at
     # Long.MIN_VALUE.
-    tie_key = F.bitwise_not(F.col("id")) if tie_desc_id else F.col("id")
     payload = [c for c in out_cols if c not in ("qid", "dist2")]
-    # the row structs are built in a projection (whole-stage codegen), not
-    # inside the aggregate, which evaluates its inputs interpreted
-    top = cand.select("qid", F.struct(
-        F.col("dist2").alias("_d"),
-        tie_key.alias("_t"),
-        F.struct(*payload).alias("_p"),
-    ).alias("_s")).groupBy("qid").agg(
-        F.array_sort(F.collect_list("_s")).alias("_top")
+    fields = ", ".join(f"'{c}', `{c}`" for c in payload)
+    row = (
+        f"named_struct('_d', dist2, '_t', {'~' if tie_desc_id else ''}`id`, "
+        f"'_p', named_struct({fields}))"
     )
+    top = (
+        _build_side(_disc_cells(bounded, grid, margin), wide)
+        .join(
+            target_cells.selectExpr("*", f"{grid.pack_sql('_cx', '_cy')} AS _jc"),
+            ["_jc"],
+        )
+        .selectExpr("*", f"{dist2} AS dist2")
+        # ties at equal dist2 still pass — id order can displace
+        .filter("dist2 <= _scap")
+        # the row structs are built in a projection (whole-stage codegen),
+        # not inside the aggregate, which evaluates its inputs interpreted
+        .selectExpr("qid", f"{row} AS _s")
+        .groupBy("qid")
+        .agg(F.expr("array_sort(collect_list(_s)) AS _top"))
+    )
+    ranked = "_top"
     if dedup:
         # a multi-cell target surfaces once per covering cell with a
         # BIT-IDENTICAL struct (same geometry → same dist², same payload),
@@ -550,17 +549,13 @@ def generic_knn_join(
         # each element equal to its predecessor before the k-truncation keeps
         # duplicates from eating top-k slots, in one linear pass
         # (array_distinct compares struct elements pairwise)
-        top = top.withColumn("_top", F.filter(
-            "_top",
-            lambda x, i: (i == 0) | (x != F.get(F.col("_top"), i - 1)),
-        ))
+        ranked = "filter(_top, (_x, _i) -> _i = 0 OR _x != get(_top, _i - 1))"
     record("shuffle" if wide else "broadcast", rows, len(levels), unbound)
-    return (
-        top.select("qid", F.posexplode(F.slice("_top", 1, k)).alias("_rn", "_s"))
-        .select(
-            "qid",
-            *[F.col("_s._p")[c].alias(c) for c in payload],
-            F.col("_s._d").alias("dist2"),
-            (F.col("_rn") + 1).cast("long").alias("rn"),
-        )
+    return top.selectExpr(
+        "qid", f"posexplode(slice({ranked}, 1, {k})) AS (_rn, _s)"
+    ).selectExpr(
+        "qid",
+        *[f"_s._p.`{c}` AS `{c}`" for c in payload],
+        "_s._d AS dist2",
+        "CAST(_rn + 1 AS BIGINT) AS rn",
     )

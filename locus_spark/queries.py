@@ -52,10 +52,13 @@ KNN_K = 3
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-_REGISTRY: dict[str, tuple[QueryFn, str | None]] = {}
+_REGISTRY: dict[str, tuple[QueryFn, str | Callable[[], str] | None]] = {}
 
 
-def register(name: str, oracle: str | None):
+def register(name: str, oracle: str | Callable[[], str] | None):
+    """``oracle`` is DuckDB SQL, or a function rendering it when
+    :func:`oracle_sql` is called (SQL reading a temp-dir path, which
+    follows ``tempfile.tempdir``)."""
     def deco(fn: QueryFn) -> QueryFn:
         _REGISTRY[name] = (fn, oracle)
         return fn
@@ -190,11 +193,12 @@ def queries() -> dict[str, QueryFn]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        name: _REGISTRY[name][1]
-        for name in _ordered_names()
-        if _REGISTRY[name][1] is not None
-    }
+    out = {}
+    for name in _ordered_names():
+        oracle = _REGISTRY[name][1]
+        if oracle is not None:
+            out[name] = oracle() if callable(oracle) else oracle
+    return out
 
 
 # ===========================================================================
@@ -2371,15 +2375,25 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 PAGES_N = 20_000
 PAGES_GRID_RES = 6
 
-import tempfile as _tempfile  # noqa: E402
 
-_PAGES_CK_ROOT = f"{_tempfile.gettempdir()}/locus_spark_pages"
+
+def pages_ck_root() -> str:
+    """Checkpoint root of the persisted pages, under the temp dir of the
+    moment (``tempfile.tempdir`` may point a run at a private dir)."""
+    import tempfile
+
+    return f"{tempfile.gettempdir()}/locus_spark_pages"
+
+
 #: the pages input is code-generated (no files to stat), so the honest
 #: fingerprint is a code-version tag — BUMP whenever synth/extract/geocode
 #: semantics change, or stale checkpoints will be resumed.
 PAGES_FINGERPRINT = f"synth-v1-n{PAGES_N}"
-#: parquet data dir of the persisted stage (the path the oracles read)
-PAGES_DATA_DIR = f"{_PAGES_CK_ROOT}/geocoded_n{PAGES_N}/data"
+
+
+def pages_data_dir() -> str:
+    """Parquet data dir of the persisted stage (the path the oracles read)."""
+    return f"{pages_ck_root()}/geocoded_n{PAGES_N}/data"
 
 
 def _geocoded_pages(spark: SparkSession):
@@ -2394,7 +2408,7 @@ def _persisted_geocoded_pages(spark: SparkSession) -> DataFrame:
     the pipeline analogue of the persisted spatial layouts above)."""
     from locus_spark.sources.checkpoint import StageCheckpoint
 
-    ck = StageCheckpoint(_PAGES_CK_ROOT)
+    ck = StageCheckpoint(pages_ck_root())
 
     def build() -> DataFrame:
         geo = _geocoded_pages(spark)
@@ -2413,16 +2427,17 @@ def _persisted_geocoded_pages(spark: SparkSession) -> DataFrame:
     )
 
 
-#: PAGES_GRID_RES == SF_RESOLUTION == 6, so the persisted pages share the
-#: WORLD_GRID tile math (5.625 x 2.8125 — exact dyadic cell extents).
-_PAGES_GEOTILE_ORACLE = f"""
+# PAGES_GRID_RES == SF_RESOLUTION == 6, so the persisted pages share the
+# WORLD_GRID tile math (5.625 x 2.8125 — exact dyadic cell extents).
+def _pages_geotile_oracle() -> str:
+    return f"""
 SELECT {_TILE_X} AS tile_x, {_TILE_Y} AS tile_y, lang, count(*) AS n
-FROM read_parquet('{PAGES_DATA_DIR}/*.parquet')
+FROM read_parquet('{pages_data_dir()}/*.parquet')
 GROUP BY 1, 2, 3
 """
 
 
-@register("pages_geotile_lang", _PAGES_GEOTILE_ORACLE)
+@register("pages_geotile_lang", _pages_geotile_oracle)
 def q_pages_geotile_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full pages pipeline: synth → extract → geocode (persisted once) →
     per-(tile, lang) rollup.  The batch shape of the 10^12-row production
@@ -2432,8 +2447,8 @@ def q_pages_geotile_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     geo = _persisted_geocoded_pages(spark)
     return (
         geo.select(
-            grid.cell_x_col(F.col("x")).alias("tile_x"),
-            grid.cell_y_col(F.col("y")).alias("tile_y"),
+            grid.cell_x_col("x").alias("tile_x"),
+            grid.cell_y_col("y").alias("tile_y"),
             "lang",
         )
         .groupBy("tile_x", "tile_y", "lang")
@@ -2441,16 +2456,17 @@ def q_pages_geotile_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PAGES_IDENTITY_ORACLE = f"""
+def _pages_identity_oracle() -> str:
+    return f"""
 SELECT lang, count(*) AS n_pages,
        CAST(sum(CASE WHEN extracted = text THEN 1 ELSE 0 END) AS BIGINT)
          AS n_identical
-FROM read_parquet('{PAGES_DATA_DIR}/*.parquet')
+FROM read_parquet('{pages_data_dir()}/*.parquet')
 GROUP BY lang
 """
 
 
-@register("pages_extract_identity", _PAGES_IDENTITY_ORACLE)
+@register("pages_extract_identity", _pages_identity_oracle)
 def q_pages_extract_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Byte-identity audit: per-lang page counts vs rows where the vectorized
     extractor reproduced the source text exactly (input_hint invariant)."""
@@ -2463,9 +2479,10 @@ def q_pages_extract_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _D2_PAGES = sql_dist2_point_point("g.x", "g.y", "p.qx", "p.qy")
 
-_PAGES_KNN_ORACLE = f"""
+def _pages_knn_oracle() -> str:
+    return f"""
 WITH geo AS (
-  SELECT id, x, y FROM read_parquet('{PAGES_DATA_DIR}/*.parquet')
+  SELECT id, x, y FROM read_parquet('{pages_data_dir()}/*.parquet')
 ), probes AS (
   SELECT id AS qid, x AS qx, y AS qy FROM geo WHERE id % 200 = 0
 ), cand AS (
@@ -2480,7 +2497,7 @@ SELECT qid, id, x, y, dist2, rn FROM ranked WHERE rn <= {KNN_K}
 """
 
 
-@register("pages_knn", _PAGES_KNN_ORACLE)
+@register("pages_knn", _pages_knn_oracle)
 def q_pages_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship production shape: exact kNN join over the persisted geocoded
     pages (probes = a deterministic 1-in-200 id sample; ``pmod(id,200)==0``
@@ -2506,7 +2523,7 @@ def _canonical_oracle() -> str:
     return f"""
 WITH raw AS (
   SELECT unnest([url, {messy}]) AS raw
-  FROM read_parquet('{PAGES_DATA_DIR}/*.parquet')
+  FROM read_parquet('{pages_data_dir()}/*.parquet')
 ), pre AS (
   SELECT raw, {u3} AS u3 FROM raw
 ), canon AS (
@@ -2519,7 +2536,7 @@ FROM canon GROUP BY canonical_url
 """
 
 
-@register("pages_canonical_dedup", _canonical_oracle())
+@register("pages_canonical_dedup", _canonical_oracle)
 def q_pages_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Crawl-frontier URL dedup: each stored page url plus a deterministic
     fetch-noise variant (uppercased host / explicit :443 / utm+fragment
@@ -2558,12 +2575,12 @@ def _pages_dbscan_oracle() -> str:
 
     cte = (
         "WITH RECURSIVE points AS ("
-        f"SELECT id, x, y FROM read_parquet('{PAGES_DATA_DIR}/*.parquet'))"
+        f"SELECT id, x, y FROM read_parquet('{pages_data_dir()}/*.parquet'))"
     )
     return dbscan_oracle_sql(cte, PAGES_DBSCAN_EPS, PAGES_DBSCAN_MIN_PTS)
 
 
-@register("pages_dbscan", _pages_dbscan_oracle())
+@register("pages_dbscan", _pages_dbscan_oracle)
 def q_pages_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Density clustering of the geocoded pages: dense url neighborhoods
     (hot hosts / spatial spam farms) become DBSCAN clusters, sparse hosts
@@ -2580,18 +2597,19 @@ def q_pages_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: parse_url builtin
 _HOST_RE = "https://([^/]+)/"
 
-_PAGES_HOST_ORACLE = f"""
+def _pages_host_oracle() -> str:
+    return f"""
 SELECT regexp_extract(url, '{_HOST_RE}', 1) AS host,
        count(*) AS n_pages,
        CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
        CAST(sum(length(extracted)) AS BIGINT) AS n_chars,
        min(x) AS min_x, max(x) AS max_x, min(y) AS min_y, max(y) AS max_y
-FROM read_parquet('{PAGES_DATA_DIR}/*.parquet')
+FROM read_parquet('{pages_data_dir()}/*.parquet')
 GROUP BY 1
 """
 
 
-@register("pages_host_stats", _PAGES_HOST_ORACLE)
+@register("pages_host_stats", _pages_host_oracle)
 def q_pages_host_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-host rollup of the persisted geocoded pages: page count, distinct
     languages, extracted bytes, and the host's point bounding box (the
@@ -2704,6 +2722,16 @@ GROUP BY d.lang, e.label
 """
 
 
+def _bucketed_root(sf_dir: str):
+    """Data root of the bucketed tables of ``sf_dir``, under the temp dir of
+    the moment (``tempfile.tempdir`` may point a run at a private dir)."""
+    import pathlib
+    import tempfile
+
+    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_").replace("-", "_")
+    return pathlib.Path(tempfile.gettempdir()) / "locus_spark_bucketed" / tag
+
+
 def _bucketed_doc_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """documents/embeddings rewritten ONCE as bucketed external tables
     (8 buckets on the join key, sorted within buckets); rebuilt only when
@@ -2712,13 +2740,11 @@ def _bucketed_doc_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     the data files do, but bucket metadata lives in the catalog, so a
     path-level parquet read of the same files would NOT be bucketed)."""
     import json
-    import pathlib
-    import tempfile
 
     from locus_spark.sources.bucketed import write_bucketed
 
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_").replace("-", "_")
-    root = pathlib.Path(tempfile.gettempdir()) / "locus_spark_bucketed" / tag
+    root = _bucketed_root(sf_dir)
+    tag = root.name
     docs_t, embs_t = f"locus_docs_b_{tag}", f"locus_embs_b_{tag}"
     fp = _parquet_fingerprint(sf_dir, "documents", "embeddings")
     man = root / "manifest.json"

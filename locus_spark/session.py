@@ -9,12 +9,14 @@ the same builder is used with ``master`` unset (taken from spark-submit).
 
 from __future__ import annotations
 
+import contextlib
 import os
 import pathlib
 import warnings
+from collections.abc import Iterator, Sequence
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -103,10 +105,40 @@ def codegen_counters(spark: SparkSession) -> tuple[int, float]:
     return int(compiled.getCount()), nanos / 1e6
 
 
-def materialize(df: DataFrame) -> DataFrame:
+@contextlib.contextmanager
+def py4j_calls(spark: SparkSession) -> Iterator[list[int]]:
+    """Count the py4j commands the driver sends to the JVM inside the
+    block: yields a one-item list whose item is the count so far.  Wraps
+    the gateway client's ``send_command``; runs no Spark job.  Every
+    ``F.*`` call, Column operator and JVM object Python frees is at least
+    one command, so this is the driver's planning bill.  Commands sent by
+    other Python threads in the block are counted too."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = [0]
+
+    def counting(*args, **kwargs):
+        calls[0] += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        yield calls
+    finally:
+        del client.send_command
+
+
+def materialize(
+    df: DataFrame, metrics: Sequence[Column] | None = None
+) -> DataFrame | tuple[DataFrame, dict]:
     """Materialize an iterative loop's round state, truncate its lineage and
-    drop its plan statistics.  Every loop in the engine (kNN rings, CC,
+    drop its plan statistics.  Every loop in the engine (kNN, CC,
     PageRank, HITS, triangles, DBSCAN) keeps its state through this.
+
+    ``metrics`` (named aggregate Columns) are observed on ``df`` and ride
+    the checkpoint job: ``(frame, {name: value})`` is returned, with no
+    Spark job of their own.  Each row of ``df`` is counted once, in either
+    checkpoint mode below.
 
     The checkpoint mode follows the master:
 
@@ -159,6 +191,9 @@ def materialize(df: DataFrame) -> DataFrame:
             stacklevel=2,
         )
         local = True
+    if metrics:
+        obs = Observation()
+        df = df.observe(obs, *metrics)
     if local:
         out = df.localCheckpoint(eager=True)
     else:
@@ -167,9 +202,12 @@ def materialize(df: DataFrame) -> DataFrame:
         df.unpersist()
     try:
         jdf = out._jdf
-        njdf = spark._jsparkSession.internalCreateDataFrame(
-            jdf.queryExecution().toRdd(), jdf.schema(), False
+        out = DataFrame(
+            spark._jsparkSession.internalCreateDataFrame(
+                jdf.queryExecution().toRdd(), jdf.schema(), False
+            ),
+            spark,
         )
-        return DataFrame(njdf, spark)
     except Exception:  # pragma: no cover - depends on Spark internals
-        return out
+        pass
+    return (out, obs.get) if metrics else out

@@ -54,11 +54,15 @@ def salted_repartition(
     """
     if hot is None:
         hot = hot_cells(df, cell_col)
-    src = F.xxhash64(F.col(id_col)) if id_col else F.xxhash64(*df.columns)
-    salt = F.when(
-        F.col(cell_col).isin(hot), F.pmod(src, F.lit(buckets))
-    ).otherwise(F.lit(0))
-    out = df.withColumn("_salt", salt.cast("int"))
+    src = ", ".join(f"`{c}`" for c in ([id_col] if id_col else df.columns))
+    # the hot ids ride as one array literal, which generated code reads as
+    # a reference object: as ``isin`` constants in the Java source, every
+    # ingest with another hot set would compile anew
+    hot_ids = f"CAST(array({', '.join(str(int(c)) for c in hot)}) AS ARRAY<BIGINT>)"
+    out = df.withColumn("_salt", F.expr(
+        f"CAST(CASE WHEN array_contains({hot_ids}, `{cell_col}`) "
+        f"THEN pmod(xxhash64({src}), {buckets}) ELSE 0 END AS INT)"
+    ))
     if num_partitions:
         return out.repartition(num_partitions, cell_col, "_salt")
     return out.repartition(cell_col, "_salt")

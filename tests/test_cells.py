@@ -2,9 +2,12 @@
 
 from __future__ import annotations
 
+import math
+import struct
+
 import numpy as np
 import pytest
-from hypothesis import given
+from hypothesis import example, given
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -13,6 +16,7 @@ from locus_spark.cells import (
     cluster_by_hilbert,
     grid_from_boxes,
     grid_from_points,
+    sql_double,
 )
 from locus_spark.operators.segments import grid_from_segments
 
@@ -40,7 +44,7 @@ def test_spark_cell_matches_scalar(spark):
     df = spark.createDataFrame(pts, "id long, x double, y double")
     g = grid_from_points(df, resolution=4)
     rows = df.select(
-        "id", "x", "y", g.cell_x_col(F.col("x")).alias("cx"), g.cell_y_col(F.col("y")).alias("cy")
+        "id", "x", "y", g.cell_x_col("x").alias("cx"), g.cell_y_col("y").alias("cy")
     ).collect()
     for r in rows:
         assert (r.cx, r.cy) == g.cell_xy_of(r.x, r.y)
@@ -92,7 +96,7 @@ def test_grid_bounds_skip_non_finite_rows(spark):
     def cells(g):
         return {
             r.c
-            for r in clean_df.select(g.cell_col(F.col("x"), F.col("y")).alias("c"))
+            for r in clean_df.select(g.cell_col("x", "y").alias("c"))
             .distinct()
             .collect()
         }
@@ -117,3 +121,61 @@ def test_grid_bounds_skip_non_finite_rows(spark):
     # no usable row left: still the explicit error
     with pytest.raises(ValueError):
         grid_from_points(spark.createDataFrame(bad, schema))
+
+
+INF, NAN = float("inf"), float("nan")
+#: coordinates at the edges of double arithmetic
+SPECIALS = (0.0, -0.0, 5e-324, -5e-324, 2.2250738585072014e-308, 1e308, -1e308,
+            1e-300, INF, -INF, NAN)
+
+
+def _column_cell(c, origin: float, width: float, n: int):
+    """The Column formula GridSpec rendered before its SQL text."""
+    raw = F.floor((c - F.lit(origin)) / F.lit(width))
+    return F.least(F.lit(n - 1), F.greatest(F.lit(0), raw)).cast("long")
+
+
+def _bits(v: float) -> bytes:
+    return struct.pack("<d", v)
+
+
+@given(
+    origin=st.one_of(
+        st.floats(-1e3, 1e3), st.sampled_from([0.0, -0.0, -180.0, -1e308, 1e308])
+    ),
+    extent=st.one_of(st.just(0.0), st.floats(1e-6, 1e3)),
+    res=st.integers(1, 8),
+    xs=st.lists(
+        st.one_of(st.floats(-2e3, 2e3), st.sampled_from(SPECIALS), st.floats()),
+        min_size=1, max_size=12,
+    ),
+)
+@example(origin=-0.0, extent=0.0, res=4, xs=[0.0, -0.0, 5e-324, NAN, INF, -INF])
+@example(origin=-1e308, extent=0.0, res=3, xs=[-1e308, 1e308, -INF])
+@example(origin=-123.45678901234567, extent=246.91357802469134, res=6, xs=[0.1])
+def test_sql_cell_ids_match_the_column_formula_bit_for_bit(spark, origin, extent, res, xs):
+    """GridSpec's SQL renders give the same cell ids as the Column formula
+    over any coordinates, and every double they write reads back as the
+    same bits (a literal without the ``D`` suffix is a DECIMAL, which loses
+    the sign of -0.0)."""
+    top = origin + extent if math.isfinite(origin + extent) else origin
+    g = GridSpec(origin, -origin, top, -origin + extent, res)
+    # the coordinates, plus every cell boundary and its neighbours
+    edges = [g.min_x + i * g.cell_w for i in range(g.n + 1)]
+    edges += [math.nextafter(e, s) for e in edges for s in (-INF, INF)]
+    vals = [*xs, *SPECIALS, *edges]
+    df = spark.createDataFrame([(v, w) for v, w in zip(vals, reversed(vals))], "x double, y double")
+    got = df.select(
+        g.cell_x_col("x"), g.cell_y_col("y"), g.cell_col("x", "y"),
+        _column_cell(F.col("x"), g.min_x, g.cell_w, g.n),
+        _column_cell(F.col("y"), g.min_y, g.cell_h, g.n),
+        _column_cell(F.col("x"), g.min_x, g.cell_w, g.n) * F.lit(g.n)
+        + _column_cell(F.col("y"), g.min_y, g.cell_h, g.n),
+    ).collect()
+    for r in got:
+        assert tuple(r[:3]) == tuple(r[3:]), (g, r)
+    lits = [g.min_x, g.min_y, g.cell_w, g.cell_h, *SPECIALS]
+    back = spark.range(1).selectExpr(
+        *[f"{sql_double(v)} AS c{i}" for i, v in enumerate(lits)]
+    ).first()
+    assert [_bits(v) for v in back] == [_bits(v) for v in lits]

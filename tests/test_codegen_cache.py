@@ -97,3 +97,25 @@ def test_warm_ingest_cycle_compiles_nothing(spark, tmp_path):
 
     assert first == second and first[0] > 0 and all(first), first
     assert compiled == 0, f"the warm cycle compiled {compiled} classes"
+
+
+def test_salted_repartition_code_does_not_depend_on_the_hot_cells(spark):
+    """The hot-cell ids ride as an array literal, so an ingest with another
+    hot set compiles no new class (written into the Java source as ``isin``
+    constants, each hot set compiled 2)."""
+    cells = spark.range(2000).selectExpr("id", "id % 50 AS cell")
+
+    def salts(hot):
+        out = salted_repartition(cells, hot=hot, buckets=4, id_col="id", num_partitions=4)
+        return {(r.cell, r.n) for r in out.groupBy("cell").agg(
+            F.countDistinct("_salt").alias("n")).collect()}
+
+    first = salts([1, 2, 3])
+    before = codegen_counters(spark)[0]
+    second = salts([4, 5])
+    compiled = codegen_counters(spark)[0] - before
+
+    assert {c for c, n in first if n > 1} == {1, 2, 3}
+    assert {c for c, n in second if n > 1} == {4, 5}
+    assert salts([]) == {(c, 1) for c in range(50)}
+    assert compiled == 0, f"another hot set compiled {compiled} classes"

@@ -336,7 +336,7 @@ def test_bound_of_a_probe_in_an_empty_region_stays_local(spark, monkeypatch):
     bound from k fixed targets would.  Also a dense probe, one on the
     hole's rim and one outside the grid; the broadcast and the salted
     shuffled plans give the same bounds."""
-    from locus_spark.functions.metrics import dist2_point_point
+    from locus_spark.functions.metrics import sql_dist2_point_point
 
     monkeypatch.setattr(knnplan, "CAP_SAMPLE_RATE", 4)
     grid = GridSpec(0.0, 0.0, 64.0, 64.0, 6)
@@ -357,16 +357,13 @@ def test_bound_of_a_probe_in_an_empty_region_stays_local(spark, monkeypatch):
         [(i, float(x), float(y)) for i, (x, y) in enumerate(xy)],
         "id long, x double, y double",
     )
-    cells = pts.withColumn("_cx", grid.cell_x_col(F.col("x"))).withColumn(
-        "_cy", grid.cell_y_col(F.col("y"))
-    )
+    cells = pts.withColumns({"_cx": grid.cell_x_col("x"), "_cy": grid.cell_y_col("y")})
     probes = [(0, 40.0, 40.0), (1, 10.0, 10.0), (2, 40.0, 19.0), (3, 200.0, 40.0)]
     qdf = spark.createDataFrame(probes, "qid long, _qx double, _qy double")
     pr = knnplan.probe_frame(
-        qdf, grid, F.col("_qx"), F.col("_qx"), F.col("_qy"), F.col("_qy"),
-        payload=["_qx", "_qy"],
+        qdf, grid, "_qx", "_qx", "_qy", "_qy", payload=["_qx", "_qy"]
     )
-    d2 = dist2_point_point(F.col("x"), F.col("y"), F.col("_qx"), F.col("_qy"))
+    d2 = sql_dist2_point_point("x", "y", "_qx", "_qy")
 
     def bounds(wide):
         out, unbound = knnplan._bound(

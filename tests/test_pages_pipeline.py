@@ -113,7 +113,7 @@ def test_skew_detection_and_salting(spark):
         F.monotonically_increasing_id().alias("id"), "x", "y"
     )
     grid = grid_from_points(pts, resolution=5)
-    cells = pts.withColumn("cell", grid.cell_col(F.col("x"), F.col("y")))
+    cells = pts.withColumn("cell", grid.cell_col("x", "y"))
     hot = hot_cells(cells, factor=4.0, min_rows=50)
     assert hot, "synthetic hot hosts must produce hot cells"
     salted = salted_repartition(cells, hot=hot, buckets=8, id_col="id")

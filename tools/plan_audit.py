@@ -19,7 +19,9 @@ from __future__ import annotations
 
 import pathlib
 import re
+import shutil
 import sys
+import tempfile
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
@@ -128,6 +130,10 @@ def audit(plan: str, codegen_plan: str) -> dict[str, int]:
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    # persisted layouts and bucketed tables go to a private temp dir, so a
+    # bench run beside the audit neither wipes nor reads them
+    run_tmp = tempfile.mkdtemp(prefix="locus_plan_audit_")
+    tempfile.tempdir = run_tmp
     spark = get_spark(
         app_name="plan_audit", master="local[4]", shuffle_partitions=4
     )
@@ -215,6 +221,8 @@ def main() -> None:
     print(f"PLAN_AUDIT.md written: {len(rows)} queries, {len(problems)} lint findings")
     for p in problems:
         print("LINT:", p)
+    spark.stop()
+    shutil.rmtree(run_tmp, ignore_errors=True)
 
 
 if __name__ == "__main__":
