@@ -58,7 +58,7 @@ class GridSpec:
     def cell_h(self) -> float:
         return max(self.max_y - self.min_y, 1e-300) / self.n
 
-    # -- scalar helpers (driver-side planning / tests) ----------------------
+    # -- scalar reference of the SQL render (tests only; no planner reads it)
     def cell_xy_of(self, x: float, y: float) -> tuple[int, int]:
         cx = int((x - self.min_x) / self.cell_w)
         cy = int((y - self.min_y) / self.cell_h)
@@ -76,6 +76,10 @@ class GridSpec:
         """Row-major packed cell id: cx * n + cy."""
         return f"({cx}) * {self.n} + ({cy})"
 
+    def cell_sql(self, x: str, y: str) -> str:
+        """Packed cell id of the point (``x``, ``y``)."""
+        return self.pack_sql(self.cell_x_sql(x), self.cell_y_sql(y))
+
     def cell_x_col(self, x: str) -> Column:
         return F.expr(self.cell_x_sql(x))
 
@@ -83,10 +87,39 @@ class GridSpec:
         return F.expr(self.cell_y_sql(y))
 
     def cell_col(self, x: str, y: str) -> Column:
-        return F.expr(self.pack_sql(self.cell_x_sql(x), self.cell_y_sql(y)))
+        return F.expr(self.cell_sql(x, y))
 
-    def pack(self, cx: str, cy: str) -> Column:
-        return F.expr(self.pack_sql(cx, cy))
+    def covering_cells_in(
+        self,
+        boxes: DataFrame,
+        min_x: str = "min_x",
+        max_x: str = "max_x",
+        min_y: str = "min_y",
+        max_y: str = "max_y",
+    ) -> str:
+        """``cell IN (...)`` over every cell covering one of ``boxes``: the
+        literal predicate a persisted layout's parquet scan prunes on (a
+        layout keys its rows by ``cell``, as ``cluster_by_hilbert`` does).
+
+        ``boxes`` is collected, so it must be small (the contract of
+        broadcasting it).  Its cell ranges come from the SQL render the
+        in-memory joins explode, so a ±inf or NaN bound clamps exactly as
+        there.  No box with non-null bounds renders ``false`` (``IN ()``
+        does not parse)."""
+        rows = boxes.selectExpr(
+            self.cell_x_sql(min_x), self.cell_x_sql(max_x),
+            self.cell_y_sql(min_y), self.cell_y_sql(max_y),
+        ).collect()
+        ids = {
+            cx * self.n + cy
+            for x0, x1, y0, y1 in rows
+            if None not in (x0, x1, y0, y1)
+            for cx in range(x0, x1 + 1)
+            for cy in range(y0, y1 + 1)
+        }
+        if not ids:
+            return "false"
+        return f"cell IN ({', '.join(map(str, sorted(ids)))})"
 
     def explode_covering(
         self,
@@ -117,11 +150,13 @@ class GridSpec:
 
 
 def sql_double(v: float) -> str:
-    """``v`` as a Spark SQL literal of exactly that double: ``repr`` round-
-    trips, and the ``D`` suffix keeps Spark from reading ``0.5`` as a
-    DECIMAL; ±inf and NaN have no literal form, so they are cast."""
+    """``v`` as a literal of exactly that double, read alike by Spark SQL
+    and DuckDB: ``repr`` round-trips, and an exponent (``5.625e0``) makes
+    both engines read a DOUBLE where ``0.5`` alone is a DECIMAL; ±inf and
+    NaN have no literal form, so they are cast."""
     if math.isfinite(v):
-        return f"({v!r}D)"
+        r = repr(v)
+        return f"({r if 'e' in r else r + 'e0'})"
     name = "NaN" if math.isnan(v) else ("Infinity" if v > 0 else "-Infinity")
     return f"CAST('{name}' AS DOUBLE)"
 

@@ -1,4 +1,4 @@
-"""Squared-distance metrics and box predicates (SURVEY.md §2.5, C1-C8).
+"""Squared-distance metrics and range predicates (SURVEY.md §2.5, C1-C8).
 
 The reference injects these through its ``Context`` (squared Euclidean
 metrics from the ``ground`` library — ``/root/reference/locus/kd.py:53``,
@@ -6,16 +6,17 @@ metrics from the ``ground`` library — ``/root/reference/locus/kd.py:53``,
 ``locus/_core/box.py:6-27``).  All distances are SQUARED — no sqrt on the hot
 path (the reference never takes one either).
 
-Each metric is defined ONCE as a SQL expression template over column names,
-and there is no Column twin.  The engine hands the text to Spark as is
+Each metric and predicate is defined ONCE as a SQL expression template
+over column names, and there is no Column twin.  The engine hands the text to Spark as is
 (``selectExpr``/``F.expr``: Catalyst parses it → whole-stage codegen,
 JVM-side, one py4j call), and the DuckDB oracle evaluates the *same text* —
 both are IEEE-754 float64 engines evaluating the same operation tree, so
 results are bit-identical, which is what the driver's value-hash comparison
 needs.
 
-Only common-dialect SQL is used: ``+ - * /``, ``least``, ``greatest``,
-``CASE WHEN``, ``abs`` — all with identical semantics in Spark SQL and DuckDB.
+Only common-dialect SQL is used: ``+ - * /``, comparisons, ``AND``/``OR``,
+``least``, ``greatest``, ``CASE WHEN``, ``abs`` — all with identical
+semantics in Spark SQL and DuckDB.
 """
 
 from __future__ import annotations
@@ -124,4 +125,31 @@ def sql_box_is_subset(
     return (
         f"(({g_min_x}) <= ({t_min_x}) AND ({t_max_x}) <= ({g_max_x})"
         f" AND ({g_min_y}) <= ({t_min_y}) AND ({t_max_y}) <= ({g_max_y}))"
+    )
+
+
+def sql_boxes_overlap(
+    a_min_x: str, a_max_x: str, a_min_y: str, a_max_y: str,
+    b_min_x: str, b_max_x: str, b_min_y: str, b_max_y: str,
+) -> str:
+    """C2 — interiors intersect, STRICT: boxes sharing only an edge or a
+    corner do not overlap (/root/reference/locus/_core/box.py:12-18)."""
+    return (
+        f"(({a_min_x}) < ({b_max_x}) AND ({b_min_x}) < ({a_max_x})"
+        f" AND ({a_min_y}) < ({b_max_y}) AND ({b_min_y}) < ({a_max_y}))"
+    )
+
+
+# --------------------------------------------------------------------------
+# point-in-polygon (even-odd rule; the reference has no polygons)
+# --------------------------------------------------------------------------
+def sql_ray_crosses_edge(
+    px: str, py: str, x1: str, y1: str, x2: str, y2: str
+) -> str:
+    """The horizontal ray from (px, py) to +inf crosses the directed edge
+    (x1, y1)-(x2, y2): the edge straddles py and the intersection lies
+    right of px — the classic PNPOLY test (public domain, W. R. Franklin)."""
+    return (
+        f"((({y1}) > ({py})) <> (({y2}) > ({py}))"
+        f" AND ({px}) < ((({x2}) - ({x1})) * (({py}) - ({y1})) / (({y2}) - ({y1})) + ({x1})))"
     )

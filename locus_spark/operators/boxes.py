@@ -8,7 +8,9 @@ point (``r.py:369-635``).  Distributed form:
 
 * subsets  → indexed box's *min-corner cell* equi-joined against the probe
   box's covering cells (a contained box's min corner must lie inside the
-  probe box), then the exact closed containment predicate;
+  probe box), then the exact closed containment predicate (every exact
+  predicate is a ``functions/metrics.py`` template, the text the DuckDB
+  oracle runs too);
 * supersets → probe box's *min-corner cell* equi-joined against the indexed
   boxes' exploded covering cells (a containing box must cover the probe's
   min corner), then the reversed predicate;
@@ -24,27 +26,28 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from locus_spark.cells import GridSpec, grid_from_boxes
-from locus_spark.functions.metrics import sql_dist2_point_box
+from locus_spark.functions.metrics import (
+    sql_box_is_subset,
+    sql_boxes_overlap,
+    sql_dist2_point_box,
+)
 from locus_spark.plans.knn import generic_knn_join, probe_frame
 
 BOX_COLS = ["id", "min_x", "max_x", "min_y", "max_y"]
 
-
-def _subset_pred(inner: str, outer: str):
-    """closed containment: inner ⊆ outer (/root/reference/locus/_core/box.py:21-27)."""
-    return (
-        (F.col(f"{outer}min_x") <= F.col(f"{inner}min_x"))
-        & (F.col(f"{inner}max_x") <= F.col(f"{outer}max_x"))
-        & (F.col(f"{outer}min_y") <= F.col(f"{inner}min_y"))
-        & (F.col(f"{inner}max_y") <= F.col(f"{outer}max_y"))
-    )
+#: the probe box's columns, renamed apart from the indexed box's
+_PROBE = ("qid", "min_x AS _qmin_x", "max_x AS _qmax_x",
+          "min_y AS _qmin_y", "max_y AS _qmax_y")
+_Q = ("_qmin_x", "_qmax_x", "_qmin_y", "_qmax_y")
+_B = ("min_x", "max_x", "min_y", "max_y")
+#: the exact predicates: indexed ⊆ probe, indexed ⊇ probe, strict overlap
+_SUBSET = sql_box_is_subset(*_B, *_Q)
+_SUPERSET = sql_box_is_subset(*_Q, *_B)
+_OVERLAP = sql_boxes_overlap(*_Q, *_B)
 
 
 def find_subsets_join(
-    boxes: DataFrame,
-    query_boxes: DataFrame,
-    grid: GridSpec | None = None,
-    broadcast_queries: bool = True,
+    boxes: DataFrame, query_boxes: DataFrame, grid: GridSpec | None = None
 ) -> DataFrame:
     """All (probe, indexed box) with indexed ⊆ probe — table form of
     ``find_subsets_items`` (``/root/reference/locus/r.py:190-235``).
@@ -52,21 +55,12 @@ def find_subsets_join(
     if grid is None:
         grid = grid_from_boxes(boxes)
     # one key cell per indexed box: its min corner (contained ⇒ corner inside)
-    b = boxes.withColumn("_cell", grid.cell_col("min_x", "min_y"))
-    q = query_boxes.select(
-        "qid",
-        F.col("min_x").alias("_qmin_x"),
-        F.col("max_x").alias("_qmax_x"),
-        F.col("min_y").alias("_qmin_y"),
-        F.col("max_y").alias("_qmax_y"),
-    )
+    b = boxes.selectExpr("*", f"{grid.cell_sql('min_x', 'min_y')} AS _cell")
     qcells = grid.explode_covering(
-        q, "_qmin_x", "_qmax_x", "_qmin_y", "_qmax_y", cell_name="_cell"
+        query_boxes.selectExpr(*_PROBE), *_Q, cell_name="_cell"
     )
-    if broadcast_queries:
-        qcells = F.broadcast(qcells)
-    joined = qcells.join(b, "_cell")
-    return joined.filter(_subset_pred("", "_q")).select("qid", *BOX_COLS)
+    joined = F.broadcast(qcells).join(b, "_cell")
+    return joined.filter(_SUBSET).select("qid", *BOX_COLS)
 
 
 def find_subsets_over_layout(
@@ -81,38 +75,20 @@ def find_subsets_over_layout(
     :func:`find_subsets_join` uses: a contained box's min corner lies inside
     the probe box, so its cell is in the probe's covering range — closed
     cell mapping ⇒ safe superset).  Probe boxes compile to a literal
-    ``cell IN (...)`` predicate pushed into the parquet scan (row-group
-    pruning — the distributed analogue of the R-tree subtree skip,
-    ``/root/reference/locus/_core/r.py:164-172``); the probe table must be
-    small (collected to build the literal, same bound as broadcasting it).
+    ``cell IN (...)`` predicate (:meth:`GridSpec.covering_cells_in`) pushed
+    into the parquet scan (row-group pruning — the distributed analogue of
+    the R-tree subtree skip, ``/root/reference/locus/_core/r.py:164-172``);
+    the probe table must be small (collected to build the literal, same
+    bound as broadcasting it).
     Returns ``(qid, id, min_x, max_x, min_y, max_y)``."""
-    rows = query_boxes.select("qid", "min_x", "max_x", "min_y", "max_y").collect()
-    cells: set[int] = set()
-    for r in rows:
-        cx0, cy0 = grid.cell_xy_of(r.min_x, r.min_y)
-        cx1, cy1 = grid.cell_xy_of(r.max_x, r.max_y)
-        for cx in range(cx0, cx1 + 1):
-            for cy in range(cy0, cy1 + 1):
-                cells.add(cx * grid.n + cy)
-    pruned = layout.filter(F.col("cell").isin(sorted(cells)))
-    qb = F.broadcast(
-        query_boxes.select(
-            "qid",
-            F.col("min_x").alias("_qmin_x"),
-            F.col("max_x").alias("_qmax_x"),
-            F.col("min_y").alias("_qmin_y"),
-            F.col("max_y").alias("_qmax_y"),
-        )
-    )
-    joined = qb.join(pruned, _subset_pred("", "_q"))
+    q = query_boxes.selectExpr(*_PROBE)
+    pruned = layout.filter(grid.covering_cells_in(q, *_Q))
+    joined = F.broadcast(q).join(pruned, F.expr(_SUBSET))
     return joined.select("qid", *BOX_COLS)
 
 
 def find_supersets_join(
-    boxes: DataFrame,
-    query_boxes: DataFrame,
-    grid: GridSpec | None = None,
-    broadcast_queries: bool = True,
+    boxes: DataFrame, query_boxes: DataFrame, grid: GridSpec | None = None
 ) -> DataFrame:
     """All (probe, indexed box) with indexed ⊇ probe — table form of
     ``find_supersets_items`` (``/root/reference/locus/r.py:307-353``).
@@ -127,26 +103,14 @@ def find_supersets_join(
         grid = GridSpec(
             base.min_x, base.min_y, base.max_x, base.max_y, min(base.resolution, 5)
         )
-    b = grid.explode_covering(boxes, "min_x", "max_x", "min_y", "max_y", "_cell")
-    q = query_boxes.select(
-        "qid",
-        F.col("min_x").alias("_qmin_x"),
-        F.col("max_x").alias("_qmax_x"),
-        F.col("min_y").alias("_qmin_y"),
-        F.col("max_y").alias("_qmax_y"),
-        grid.cell_col("min_x", "min_y").alias("_cell"),
-    )
-    if broadcast_queries:
-        q = F.broadcast(q)
-    joined = q.join(b, "_cell")
-    return joined.filter(_subset_pred("_q", "")).select("qid", *BOX_COLS)
+    b = grid.explode_covering(boxes, *_B, "_cell")
+    q = query_boxes.selectExpr(*_PROBE, f"{grid.cell_sql('min_x', 'min_y')} AS _cell")
+    joined = F.broadcast(q).join(b, "_cell")
+    return joined.filter(_SUPERSET).select("qid", *BOX_COLS)
 
 
 def find_overlaps_join(
-    boxes: DataFrame,
-    query_boxes: DataFrame,
-    grid: GridSpec | None = None,
-    broadcast_queries: bool = True,
+    boxes: DataFrame, query_boxes: DataFrame, grid: GridSpec | None = None
 ) -> DataFrame:
     """All (probe, indexed box) pairs whose interiors intersect — the
     reference's STRICT ``overlaps`` predicate
@@ -163,28 +127,13 @@ def find_overlaps_join(
     needs.  Returns ``(qid, id, min_x, max_x, min_y, max_y)``."""
     if grid is None:
         grid = grid_from_boxes(boxes)
-    b = grid.explode_covering(boxes, "min_x", "max_x", "min_y", "max_y", "_cell")
-    q = query_boxes.select(
-        "qid",
-        F.col("min_x").alias("_qmin_x"),
-        F.col("max_x").alias("_qmax_x"),
-        F.col("min_y").alias("_qmin_y"),
-        F.col("max_y").alias("_qmax_y"),
-    )
+    b = grid.explode_covering(boxes, *_B, "_cell")
     qcells = grid.explode_covering(
-        q, "_qmin_x", "_qmax_x", "_qmin_y", "_qmax_y", cell_name="_cell"
+        query_boxes.selectExpr(*_PROBE), *_Q, cell_name="_cell"
     )
-    if broadcast_queries:
-        qcells = F.broadcast(qcells)
-    joined = qcells.join(b, "_cell")
-    strict = (
-        (F.col("_qmin_x") < F.col("max_x"))
-        & (F.col("min_x") < F.col("_qmax_x"))
-        & (F.col("_qmin_y") < F.col("max_y"))
-        & (F.col("min_y") < F.col("_qmax_y"))
-    )
-    canonical = grid.cell_col("greatest(min_x, _qmin_x)", "greatest(min_y, _qmin_y)")
-    return joined.filter(strict & (F.col("_cell") == canonical)).select(
+    joined = F.broadcast(qcells).join(b, "_cell")
+    canonical = grid.cell_sql("greatest(min_x, _qmin_x)", "greatest(min_y, _qmin_y)")
+    return joined.filter(f"{_OVERLAP} AND _cell = {canonical}").select(
         "qid", *BOX_COLS
     )
 

@@ -9,7 +9,7 @@ production deployment needs:
 * :func:`delta_layout` — index a (small) new batch into the SAME grid the
   base layout was built with.  The grid is frozen at base-build time:
   out-of-bounds rows clamp to edge cells exactly like query-side clamping
-  (``cells.GridSpec.cell_x_col``), so base and delta stay join-compatible
+  (``cells.GridSpec.cell_x_sql``), so base and delta stay join-compatible
   and every operator's cell pruning remains correct.
 * :func:`merged_layout` — serve queries over base ∪ delta unchanged.  Both
   sides carry ``cell``/``hkey``, so range/ball/kNN pruning sees one
@@ -35,8 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from locus_spark.cells import GridSpec
-from locus_spark.functions.hilbert import make_hilbert_udf
+from locus_spark.cells import GridSpec, cluster_by_hilbert
 
 #: layout columns added by cluster_by_hilbert — the contract both sides of
 #: a merge must carry
@@ -57,12 +56,9 @@ def delta_layout(
     partitions (an ingest batch is orders of magnitude smaller than the
     base, so a handful of partitions keeps its files from fragmenting the
     layout directory)."""
-    hilbert = make_hilbert_udf(grid.resolution)
-    out = new_rows.withColumns({
-        "cell": grid.cell_col(x, y),
-        "hkey": hilbert(grid.cell_x_col(x), grid.cell_y_col(y)),
-    })
-    return out.repartitionByRange(num_partitions, "hkey").sortWithinPartitions("hkey")
+    return cluster_by_hilbert(new_rows, grid, x, y, num_partitions).sortWithinPartitions(
+        "hkey"
+    )
 
 
 def merged_layout(base: DataFrame, delta: DataFrame) -> DataFrame:

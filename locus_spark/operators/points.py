@@ -7,9 +7,10 @@ The reference answers these with kd-tree traversals
 (``tests/kd_tests/strategies.py:71-90``).  Here the probe side is a *table*,
 so each query family becomes a join:
 
-* range / ball → covering-cell equi-join + exact closed predicate
-  (cell pruning plays the role of tree descent; the exact predicate at the
-  end means pruning can never lose rows — safe-superset, SURVEY.md §4 O10);
+* range / ball → covering-cell equi-join + exact closed predicate, the
+  ``functions/metrics.py`` text the DuckDB oracle runs too (cell pruning
+  plays the role of tree descent; the exact predicate at the end means
+  pruning can never lose rows — safe-superset, SURVEY.md §4 O10);
 * nearest / k-NN → **sampled bound, then one exact join**: nested
   target samples bound every probe's k-th squared distance from above (a
   second aggregation only for the probes the finest sample leaves
@@ -26,49 +27,41 @@ round loop.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from locus_spark.cells import GridSpec, grid_from_points
-from locus_spark.functions.metrics import sql_dist2_point_point
+from locus_spark.functions.metrics import (
+    sql_box_contains_point,
+    sql_dist2_point_point,
+)
 
-RESULT_COLS = ("qid", "id", "x", "y", "dist2")
+#: the exact range predicate: point (x, y) in the closed probe box
+_CONTAINS = sql_box_contains_point("x", "y", "min_x", "max_x", "min_y", "max_y")
 
 
 def find_box_join(
-    points: DataFrame,
-    query_boxes: DataFrame,
-    grid: GridSpec | None = None,
-    broadcast_queries: bool = True,
+    points: DataFrame, query_boxes: DataFrame, grid: GridSpec | None = None
 ) -> DataFrame:
     """All (probe box, point) pairs with the point inside the closed box —
     table form of ``find_box_items`` (``/root/reference/locus/kd.py:449-507``;
     closed predicate ``_core/box.py:6-9``).
 
     Returns ``(qid, id, x, y)``.  The covering-cell equi-join prunes like the
-    kd descent; the final ``between`` conjunction is the exact predicate.
+    kd descent; ``sql_box_contains_point`` is the exact predicate.
     """
     if grid is None:
         grid = grid_from_points(points)
-    pts = points.withColumn("_cell", grid.cell_col("x", "y"))
+    pts = points.selectExpr("*", f"{grid.cell_sql('x', 'y')} AS _cell")
     qcells = grid.explode_covering(
         query_boxes, "min_x", "max_x", "min_y", "max_y", cell_name="_cell"
     )
-    if broadcast_queries:
-        qcells = F.broadcast(qcells)
-    joined = qcells.join(pts, "_cell")
-    exact = joined.filter(
-        F.col("x").between(F.col("min_x"), F.col("max_x"))
-        & F.col("y").between(F.col("min_y"), F.col("max_y"))
-    )
-    return exact.select("qid", "id", "x", "y")
+    joined = F.broadcast(qcells).join(pts, "_cell")
+    return joined.filter(_CONTAINS).select("qid", "id", "x", "y")
 
 
 def find_ball_join(
-    points: DataFrame,
-    query_circles: DataFrame,
-    grid: GridSpec | None = None,
-    broadcast_queries: bool = True,
+    points: DataFrame, query_circles: DataFrame, grid: GridSpec | None = None
 ) -> DataFrame:
     """Ball (radius) search: all (probe, point) with dist²(point, center) ≤ r²
     — the pre-v5 ``find_ball`` mandated by the north rule (vestigial strategy
@@ -79,27 +72,19 @@ def find_ball_join(
     """
     if grid is None:
         grid = grid_from_points(points)
-    pts = points.withColumn("_cell", grid.cell_col("x", "y"))
-    qboxes = query_circles.select(
-        "qid",
-        F.col("x").alias("_qx"),
-        F.col("y").alias("_qy"),
-        F.col("r").alias("_r"),
-        (F.col("x") - F.col("r")).alias("_bmin_x"),
-        (F.col("x") + F.col("r")).alias("_bmax_x"),
-        (F.col("y") - F.col("r")).alias("_bmin_y"),
-        (F.col("y") + F.col("r")).alias("_bmax_y"),
+    pts = points.selectExpr("*", f"{grid.cell_sql('x', 'y')} AS _cell")
+    qboxes = query_circles.selectExpr(
+        "qid", "x AS _qx", "y AS _qy", "r AS _r",
+        "x - r AS _bmin_x", "x + r AS _bmax_x", "y - r AS _bmin_y", "y + r AS _bmax_y",
     )
     qcells = grid.explode_covering(
         qboxes, "_bmin_x", "_bmax_x", "_bmin_y", "_bmax_y", cell_name="_cell"
     )
-    if broadcast_queries:
-        qcells = F.broadcast(qcells)
-    joined = qcells.join(pts, "_cell")
-    d2 = F.expr(sql_dist2_point_point("x", "y", "_qx", "_qy"))
+    joined = F.broadcast(qcells).join(pts, "_cell")
+    d2 = sql_dist2_point_point("x", "y", "_qx", "_qy")
     return (
-        joined.withColumn("dist2", d2)
-        .filter(F.col("dist2") <= F.col("_r") * F.col("_r"))
+        joined.selectExpr("qid", "id", "x", "y", f"{d2} AS dist2", "_r")
+        .filter("dist2 <= _r * _r")
         .select("qid", "id", "x", "y", "dist2")
     )
 
@@ -113,28 +98,16 @@ def find_box_over_layout(
     read-only queries).
 
     The probe side is compiled into a literal ``cell IN (...)`` predicate
-    that reaches the Parquet scan (``PushedFilters`` in the plan), so the
-    layout's Hilbert clustering turns into row-group pruning — the
-    distributed analogue of the R-tree subtree skip
-    (``/root/reference/locus/_core/r.py:164-172``).  The probe table must be
-    small (it is collected to build the literal predicate — the same size
-    contract as broadcasting it); the exact closed predicate then runs in a
-    broadcast join.  Returns ``(qid, id, x, y)``."""
-    rows = query_boxes.select("qid", "min_x", "max_x", "min_y", "max_y").collect()
-    cells: set[int] = set()
-    for r in rows:
-        cx0, cy0 = grid.cell_xy_of(r.min_x, r.min_y)
-        cx1, cy1 = grid.cell_xy_of(r.max_x, r.max_y)
-        for cx in range(cx0, cx1 + 1):
-            for cy in range(cy0, cy1 + 1):
-                cells.add(cx * grid.n + cy)
-    pruned = layout.filter(F.col("cell").isin(sorted(cells)))
-    qb = F.broadcast(query_boxes.select("qid", "min_x", "max_x", "min_y", "max_y"))
-    joined = qb.join(
-        pruned,
-        F.col("x").between(F.col("min_x"), F.col("max_x"))
-        & F.col("y").between(F.col("min_y"), F.col("max_y")),
-    )
+    (:meth:`GridSpec.covering_cells_in`) that reaches the Parquet scan
+    (``PushedFilters`` in the plan), so the layout's Hilbert clustering
+    turns into row-group pruning — the distributed analogue of the R-tree
+    subtree skip (``/root/reference/locus/_core/r.py:164-172``).  The probe
+    table must be small (it is collected to build the literal predicate —
+    the same size contract as broadcasting it); the exact closed predicate
+    then runs in a broadcast join.  Returns ``(qid, id, x, y)``."""
+    qb = query_boxes.select("qid", "min_x", "max_x", "min_y", "max_y")
+    pruned = layout.filter(grid.covering_cells_in(qb))
+    joined = F.broadcast(qb).join(pruned, F.expr(_CONTAINS))
     return joined.select("qid", "id", "x", "y")
 
 

@@ -5,13 +5,14 @@ The reference has no polygon support; these extend its box/cell machinery
 (``/root/reference/locus/_core/box.py``, ``_core/hilbert.py``) to the tiling
 semantics the north rule mandates:
 
-* ``tile_of`` — raster tile assignment: the GridSpec cell arithmetic at a
-  chosen zoom (floor arithmetic, exact in float64 → identical in any IEEE
-  engine);
+* ``tile_point_counts`` — raster tile assignment: the GridSpec cell
+  arithmetic at a chosen zoom (floor arithmetic, exact in float64 →
+  identical in any IEEE engine);
 * ``point_in_polygon_join`` — even-odd ray casting expressed *relationally*:
-  polygon edges are rows, the crossing test is one Column predicate per
-  (point, edge), and "inside" is ``count(crossing) % 2 = 1`` — a groupBy, not
-  a UDF, so the whole thing stays in whole-stage codegen;
+  polygon edges are rows, the crossing test is one SQL predicate per
+  (point, edge) (``functions/metrics.sql_ray_crosses_edge``, the text the
+  DuckDB oracle runs too), and "inside" is ``count(crossing) % 2 = 1`` — a
+  groupBy, not a UDF, so the whole thing stays in whole-stage codegen;
 * ``raster_vector_assignment`` — vector features (boxes) exploded to the
   raster tiles they cover, joined against per-tile point aggregates.
 """
@@ -24,49 +25,22 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from locus_spark.cells import GridSpec
-
-
-def tile_cols(grid: GridSpec, x: str, y: str) -> tuple:
-    """(tile_x, tile_y) long columns at the grid's resolution (zoom) of the
-    SQL expressions ``x`` and ``y``."""
-    return grid.cell_x_col(x), grid.cell_y_col(y)
+from locus_spark.functions.metrics import sql_ray_crosses_edge
 
 
 def tile_point_counts(points: DataFrame, grid: GridSpec) -> DataFrame:
     """Raster aggregation: points per tile.  Returns (tile_x, tile_y, n)."""
-    tx, ty = tile_cols(grid, "x", "y")
     return (
-        points.select(tx.alias("tile_x"), ty.alias("tile_y"))
+        points.selectExpr(
+            f"{grid.cell_x_sql('x')} AS tile_x", f"{grid.cell_y_sql('y')} AS tile_y"
+        )
         .groupBy("tile_x", "tile_y")
         .agg(F.count("*").alias("n"))
     )
 
 
-# --------------------------------------------------------------------------
-# point-in-polygon
-# --------------------------------------------------------------------------
-
-def crossing_pred(px, py, x1, y1, x2, y2):
-    """Even-odd rule crossing test for one directed edge: the horizontal ray
-    from (px, py) to +inf crosses the edge iff the edge straddles py and the
-    intersection lies right of px.  Matches the classic PNPOLY formulation
-    (public domain, W. R. Franklin)."""
-    straddles = (y1 > py) != (y2 > py)
-    xint = (x2 - x1) * (py - y1) / (y2 - y1) + x1
-    return straddles & (px < xint)
-
-
-SQL_CROSSING = (
-    "((({y1}) > ({py})) <> (({y2}) > ({py})))"
-    " AND (({px}) < ((({x2}) - ({x1})) * (({py}) - ({y1})) / (({y2}) - ({y1})) + ({x1})))"
-)
-
-
 def point_in_polygon_join(
-    points: DataFrame,
-    polygon_edges: DataFrame,
-    grid: GridSpec | None = None,
-    broadcast_polygons: bool = True,
+    points: DataFrame, polygon_edges: DataFrame, grid: GridSpec
 ) -> DataFrame:
     """All (polygon, point) pairs with the point strictly inside (even-odd
     rule).  ``polygon_edges`` rows: (qid, x1, y1, x2, y2), one per edge.
@@ -76,42 +50,25 @@ def point_in_polygon_join(
     count.  Returns (qid, id, x, y).
     """
     bboxes = polygon_edges.groupBy("qid").agg(
-        F.least(F.min("x1"), F.min("x2")).alias("_bmin_x"),
-        F.greatest(F.max("x1"), F.max("x2")).alias("_bmax_x"),
-        F.least(F.min("y1"), F.min("y2")).alias("_bmin_y"),
-        F.greatest(F.max("y1"), F.max("y2")).alias("_bmax_y"),
+        F.expr("least(min(x1), min(x2)) AS _bmin_x"),
+        F.expr("greatest(max(x1), max(x2)) AS _bmax_x"),
+        F.expr("least(min(y1), min(y2)) AS _bmin_y"),
+        F.expr("greatest(max(y1), max(y2)) AS _bmax_y"),
     )
-    if grid is not None:
-        pts = points.withColumn("_cell", grid.cell_col("x", "y"))
-        qcells = grid.explode_covering(
-            bboxes, "_bmin_x", "_bmax_x", "_bmin_y", "_bmax_y", cell_name="_cell"
-        )
-        if broadcast_polygons:
-            qcells = F.broadcast(qcells)
-        cand = qcells.join(pts, "_cell").select("qid", "id", "x", "y")
-    else:
-        b = F.broadcast(bboxes) if broadcast_polygons else bboxes
-        cand = b.join(
-            points,
-            F.col("x").between(F.col("_bmin_x"), F.col("_bmax_x"))
-            & F.col("y").between(F.col("_bmin_y"), F.col("_bmax_y")),
-        ).select("qid", "id", "x", "y")
-    edges = polygon_edges.select(
-        F.col("qid"), F.col("x1"), F.col("y1"), F.col("x2"), F.col("y2")
+    pts = points.selectExpr("id", "x", "y", f"{grid.cell_sql('x', 'y')} AS _cell")
+    qcells = grid.explode_covering(
+        bboxes, "_bmin_x", "_bmax_x", "_bmin_y", "_bmax_y", cell_name="_cell"
     )
-    paired = cand.join(F.broadcast(edges) if broadcast_polygons else edges, "qid")
-    crossings = paired.groupBy("qid", "id", "x", "y").agg(
-        F.sum(
-            F.when(
-                crossing_pred(
-                    F.col("x"), F.col("y"),
-                    F.col("x1"), F.col("y1"), F.col("x2"), F.col("y2"),
-                ),
-                1,
-            ).otherwise(0)
-        ).alias("_ncross")
+    cand = F.broadcast(qcells).join(pts, "_cell").select("qid", "id", "x", "y")
+    edges = polygon_edges.select("qid", "x1", "y1", "x2", "y2")
+    crosses = sql_ray_crosses_edge("x", "y", "x1", "y1", "x2", "y2")
+    return (
+        cand.join(F.broadcast(edges), "qid")
+        .groupBy("qid", "id", "x", "y")
+        .agg(F.expr(f"sum(CASE WHEN {crosses} THEN 1 ELSE 0 END) AS _ncross"))
+        .filter("_ncross % 2 = 1")
+        .select("qid", "id", "x", "y")
     )
-    return crossings.filter(F.col("_ncross") % 2 == 1).select("qid", "id", "x", "y")
 
 
 def raster_vector_assignment(
@@ -120,14 +77,14 @@ def raster_vector_assignment(
     """Raster↔vector tile assignment: explode each vector feature (box) to
     the raster tiles it covers and aggregate the per-tile point counts.
     Returns (id, n_tiles, n_points) — all exact integers."""
-    tiles = grid.explode_covering_xy(boxes, "min_x", "max_x", "min_y", "max_y").select(
+    tiles = grid.explode_covering_xy(boxes, "min_x", "max_x", "min_y", "max_y").selectExpr(
         # fused single-long tile key: keeps the tile equi-join on a
         # LongHashedRelation (composite-key broadcast relations were
         # measured in plans/knn.py to stop scaling with cores)
-        "id", grid.pack("_cx", "_cy").alias("_tile"),
+        "id", f"{grid.pack_sql('_cx', '_cy')} AS _tile",
     )
-    pcounts = tile_point_counts(points, grid).select(
-        grid.pack("tile_x", "tile_y").alias("_tile"), "n"
+    pcounts = tile_point_counts(points, grid).selectExpr(
+        f"{grid.pack_sql('tile_x', 'tile_y')} AS _tile", "n"
     )
     joined = tiles.join(pcounts, ["_tile"], "left")
     return joined.groupBy("id").agg(

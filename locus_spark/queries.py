@@ -16,10 +16,14 @@ from pyspark.sql import functions as F
 
 from locus_spark.cells import GridSpec
 from locus_spark.functions.metrics import (
+    sql_box_contains_point,
+    sql_box_is_subset,
+    sql_boxes_overlap,
     sql_dist2_point_box,
     sql_dist2_point_point,
     sql_dist2_point_segment,
     sql_dist2_segment_segment,
+    sql_ray_crosses_edge,
 )
 from locus_spark.operators.boxes import (
     box_knn_join,
@@ -70,10 +74,12 @@ def register(name: str, oracle: str | Callable[[], str] | None):
 #: correctness harness checks a bounded prefix of ``queries()``.  Rotation
 #: policy: the window holds (a) every row that reaches a module changed
 #: since its last hash-green check — the spatial family first, because the
-#: kNN planner (plans/knn.py) changed again: every kNN/nearest row, its
-#: persisted twins, ``pages_knn`` and both incremental/upsert kNN rows —
-#: and (b) the rows that have been stale longest.  No row is left stale
-#: for more than two rotations.
+#: range predicates moved to ``functions/metrics.py`` templates and the
+#: double literals of ``cells.sql_double`` changed form: every range,
+#: persisted, incremental, tile and kNN/nearest row, ``pages_knn``,
+#: ``pages_geotile_lang`` and the ANN recall rows (their side-parquet path
+#: moved) — and (b) the rows that have been stale longest.  No row is left
+#: stale for more than two rotations.
 _CHECK_FIRST = [
     "kd_find_box",
     "kd_find_ball",
@@ -82,11 +88,13 @@ _CHECK_FIRST = [
     "kd_nearest",
     "kd_find_box_persisted",
     "kd_knn_persisted",
+    "kd_find_box_incremental",
     "kd_knn_incremental",
     "kd_knn_upsert",
     "r_find_subsets",
     "r_find_subsets_persisted",
     "r_find_supersets",
+    "r_overlaps",
     "r_knn",
     "r_nearest",
     "seg_knn_to_point",
@@ -119,6 +127,9 @@ _CHECK_FIRST = [
     "doc_pack_sequences",
     "pipeline_training_mix",
     "doc_lang_id",
+    "ann_lsh_recall",
+    "ann_ivf_recall",
+    "ann_pq_recall",
     "ann_cosine_topk",
     "dedup_embedding_cosine",
     "ann_lsh_top1_planted",
@@ -133,18 +144,13 @@ _CHECK_FIRST = [
 #: module changed since — the safest rows to leave outside the bounded
 #: check window (they rotate back in by the policy above).
 _CHECK_LAST = [
-    "kd_find_box_incremental",
     "kd_dbscan",
-    "r_overlaps",
     "dedup_incremental",
     "doc_span_dedup",
     "dedup_incremental_minhash",
     "dedup_clusters",
-    "ann_lsh_recall",
     "ann_lsh_topk_planted",
     "ann_ivf_topk_planted",
-    "ann_ivf_recall",
-    "ann_pq_recall",
     "ann_pq_top1_planted",
     "ann_pq_top1_persisted",
     "pages_extract_identity",
@@ -210,7 +216,7 @@ _FIND_BOX_ORACLE = f"""
 SELECT q.qid AS qid, p.id AS id, p.x AS x, p.y AS y
 FROM query_boxes q
 JOIN points p
-  ON p.x >= q.min_x AND p.x <= q.max_x AND p.y >= q.min_y AND p.y <= q.max_y
+  ON {sql_box_contains_point("p.x", "p.y", "q.min_x", "q.max_x", "q.min_y", "q.max_y")}
 """
 
 
@@ -548,14 +554,15 @@ def _persisted_segments_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 
 _BOX_OUT = "b.id AS id, b.min_x AS min_x, b.max_x AS max_x, b.min_y AS min_y, b.max_y AS max_y"
+_QBOX = ("q.min_x", "q.max_x", "q.min_y", "q.max_y")
+_BBOX = ("b.min_x", "b.max_x", "b.min_y", "b.max_y")
 
 _SUBSETS_ORACLE = f"""
 {derived.with_ctes('boxes', 'query_boxes')}
 SELECT q.qid AS qid, {_BOX_OUT}
 FROM query_boxes q
 JOIN boxes b
-  ON q.min_x <= b.min_x AND b.max_x <= q.max_x
- AND q.min_y <= b.min_y AND b.max_y <= q.max_y
+  ON {sql_box_is_subset(*_BBOX, *_QBOX)}
 """
 
 
@@ -585,8 +592,7 @@ _OVERLAPS_ORACLE = f"""
 SELECT q.qid AS qid, {_BOX_OUT}
 FROM query_boxes q
 JOIN boxes b
-  ON q.min_x < b.max_x AND b.min_x < q.max_x
- AND q.min_y < b.max_y AND b.min_y < q.max_y
+  ON {sql_boxes_overlap(*_QBOX, *_BBOX)}
 """
 
 
@@ -608,8 +614,7 @@ _SUPERSETS_ORACLE = f"""
 SELECT q.qid AS qid, {_BOX_OUT}
 FROM query_boxes q
 JOIN boxes b
-  ON b.min_x <= q.min_x AND q.max_x <= b.max_x
- AND b.min_y <= q.min_y AND q.max_y <= b.max_y
+  ON {sql_box_is_subset(*_QBOX, *_BBOX)}
 """
 
 
@@ -752,13 +757,12 @@ from locus_spark.operators.tiles import (  # noqa: E402
     polygon_edges_values_sql,
     raster_vector_assignment,
     tile_point_counts,
-    SQL_CROSSING,
 )
 
-#: exact-SQL replica of GridSpec.cell_x/y_col at WORLD_GRID (64x64):
-#: cell_w = 360/64 = 5.625 (dyadic → exact), cell_h = 180/64 = 2.8125.
-_TILE_X = "CAST(least(63.0e0, greatest(0.0e0, floor((x - (-180.0e0)) / 5.625e0))) AS BIGINT)"
-_TILE_Y = "CAST(least(63.0e0, greatest(0.0e0, floor((y - (-90.0e0)) / 2.8125e0))) AS BIGINT)"
+#: the tile the Spark side assigns, rendered from the same GridSpec text
+#: (WORLD_GRID is 64x64: cell_w = 360/64 = 5.625, cell_h = 180/64 = 2.8125)
+_TILE_X = WORLD_GRID.cell_x_sql("x")
+_TILE_Y = WORLD_GRID.cell_y_sql("y")
 
 _TILE_COUNTS_ORACLE = f"""
 {derived.with_ctes('points')}
@@ -808,9 +812,7 @@ def q_tile_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _POLY_ROWS = make_polygon_edges(n_polygons=8, seed=42)
-_CROSS_SQL = SQL_CROSSING.format(
-    px="p.x", py="p.y", x1="e.x1", y1="e.y1", x2="e.x2", y2="e.y2"
-)
+_CROSS_SQL = sql_ray_crosses_edge("p.x", "p.y", "e.x1", "e.y1", "e.x2", "e.y2")
 
 _PIP_ORACLE = f"""
 {derived.with_ctes('points')}
@@ -836,11 +838,6 @@ def q_pip_polygons(spark: SparkSession, sf_dir: str) -> DataFrame:
     return point_in_polygon_join(pts, edges, grid=WORLD_GRID)
 
 
-_BTX0 = _TILE_X.replace("(x ", "(min_x ")
-_BTX1 = _TILE_X.replace("(x ", "(max_x ")
-_BTY0 = _TILE_Y.replace("(y ", "(min_y ")
-_BTY1 = _TILE_Y.replace("(y ", "(max_y ")
-
 _RASTER_VECTOR_ORACLE = f"""
 {derived.with_ctes('boxes', 'points')}
 , pt AS (
@@ -849,8 +846,8 @@ _RASTER_VECTOR_ORACLE = f"""
 ), bt AS (
   SELECT id, tx.tile_x AS tile_x, ty.tile_y AS tile_y
   FROM boxes,
-       unnest(range({_BTX0}, {_BTX1} + 1)) AS tx(tile_x),
-       unnest(range({_BTY0}, {_BTY1} + 1)) AS ty(tile_y)
+       unnest(range({WORLD_GRID.cell_x_sql("min_x")}, {WORLD_GRID.cell_x_sql("max_x")} + 1)) AS tx(tile_x),
+       unnest(range({WORLD_GRID.cell_y_sql("min_y")}, {WORLD_GRID.cell_y_sql("max_y")} + 1)) AS ty(tile_y)
 )
 SELECT bt.id AS id, count(*) AS n_tiles,
        CAST(sum(coalesce(pt.n, 0)) AS BIGINT) AS n_points
@@ -1712,25 +1709,30 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosine_topk(emb, probes, ANN_K)
 
 
-#: side-parquet dir for the ANN recall oracles: each recall query OVERWRITES
-#: its approximate result's (qid, vec_id) here before returning, and its
-#: DuckDB oracle reads the same files — valid because the harness always runs
-#: the Spark query before its oracle (tools/check_oracle.py order; the
-#: driver's gate does the same).  The path is sf-independent on purpose: the
-#: overwrite makes whatever sf runs last the one both engines see.
-import tempfile as _tempfile  # noqa: E402
+# side-parquet dir for the ANN recall oracles: each recall query OVERWRITES
+# its approximate result's (qid, vec_id) here before returning, and its
+# DuckDB oracle reads the same files — valid because the harness always runs
+# the Spark query before its oracle (tools/check_oracle.py order; the
+# driver's gate does the same).  The path is sf-independent on purpose: the
+# overwrite makes whatever sf runs last the one both engines see.
+def ann_ids_path(name: str) -> str:
+    """Where recall query ``name`` persists its approximate ids, under the
+    temp dir of the moment (``tempfile.tempdir`` may point a run at a
+    private dir)."""
+    import tempfile
 
-_ANN_SIDE_DIR = f"{_tempfile.gettempdir()}/locus_spark_ann"
+    return f"{tempfile.gettempdir()}/locus_spark_ann/{name}"
 
 
-def _ann_recall_oracle(ids_path: str) -> str:
+def _ann_recall_oracle(name: str) -> Callable[[], str]:
     """DuckDB recall oracle: its OWN brute-force exact top-k, left-joined
     against the approximate ids the Spark query persisted.  The approximate
     side enters both engines as data (deterministic — seeded planes /
     centroids); the value-verified parts are the exact top-k, the
     intersection, and the recall arithmetic — and the measured recall itself
-    becomes a hash-checked artifact instead of a pytest-only claim."""
-    return f"""
+    becomes a hash-checked artifact instead of a pytest-only claim.
+    Rendered by :func:`oracle_sql`, so it reads the path the query wrote."""
+    return lambda: f"""
 WITH q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 10),
 cand AS (
   SELECT q.qid AS qid, e.vec_id AS vec_id, {_COS_SQL} AS cos
@@ -1742,7 +1744,7 @@ cand AS (
 ), exact AS (
   SELECT qid, vec_id FROM ranked WHERE rn <= {ANN_K}
 ), apx AS (
-  SELECT qid, vec_id FROM read_parquet('{ids_path}/*.parquet')
+  SELECT qid, vec_id FROM read_parquet('{ann_ids_path(name)}/*.parquet')
 )
 SELECT e.qid AS qid,
        CAST(count(a.vec_id) AS BIGINT) AS n_hit,
@@ -1753,10 +1755,11 @@ GROUP BY e.qid
 
 
 def _recall_vs_exact(
-    spark: SparkSession, approx: DataFrame, exact: DataFrame, ids_path: str
+    spark: SparkSession, approx: DataFrame, exact: DataFrame, name: str
 ) -> DataFrame:
     """Persist the approximate ids, read them back (so Spark computes recall
     over the same artifact the oracle reads), and emit per-qid recall."""
+    ids_path = ann_ids_path(name)
     approx.select("qid", "vec_id").write.mode("overwrite").parquet(ids_path)
     apx = spark.read.parquet(ids_path).withColumn("_hit", F.lit(1))
     joined = exact.select("qid", "vec_id").join(apx, ["qid", "vec_id"], "left")
@@ -1766,7 +1769,7 @@ def _recall_vs_exact(
     )
 
 
-@register("ann_lsh_recall", _ann_recall_oracle(f"{_ANN_SIDE_DIR}/lsh_topk_ids"))
+@register("ann_lsh_recall", _ann_recall_oracle("lsh_topk_ids"))
 def q_ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """General-distribution hyperplane-LSH top-k, value-checked via its
     RECALL against the exact brute force: the approximate run (deterministic
@@ -1781,7 +1784,7 @@ def q_ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     approx = lsh_topk(emb, probes, ANN_K, n_planes=6, n_tables=8)
     exact = cosine_topk(emb, probes, ANN_K)
-    return _recall_vs_exact(spark, approx, exact, f"{_ANN_SIDE_DIR}/lsh_topk_ids")
+    return _recall_vs_exact(spark, approx, exact, "lsh_topk_ids")
 
 
 _EMB_LDP = "list_dot_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"
@@ -2006,7 +2009,7 @@ def q_ann_ivf_top1_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_topk(aug, probes, 1, n_probe=4, centroids=cents)
 
 
-@register("ann_ivf_recall", _ann_recall_oracle(f"{_ANN_SIDE_DIR}/ivf_topk_ids"))
+@register("ann_ivf_recall", _ann_recall_oracle("ivf_topk_ids"))
 def q_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """General-distribution IVF top-k value-checked via its recall against
     the exact brute force — same protocol as ``ann_lsh_recall`` (approximate
@@ -2022,7 +2025,7 @@ def q_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = _ivf_centroids(spark, sf_dir, "raw", emb)
     approx = ivf_topk(emb, probes, ANN_K, n_probe=4, centroids=cents)
     exact = cosine_topk(emb, probes, ANN_K)
-    return _recall_vs_exact(spark, approx, exact, f"{_ANN_SIDE_DIR}/ivf_topk_ids")
+    return _recall_vs_exact(spark, approx, exact, "ivf_topk_ids")
 
 
 def _persisted_ivf_layout(
@@ -2119,7 +2122,7 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
     return _PQ_BOOKS[sf_dir]
 
 
-@register("ann_pq_recall", _ann_recall_oracle(f"{_ANN_SIDE_DIR}/pq_topk_ids"))
+@register("ann_pq_recall", _ann_recall_oracle("pq_topk_ids"))
 def q_ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """General-distribution IVF-PQ top-k value-checked via its recall against
     the exact brute force (approximate ids persisted as data; both engines
@@ -2139,7 +2142,7 @@ def q_ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, probes, ANN_K, books, centroids=cents, n_probe=8, shortlist=50
     )
     exact = cosine_topk(emb, probes, ANN_K)
-    return _recall_vs_exact(spark, approx, exact, f"{_ANN_SIDE_DIR}/pq_topk_ids")
+    return _recall_vs_exact(spark, approx, exact, "pq_topk_ids")
 
 
 #: identity-copy augmentation for the PQ planted row: the copy must be
@@ -2374,6 +2377,7 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 PAGES_N = 20_000
 PAGES_GRID_RES = 6
+PAGES_GRID = GridSpec(-180.0, -90.0, 180.0, 90.0, PAGES_GRID_RES)
 
 
 
@@ -2427,11 +2431,10 @@ def _persisted_geocoded_pages(spark: SparkSession) -> DataFrame:
     )
 
 
-# PAGES_GRID_RES == SF_RESOLUTION == 6, so the persisted pages share the
-# WORLD_GRID tile math (5.625 x 2.8125 — exact dyadic cell extents).
 def _pages_geotile_oracle() -> str:
+    tx, ty = PAGES_GRID.cell_x_sql("x"), PAGES_GRID.cell_y_sql("y")
     return f"""
-SELECT {_TILE_X} AS tile_x, {_TILE_Y} AS tile_y, lang, count(*) AS n
+SELECT {tx} AS tile_x, {ty} AS tile_y, lang, count(*) AS n
 FROM read_parquet('{pages_data_dir()}/*.parquet')
 GROUP BY 1, 2, 3
 """
@@ -2443,12 +2446,11 @@ def q_pages_geotile_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-(tile, lang) rollup.  The batch shape of the 10^12-row production
     job (jobs/run.py); value-checked against DuckDB over the persisted
     parquet."""
-    grid = GridSpec(-180.0, -90.0, 180.0, 90.0, PAGES_GRID_RES)
     geo = _persisted_geocoded_pages(spark)
     return (
-        geo.select(
-            grid.cell_x_col("x").alias("tile_x"),
-            grid.cell_y_col("y").alias("tile_y"),
+        geo.selectExpr(
+            f"{PAGES_GRID.cell_x_sql('x')} AS tile_x",
+            f"{PAGES_GRID.cell_y_sql('y')} AS tile_y",
             "lang",
         )
         .groupBy("tile_x", "tile_y", "lang")
@@ -2502,12 +2504,11 @@ def q_pages_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship production shape: exact kNN join over the persisted geocoded
     pages (probes = a deterministic 1-in-200 id sample; ``pmod(id,200)==0``
     agrees with the oracle's ``id % 200 = 0`` — both mean divisible)."""
-    grid = GridSpec(-180.0, -90.0, 180.0, 90.0, PAGES_GRID_RES)
     geo = _persisted_geocoded_pages(spark).select("id", "x", "y")
     probes = geo.filter(F.pmod(F.col("id"), F.lit(200)) == 0).select(
         F.col("id").alias("qid"), "x", "y"
     )
-    return knn_join(geo, probes, KNN_K, grid=grid)
+    return knn_join(geo, probes, KNN_K, grid=PAGES_GRID)
 
 
 def _canonical_oracle() -> str:

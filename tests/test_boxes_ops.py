@@ -5,7 +5,7 @@ distance+tie for nearest — R-family ties prefer the LARGEST id)."""
 from __future__ import annotations
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from locus_spark.operators.boxes import (
@@ -18,6 +18,24 @@ coord = st.floats(min_value=-1e5, max_value=1e5, allow_nan=False, allow_infinity
 span = st.floats(min_value=1e-3, max_value=5e4, allow_nan=False, allow_infinity=False)
 
 box_strategy = st.tuples(coord, coord, span, span)  # (cx, cy, w, h)
+
+#: boundary layouts (cx, cy, w, h).  The boxes span [0, 16]², so every edge
+#: below lies on a cell edge of the derived grid: [0, 2]² shares the x = 2
+#: edge with [2, 4] x [0, 2] and the (2, 2) corner with [2, 4]²; probes equal
+#: a box, meet one on an edge or a corner, or lie outside the grid.
+EDGE_B = [(1.0, 1.0, 1.0, 1.0), (3.0, 1.0, 1.0, 1.0), (3.0, 3.0, 1.0, 1.0),
+          (8.0, 8.0, 8.0, 8.0), (1.0, 1.0, 0.5, 0.5), (2.0, 2.0, 1.0, 1.0)]
+EDGE_Q = [(1.0, 1.0, 1.0, 1.0), (2.0, 1.0, 2.0, 1.0), (3.0, 3.0, 1.0, 1.0),
+          (2.0, 2.0, 1.0, 1.0), (100.0, 100.0, 1.0, 1.0)]
+#: zero-width boxes on one x: a zero-extent grid axis (cell_w = 1e-300 / n)
+ONE_X_B = [(5.0, 1.0, 0.0, 1.0), (5.0, 4.0, 0.0, 2.0), (5.0, 2.0, 0.0, 0.5)]
+ONE_X_Q = [(5.0, 2.0, 0.0, 3.0), (5.0, 2.0, 1.0, 1.0), (50.0, 50.0, 1.0, 1.0)]
+
+
+def boundary_layouts(test):
+    return example(raw_b=EDGE_B, raw_q=EDGE_Q)(
+        example(raw_b=ONE_X_B, raw_q=ONE_X_Q)(test)
+    )
 
 
 def _mk_boxes(raw):
@@ -43,6 +61,7 @@ def _qboxes_df(spark, boxes):
     st.lists(box_strategy, min_size=2, max_size=50),
     st.lists(box_strategy, min_size=1, max_size=5),
 )
+@boundary_layouts
 def test_find_subsets_sound_complete(spark, raw_b, raw_q):
     boxes, queries = _mk_boxes(raw_b), _mk_boxes(raw_q)
     got = {
@@ -63,6 +82,7 @@ def test_find_subsets_sound_complete(spark, raw_b, raw_q):
     st.lists(box_strategy, min_size=2, max_size=50),
     st.lists(box_strategy, min_size=1, max_size=5),
 )
+@boundary_layouts
 def test_find_supersets_sound_complete(spark, raw_b, raw_q):
     boxes, queries = _mk_boxes(raw_b), _mk_boxes(raw_q)
     got = {
@@ -139,6 +159,7 @@ def test_box_knn_tie_prefers_larger_id(spark):
     st.lists(box_strategy, min_size=2, max_size=50),
     st.lists(box_strategy, min_size=1, max_size=5),
 )
+@boundary_layouts
 def test_find_overlaps_sound_complete(spark, raw_b, raw_q):
     from locus_spark.operators.boxes import find_overlaps_join
 

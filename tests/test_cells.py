@@ -5,6 +5,7 @@ from __future__ import annotations
 import math
 import struct
 
+import duckdb
 import numpy as np
 import pytest
 from hypothesis import example, given
@@ -156,8 +157,8 @@ def _bits(v: float) -> bytes:
 def test_sql_cell_ids_match_the_column_formula_bit_for_bit(spark, origin, extent, res, xs):
     """GridSpec's SQL renders give the same cell ids as the Column formula
     over any coordinates, and every double they write reads back as the
-    same bits (a literal without the ``D`` suffix is a DECIMAL, which loses
-    the sign of -0.0)."""
+    same bits in Spark and in DuckDB (a literal without an exponent is a
+    DECIMAL, which loses the sign of -0.0; DuckDB rejects a ``D`` suffix)."""
     top = origin + extent if math.isfinite(origin + extent) else origin
     g = GridSpec(origin, -origin, top, -origin + extent, res)
     # the coordinates, plus every cell boundary and its neighbours
@@ -179,3 +180,5 @@ def test_sql_cell_ids_match_the_column_formula_bit_for_bit(spark, origin, extent
         *[f"{sql_double(v)} AS c{i}" for i, v in enumerate(lits)]
     ).first()
     assert [_bits(v) for v in back] == [_bits(v) for v in lits]
+    duck = duckdb.sql("SELECT " + ", ".join(sql_double(v) for v in lits)).fetchone()
+    assert [_bits(v) for v in duck] == [_bits(v) for v in lits]

@@ -14,6 +14,20 @@ from locus_spark.cells import GridSpec, cluster_by_hilbert
 from locus_spark.operators.points import find_box_join, find_box_over_layout
 
 
+INF, NAN = float("inf"), float("nan")
+BOX_SCHEMA = "qid long, min_x double, max_x double, min_y double, max_y double"
+#: probes with non-finite bounds: everything east of x = 50, a strip open
+#: to the west, the whole plane, and NaN lower bounds (Spark sorts NaN
+#: largest, so no finite coordinate is >= NaN)
+UNBOUNDED = [
+    (2, 50.0, INF, 30.0, 50.0),
+    (3, -INF, -60.0, -20.0, 20.0),
+    (4, -INF, INF, -INF, INF),
+    (5, NAN, 10.0, 0.0, 10.0),
+    (6, -10.0, 10.0, NAN, 10.0),
+]
+
+
 def _explain_str(df) -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
@@ -31,13 +45,16 @@ def test_layout_query_parity_and_pushdown(spark, tmp_path):
     layout = spark.read.parquet(path)
 
     qb = spark.createDataFrame(
-        [(0, -10.0, 5.0, -3.0, 12.0), (1, 40.0, 60.0, 40.0, 55.0)],
-        "qid long, min_x double, max_x double, min_y double, max_y double",
+        [(0, -10.0, 5.0, -3.0, 12.0), (1, 40.0, 60.0, 40.0, 55.0), *UNBOUNDED],
+        BOX_SCHEMA,
     )
     out = find_box_over_layout(layout, qb, grid)
-    got = {(r.qid, r.id) for r in out.collect()}
-    want = {(r.qid, r.id) for r in find_box_join(pdf, qb, grid=grid).collect()}
+    got = sorted((r.qid, r.id) for r in out.collect())
+    want = sorted((r.qid, r.id) for r in find_box_join(pdf, qb, grid=grid).collect())
     assert got == want and len(got) > 0
+    assert {q for q, _ in got} == {0, 1, 2, 3, 4}
+    none = qb.limit(0)
+    assert find_box_over_layout(layout, none, grid).collect() == []
 
     # the cell IN-list must reach the parquet scan (row-group pruning)
     plan = _explain_str(out)
@@ -68,13 +85,16 @@ def test_boxes_layout_parity_and_pushdown(spark, tmp_path):
     layout = spark.read.parquet(path)
 
     qb = spark.createDataFrame(
-        [(0, -30.0, 10.0, -25.0, 20.0), (1, 35.0, 75.0, 30.0, 70.0)],
-        "qid long, min_x double, max_x double, min_y double, max_y double",
+        [(0, -30.0, 10.0, -25.0, 20.0), (1, 35.0, 75.0, 30.0, 70.0), *UNBOUNDED],
+        BOX_SCHEMA,
     )
     out = find_subsets_over_layout(layout, qb, grid)
-    got = {(r.qid, r.id) for r in out.collect()}
-    want = {(r.qid, r.id) for r in find_subsets_join(bdf, qb, grid=grid).collect()}
+    got = sorted((r.qid, r.id) for r in out.collect())
+    want = sorted((r.qid, r.id) for r in find_subsets_join(bdf, qb, grid=grid).collect())
     assert got == want and len(got) > 0
+    assert {q for q, _ in got} == {0, 1, 2, 3, 4}
+    none = qb.limit(0)
+    assert find_subsets_over_layout(layout, none, grid).collect() == []
 
     plan = _explain_str(out)
     assert "PushedFilters" in plan and "In(cell" in plan

@@ -9,11 +9,7 @@ from locus_spark.cells import GridSpec
 from locus_spark.operators.ann import cosine_topk, lsh_topk
 from locus_spark.operators.dedup import exact_dedup, minhash_lsh_pairs, simhash_near_dups
 from locus_spark.operators.textops import lang_id, quality_score, token_stats
-from locus_spark.operators.tiles import (
-    crossing_pred,
-    point_in_polygon_join,
-    raster_vector_assignment,
-)
+from locus_spark.operators.tiles import point_in_polygon_join, raster_vector_assignment
 
 DOCS = [
     (0, "the cat sat on the mat", "en"),
@@ -353,28 +349,51 @@ def test_lsh_topk_is_subset_with_recall(spark):
     assert recall >= 0.9  # clustered data → LSH must find the cluster-mates
 
 
+def _inside(px, py, edges):
+    """Even-odd rule in Python, the arithmetic of the SQL crossing test."""
+    crossings = sum(
+        ((y1 > py) != (y2 > py)) and px < (x2 - x1) * (py - y1) / (y2 - y1) + x1
+        for _, x1, y1, x2, y2 in edges
+    )
+    return crossings % 2 == 1
+
+
 def test_pip_square_inside_outside(spark):
-    # unit square polygon, one point inside, one outside, one in the hole of
-    # a concave "C" shape to exercise even-odd counting
+    # a square, and a concave "C" whose notch exercises even-odd counting
+    square = [(0.0, 0.0), (4.0, 0.0), (4.0, 4.0), (0.0, 4.0)]
+    c_shape = [(6.0, 0.0), (9.0, 0.0), (9.0, 1.0), (7.0, 1.0), (7.0, 3.0),
+               (9.0, 3.0), (9.0, 4.0), (6.0, 4.0)]
     edges = [
-        (0, 0.0, 0.0, 4.0, 0.0),
-        (0, 4.0, 0.0, 4.0, 4.0),
-        (0, 4.0, 4.0, 0.0, 4.0),
-        (0, 0.0, 4.0, 0.0, 0.0),
+        (qid, *ring[j], *ring[(j + 1) % len(ring)])
+        for qid, ring in enumerate([square, c_shape])
+        for j in range(len(ring))
     ]
     edf = spark.createDataFrame(
         edges, "qid int, x1 double, y1 double, x2 double, y2 double"
     )
+    # inside, outside, in the C's notch, and on cell edges, polygon edges
+    # and corners
+    xy = [(2.0, 2.0), (9.0, 9.0), (-1.0, 2.0), (8.0, 2.0), (6.5, 2.0),
+          (2.5, 2.5), (0.0, 2.5), (4.0, 2.0), (2.0, 0.0), (0.0, 0.0),
+          (4.0, 4.0), (7.0, 1.0), (6.0, 2.0), (1.0, 1.0), (3.0, 3.0)]
     pts = spark.createDataFrame(
-        [(0, 2.0, 2.0), (1, 9.0, 9.0), (2, -1.0, 2.0)],
-        "id long, x double, y double",
+        [(i, x, y) for i, (x, y) in enumerate(xy)], "id long, x double, y double"
     )
-    got = {(r.qid, r.id) for r in point_in_polygon_join(pts, edf).collect()}
-    assert got == {(0, 0)}
-    # with a grid prefilter too
-    g = GridSpec(-10.0, -10.0, 10.0, 10.0, 3)
-    got2 = {(r.qid, r.id) for r in point_in_polygon_join(pts, edf, grid=g).collect()}
-    assert got2 == {(0, 0)}
+    want = {
+        (qid, i)
+        for qid in (0, 1)
+        for i, (x, y) in enumerate(xy)
+        if _inside(x, y, [e for e in edges if e[0] == qid])
+    }
+    assert (0, 0) in want and (1, 4) in want and (1, 3) not in want
+    for grid in (
+        GridSpec(-10.0, -10.0, 10.0, 10.0, 3),  # cell edges at 0, 2.5, 5
+        GridSpec(-4.0, -4.0, 12.0, 12.0, 4),  # cell edges on every integer
+        GridSpec(2.0, -10.0, 2.0, 10.0, 3),  # zero-extent x axis
+        GridSpec(20.0, 20.0, 30.0, 30.0, 3),  # the polygons lie outside it
+    ):
+        got = {(r.qid, r.id) for r in point_in_polygon_join(pts, edf, grid).collect()}
+        assert got == want, grid
 
 
 def test_raster_vector_counts(spark):

@@ -8,7 +8,7 @@ import logging
 
 import numpy as np
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from locus_spark.cells import GridSpec
@@ -20,6 +20,15 @@ from locus_spark.operators.points import (
 )
 
 coord = st.floats(min_value=-1e6, max_value=1e6, allow_nan=False, allow_infinity=False)
+
+#: boundary layouts.  The points span [0, 16]², so the derived grid (256
+#: cells a side) has a cell edge on every multiple of 1/16: every point and
+#: probe edge below sits exactly on one.
+ON_EDGES = [(float(i % 17), float(i * 7 % 17)) for i in range(60)] + [
+    (0.0, 0.0), (16.0, 16.0), (5.0, 4.0), (5.0, 3.0), (3.0, 4.0), (4.0, 3.0)
+]
+#: a zero-extent x axis: cell_w = 1e-300 / 256
+ONE_X = [(3.0, float(y)) for y in range(10)]
 
 
 def _points_df(spark, pts):
@@ -359,6 +368,19 @@ def test_knn_radius_path_matches_brute(spark, kind, data):
     st.lists(st.tuples(coord, coord), min_size=1, max_size=80),
     st.lists(st.tuples(coord, coord, coord, coord), min_size=1, max_size=6),
 )
+# boxes (a, b + 0.5, c, d + 0.5): edges through points, [1.5, 5] x [2, 4]
+# sharing the x = 5 edge with [5, 7.5] x [3, 4] and the (5, 4) corner with
+# [5, 7.5] x [4, 6]; boxes reaching past the grid or wholly outside it
+@example(pts=ON_EDGES, raw_boxes=[
+    (1.5, 4.5, 2.0, 3.5), (5.0, 7.0, 3.0, 3.5), (5.0, 7.0, 4.0, 5.5),
+    (16.0, 16.0, 16.0, 16.0), (0.0, 0.0, 0.0, 0.0), (-3.0, -1.0, 0.0, 0.0),
+])
+@example(pts=[(0.5, 0.25), (1.0, 1.0)], raw_boxes=[
+    (100.0, 200.0, 100.0, 200.0), (-1e6, 1e6, -1e6, 1e6), (-50.0, -40.0, 0.0, 0.5),
+])
+@example(pts=ONE_X, raw_boxes=[
+    (3.0, 3.0, 2.0, 5.0), (-1.0, 2.5, 0.0, 0.0), (3.5, 9.0, 0.0, 9.0),
+])
 def test_find_box_sound_and_complete(spark, pts, raw_boxes):
     boxes = [
         (qid, min(a, b), max(a, b) + 0.5, min(c, d), max(c, d) + 0.5)
@@ -386,6 +408,13 @@ def test_find_box_sound_and_complete(spark, pts, raw_boxes):
         max_size=6,
     ),
 )
+# circles through points on cell edges ((3, 4) and (5, 0) at r = 5), a zero
+# radius, circles past the grid edge or wholly outside it
+@example(pts=ON_EDGES, circles=[
+    (0.0, 0.0, 5.0), (8.0, 8.0, 0.0), (16.0, 16.0, 1.0), (-3.0, 4.0, 3.0),
+    (100.0, 100.0, 50.0),
+])
+@example(pts=ONE_X, circles=[(0.0, 4.0, 3.0), (3.0, 2.0, 0.0), (-9.0, 0.0, 1.0)])
 def test_find_ball_sound_and_complete(spark, pts, circles):
     cdf = spark.createDataFrame(
         [(q, x, y, r) for q, (x, y, r) in enumerate(circles)],

@@ -62,3 +62,16 @@ def test_persisted_roots_follow_tempfile_tempdir(tmp_path, monkeypatch):
     monkeypatch.setattr(tempfile, "tempdir", str(other))
     assert q.pages_ck_root().startswith(str(other))
     assert str(other) in q.oracle_sql()["pages_knn"]
+
+
+def test_ann_recall_paths_follow_tempfile_tempdir(tmp_path, monkeypatch):
+    """The recall rows persist their approximate ids under the temp dir of
+    the moment, and their oracles read the same path."""
+    rows = {"ann_lsh_recall": "lsh", "ann_ivf_recall": "ivf", "ann_pq_recall": "pq"}
+    for root in (tmp_path, tmp_path / "other"):
+        monkeypatch.setattr(tempfile, "tempdir", str(root))
+        oracles = q.oracle_sql()
+        for name, kind in rows.items():
+            path = q.ann_ids_path(f"{kind}_topk_ids")
+            assert path == f"{root}/locus_spark_ann/{kind}_topk_ids"
+            assert f"read_parquet('{path}/*.parquet')" in oracles[name]
