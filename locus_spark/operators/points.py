@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from locus_spark.cells import GridSpec, grid_from_points
+from locus_spark.cells import GridSpec, grid_from_points, sql_double
 from locus_spark.functions.metrics import (
     sql_box_contains_point,
     sql_dist2_point_point,
@@ -68,14 +68,22 @@ def find_ball_join(
     at ``/root/reference/tests/kd_tests/strategies.py:71-90``; metric of
     ``locus/kd.py:53``).
 
-    Returns ``(qid, id, x, y, dist2)``.  Cell prefilter = circumscribed box.
+    Returns ``(qid, id, x, y, dist2)``.  Cell prefilter = circumscribed box,
+    widened by a float-fuzz margin: dist² is rounded, so a point up to a
+    few ULPs of r (or, through underflow, ~1e-162) outside the ball can
+    pass the exact predicate.
     """
     if grid is None:
         grid = grid_from_points(points)
     pts = points.selectExpr("*", f"{grid.cell_sql('x', 'y')} AS _cell")
+    h = (
+        f"(abs(r) + {sql_double(1e-9)} * (abs(r) + abs(x) + abs(y))"
+        f" + {sql_double(1e-150)})"
+    )
     qboxes = query_circles.selectExpr(
         "qid", "x AS _qx", "y AS _qy", "r AS _r",
-        "x - r AS _bmin_x", "x + r AS _bmax_x", "y - r AS _bmin_y", "y + r AS _bmax_y",
+        f"x - {h} AS _bmin_x", f"x + {h} AS _bmax_x",
+        f"y - {h} AS _bmin_y", f"y + {h} AS _bmax_y",
     )
     qcells = grid.explode_covering(
         qboxes, "_bmin_x", "_bmax_x", "_bmin_y", "_bmax_y", cell_name="_cell"

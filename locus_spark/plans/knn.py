@@ -58,7 +58,8 @@ exact because
 * every target within sqrt(_scap) of the probe has a covering cell whose
   rect lies within that distance (the point of the target nearest the
   probe lies in one of its covering cells; the rect test is shrunk by a
-  float-fuzz margin far above ULP scale and far below cell scale, and
+  float-fuzz margin far above the ULP scale of the grid and of the probe,
+  and far below cell scale unless the grid has a zero-extent axis, and
   edge cells, which also hold targets clipped in from outside the grid
   bbox, reach to infinity), so every target that can rank is evaluated,
   ties at the k-th distance included;
@@ -239,7 +240,7 @@ def _window_keys(
     )
 
 
-def _disc_cells(probes: DataFrame, grid: GridSpec, margin: float) -> DataFrame:
+def _disc_cells(probes: DataFrame, grid: GridSpec, scale: float) -> DataFrame:
     """(probe, cell) pairs for every cell whose rect lies within
     sqrt(_scap) of the probe's bbox — the distributed form of the
     reference's branch-and-bound prune (its ``kd.py:368`` and
@@ -247,7 +248,14 @@ def _disc_cells(probes: DataFrame, grid: GridSpec, margin: float) -> DataFrame:
     ever needs to look."""
     n = grid.n
     inf, neg_inf = sql_double(float("inf")), sql_double(float("-inf"))
-    mg = sql_double(margin)
+    # the float-fuzz margin follows the larger of the grid's magnitude and
+    # the probe's own (a probe far outside a small or zero-extent grid
+    # rounds its reach at its own ULP scale), plus 1e-150 for gaps whose
+    # square underflows to a dist² of 0
+    mg = (
+        f"({sql_double(1e-9)} * greatest({sql_double(scale)},"
+        f" abs(_sx0), abs(_sx1), abs(_sy0), abs(_sy1)) + {sql_double(1e-150)})"
+    )
     r = f"(sqrt(_scap) + {mg})"
     # a NaN reach (NaN coordinates, or inf - inf) spans the whole grid
     cx0 = grid.cell_x_sql(f"nanvl(_sx0 - {r}, {neg_inf})")
@@ -497,7 +505,6 @@ def generic_knn_join(
         abs(grid.min_x), abs(grid.max_x), abs(grid.min_y), abs(grid.max_y),
         grid.cell_w * grid.n, grid.cell_h * grid.n,
     )
-    margin = 1e-9 * scale
     levels = _levels(k, n_targets, grid.n)
     rows = n_probes * (2 * levels[0].h + 1) ** 2
     wide = rows > ANN_BROADCAST_MAX_ROWS
@@ -527,7 +534,7 @@ def generic_knn_join(
         f"'_p', named_struct({fields}))"
     )
     top = (
-        _build_side(_disc_cells(bounded, grid, margin), wide)
+        _build_side(_disc_cells(bounded, grid, scale), wide)
         .join(
             target_cells.selectExpr("*", f"{grid.pack_sql('_cx', '_cy')} AS _jc"),
             ["_jc"],

@@ -297,6 +297,29 @@ def test_knn_probe_and_targets_beyond_the_same_grid_edge(spark, monkeypatch):
     _assert_matches_brute(got, pts, probes, 3)
 
 
+@pytest.mark.parametrize("pts, probe", [
+    # both axes zero-extent: every target at (8.9e-16, 0), the probe at 1
+    ([(8.881784197001251e-16, 0.0)] * 2, (1.0, 0.0)),
+    # a zero-extent x axis, a ~1e-38 y extent and a probe 49 away: every
+    # dist² rounds to 2401, so the smallest id must win the tie
+    ([(-2.220446049250313e-16, -1.175494351e-38),
+      (-2.220446049250313e-16, 1.401298464324817e-45),
+      (-2.220446049250313e-16, -1.1754943508222875e-38)], (0.0, 49.0)),
+    # a gap of 1.9e-272 squares to a dist² of 0
+    ([(0.0, -1.9303192070038497e-272)] * 2, (0.0, 0.0)),
+])
+def test_knn_probe_far_from_a_degenerate_grid(spark, monkeypatch, pts, probe):
+    """Layouts a property test drew: the probe's disc reach rounds at the
+    probe's ULP scale, far above the grid's, or its gap to the targets
+    underflows, so a float-fuzz margin sized from the grid alone lets the
+    exact round prune the targets' cells."""
+    import locus_spark.plans.knn as knnplan
+
+    monkeypatch.setattr(knnplan, "CAP_SAMPLE_RATE", 2)
+    got = knn_join(_points_df(spark, pts), _probes_df(spark, [probe]), 1).collect()
+    _assert_matches_brute(got, pts, [probe], 1)
+
+
 small = st.floats(min_value=-50, max_value=50, allow_nan=False, allow_infinity=False)
 edge = st.integers(min_value=0, max_value=16).map(float)  # GRID16 cell edges
 GRID16 = GridSpec(0.0, 0.0, 16.0, 16.0, 4)
@@ -415,6 +438,8 @@ def test_find_box_sound_and_complete(spark, pts, raw_boxes):
     (100.0, 100.0, 50.0),
 ])
 @example(pts=ONE_X, circles=[(0.0, 4.0, 3.0), (3.0, 2.0, 0.0), (-9.0, 0.0, 1.0)])
+# outside the ball by 1.4e-45, but its dist² rounds to r² = 1
+@example(pts=[(0.0, 0.0), (1.401298464324817e-45, 0.0)], circles=[(-1.0, 0.0, 1.0)])
 def test_find_ball_sound_and_complete(spark, pts, circles):
     cdf = spark.createDataFrame(
         [(q, x, y, r) for q, (x, y, r) in enumerate(circles)],
