@@ -101,8 +101,8 @@ def connected_components(
     edge frame, both map-side combinable; no component is ever
     materialized on one task.  Small-star output is already a distinct,
     consistently-oriented (u > v) edge set, so the per-round fixpoint
-    gate is ONE scalar aggregate (count + order-free xxhash64 sum) over
-    the frame the round just materialized; only when the signature
+    gate is ONE scalar signature (count + order-free xxhash64 sum) observed
+    on the round's checkpoint job itself; only when the signature
     repeats does an exact one-sided subtract CONFIRM the fixpoint (hash
     equality alone is collision-probabilistic — the subtract runs once
     per call, not once per round).  ``max_rounds`` is a runaway backstop;
@@ -118,13 +118,15 @@ def connected_components(
     )
     prev_sig, prev_edges = None, None
     for _ in range(max_rounds):
-        edges = materialize(_small_star(_large_star(edges)))
-        row = edges.agg(
-            F.count("*").alias("c"),
-            # decimal accumulator: a LONG sum of 2^63-scale hashes
-            # overflows under ANSI mode
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-        ).first()
+        edges, row = materialize(
+            _small_star(_large_star(edges)),
+            [
+                F.count("*").alias("c"),
+                # decimal accumulator: a LONG sum of 2^63-scale hashes
+                # overflows under ANSI mode
+                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
+            ],
+        )
         sig = (row["c"], row["h"])
         if sig == prev_sig and edges.subtract(prev_edges).isEmpty():
             bidir = edges.union(

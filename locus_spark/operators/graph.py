@@ -29,9 +29,7 @@ Scale shape (the Pregel shuffle pattern):
 Determinism contract: a FIXED iteration count (default 10) keeps the result
 oracle-comparable; float contributions are summed in engine-dependent order,
 so callers compare at 6-decimal rounding (drift across 10 damped rounds is
-~1e-15 relative).  ``tol`` enables early termination (one extra max-delta
-aggregate per round) for production convergence runs where bit-for-bit
-reproducibility is not required.
+~1e-15 relative).
 
 Reference scope note: the locus reference (/root/reference/locus) has no
 graph surface; this is webtext functionality the build mandate adds beyond
@@ -139,7 +137,6 @@ def pagerank(
     n_nodes: int,
     damping: float = PR_DAMPING,
     iterations: int = PR_ITERATIONS,
-    tol: float | None = None,
     edges_are_weighted: bool = False,
     teleport_col: str | None = None,
     init_ranks: DataFrame | None = None,
@@ -159,9 +156,6 @@ def pagerank(
     columns ``src``/``dst``.  Vertices without OUT-links are not expected
     from ``derive_links`` (every doc emits ``n_links`` edges); true dangling
     mass redistribution is out of scope and documented here.
-
-    With ``tol`` set, iteration stops early once ``max_v |r_{t+1}-r_t|``
-    drops below it (costs one aggregate job per round).
 
     With ``edges_are_weighted`` the caller passes a (src, dst, w) frame
     directly — typically a ``prepare_edges_bucketed`` scan, which is left
@@ -200,19 +194,7 @@ def pagerank(
                 ).alias("r"),
             )
         )
-        stepped = materialize(stepped)
-        if tol is not None:
-            delta = (
-                stepped.withColumnRenamed("r", "_rn")
-                .join(ranks, "v")
-                .agg(F.max(F.abs(F.col("_rn") - F.col("r"))).alias("d"))
-                .first()["d"]
-            )
-            ranks = stepped
-            if delta is not None and delta < tol:
-                break
-        else:
-            ranks = stepped
+        ranks = materialize(stepped)
     return ranks.select("v", "r")
 
 
@@ -302,20 +284,26 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     )
 
 
+def _links_sql(n_links: int) -> str:
+    """DuckDB mirror of :func:`derive_links` over the oracles' ``nodes``
+    and ``nn`` CTEs: one md5-hashed SELECT per out-link, UNION ALL'd."""
+    return "\n  UNION ALL ".join(
+        f"SELECT v AS src, (('0x' || substr(md5('L{i}:' || CAST(v AS VARCHAR)), 1, 8))::BIGINT"
+        " % nn.ni) AS dst FROM nodes CROSS JOIN nn"
+        for i in range(n_links)
+    )
+
+
 def triangle_oracle_sql(n_links: int = PR_OUT_LINKS) -> str:
     """DuckDB mirror of ``triangle_stats`` over ``derive_links``: plain
     3-way join triangle enumeration on the canonical a<b edge set (every
     triangle appears exactly once as x<y<z), identical float-division +
     6-decimal rounding for the coefficient."""
-    link_selects = "\n  UNION ALL ".join(
-        f"SELECT v AS src, (('0x' || substr(md5('L{i}:' || CAST(v AS VARCHAR)), 1, 8))::BIGINT % nn.ni) AS dst FROM nodes CROSS JOIN nn"
-        for i in range(n_links)
-    )
     return f"""
 WITH nodes AS (SELECT doc_id AS v FROM documents),
 nn AS (SELECT count(*) AS ni FROM nodes),
 links AS (
-  {link_selects}
+  {_links_sql(n_links)}
 ),
 und AS (
   SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
@@ -361,14 +349,10 @@ def pagerank_oracle_sql(
     With ``seed_mod`` the unrolled iteration is the PERSONALIZED variant:
     teleport mass ``1/|S|`` on the seed set ``v % seed_mod == 0``, zero
     elsewhere (mirroring ``teleport_col``)."""
-    link_selects = "\n  UNION ALL ".join(
-        f"SELECT v AS src, (('0x' || substr(md5('L{i}:' || CAST(v AS VARCHAR)), 1, 8))::BIGINT % nn.ni) AS dst FROM nodes CROSS JOIN nn"
-        for i in range(n_links)
-    )
     ctes = [
         "nodes AS (SELECT doc_id AS v FROM documents)",
         "nn AS (SELECT CAST(count(*) AS DOUBLE) AS n, count(*) AS ni FROM nodes)",
-        f"links AS (\n  {link_selects}\n)",
+        f"links AS (\n  {_links_sql(n_links)}\n)",
         "outdeg AS (SELECT src, count(*) AS _od FROM links GROUP BY src)",
         "ew AS (SELECT links.src, links.dst, CAST(1.0 AS DOUBLE) / outdeg._od AS w"
         " FROM links JOIN outdeg USING (src))",
@@ -508,10 +492,6 @@ def hits_oracle_sql(
     """DuckDB SQL unrolling the exact L1-normalized HITS recurrence of
     :func:`hits` over ``derive_links`` (raw-double sums per round, single
     6-decimal rounding at the end)."""
-    link_selects = "\n  UNION ALL ".join(
-        f"SELECT v AS src, (('0x' || substr(md5('L{i}:' || CAST(v AS VARCHAR)), 1, 8))::BIGINT % nn.ni) AS dst FROM nodes CROSS JOIN nn"
-        for i in range(n_links)
-    )
     # every multiply-referenced CTE is MATERIALIZED: DuckDB otherwise
     # inlines each reference, and the sum-CTE + join double-reference per
     # half-round makes the expansion tree exponential in the round count
@@ -519,7 +499,7 @@ def hits_oracle_sql(
     ctes = [
         "nodes AS MATERIALIZED (SELECT doc_id AS v FROM documents)",
         "nn AS (SELECT count(*) AS ni FROM nodes)",
-        f"links AS MATERIALIZED (\n  {link_selects}\n)",
+        f"links AS MATERIALIZED (\n  {_links_sql(n_links)}\n)",
         "h0 AS (SELECT v, CAST(1.0 AS DOUBLE) AS h FROM nodes)",
     ]
     prev_h = "h0"
@@ -570,13 +550,6 @@ def pagerank_incremental_oracle_sql(
     fixpoint — the exact mirror of ``pagerank(init_ranks=...)`` after a
     delta of derived edges lands."""
 
-    def link_cte(name: str, n_links: int) -> str:
-        sels = "\n  UNION ALL ".join(
-            f"SELECT v AS src, (('0x' || substr(md5('L{i}:' || CAST(v AS VARCHAR)), 1, 8))::BIGINT % nn.ni) AS dst FROM nodes CROSS JOIN nn"
-            for i in range(n_links)
-        )
-        return f"{name} AS (\n  {sels}\n)"
-
     def weight_ctes(links: str, tag: str) -> list[str]:
         return [
             f"outdeg{tag} AS (SELECT src, count(*) AS _od FROM {links} GROUP BY src)",
@@ -600,8 +573,8 @@ def pagerank_incremental_oracle_sql(
     ctes = [
         "nodes AS (SELECT doc_id AS v FROM documents)",
         "nn AS (SELECT CAST(count(*) AS DOUBLE) AS n, count(*) AS ni FROM nodes)",
-        link_cte("linksa", base_links),
-        link_cte("linksb", base_links + delta_links),
+        f"linksa AS (\n  {_links_sql(base_links)}\n)",
+        f"linksb AS (\n  {_links_sql(base_links + delta_links)}\n)",
         *weight_ctes("linksa", "a"),
         *weight_ctes("linksb", "b"),
         "r0 AS (SELECT v, CAST(1.0 AS DOUBLE) / nn.n AS r FROM nodes CROSS JOIN nn)",

@@ -9,6 +9,12 @@ and functions/metrics.py), so floats agree bit-for-bit.
 
 from __future__ import annotations
 
+import ast
+import functools
+import hashlib
+import importlib.util
+import json
+import pathlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -42,6 +48,7 @@ from locus_spark.operators.segments import (
     segment_knn_to_point_join,
     segment_nearest_to_point_join,
 )
+from locus_spark.session import _PKG_PARENT
 from locus_spark.sources import derived
 
 #: grid resolution for sf-scale runs — 64x64 cells keeps covering explosions
@@ -70,128 +77,155 @@ def register(name: str, oracle: str | Callable[[], str] | None):
     return deco
 
 
-#: names hoisted to the FRONT of the exported registry order: the driver's
-#: correctness harness checks a bounded prefix of ``queries()``.  Rotation
-#: policy: the window holds (a) every row that reaches a module changed
-#: since its last hash-green check — the spatial family first, because the
-#: range predicates moved to ``functions/metrics.py`` templates and the
-#: double literals of ``cells.sql_double`` changed form: every range,
-#: persisted, incremental, tile and kNN/nearest row, ``pages_knn``,
-#: ``pages_geotile_lang`` and the ANN recall rows (their side-parquet path
-#: moved) — and (b) the rows that have been stale longest.  No row is left
-#: stale for more than two rotations.
-_CHECK_FIRST = [
-    "kd_find_box",
-    "kd_find_ball",
-    "kd_knn",
-    "kd_knn_auto",
-    "kd_nearest",
-    "kd_find_box_persisted",
-    "kd_knn_persisted",
-    "kd_find_box_incremental",
-    "kd_knn_incremental",
-    "kd_knn_upsert",
-    "r_find_subsets",
-    "r_find_subsets_persisted",
-    "r_find_supersets",
-    "r_overlaps",
-    "r_knn",
-    "r_nearest",
-    "seg_knn_to_point",
-    "seg_knn_persisted",
-    "seg_nearest_to_point",
-    "seg_knn",
-    "seg_nearest",
-    "pages_geotile_lang",
-    "pages_knn",
-    "pages_canonical_dedup",
-    "doc_hits",
-    "tile_point_counts",
-    "tile_pyramid",
-    "pip_polygons",
-    "raster_vector",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "doc_sample_stratified",
-    "doc_fingerprint",
-    "doc_token_stats",
-    "doc_quality",
-    "doc_top_quality",
-    "doc_passage_dedup",
-    "doc_host_cap",
-    "dedup_decontaminate",
-    "doc_repetition",
-    "doc_len_quantiles",
-    "doc_pack_sequences",
-    "pipeline_training_mix",
-    "doc_lang_id",
-    "ann_lsh_recall",
-    "ann_ivf_recall",
-    "ann_pq_recall",
-    "ann_cosine_topk",
-    "dedup_embedding_cosine",
-    "ann_lsh_top1_planted",
-    "ann_ivf_top1_planted",
-    "ann_ivf_top1_persisted",
-    "dedup_embedding_lsh",
-    "media_frame_sample",
-    "media_features",
-]
-
-#: names sunk to the TAIL: hash-green at their last check and reaching no
-#: module changed since — the safest rows to leave outside the bounded
-#: check window (they rotate back in by the policy above).
-_CHECK_LAST = [
-    "kd_dbscan",
-    "dedup_incremental",
-    "doc_span_dedup",
-    "dedup_incremental_minhash",
-    "dedup_clusters",
-    "ann_lsh_topk_planted",
-    "ann_ivf_topk_planted",
-    "ann_pq_top1_planted",
-    "ann_pq_top1_persisted",
-    "pages_extract_identity",
-    "pages_dbscan",
-    "pages_host_stats",
-    "events_dedup_replayed",
-    "events_sessionize",
-    "events_hourly",
-    "doc_join_bucketed",
-    "events_attribution",
-    "doc_distinct_hll",
-    "doc_quantile_sketch",
-    "doc_heavy_hitters",
-    "doc_search_and",
-    "doc_search_persisted",
-    "doc_search_bm25",
-    "doc_search_bm25_persisted",
-    "doc_search_phrase",
-    "events_trending_props",
-    "doc_pmi_collocations",
-    "doc_pagerank",
-    "doc_pagerank_personalized",
-    "doc_pagerank_incremental",
-    "doc_mix_temperature",
-    "doc_lm_score",
-    "doc_triangles",
-    "events_anomaly",
-    "events_funnel",
-    "events_retention",
-    "events_asof_view",
-    "doc_jsonl_ingest",
-    "doc_rollup_lang_source",
-    "doc_set_ops",
-]
+#: the committed check runs: ``ORACLE_*.json`` (``tools/check_oracle.py
+#: --json``) and the correctness harness's ``CORRECTNESS_rNN.json`` rounds.
+#: Under a ``--py-files`` zip this is the zip itself, which holds none.
+_ARTIFACTS = pathlib.Path(_PKG_PARENT)
 
 
 def _ordered_names() -> list[str]:
-    front = [n for n in _CHECK_FIRST if n in _REGISTRY]
-    back = [n for n in _CHECK_LAST if n in _REGISTRY]
-    mid = [n for n in _REGISTRY if n not in set(front) | set(back)]
-    return front + mid + back
+    """Registry names in check-window order (the correctness harness checks
+    a bounded prefix of ``queries()``): first the rows no committed
+    ``ORACLE_*.json`` run passed at their current :func:`closure_hash`, then
+    the rows the harness's rounds checked least recently (never checked
+    first); ties keep registry order.  With no artifacts this is registry
+    order, and no hash is computed."""
+    vouched = {
+        (row["name"], row["closure"])
+        for path in _ARTIFACTS.glob("ORACLE_*.json")
+        for row in json.loads(path.read_text())["queries"]
+        if row["status"] == "pass" and "closure" in row
+    }
+    last_round: dict[str, int] = {}
+    for path in _ARTIFACTS.glob("CORRECTNESS_r*.json"):
+        for name in json.loads(path.read_text()):
+            rnd = int(path.stem.removeprefix("CORRECTNESS_r"))
+            last_round[name] = max(last_round.get(name, -1), rnd)
+    hashes = _closure_hashes(list(_REGISTRY)) if vouched else {}
+    return sorted(
+        _REGISTRY,
+        key=lambda n: ((n, hashes.get(n)) in vouched, last_round.get(n, -1)),
+    )
+
+
+def _module_source(module: str) -> str:
+    """Source text of a ``locus_spark`` module: the one reader the closure
+    hash reads code through."""
+    return importlib.util.find_spec(module).loader.get_source(module)
+
+
+@functools.cache
+def _is_module(name: str) -> bool:
+    try:
+        return importlib.util.find_spec(name) is not None
+    except ModuleNotFoundError:  # a name inside a module
+        return False
+
+
+def _imports(tree: ast.AST) -> frozenset[str]:
+    """The ``locus_spark`` modules (but this one) imported anywhere in
+    ``tree``, function-local imports included (the package imports by
+    absolute name only)."""
+    found = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            found.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module
+            found.update(
+                f"{base}.{a.name}" if _is_module(f"{base}.{a.name}") else base
+                for a in node.names
+            )
+    return frozenset(
+        m for m in found if m.split(".")[0] == "locus_spark" and m != __name__
+    )
+
+
+@functools.cache
+def _module_imports(text: str) -> frozenset[str]:
+    return _imports(ast.parse(text))
+
+
+@functools.cache
+def _statements(text: str) -> tuple[dict[str, list[int]], list[tuple]]:
+    """This module's top-level statements, from its source ``text``: the
+    statements defining each name, and per statement its source (with
+    decorators), the names it reads and the modules it imports."""
+    lines = text.splitlines(keepends=True)
+    defs: dict[str, list[int]] = {}
+    stmts = []
+    for i, node in enumerate(ast.parse(text).body):
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            defined = {node.name}
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            defined = {(a.asname or a.name).split(".")[0] for a in node.names}
+        else:
+            targets = getattr(node, "targets", [getattr(node, "target", None)])
+            defined = {n.id for t in targets if t for n in ast.walk(t)
+                       if isinstance(n, ast.Name)}
+        for name in defined:
+            defs.setdefault(name, []).append(i)
+        first = min([node.lineno] + [d.lineno for d in getattr(node, "decorator_list", [])])
+        stmts.append((
+            "".join(lines[first - 1:node.end_lineno]),
+            {n.id for n in ast.walk(node) if isinstance(n, ast.Name)},
+            _imports(node),
+        ))
+    return defs, stmts
+
+
+def closure_hash(name: str) -> str:
+    """sha256 over everything registry row ``name``'s answer depends on
+    (see :func:`_closure_inputs`)."""
+    return _closure_hashes([name])[name]
+
+
+def _closure_hashes(names: list[str]) -> dict[str, str]:
+    return {
+        name: hashlib.sha256(json.dumps(inputs, sort_keys=True).encode()).hexdigest()
+        for name, inputs in _closure_inputs(names).items()
+    }
+
+
+def _closure_inputs(names: list[str]) -> dict[str, dict]:
+    """Per row: the source of every top-level statement of this module it
+    reaches from its query function (its ``@register`` line names the
+    oracle, so oracle templates, oracle callables, helpers and constants
+    follow by the names each statement reads), and the source digest of
+    every other ``locus_spark`` module in the transitive import closure of
+    those statements (imports found with ``ast``, function-local ones
+    too).  This module is hashed per statement, not as one file, so an
+    edit here moves only the rows that reach it."""
+    defs, stmts = _statements(_module_source(__name__))
+    modules: dict[str, tuple[str, frozenset[str]]] = {}  # read once per call
+    out = {}
+    for name in names:
+        reached, todo, roots = set(), list(defs[_REGISTRY[name][0].__name__]), set()
+        while todo:
+            i = todo.pop()
+            if i not in reached:
+                reached.add(i)
+                _, reads, imports = stmts[i]
+                roots |= imports
+                todo += [j for ref in reads for j in defs.get(ref, ())]
+        digests: dict[str, str] = {}
+        todo = sorted(roots)
+        while todo:
+            module = todo.pop()
+            if module not in modules:
+                text = _module_source(module)
+                modules[module] = (
+                    hashlib.sha256(text.encode()).hexdigest(),
+                    _module_imports(text),
+                )
+            if module not in digests:
+                digests[module] = modules[module][0]
+                todo += sorted(modules[module][1])
+        out[name] = {
+            "statements": sorted(stmts[i][0] for i in reached),
+            "modules": digests,
+        }
+    return out
 
 
 def queries() -> dict[str, QueryFn]:
@@ -1677,23 +1711,36 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ANN_K = 5
-_LDP = "list_dot_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"
-_COS_SQL = (
-    f"{_LDP.format(a='e.embedding', b='q.qv')}"
-    f" / (sqrt({_LDP.format(a='e.embedding', b='e.embedding')})"
-    f" * sqrt({_LDP.format(a='q.qv', b='q.qv')}))"
-)
 
-_ANN_ORACLE = f"""
+
+def _cos_sql(a: str, b: str) -> str:
+    """DuckDB cosine similarity of two embedding columns."""
+    def dot(x: str, y: str) -> str:
+        return f"list_dot_product(CAST({x} AS DOUBLE[]), CAST({y} AS DOUBLE[]))"
+
+    return f"{dot(a, b)} / (sqrt({dot(a, a)}) * sqrt({dot(b, b)}))"
+
+
+def _probes(emb: DataFrame, where: str) -> DataFrame:
+    """(qid, qvec) probe frame: the ``where`` rows of an embedding frame."""
+    return emb.filter(where).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+    )
+
+
+#: exact cosine ranking of the first 10 embeddings against the corpus
+_ANN_RANKED = f"""
 WITH q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 10),
 cand AS (
-  SELECT q.qid AS qid, e.vec_id AS vec_id, {_COS_SQL} AS cos
+  SELECT q.qid AS qid, e.vec_id AS vec_id, {_cos_sql('e.embedding', 'q.qv')} AS cos
   FROM embeddings e CROSS JOIN q
   WHERE e.vec_id <> q.qid
 ), ranked AS (
   SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rn
   FROM cand
-)
+)"""
+
+_ANN_ORACLE = f"""{_ANN_RANKED}
 SELECT qid, vec_id, cos, rn FROM ranked WHERE rn <= {ANN_K}
 """
 
@@ -1703,9 +1750,7 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact brute-force cosine top-k (baseline for the LSH scale path)."""
     derived.register_base_tables(spark, sf_dir)
     emb = spark.table("embeddings")
-    probes = emb.filter("vec_id < 10").select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
+    probes = _probes(emb, "vec_id < 10")
     return cosine_topk(emb, probes, ANN_K)
 
 
@@ -1732,16 +1777,7 @@ def _ann_recall_oracle(name: str) -> Callable[[], str]:
     intersection, and the recall arithmetic — and the measured recall itself
     becomes a hash-checked artifact instead of a pytest-only claim.
     Rendered by :func:`oracle_sql`, so it reads the path the query wrote."""
-    return lambda: f"""
-WITH q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 10),
-cand AS (
-  SELECT q.qid AS qid, e.vec_id AS vec_id, {_COS_SQL} AS cos
-  FROM embeddings e CROSS JOIN q
-  WHERE e.vec_id <> q.qid
-), ranked AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rn
-  FROM cand
-), exact AS (
+    return lambda: f"""{_ANN_RANKED}, exact AS (
   SELECT qid, vec_id FROM ranked WHERE rn <= {ANN_K}
 ), apx AS (
   SELECT qid, vec_id FROM read_parquet('{ann_ids_path(name)}/*.parquet')
@@ -1779,26 +1815,18 @@ def q_ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor is additionally pytest-asserted (tests/test_pipeline_ops.py)."""
     derived.register_base_tables(spark, sf_dir)
     emb = spark.table("embeddings")
-    probes = emb.filter("vec_id < 10").select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
+    probes = _probes(emb, "vec_id < 10")
     approx = lsh_topk(emb, probes, ANN_K, n_planes=6, n_tables=8)
     exact = cosine_topk(emb, probes, ANN_K)
     return _recall_vs_exact(spark, approx, exact, "lsh_topk_ids")
 
 
-_EMB_LDP = "list_dot_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"
-_EMB_COS = (
-    f"{_EMB_LDP.format(a='a.embedding', b='b.embedding')}"
-    f" / (sqrt({_EMB_LDP.format(a='a.embedding', b='a.embedding')})"
-    f" * sqrt({_EMB_LDP.format(a='b.embedding', b='b.embedding')}))"
-)
 EMB_DUP_THRESHOLD = 0.35  # testdata embeddings have no planted dups (max cos ~0.51)
 
 _EMB_DUP_ORACLE = f"""
-SELECT a.vec_id AS id_a, b.vec_id AS id_b, {_EMB_COS} AS cos
+SELECT a.vec_id AS id_a, b.vec_id AS id_b, {_cos_sql('a.embedding', 'b.embedding')} AS cos
 FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-WHERE {_EMB_COS} >= {EMB_DUP_THRESHOLD}
+WHERE {_cos_sql('a.embedding', 'b.embedding')} >= {EMB_DUP_THRESHOLD}
 """
 
 
@@ -1852,9 +1880,28 @@ FROM embeddings WHERE vec_id % 20 = 0
 
 _EMB_LSH_ORACLE = f"""
 WITH aug AS ({_EMB_AUG_DUCK})
-SELECT a.vec_id AS id_a, b.vec_id AS id_b, {_EMB_COS} AS cos
+SELECT a.vec_id AS id_a, b.vec_id AS id_b, {_cos_sql('a.embedding', 'b.embedding')} AS cos
 FROM aug a JOIN aug b ON a.vec_id < b.vec_id
-WHERE {_EMB_COS} >= {EMB_LSH_THRESHOLD}
+WHERE {_cos_sql('a.embedding', 'b.embedding')} >= {EMB_LSH_THRESHOLD}
+"""
+
+
+def _planted_topk_oracle(aug: str, k: int) -> str:
+    """Exact cosine top-``k`` of the planted originals over the augmented
+    corpus ``aug`` (DuckDB SQL)."""
+    return f"""
+WITH aug AS ({aug})
+, q AS (SELECT vec_id AS qid, embedding AS qv FROM aug
+        WHERE vec_id % 20 = 0 AND vec_id < 200)
+, cand AS (
+  SELECT q.qid AS qid, a.vec_id AS vec_id, {_cos_sql('a.embedding', 'q.qv')} AS cos
+  FROM aug a CROSS JOIN q
+  WHERE a.vec_id <> q.qid
+), ranked AS (
+  SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rn
+  FROM cand
+)
+SELECT qid, vec_id, cos, rn FROM ranked WHERE rn <= {k}
 """
 
 
@@ -1863,27 +1910,7 @@ WHERE {_EMB_COS} >= {EMB_LSH_THRESHOLD}
 # in the SAME sign bucket of every LSH table, so the approximate path is
 # provably exact at k=1 here — giving the LSH ANN operator a full-equality
 # oracle row (its general top-k recall is pytest-asserted instead).
-_LDP_A = "list_dot_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"
-_COS_AQ = (
-    f"{_LDP_A.format(a='a.embedding', b='q.qv')}"
-    f" / (sqrt({_LDP_A.format(a='a.embedding', b='a.embedding')})"
-    f" * sqrt({_LDP_A.format(a='q.qv', b='q.qv')}))"
-)
-
-_ANN_LSH_PLANTED_ORACLE = f"""
-WITH aug AS ({_EMB_AUG_DUCK})
-, q AS (SELECT vec_id AS qid, embedding AS qv FROM aug
-        WHERE vec_id % 20 = 0 AND vec_id < 200)
-, cand AS (
-  SELECT q.qid AS qid, a.vec_id AS vec_id, {_COS_AQ} AS cos
-  FROM aug a CROSS JOIN q
-  WHERE a.vec_id <> q.qid
-), ranked AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rn
-  FROM cand
-)
-SELECT qid, vec_id, cos, rn FROM ranked WHERE rn <= 1
-"""
+_ANN_LSH_PLANTED_ORACLE = _planted_topk_oracle(_EMB_AUG_DUCK, 1)
 
 
 @register("ann_lsh_top1_planted", _ANN_LSH_PLANTED_ORACLE)
@@ -1895,9 +1922,7 @@ def q_ann_lsh_top1_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     aug = spark.sql(_EMB_AUG_SPARK)
     # only planted originals probe — each has a scaled copy in the corpus,
     # which every LSH table is guaranteed to bucket with it
-    probes = aug.filter("vec_id % 20 = 0 AND vec_id < 200").select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
+    probes = _probes(aug, "vec_id % 20 = 0 AND vec_id < 200")
     return lsh_topk(aug, probes, 1, n_planes=6, n_tables=8)
 
 
@@ -1926,20 +1951,7 @@ FROM embeddings WHERE vec_id % 20 = 0"""
 
 _EMB_AUG3_DUCK = _EMB_AUG3_SPARK.replace("transform(", "list_transform(")
 
-_ANN_PLANTED_TOPK_ORACLE = f"""
-WITH aug AS ({_EMB_AUG3_DUCK})
-, q AS (SELECT vec_id AS qid, embedding AS qv FROM aug
-        WHERE vec_id % 20 = 0 AND vec_id < 200)
-, cand AS (
-  SELECT q.qid AS qid, a.vec_id AS vec_id, {_COS_AQ} AS cos
-  FROM aug a CROSS JOIN q
-  WHERE a.vec_id <> q.qid
-), ranked AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rn
-  FROM cand
-)
-SELECT qid, vec_id, cos, rn FROM ranked WHERE rn <= {ANN_PLANTED_K}
-"""
+_ANN_PLANTED_TOPK_ORACLE = _planted_topk_oracle(_EMB_AUG3_DUCK, ANN_PLANTED_K)
 
 
 @register("ann_lsh_topk_planted", _ANN_PLANTED_TOPK_ORACLE)
@@ -1952,9 +1964,7 @@ def q_ann_lsh_topk_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking code the general top-k runs."""
     derived.register_base_tables(spark, sf_dir)
     aug = spark.sql(_EMB_AUG3_SPARK)
-    probes = aug.filter("vec_id % 20 = 0 AND vec_id < 200").select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
+    probes = _probes(aug, "vec_id % 20 = 0 AND vec_id < 200")
     return lsh_topk(aug, probes, ANN_PLANTED_K, n_planes=6, n_tables=8)
 
 
@@ -1967,9 +1977,7 @@ def q_ann_ivf_topk_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     derived.register_base_tables(spark, sf_dir)
     aug = spark.sql(_EMB_AUG3_SPARK)
-    probes = aug.filter("vec_id % 20 = 0 AND vec_id < 200").select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
+    probes = _probes(aug, "vec_id % 20 = 0 AND vec_id < 200")
     cents = _ivf_centroids(spark, sf_dir, "planted3", aug)
     return ivf_topk(aug, probes, ANN_PLANTED_K, n_probe=4, centroids=cents)
 
@@ -2002,9 +2010,7 @@ def q_ann_ivf_top1_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     derived.register_base_tables(spark, sf_dir)
     aug = spark.sql(_EMB_AUG_SPARK)
-    probes = aug.filter("vec_id % 20 = 0 AND vec_id < 200").select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
+    probes = _probes(aug, "vec_id % 20 = 0 AND vec_id < 200")
     cents = _ivf_centroids(spark, sf_dir, "planted", aug)
     return ivf_topk(aug, probes, 1, n_probe=4, centroids=cents)
 
@@ -2019,9 +2025,7 @@ def q_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     derived.register_base_tables(spark, sf_dir)
     emb = spark.table("embeddings")
-    probes = emb.filter("vec_id < 10").select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
+    probes = _probes(emb, "vec_id < 10")
     cents = _ivf_centroids(spark, sf_dir, "raw", emb)
     approx = ivf_topk(emb, probes, ANN_K, n_probe=4, centroids=cents)
     exact = cosine_topk(emb, probes, ANN_K)
@@ -2075,9 +2079,7 @@ def q_ann_ivf_top1_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     derived.register_base_tables(spark, sf_dir)
     layout, cents = _persisted_ivf_layout(spark, sf_dir)
     aug = spark.sql(_EMB_AUG_SPARK)
-    probes = aug.filter("vec_id % 20 = 0 AND vec_id < 200").select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
+    probes = _probes(aug, "vec_id % 20 = 0 AND vec_id < 200")
     pr = probe_cluster_ids(probes, cents, n_probe=4)
     cids = sorted(r["_cid"] for r in pr.select("_cid").distinct().collect())
     corpus = layout.filter(F.col("_cid").isin(cids))
@@ -2133,9 +2135,7 @@ def q_ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     derived.register_base_tables(spark, sf_dir)
     emb = spark.table("embeddings")
-    probes = emb.filter("vec_id < 10").select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
+    probes = _probes(emb, "vec_id < 10")
     cents = _ivf_centroids(spark, sf_dir, "raw", emb)
     books = _pq_codebooks(spark, sf_dir)
     approx = ivf_pq_topk(
@@ -2157,20 +2157,9 @@ SELECT vec_id + 10000000 AS vec_id,
 FROM embeddings WHERE vec_id % 20 = 0
 """
 
-_ANN_PQ_PLANTED_ORACLE = f"""
-WITH aug AS ({_EMB_AUG1_SPARK.replace("transform(", "list_transform(")})
-, q AS (SELECT vec_id AS qid, embedding AS qv FROM aug
-        WHERE vec_id % 20 = 0 AND vec_id < 200)
-, cand AS (
-  SELECT q.qid AS qid, a.vec_id AS vec_id, {_COS_AQ} AS cos
-  FROM aug a CROSS JOIN q
-  WHERE a.vec_id <> q.qid
-), ranked AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rn
-  FROM cand
+_ANN_PQ_PLANTED_ORACLE = _planted_topk_oracle(
+    _EMB_AUG1_SPARK.replace("transform(", "list_transform("), 1
 )
-SELECT qid, vec_id, cos, rn FROM ranked WHERE rn <= 1
-"""
 
 
 @register("ann_pq_top1_planted", _ANN_PQ_PLANTED_ORACLE)
@@ -2187,9 +2176,7 @@ def q_ann_pq_top1_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     derived.register_base_tables(spark, sf_dir)
     aug = spark.sql(_EMB_AUG1_SPARK)
-    probes = aug.filter("vec_id % 20 = 0 AND vec_id < 200").select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
+    probes = _probes(aug, "vec_id % 20 = 0 AND vec_id < 200")
     cents = _ivf_centroids(spark, sf_dir, "raw", spark.table("embeddings"))
     books = _pq_codebooks(spark, sf_dir)
     return ivf_pq_topk(
@@ -2253,9 +2240,7 @@ def q_ann_pq_top1_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     derived.register_base_tables(spark, sf_dir)
     layout, cents, books = _persisted_pq_layout(spark, sf_dir)
     aug = spark.sql(_EMB_AUG1_SPARK)
-    probes = aug.filter("vec_id % 20 = 0 AND vec_id < 200").select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
+    probes = _probes(aug, "vec_id % 20 = 0 AND vec_id < 200")
     pr = probe_cluster_ids(probes, cents, n_probe=4)
     cids = sorted(r["_cid"] for r in pr.select("_cid").distinct().collect())
     corpus = layout.filter(F.col("_cid").isin(cids))

@@ -42,16 +42,11 @@ def test_pagerank_matches_numpy_power_iteration(spark):
     assert got[4] == (1.0 - d) / n
 
 
-def test_pagerank_mass_conserved_and_tol_early_exit(spark):
+def test_pagerank_mass_conserved(spark):
     nodes, edges, _ = _graph(spark)
-    out = pagerank(nodes, edges, 5, iterations=30, tol=1e-9)
+    out = pagerank(nodes, edges, 5, iterations=30)
     total = out.agg(F.sum("r").alias("s")).first()["s"]
     assert abs(total - 1.0) < 1e-9  # no dangling nodes -> mass conserved
-    # converged ranks are a fixpoint: one more round changes nothing material
-    again = pagerank(nodes, edges, 5, iterations=40, tol=1e-9)
-    a = {r["v"]: r["r"] for r in out.collect()}
-    b = {r["v"]: r["r"] for r in again.collect()}
-    assert all(abs(a[v] - b[v]) < 1e-8 for v in a)
 
 
 def test_derive_links_shape_and_determinism(spark):

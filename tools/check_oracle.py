@@ -8,7 +8,11 @@ Usage: python tools/check_oracle.py [--json OUT] [sf_dir] [query ...]
 ``--json OUT`` also writes the run as JSON: the git sha (and whether the
 tree had uncommitted changes), the sf dir, and per query its status
 (``pass``, ``fail`` or ``rows-only``), Spark row count, Spark and DuckDB
-seconds, and any mismatch details.
+seconds, any mismatch details, and its ``closure``: the
+``locus_spark.queries.closure_hash`` of the code and oracle it ran.  A
+passing row vouches for that hash when the run is committed as
+``ORACLE_*.json``, which is what orders ``queries()`` for the correctness
+harness's bounded check window.
 """
 
 from __future__ import annotations
@@ -28,6 +32,7 @@ REPO = pathlib.Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 import __spark_entry__ as entrymod  # noqa: E402
+from locus_spark.queries import closure_hash  # noqa: E402
 from locus_spark.session import get_spark  # noqa: E402
 from locus_spark.sources.derived import TABLES  # noqa: E402
 
@@ -95,7 +100,8 @@ def main() -> int:
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        row = {"name": name, "status": "fail", "rows": None,
+        row = {"name": name, "closure": closure_hash(name),
+               "status": "fail", "rows": None,
                "spark_s": None, "duckdb_s": None, "problems": []}
         results.append(row)
         t0 = time.perf_counter()
