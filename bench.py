@@ -111,7 +111,7 @@ CLEARS_CACHE = {
 #: them via the persistent-RDD registry once the result is consumed, so
 #: accumulated round state doesn't pressure later queries' memory.
 RING_STATE = {
-    "dedup_clusters",  # label-propagation rounds localCheckpoint their state
+    "dedup_clusters",  # star-contraction rounds materialize their edges
     "tile_pyramid",    # result materialized via localCheckpoint (levels self-release)
     "kd_nearest",
     "kd_knn",

@@ -40,17 +40,12 @@ def _large_star(edges: DataFrame) -> DataFrame:
     its STRICTLY-LARGER neighbors to the minimum of its closed
     neighborhood.  One min-aggregate + one equi-join, both map-side
     combinable / key-partitioned."""
-    bidir = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    mins = (
-        bidir.groupBy("u")
-        .agg(F.min("v").alias("_mn"))
-        .select("u", F.least("u", "_mn").alias("_m"))
-    )
+    bidir = edges.union(edges.selectExpr("v AS u", "u AS v"))
+    mins = bidir.groupBy("u").agg(F.expr("least(u, min(v)) AS _m"))
     return (
         bidir.join(mins, "u")
-        .where(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("u"), F.col("_m").alias("v"))
-        .where(F.col("u") != F.col("v"))
+        .where("v > u AND v <> _m")
+        .selectExpr("v AS u", "_m AS v")
         .distinct()
     )
 
@@ -59,18 +54,14 @@ def _small_star(edges: DataFrame) -> DataFrame:
     """One small-star phase: orient every edge large→small, then every
     node connects its smaller neighbors (and itself) to the minimum of
     that set."""
-    dire = edges.select(
-        F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-    ).distinct()
-    mins = dire.groupBy("u").agg(F.min("v").alias("_mn"))
-    out = (
-        dire.join(mins, "u")
-        .select(F.col("v").alias("a"), F.col("_mn").alias("b"))
-        .union(mins.select(F.col("u").alias("a"), F.col("_mn").alias("b")))
-    )
+    dire = edges.selectExpr("greatest(u, v) AS u", "least(u, v) AS v").distinct()
+    mins = dire.groupBy("u").agg(F.expr("min(v) AS _mn"))
     return (
-        out.where(F.col("a") != F.col("b"))
-        .select(F.col("a").alias("u"), F.col("b").alias("v"))
+        dire.join(mins, "u")
+        .selectExpr("v AS a", "_mn AS b")
+        .union(mins.selectExpr("u AS a", "_mn AS b"))
+        .where("a <> b")
+        .selectExpr("a AS u", "b AS v")
         .distinct()
     )
 

@@ -15,17 +15,102 @@ standard large-scale dedup family expressed Spark-first:
                    whole-stage-codegen'd; near-dup = fingerprints at small
                    Hamming distance, found by banding into 4 × 16-bit keys.
 
+Every hash kernel — SimHash's votes, fingerprint, band key and Hamming
+distance, MinHash's permutations and band keys — is written once, as SQL
+text (the ``sql_*`` functions below).  Spark parses that text
+(``selectExpr`` / ``F.expr``: one py4j call per expression instead of one
+per Column node), and the DuckDB oracles in :mod:`locus_spark.queries`
+render the same text.  Two steps are spelled per engine, in
+:data:`SPARK_SQL` and :data:`DUCKDB`: tokenization and parsing an md5 half.
+(``spark.sql`` with DataFrame arguments would parse a whole step at once,
+but it registers each argument as a temp view and drops the view
+afterwards, and dropping a temp view uncaches every cached frame with the
+same plan.)
+
 Tokenization contract (shared with the DuckDB oracles): split on single
 spaces, drop empty tokens, 1-indexed element access.
 """
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DEFAULT_BANDS = 8
 SHINGLE = 3
+
+
+class Dialect(NamedTuple):
+    """The two kernel steps that Spark SQL and DuckDB spell differently, as
+    ``str.format`` templates over one SQL argument."""
+
+    #: a text's distinct non-empty space-split tokens, one row each
+    tokens: str
+    #: 8 hex digits (an md5 half) as a non-negative BIGINT
+    hex_bigint: str
+
+    def token_hash(self) -> list[str]:
+        """(hi, lo) of a token ``tok``: the first 16 hex digits of its md5 as
+        two non-negative 32-bit halves, so every SimHash step is plain BIGINT
+        arithmetic and both engines agree bit for bit."""
+        return [
+            f"{self.hex_bigint.format(f'substr(md5(tok), {i}, 8)')} AS {half}"
+            for i, half in ((1, "hi"), (9, "lo"))
+        ]
+
+
+SPARK_SQL = Dialect(
+    tokens="explode(array_distinct(filter(split({}, ' '), t -> t <> '')))",
+    hex_bigint="CAST(conv({}, 16, 10) AS BIGINT)",
+)
+DUCKDB = Dialect(
+    tokens="unnest(list_distinct(list_filter(string_split({}, ' '), t -> t <> '')))",
+    hex_bigint="('0x' || {})::BIGINT",
+)
+
+
+def sql_simhash_vote(j: int) -> str:
+    """SimHash's vote on bit j over token-hash rows (hi, lo): +1 for each
+    token whose hash has bit j set, -1 for each other token (hi holds bits
+    32..63, lo bits 0..31)."""
+    return f"sum(CASE WHEN (({'hi' if j >= 32 else 'lo'} >> {j % 32}) & 1) = 1 THEN 1 ELSE -1 END)"
+
+
+def sql_simhash_fp() -> str:
+    """The 64-bit fingerprint aggregate: bit j is set where its vote is
+    positive.  The terms hold disjoint bits, so the sum cannot overflow; bit
+    63 is the sign bit."""
+    return "\n  + ".join(
+        f"CASE WHEN {sql_simhash_vote(j)} > 0"
+        f" THEN CAST({1 << j if j < 63 else -(1 << 63)} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
+        for j in range(64)
+    )
+
+
+def sql_band_key(fp: str, b: str) -> str:
+    """Band ``b`` (0..3) of the fingerprint ``fp``: its b-th 16-bit slice."""
+    return f"({fp} >> (16 * {b})) & 65535"
+
+
+def sql_hamming(a: str, b: str) -> str:
+    """Hamming distance of two 64-bit fingerprints.  ``(a | b) - (a & b)``
+    equals ``a XOR b`` bit for bit and cannot overflow, because the bits of
+    ``a & b`` are a subset of those of ``a | b``; DuckDB reads ``^`` as
+    power, so XOR has no common spelling."""
+    return f"bit_count(({a} | {b}) - ({a} & {b}))"
+
+
+def sql_minhash_perm(p: int) -> str:
+    """Permutation p's minhash of a doc's ``shingle`` rows: the permutation
+    orders shingles by ``md5('p|' || shingle)``, so its min is a minhash."""
+    return f"min(md5('{p}|' || shingle))"
+
+
+def sql_minhash_band_key(b: int, rows_per_band: int) -> str:
+    """Band b's key over the minhash columns ``_m{p}``: its
+    ``rows_per_band`` minhashes, concatenated."""
+    return " || ".join(f"_m{b * rows_per_band + i}" for i in range(rows_per_band))
 
 
 def exact_dedup(documents: DataFrame) -> DataFrame:
@@ -61,6 +146,54 @@ def _doc_shingles(documents: DataFrame, shingle: int = SHINGLE) -> DataFrame:
     return sh.distinct()
 
 
+def _text_reps(documents: DataFrame) -> DataFrame:
+    """One representative per distinct text: (_fp, doc_id, text), with _fp
+    the text's md5 and doc_id the smallest id carrying that text."""
+    return (
+        documents.selectExpr("md5(text) AS _fp", "doc_id", "text")
+        .groupBy("_fp")
+        .agg(F.expr("min(doc_id) AS doc_id"), F.expr("min_by(text, doc_id) AS text"))
+    )
+
+
+def _expand_rep_pairs(
+    members: DataFrame,
+    reps: DataFrame,
+    rep_pairs: DataFrame,
+    value: str,
+    within: str,
+    shingled: DataFrame | None = None,
+) -> DataFrame:
+    """Member pairs (id_a, id_b, <value>), id_a < id_b, from the pairs
+    ``rep_pairs`` (id_a, id_b, <value>) between group representatives.
+
+    ``members`` (_fp, doc_id) puts every doc in its group and ``reps``
+    (_fp, doc_id) names each group's representative.  Every member-of-A ×
+    member-of-B pair has the same content as its representatives, hence the
+    same value; every two members of one group are exact duplicates and get
+    the SQL text ``within``.  With ``shingled`` given, only the groups whose
+    representative has a row there pair within: a text too short to shingle
+    has no band, so it is never a candidate."""
+    cross = (
+        rep_pairs.join(reps.selectExpr("doc_id AS id_a", "_fp AS _fp_a"), "id_a")
+        .join(reps.selectExpr("doc_id AS id_b", "_fp AS _fp_b"), "id_b")
+        .join(members.selectExpr("_fp AS _fp_a", "doc_id AS _da"), "_fp_a")
+        .join(members.selectExpr("_fp AS _fp_b", "doc_id AS _db"), "_fp_b")
+        .selectExpr("least(_da, _db) AS id_a", "greatest(_da, _db) AS id_b", value)
+    )
+    within_pairs = (
+        members.selectExpr("_fp", "doc_id AS id_a")
+        .join(members.selectExpr("_fp", "doc_id AS id_b"), "_fp")
+        .where("id_a < id_b")
+    )
+    if shingled is not None:
+        kept = reps.join(shingled.select("doc_id").distinct(), "doc_id").select("_fp")
+        within_pairs = within_pairs.join(kept, "_fp", "left_semi")
+    return cross.unionByName(
+        within_pairs.selectExpr("id_a", "id_b", f"{within} AS {value}")
+    )
+
+
 def band_signatures(
     sh: DataFrame, bands: int = 4, rows_per_band: int = 2
 ) -> DataFrame:
@@ -68,39 +201,17 @@ def band_signatures(
     MinHash kernel of :func:`minhash_lsh_pairs` and the incremental probe.
 
     All ``bands * rows_per_band`` minhashes in ONE groupBy over the shingle
-    rows: permutation p's minhash is ``min(md5("p|" || shingle))``, one
-    map-side-combinable MIN aggregate per p.  (Replicating every shingle row
-    n_perms times through a join with ``range(n_perms)`` before aggregating
-    does the same md5 work over an n_perms× larger pre-aggregation stream.)
-    Band keys are then a tiny per-doc explode of the aggregated row."""
-    n_perms = bands * rows_per_band
-    mins = sh.groupBy("doc_id").agg(
-        *[
-            F.min(
-                F.md5(F.concat(F.lit(f"{p}|"), F.col("shingle")))
-            ).alias(f"_m{p}")
-            for p in range(n_perms)
-        ]
+    rows: one map-side-combinable MIN aggregate per permutation
+    (:func:`sql_minhash_perm`).  (Replicating every shingle row n_perms
+    times through a join with ``range(n_perms)`` before aggregating does the
+    same md5 work over an n_perms× larger pre-aggregation stream.)  Band keys
+    are then a tiny per-doc ``stack`` of the aggregated row."""
+    keys = ", ".join(
+        f"{b}, {sql_minhash_band_key(b, rows_per_band)}" for b in range(bands)
     )
-    return mins.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("b"),
-                        F.concat(
-                            *[
-                                F.col(f"_m{b * rows_per_band + i}")
-                                for i in range(rows_per_band)
-                            ]
-                        ).alias("mh"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("_bk"),
-    ).select("doc_id", F.col("_bk.b").alias("b"), F.col("_bk.mh").alias("mh"))
+    return sh.groupBy("doc_id").agg(
+        *[F.expr(f"{sql_minhash_perm(p)} AS _m{p}") for p in range(bands * rows_per_band)]
+    ).selectExpr("doc_id", f"stack({bands}, {keys}) AS (b, mh)")
 
 
 def minhash_lsh_pairs(
@@ -134,15 +245,8 @@ def minhash_lsh_pairs(
     directly — output is identical to banding everything, minus the O(dups²)
     band-join blowup.
     """
-    members = documents.select(F.md5("text").alias("_fp"), "doc_id").cache()
-    reps = (
-        documents.select(F.md5("text").alias("_fp"), "doc_id", "text")
-        .groupBy("_fp")
-        .agg(
-            F.min("doc_id").alias("doc_id"),
-            F.min_by("text", "doc_id").alias("text"),
-        )
-    )
+    members = documents.selectExpr("md5(text) AS _fp", "doc_id").cache()
+    reps = _text_reps(documents)
     sh = _doc_shingles(reps.select("doc_id", "text"), shingle).cache()
     # the self-join below would otherwise recompute the whole
     # shingle→hash→minhash subtree once per side
@@ -179,52 +283,10 @@ def minhash_lsh_pairs(
             ).alias("jaccard"),
         )
     )
-    # expand representative pairs back through the duplicate groups: every
-    # member-of-A × member-of-B pair has the same shingle sets, hence the
-    # same jaccard
-    rep_fp = reps.select(F.col("doc_id").alias("_rid"), "_fp")
-    cross = (
-        rep_pairs
-        .join(
-            rep_fp.select(F.col("_rid").alias("id_a"), F.col("_fp").alias("_fp_a")),
-            "id_a",
-        )
-        .join(
-            rep_fp.select(F.col("_rid").alias("id_b"), F.col("_fp").alias("_fp_b")),
-            "id_b",
-        )
-        .join(
-            members.select(F.col("_fp").alias("_fp_a"), F.col("doc_id").alias("_da")),
-            "_fp_a",
-        )
-        .join(
-            members.select(F.col("_fp").alias("_fp_b"), F.col("doc_id").alias("_db")),
-            "_fp_b",
-        )
-        .select(
-            F.least("_da", "_db").alias("id_a"),
-            F.greatest("_da", "_db").alias("id_b"),
-            "jaccard",
-        )
+    # within-group pairs are exact dups (jaccard 1.0 == n/(n+n-n) exactly)
+    out = _expand_rep_pairs(
+        members, reps, rep_pairs, "jaccard", "CAST(1 AS DOUBLE)", shingled=sh
     )
-    # within-group pairs are exact dups (jaccard 1.0 == n/(n+n-n) exactly) —
-    # but only for groups whose text actually shingles (< shingle tokens →
-    # no bands → never candidates in the unbatched form)
-    shingled_fps = rep_fp.join(
-        sh.select(F.col("doc_id").alias("_rid")).distinct(), "_rid"
-    ).select("_fp")
-    within = (
-        members.select("_fp", F.col("doc_id").alias("_da"))
-        .join(members.select("_fp", F.col("doc_id").alias("_db")), "_fp")
-        .filter(F.col("_da") < F.col("_db"))
-        .join(shingled_fps, "_fp", "left_semi")
-        .select(
-            F.col("_da").alias("id_a"),
-            F.col("_db").alias("id_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-    out = cross.unionByName(within)
     if min_jaccard > 0.0:
         out = out.filter(F.col("jaccard") >= min_jaccard)
     return out
@@ -263,15 +325,8 @@ def ngram_jaccard_pairs(
     always returned).  Default None = exact.
 
     Everything is joins/groupBys/windows with map-side combine; no UDFs."""
-    members = documents.select(F.md5("text").alias("_fp"), "doc_id").cache()
-    reps = (
-        documents.select(F.md5("text").alias("_fp"), "doc_id", "text")
-        .groupBy("_fp")
-        .agg(
-            F.min("doc_id").alias("doc_id"),
-            F.min_by("text", "doc_id").alias("text"),
-        )
-    )
+    members = documents.selectExpr("md5(text) AS _fp", "doc_id").cache()
+    reps = _text_reps(documents)
     sh = _doc_shingles(reps.select("doc_id", "text"), shingle).cache()
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     dfreq = sh.groupBy("shingle").agg(F.count("*").alias("_df"))
@@ -363,201 +418,62 @@ def ngram_jaccard_pairs(
         )
         .filter(F.col("jaccard") >= min_jaccard)
     )
-    # expand representative pairs back through the duplicate groups (same
-    # scheme as minhash_lsh_pairs): every member×member pair has the same
-    # shingle sets, hence the same jaccard
-    rep_fp = reps.select(F.col("doc_id").alias("_rid"), "_fp")
-    cross = (
-        rep_pairs.join(
-            rep_fp.select(F.col("_rid").alias("id_a"), F.col("_fp").alias("_fp_a")),
-            "id_a",
-        )
-        .join(
-            rep_fp.select(F.col("_rid").alias("id_b"), F.col("_fp").alias("_fp_b")),
-            "id_b",
-        )
-        .join(
-            members.select(F.col("_fp").alias("_fp_a"), F.col("doc_id").alias("_da")),
-            "_fp_a",
-        )
-        .join(
-            members.select(F.col("_fp").alias("_fp_b"), F.col("doc_id").alias("_db")),
-            "_fp_b",
-        )
-        .select(
-            F.least("_da", "_db").alias("id_a"),
-            F.greatest("_da", "_db").alias("id_b"),
-            "jaccard",
-        )
+    # within-group pairs are exact dups: jaccard exactly 1.0 ≥ any t
+    return _expand_rep_pairs(
+        members, reps, rep_pairs, "jaccard", "CAST(1 AS DOUBLE)", shingled=sh
     )
-    # within-group pairs are exact dups: jaccard exactly 1.0 ≥ any t, but
-    # only for texts that actually shingle (< shingle tokens → no pairs)
-    shingled_fps = rep_fp.join(
-        sh.select(F.col("doc_id").alias("_rid")).distinct(), "_rid"
-    ).select("_fp")
-    within = (
-        members.select("_fp", F.col("doc_id").alias("_da"))
-        .join(members.select("_fp", F.col("doc_id").alias("_db")), "_fp")
-        .filter(F.col("_da") < F.col("_db"))
-        .join(shingled_fps, "_fp", "left_semi")
-        .select(
-            F.col("_da").alias("id_a"),
-            F.col("_db").alias("id_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-    return cross.unionByName(within)
 
 
 # --------------------------------------------------------------------------
 # SimHash — a pure relational plan (whole-stage codegen, no Python at all):
 # distinct tokens explode → md5 split into two 32-bit halves (JVM) → 64
 # per-bit vote aggregates (map-side combinable) → fingerprint assembly.
-# Integer-exact end to end, so the whole pipeline is DuckDB-oracle-checkable
-# (simhash_oracle_sql below emits the equivalent SQL).
+# Integer-exact end to end; the DuckDB oracle renders the same kernels.
 # --------------------------------------------------------------------------
-
-#: signed-long value of bit j (bit 63 is the sign bit)
-_BIT_VALUE = [1 << j for j in range(63)] + [-(1 << 63)]
 
 
 def simhash_fingerprints(documents: DataFrame) -> DataFrame:
-    """(doc_id, fp): 64-bit SimHash over the doc's *distinct* space-split
-    tokens.  Token hash = first 16 hex chars of md5, handled as two non-
-    negative 32-bit halves (hi = bits 32..63, lo = bits 0..31) so all bit
-    extraction is plain long arithmetic.  Docs with no tokens get fp = 0.
+    """(doc_id, fp): 64-bit SimHash (:func:`sql_simhash_fp`) over the doc's
+    *distinct* space-split tokens.  Docs with no tokens get fp = 0.
 
     Scale shape: one explode (~tokens rows/doc), one groupBy(doc_id) with 64
     integer sums — partial aggregation does the heavy lifting; no row
     blowup beyond the token explode and no Python workers."""
-    toks = documents.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.filter(F.split("text", " "), lambda t: t != F.lit(""))
-            )
-        ).alias("tok"),
+    fps = (
+        documents.selectExpr("doc_id", f"{SPARK_SQL.tokens.format('text')} AS tok")
+        .selectExpr("doc_id", *SPARK_SQL.token_hash())
+        .groupBy("doc_id")
+        .agg(F.expr(f"{sql_simhash_fp()} AS fp"))
     )
-    h = toks.select(
-        "doc_id",
-        F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long").alias("hi"),
-        F.conv(F.substring(F.md5("tok"), 9, 8), 16, 10).cast("long").alias("lo"),
-    )
-    votes = h.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(
-                    F.shiftright(
-                        F.col("hi") if j >= 32 else F.col("lo"), j % 32
-                    ).bitwiseAND(F.lit(1))
-                    == 1,
-                    1,
-                ).otherwise(-1)
-            ).alias(f"v{j}")
-            for j in range(64)
-        ]
-    )
-    fp = None
-    for j in range(64):
-        term = (
-            F.when(F.col(f"v{j}") > 0, F.lit(_BIT_VALUE[j]).cast("long"))
-            .otherwise(F.lit(0).cast("long"))
-        )
-        fp = term if fp is None else fp + term
-    fps = votes.select("doc_id", fp.alias("fp"))
     return (
         documents.select("doc_id")
         .join(fps, "doc_id", "left")
-        .select("doc_id", F.coalesce("fp", F.lit(0).cast("long")).alias("fp"))
+        .selectExpr("doc_id", "coalesce(fp, CAST(0 AS BIGINT)) AS fp")
     )
 
 
-def simhash_oracle_sql(max_hamming: int) -> str:
-    """DuckDB SQL equivalent of simhash_near_dups over the ``documents``
-    view — same tokenization, same md5-half token hash, same votes, same
-    banding; everything integer, so results match Spark bit-for-bit."""
+def _simhash_groups(documents: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(members, reps) of the identical-fingerprint groups: members is
+    (_fp, doc_id) for every doc, cached; reps is (_fp, doc_id) with each
+    group's smallest doc id."""
+    members = simhash_fingerprints(documents).selectExpr("fp AS _fp", "doc_id").cache()
+    return members, members.groupBy("_fp").agg(F.min("doc_id").alias("doc_id"))
 
-    def bit(j: int) -> str:
-        col = "hi" if j >= 32 else "lo"
-        return f"({col} // {1 << (j % 32)}) % 2"
 
-    votes = ",\n         ".join(
-        f"sum(CASE WHEN {bit(j)} = 1 THEN 1 ELSE -1 END) AS v{j}" for j in range(64)
+def _simhash_rep_pairs(reps: DataFrame, max_hamming: int) -> DataFrame:
+    """Near-dup pairs between fingerprint REPRESENTATIVES ``reps`` (_fp,
+    doc_id): band self-join + exact popcount Hamming verify.
+    Returns (id_a, id_b, hamming), id_a < id_b."""
+    banded = reps.selectExpr("doc_id", "_fp", "explode(sequence(0, 3)) AS b").selectExpr(
+        "doc_id", "_fp", "b", f"{sql_band_key('_fp', 'b')} AS key"
     )
-    terms = "\n       + ".join(
-        f"(CASE WHEN v{j} > 0 THEN CAST({_BIT_VALUE[j]} AS BIGINT)"
-        " ELSE CAST(0 AS BIGINT) END)"
-        for j in range(64)
-    )
-    return f"""
-WITH toks AS (
-  SELECT DISTINCT doc_id, t AS tok
-  FROM documents, unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS u(t)
-), h AS (
-  SELECT doc_id,
-         ('0x' || substr(md5(tok), 1, 8))::BIGINT AS hi,
-         ('0x' || substr(md5(tok), 9, 8))::BIGINT AS lo
-  FROM toks
-), v AS (
-  SELECT doc_id, {votes}
-  FROM h GROUP BY doc_id
-), fpx AS (
-  SELECT doc_id, {terms} AS fp FROM v
-), fps AS (
-  SELECT d.doc_id AS doc_id, coalesce(f.fp, 0) AS fp
-  FROM documents d LEFT JOIN fpx f ON d.doc_id = f.doc_id
-), banded AS (
-  SELECT doc_id, fp, b, (fp >> (16 * CAST(b AS INT))) & 65535 AS key
-  FROM fps, unnest([0, 1, 2, 3]) AS u(b)
-), cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b, a.fp AS fp_a, c.fp AS fp_b
-  FROM banded a JOIN banded c
-    ON a.b = c.b AND a.key = c.key AND a.doc_id < c.doc_id
-)
-SELECT id_a, id_b, CAST(bit_count(xor(fp_a, fp_b)) AS INT) AS hamming
-FROM cand
-WHERE bit_count(xor(fp_a, fp_b)) <= {max_hamming}
-"""
-
-
-def _simhash_rep_pairs(fps: DataFrame, max_hamming: int) -> DataFrame:
-    """Near-dup pairs between fingerprint REPRESENTATIVES (one doc per
-    distinct fp, the group's min doc_id): band self-join + exact popcount
-    Hamming verify.  Returns (id_a, id_b, hamming), id_a < id_b."""
-    reps = fps.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
-    banded = reps.select(
-        "doc_id",
-        "fp",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftrightunsigned("fp", 16 * i).bitwiseAND(F.lit(0xFFFF)).alias("key"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "fp", "bk.band", "bk.key")
-    a, b = banded.alias("a"), banded.alias("b")
+    h = sql_hamming("a._fp", "c._fp")
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-            F.col("a.fp").alias("fp_a"),
-            F.col("b.fp").alias("fp_b"),
-        )
+        banded.alias("a")
+        .join(banded.alias("c"), F.expr("a.b = c.b AND a.key = c.key AND a.doc_id < c.doc_id"))
+        .where(f"{h} <= {max_hamming}")
+        .selectExpr("a.doc_id AS id_a", "c.doc_id AS id_b", f"{h} AS hamming")
         .distinct()
-        .withColumn("hamming", F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b"))))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
     )
 
 
@@ -574,17 +490,12 @@ def simhash_clusters(documents: DataFrame, max_hamming: int = 3) -> DataFrame:
     each rep is already its fp group's min doc_id."""
     from locus_spark.operators.components import connected_components
 
-    fps = simhash_fingerprints(documents).cache()
-    reps = fps.groupBy("fp").agg(F.min("doc_id").alias("_rep"))
-    rep_pairs = _simhash_rep_pairs(fps, max_hamming)
-    comp = connected_components(rep_pairs)
+    members, reps = _simhash_groups(documents)
+    comp = connected_components(_simhash_rep_pairs(reps, max_hamming))
     return (
-        fps.join(reps, "fp")
+        members.join(reps.withColumnRenamed("doc_id", "_rep"), "_fp")
         .join(comp.withColumnRenamed("node", "_rep"), "_rep", "left")
-        .select(
-            "doc_id",
-            F.coalesce("component", "_rep").alias("cluster_id"),
-        )
+        .selectExpr("doc_id", "coalesce(component, _rep) AS cluster_id")
     )
 
 
@@ -602,42 +513,10 @@ def simhash_near_dups(documents: DataFrame, max_hamming: int = 3) -> DataFrame:
     and within-group pairs are emitted with Hamming 0 directly (equal fps
     always share every band, so they are always candidates) — the output is
     identical to banding everything, minus the O(dups²) band-join blowup."""
-    fps = simhash_fingerprints(documents).cache()
-    reps = fps.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
-    rep_pairs = (
-        _simhash_rep_pairs(fps, max_hamming)
-        .join(reps.select(F.col("doc_id").alias("id_a"), F.col("fp").alias("fp_a")), "id_a")
-        .join(reps.select(F.col("doc_id").alias("id_b"), F.col("fp").alias("fp_b")), "id_b")
-        .select("fp_a", "fp_b", "hamming")
+    members, reps = _simhash_groups(documents)
+    return _expand_rep_pairs(
+        members, reps, _simhash_rep_pairs(reps, max_hamming), "hamming", "CAST(0 AS INT)"
     )
-    # cross-group expansion: every member-of-A × member-of-B pair has the
-    # same fingerprints, hence the same Hamming distance
-    cross = (
-        rep_pairs.join(
-            fps.select(F.col("fp").alias("fp_a"), F.col("doc_id").alias("_da")), "fp_a"
-        )
-        .join(
-            fps.select(F.col("fp").alias("fp_b"), F.col("doc_id").alias("_db")), "fp_b"
-        )
-        .select(
-            F.least("_da", "_db").alias("id_a"),
-            F.greatest("_da", "_db").alias("id_b"),
-            "hamming",
-        )
-    )
-    # within-group pairs: equal fps share all bands → always candidates,
-    # Hamming exactly 0 (and 0 <= max_hamming for any valid budget)
-    within = (
-        fps.select("fp", F.col("doc_id").alias("_da"))
-        .join(fps.select("fp", F.col("doc_id").alias("_db")), "fp")
-        .filter(F.col("_da") < F.col("_db"))
-        .select(
-            F.col("_da").alias("id_a"),
-            F.col("_db").alias("id_b"),
-            F.lit(0).cast("integer").alias("hamming"),
-        )
-    )
-    return cross.unionByName(within)
 
 
 def incremental_exact_dedup(
@@ -790,13 +669,8 @@ def incremental_minhash_dedup(
       :func:`minhash_lsh_pairs` (midpoint ``(1/b)^(1/r)``).
     """
     b_members = batch.select(F.md5("text").alias("_fp"), "doc_id")
-    b_reps = (
-        batch.select(F.md5("text").alias("_fp"), "doc_id", "text")
-        .groupBy("_fp")
-        .agg(F.min_by("text", "doc_id").alias("text"))
-    )
     bsh = _doc_shingles(
-        b_reps.select(F.col("_fp").alias("doc_id"), "text"), shingle
+        _text_reps(batch).selectExpr("_fp AS doc_id", "text"), shingle
     ).cache()  # keyed by the batch text fingerprint, reused by band + verify
     bb = band_signatures(bsh, bands, rows_per_band).select(
         F.col("doc_id").alias("_fp"), "b", "mh"

@@ -905,9 +905,15 @@ def q_raster_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from locus_spark.operators.ann import cosine_topk, lsh_topk  # noqa: E402
 from locus_spark.operators.dedup import (  # noqa: E402
+    DUCKDB,
     exact_dedup,
     minhash_lsh_pairs,
     simhash_near_dups,
+    sql_band_key,
+    sql_hamming,
+    sql_minhash_band_key,
+    sql_minhash_perm,
+    sql_simhash_fp,
 )
 from locus_spark.operators.textops import (  # noqa: E402
     doc_fingerprint,
@@ -1004,19 +1010,11 @@ def _persisted_corpus_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build-once MinHash band index over the corpus split (doc_id % 5 != 0):
     one representative per distinct corpus text (min doc_id), 4x2 banding —
     new snapshots probe this layout without recomputing a corpus signature."""
-    from locus_spark.operators.dedup import _doc_shingles, band_signatures
+    from locus_spark.operators.dedup import _doc_shingles, _text_reps, band_signatures
 
     def build() -> DataFrame:
         corpus = spark.table("documents").filter(F.col("doc_id") % 5 != 0)
-        reps = (
-            corpus.select(F.md5("text").alias("_fp"), "doc_id", "text")
-            .groupBy("_fp")
-            .agg(
-                F.min("doc_id").alias("doc_id"),
-                F.min_by("text", "doc_id").alias("text"),
-            )
-        )
-        return band_signatures(_doc_shingles(reps.select("doc_id", "text")))
+        return band_signatures(_doc_shingles(_text_reps(corpus).select("doc_id", "text")))
 
     return _index_checkpoint(sf_dir).run_stage(
         spark,
@@ -1026,11 +1024,22 @@ def _persisted_corpus_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _minhash_bands(sh: str, key: str) -> str:
+    """DuckDB rows (key, b, mh) of ``band_signatures`` at the 4x2 default over
+    the (key, shingle) rows of ``sh``: the engine's permutation and band-key
+    texts, the bands unnested instead of stacked."""
+    mins = ",\n         ".join(f"{sql_minhash_perm(p)} AS _m{p}" for p in range(8))
+    keys = ", ".join(sql_minhash_band_key(b, 2) for b in range(4))
+    return f"""SELECT {key}, unnest(range(0, 4)) AS b, unnest([{keys}]) AS mh
+  FROM (SELECT {key}, {mins}
+        FROM {sh} GROUP BY {key}) m"""
+
+
 # Near-dup twin of dedup_incremental: the batch probed against the PERSISTED
 # corpus MinHash band index, exact-Jaccard verified at threshold 0.5 (the 4x2
 # S-curve midpoint).  match_id is the corpus REPRESENTATIVE (min doc_id per
 # distinct corpus text) with the highest jaccard, smallest id among equals.
-_DEDUP_INCR_MINHASH_ORACLE = """
+_DEDUP_INCR_MINHASH_ORACLE = f"""
 WITH corpus AS (
   SELECT doc_id, text FROM documents WHERE doc_id % 5 <> 0
 ), batch AS (
@@ -1050,17 +1059,9 @@ WITH corpus AS (
         FROM breps) u, unnest(range(1, len(ts) - 1)) AS uu(i)
   WHERE len(ts) >= 3
 ), cbands AS (
-  SELECT rep_id, p // 2 AS b,
-         min(CASE WHEN p % 2 = 0 THEN md5(CAST(p AS VARCHAR) || '|' || shingle) END)
-      || min(CASE WHEN p % 2 = 1 THEN md5(CAST(p AS VARCHAR) || '|' || shingle) END) AS mh
-  FROM csh, unnest(range(0, 8)) AS pp(p)
-  GROUP BY rep_id, p // 2
+  {_minhash_bands("csh", "rep_id")}
 ), bbands AS (
-  SELECT fp, p // 2 AS b,
-         min(CASE WHEN p % 2 = 0 THEN md5(CAST(p AS VARCHAR) || '|' || shingle) END)
-      || min(CASE WHEN p % 2 = 1 THEN md5(CAST(p AS VARCHAR) || '|' || shingle) END) AS mh
-  FROM bsh, unnest(range(0, 8)) AS pp(p)
-  GROUP BY fp, p // 2
+  {_minhash_bands("bsh", "fp")}
 ), cand AS (
   SELECT DISTINCT bb.fp, cb.rep_id
   FROM bbands bb JOIN cbands cb ON bb.b = cb.b AND bb.mh = cb.mh
@@ -1103,7 +1104,7 @@ def q_dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MINHASH_ORACLE = """
+_MINHASH_ORACLE = f"""
 WITH toks AS (
   SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS ts
   FROM documents
@@ -1112,11 +1113,7 @@ WITH toks AS (
   FROM toks, unnest(range(1, len(ts) - 1)) AS u(i)
   WHERE len(ts) >= 3
 ), bands AS (
-  SELECT doc_id, p // 2 AS b,
-         min(CASE WHEN p % 2 = 0 THEN md5(CAST(p AS VARCHAR) || '|' || shingle) END)
-      || min(CASE WHEN p % 2 = 1 THEN md5(CAST(p AS VARCHAR) || '|' || shingle) END) AS mh
-  FROM sh, unnest(range(0, 8)) AS pp(p)
-  GROUP BY doc_id, p // 2
+  {_minhash_bands("sh", "doc_id")}
 ), cand AS (
   SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
   FROM bands a JOIN bands c ON a.b = c.b AND a.mh = c.mh AND a.doc_id < c.doc_id
@@ -1188,10 +1185,33 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from locus_spark.operators.dedup import simhash_oracle_sql  # noqa: E402
+def _simhash_oracle(max_hamming: int) -> str:
+    """DuckDB twin of ``simhash_near_dups`` over the ``documents`` view: the
+    engine's fingerprint, band-key and Hamming texts, with DuckDB's
+    tokenization and md5-half parse; every document is banded (no
+    representatives)."""
+    h = sql_hamming("a.fp", "c.fp")
+    return f"""
+WITH toks AS (
+  SELECT doc_id, {DUCKDB.tokens.format("text")} AS tok FROM documents
+), f AS (
+  SELECT doc_id, {sql_simhash_fp()} AS fp
+  FROM (SELECT doc_id, {", ".join(DUCKDB.token_hash())} FROM toks) h
+  GROUP BY doc_id
+), fps AS (
+  SELECT d.doc_id AS doc_id, coalesce(f.fp, CAST(0 AS BIGINT)) AS fp
+  FROM documents d LEFT JOIN f ON f.doc_id = d.doc_id
+), banded AS (
+  SELECT doc_id, fp, b, {sql_band_key("fp", "b")} AS key
+  FROM fps, unnest([0, 1, 2, 3]) AS u(b)
+)
+SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b, CAST({h} AS INT) AS hamming
+FROM banded a JOIN banded c ON a.b = c.b AND a.key = c.key AND a.doc_id < c.doc_id
+WHERE {h} <= {max_hamming}
+"""
 
 
-@register("dedup_simhash", simhash_oracle_sql(max_hamming=4))
+@register("dedup_simhash", _simhash_oracle(max_hamming=4))
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs — fully relational plan (no Python workers),
     verified bit-for-bit against the equivalent DuckDB SQL."""
@@ -1202,11 +1222,11 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # components over the SimHash pair graph: the pair oracle is bit-exact SQL,
 # so the cluster assignment is oracle-checkable end to end — DuckDB computes
 # min-reachable-id per node with a recursive CTE (terminates because UNION
-# dedups the frontier), while Spark runs min-label propagation with pointer
-# jumping (operators/components.py).
+# dedups the frontier), while Spark contracts stars over the representative
+# graph (operators/components.py).
 _CLUSTERS_ORACLE = f"""
 WITH RECURSIVE pairs AS (
-{simhash_oracle_sql(max_hamming=4)}
+{_simhash_oracle(max_hamming=4)}
 ), edges AS (
   SELECT id_a AS u, id_b AS v FROM pairs
   UNION

@@ -70,6 +70,34 @@ def test_simhash_fingerprint_matches_loop_oracle(docs):
     assert got == want
 
 
+def test_band_signatures_match_hashlib_minhash(spark, docs):
+    """Each band key is its two permutations' minhashes, concatenated:
+    permutation p's minhash is the smallest md5 of ``f"{p}|{shingle}"`` over
+    the doc's shingles.  Computed here with hashlib, independently of the
+    SQL text the engine and the DuckDB oracle share."""
+    import hashlib
+
+    from locus_spark.operators.dedup import band_signatures
+
+    def shingles(text: str) -> set[str]:
+        toks = [t for t in text.split(" ") if t]
+        return {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
+
+    def minhash(p: int, shs: set[str]) -> str:
+        return min(hashlib.md5(f"{p}|{s}".encode()).hexdigest() for s in shs)
+
+    sh = spark.createDataFrame(
+        [(i, s) for i, t, _ in DOCS for s in shingles(t)], "doc_id long, shingle string"
+    )
+    got = {(r.doc_id, r.b): r.mh for r in band_signatures(sh).collect()}
+    want = {
+        (i, b): minhash(2 * b, shingles(t)) + minhash(2 * b + 1, shingles(t))
+        for i, t, _ in DOCS
+        for b in range(4)
+    }
+    assert got == want
+
+
 def test_minhash_duplicate_cluster_skew(spark):
     """A 40-doc identical-text cluster (the r1 quadratic-band-join hazard):
     only one representative is banded; all C(40,2) within-cluster pairs come

@@ -1,10 +1,10 @@
-"""Driver planning bill of a kNN, range or tiling operation: the planners
-build their expressions as Spark SQL text, one py4j call per projection,
-so an operation sends a few hundred commands to the JVM (kNN built as
-Column trees, call by call, sent over 4,000; the persisted scans' ``isin``
-list ~3,000).  Also: a warm operation compiles no class, so no
-probe-dependent literal reaches generated code, and the answers are the
-brute-force ones."""
+"""Driver planning bill of a kNN, range, tiling or dedup operation: the
+planners build their expressions as Spark SQL text, one py4j call per
+projection, so an operation sends a few hundred commands to the JVM (kNN
+built as Column trees, call by call, sent over 4,000; the persisted scans'
+``isin`` list ~3,000; SimHash's Column-built votes ~11,000).  Also: a warm
+operation compiles no class, so no probe-dependent literal reaches generated
+code, and the answers are the brute-force ones."""
 
 from __future__ import annotations
 
@@ -23,9 +23,11 @@ from locus_spark.functions.metrics import (
     sql_ray_crosses_edge,
 )
 from locus_spark.operators import boxes as box_ops
+from locus_spark.operators import dedup
 from locus_spark.operators import points as point_ops
 from locus_spark.operators import segments as seg_ops
 from locus_spark.operators import tiles as tile_ops
+from locus_spark.queries import oracle_sql
 from locus_spark.session import codegen_counters, py4j_calls
 
 #: commands per operation, plan + run + collect (Column-built planner:
@@ -221,3 +223,64 @@ def test_py4j_calls_counts_commands_and_restores_the_client(spark):
         spark.sparkContext._jvm.java.lang.Math.abs(-1)
     assert sent[0] >= 1
     assert "send_command" not in vars(client)
+
+
+@pytest.fixture(scope="module")
+def corpus(spark):
+    """100 random 12-word texts, 30 exact duplicates and 30 one-word
+    extensions of them."""
+    rng = np.random.default_rng(11)
+    vocab = [f"w{i}" for i in range(200)]
+    base = [" ".join(rng.choice(vocab, 12)) for _ in range(100)]
+    texts = base + base[:30] + [t + " extra" for t in base[30:60]]
+    return spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string").cache()
+
+
+#: py4j commands per warm dedup operation, plan + run + collect.  Measured
+#: on this corpus (local[4], four warm runs each): near_dups 293-349,
+#: clusters 1,008-1,143, minhash 1,039-1,122.  With the hash kernels and
+#: the star-contraction rounds built as Column trees they sent
+#: 13,044-13,257, 14,268-14,452 and 2,375-2,563.  Warm runs are not pinned
+#: at 0 compiled classes: minhash_lsh_pairs compiled 22, 2, 0, 2 on its
+#: four warm runs (28, 4, 0, 0 with the Column-built kernels).
+DEDUP_MAX_CALLS = {
+    "simhash_near_dups": 600,
+    "simhash_clusters": 1800,
+    "minhash_lsh_pairs": 1600,
+}
+
+
+@pytest.mark.parametrize("op", sorted(DEDUP_MAX_CALLS))
+def test_dedup_op_plans_in_few_py4j_calls(spark, corpus, op):
+    run = {
+        "simhash_near_dups": lambda: dedup.simhash_near_dups(corpus, max_hamming=4),
+        "simhash_clusters": lambda: dedup.simhash_clusters(corpus, max_hamming=4),
+        "minhash_lsh_pairs": lambda: dedup.minhash_lsh_pairs(corpus),
+    }[op]
+    rows, calls, _ = _warm_bill(spark, run)
+    spark.catalog.clearCache()
+    corpus.cache()
+
+    assert len(rows) > 0
+    assert calls <= DEDUP_MAX_CALLS[op], f"{op} sent {calls} py4j commands"
+
+
+def test_dedup_oracles_render_the_engine_kernels():
+    """The oracle rows of the dedup family run the engine's kernel texts."""
+    simhash = [
+        dedup.sql_simhash_fp(),  # holds all 64 dedup.sql_simhash_vote(j) texts
+        dedup.sql_band_key("fp", "b"),
+        dedup.sql_hamming("a.fp", "c.fp"),
+    ]
+    minhash = [dedup.sql_minhash_perm(p) for p in range(8)] + [
+        dedup.sql_minhash_band_key(b, 2) for b in range(4)
+    ]
+    oracles = oracle_sql()
+    for row, kernels in {
+        "dedup_simhash": simhash,
+        "dedup_clusters": simhash,
+        "dedup_minhash_lsh": minhash,
+        "dedup_incremental_minhash": minhash,
+    }.items():
+        for text in kernels:
+            assert text in oracles[row], f"{row} does not render {text[:60]!r}"

@@ -271,7 +271,7 @@ def ensure_bands(docs: int, cores: int) -> None:
         return
     from pyspark.sql import functions as F
 
-    from locus_spark.operators.dedup import _doc_shingles, band_signatures
+    from locus_spark.operators.dedup import _doc_shingles, _text_reps, band_signatures
     from locus_spark.session import get_spark
 
     spark = get_spark(
@@ -282,15 +282,7 @@ def ensure_bands(docs: int, cores: int) -> None:
     corpus = spark.read.parquet(str(corpus_path(docs))).filter(
         F.col("doc_id") % INC_MOD != 0
     )
-    reps = (
-        corpus.select(F.md5("text").alias("_fp"), "doc_id", "text")
-        .groupBy("_fp")
-        .agg(
-            F.min("doc_id").alias("doc_id"),
-            F.min_by("text", "doc_id").alias("text"),
-        )
-    )
-    bands = band_signatures(_doc_shingles(reps.select("doc_id", "text")))
+    bands = band_signatures(_doc_shingles(_text_reps(corpus).select("doc_id", "text")))
     bands.repartition(64).write.mode("overwrite").parquet(str(path))
     spark.stop()
 
