@@ -17,9 +17,35 @@ needs.
 Only common-dialect SQL is used: ``+ - * /``, comparisons, ``AND``/``OR``,
 ``least``, ``greatest``, ``CASE WHEN``, ``abs`` — all with identical
 semantics in Spark SQL and DuckDB.
+
+A metric whose text repeats a costly sub-expression is also defined in
+stages (:class:`Metric`): the kNN planner projects the stages as columns
+and then dist², and :meth:`Metric.inline` substitutes them back into the
+one text the oracle renders.  A projected column holds the same double
+the inlined sub-expression computes, so both forms agree bit for bit.
 """
 
 from __future__ import annotations
+
+import re
+from typing import NamedTuple
+
+
+class Metric(NamedTuple):
+    """A squared distance in stages: ``steps`` are ``(name, SQL)`` pairs,
+    each over the input columns only, and ``expr`` is dist² over the input
+    columns and the step names."""
+
+    steps: tuple[tuple[str, str], ...]
+    expr: str
+
+    def inline(self) -> str:
+        """dist² as one SQL text: each step name in ``expr`` replaced by
+        the step's text."""
+        out = self.expr
+        for name, text in self.steps:
+            out = re.sub(rf"\b{name}\b", lambda _, text=text: text, out)
+        return out
 
 
 # --------------------------------------------------------------------------
@@ -72,6 +98,13 @@ def sql_dist2_point_segment(
 # the four endpoint-to-other-segment distances.  Collinear-overlap cases fall
 # out of the endpoint projections (distance 0), so only the proper-crossing
 # case needs the orientation test.
+#
+# Defined once, in stages: the four clamped projection parameters t are the
+# steps, and dist² reads each twice per coordinate.  Inlined, each t is
+# spelled four times inside the CASE's ELSE branch, which Spark's
+# subexpression elimination does not enter: the generated method then
+# exceeds HotSpot's 8,000-byte JIT limit and runs interpreted.  Projected
+# first, each t is computed once per candidate.
 # --------------------------------------------------------------------------
 def _sql_cross(ox: str, oy: str, ax: str, ay: str, bx: str, by: str) -> str:
     """z of (a-o) x (b-o)."""
@@ -93,15 +126,35 @@ def sql_segments_properly_cross(
     )
 
 
+def staged_dist2_segment_segment(
+    ax1: str, ay1: str, ax2: str, ay2: str, bx1: str, by1: str, bx2: str, by2: str
+) -> Metric:
+    """dist²(segment a, segment b) as a :class:`Metric` whose steps
+    ``_t1``..``_t4`` are the clamped t of a's endpoints on b and of b's
+    endpoints on a."""
+    ends = (
+        (ax1, ay1, bx1, by1, bx2, by2),
+        (ax2, ay2, bx1, by1, bx2, by2),
+        (bx1, by1, ax1, ay1, ax2, ay2),
+        (bx2, by2, ax1, ay1, ax2, ay2),
+    )
+    names = [f"_t{i}" for i in range(1, len(ends) + 1)]
+    ds = ", ".join(
+        f"({sql_dist2_point_segment(*e, t=n)})" for e, n in zip(ends, names)
+    )
+    cross = sql_segments_properly_cross(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2)
+    return Metric(
+        tuple((n, sql_seg_t(*e)) for n, e in zip(names, ends)),
+        f"(CASE WHEN {cross} THEN 0.0 ELSE least({ds}) END)",
+    )
+
+
 def sql_dist2_segment_segment(
     ax1: str, ay1: str, ax2: str, ay2: str, bx1: str, by1: str, bx2: str, by2: str
 ) -> str:
-    d1 = sql_dist2_point_segment(ax1, ay1, bx1, by1, bx2, by2)
-    d2 = sql_dist2_point_segment(ax2, ay2, bx1, by1, bx2, by2)
-    d3 = sql_dist2_point_segment(bx1, by1, ax1, ay1, ax2, ay2)
-    d4 = sql_dist2_point_segment(bx2, by2, ax1, ay1, ax2, ay2)
-    cross = sql_segments_properly_cross(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2)
-    return f"(CASE WHEN {cross} THEN 0.0 ELSE least(({d1}), ({d2}), ({d3}), ({d4})) END)"
+    return staged_dist2_segment_segment(
+        ax1, ay1, ax2, ay2, bx1, by1, bx2, by2
+    ).inline()
 
 
 # --------------------------------------------------------------------------

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from locus_spark.cells import DEFAULT_RESOLUTION, GridSpec, all_finite
 from locus_spark.functions.metrics import (
     sql_dist2_point_segment,
-    sql_dist2_segment_segment,
+    staged_dist2_segment_segment,
 )
 from locus_spark.plans.knn import generic_knn_join, probe_frame
 
@@ -115,7 +115,7 @@ def segment_knn_join(
         "least(_qy1, _qy2)", "greatest(_qy1, _qy2)",
         payload=["_qx1", "_qy1", "_qx2", "_qy2"],
     )
-    d2 = sql_dist2_segment_segment(
+    d2 = staged_dist2_segment_segment(
         "_qx1", "_qy1", "_qx2", "_qy2", "x1", "y1", "x2", "y2"
     )
 

@@ -52,8 +52,8 @@ that is vanishingly rare above that).
 
 Phase 2 — the exact answer: for each probe every cell whose rect lies
 within sqrt(_scap) of the probe's bbox, one hash join against the targets,
-rows with dist² <= _scap, and one per-probe top-k aggregation.  It is
-exact because
+and one per-probe top-k aggregation over the rows with dist² <= _scap.  It
+is exact because
 
 * every target within sqrt(_scap) of the probe has a covering cell whose
   rect lies within that distance (the point of the target nearest the
@@ -63,7 +63,7 @@ exact because
   edge cells, which also hold targets clipped in from outside the grid
   bbox, reach to infinity), so every target that can rank is evaluated,
   ties at the k-th distance included;
-* the level targets that set ``_scap`` pass the row filter (same dist²
+* the level targets that set ``_scap`` pass the bound check (same dist²
   expression over the same rows), so every probe keeps at least k rows.
 
 Non-finite input: dist² orders NaN largest (Spark's order).  A probe whose
@@ -84,6 +84,23 @@ Every expression of the plan is Spark SQL text, handed to the JVM once per
 projection (``selectExpr``/``F.expr``): composing ``Column`` trees costs
 one py4j round trip per function and operator, which made planning, not
 the Spark jobs, the bulk of an operation's wall.
+
+dist² is evaluated once per candidate, in generated code HotSpot compiles.
+HotSpot never JIT-compiles a method above 8,000 bytes of bytecode
+(``DontCompileHugeMethods``), and a whole-stage-codegen stage's consume
+path is one method, so the stage's text is kept small:
+
+* a staged :class:`~locus_spark.functions.metrics.Metric` (segment to
+  segment) is evaluated as ordered projections, its shared sub-expressions
+  as named columns and then dist² over them (:func:`_with_dist2`).
+  Spark's subexpression elimination does not enter a CASE branch, so
+  inlined, the seg–seg dist² spelled each clamped ``t`` four times;
+* phase 2's bound check is part of the aggregate's input, not a Filter:
+  the optimizer pushes a Filter on dist² into the join's condition, which
+  then evaluates dist² a second time.
+
+Together they took phase 2's largest method for segments from 31,958
+bytes to 6,277, and phase 1a's from 13,371 to 5,633.
 """
 
 from __future__ import annotations
@@ -97,6 +114,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from locus_spark.cells import GridSpec, sql_double
+from locus_spark.functions.metrics import Metric
 from locus_spark.session import materialize
 
 _log = logging.getLogger(__name__)
@@ -304,6 +322,18 @@ def _half_width(k: int, density: float, n: int) -> int:
     return max(0, min(h, max(1, n // 4)))
 
 
+def _with_dist2(frame: DataFrame, dist2: str | Metric, *keep: str) -> DataFrame:
+    """``keep`` and ``dist2`` over a joined frame, each in a projection
+    (whole-stage codegen), not inside the aggregate that reads it, which
+    evaluates its inputs interpreted.  A staged metric's steps are
+    projected first: the optimizer keeps a projection whose column the next
+    one reads more than once, so each step is computed once per row."""
+    if isinstance(dist2, Metric):
+        frame = frame.selectExpr("*", *(f"{t} AS {n}" for n, t in dist2.steps))
+        dist2 = dist2.expr
+    return frame.selectExpr(*keep, f"{dist2} AS dist2")
+
+
 def _build_side(frame: DataFrame, shuffle: bool) -> DataFrame:
     """Hint a (probe, cell) frame as the hash-join build side: broadcast,
     or — for frames too wide to broadcast — built per partition after a
@@ -327,7 +357,7 @@ def _bound(
     probes: DataFrame,
     k: int,
     grid: GridSpec,
-    dist2: str,
+    dist2: str | Metric,
     dedup: bool,
     levels: list[_Level],
     n_targets: int,
@@ -349,15 +379,10 @@ def _bound(
     sample1 = target_cells.filter(f"pmod({_HID}, {levels[0].rate}) = 0").selectExpr(
         *tcols, f"{grid.pack_sql('_cx', '_cy')} AS _jk"
     )
-    caps1 = (
-        _build_side(_window_keys(probes, levels[:1]), wide)
-        .join(sample1, ["_jk"])
-        # dist² in a projection (whole-stage codegen), not inside the
-        # aggregate, which evaluates its inputs interpreted
-        .selectExpr("qid", f"{dist2} AS dist2")
-        .groupBy("qid")
-        .agg(F.expr(f"{_kth(k, 'dist2', dedup)} AS _scap"))
-    )
+    caps1 = _with_dist2(
+        _build_side(_window_keys(probes, levels[:1]), wide).join(sample1, ["_jk"]),
+        dist2, "qid",
+    ).groupBy("qid").agg(F.expr(f"{_kth(k, 'dist2', dedup)} AS _scap"))
     # materialized, and the bound probes counted by the same job: when it
     # bounds them all, phase 1b is not planned at all
     caps1, seen = materialize(caps1, [F.expr("count(_scap) AS bound")])
@@ -412,10 +437,10 @@ def _bound(
         )
     )
     shared = f"-1 - pmod(xxhash64(qid), {salts})"
-    cand2 = (
+    cand2 = _with_dist2(
         _build_side(_window_keys(bound1.filter("_scap IS NULL"), coarse, shared), wide)
-        .join(sample2, ["_jk"])
-        .selectExpr("qid", "_lv", f"{dist2} AS dist2")
+        .join(sample2, ["_jk"]),
+        dist2, "qid", "_lv",
     )
     # the k fixed targets are read one row per target; the sampled levels
     # may hold a multi-cell target once per covering cell
@@ -436,7 +461,7 @@ def generic_knn_join(
     probes: DataFrame,
     k: int,
     grid: GridSpec,
-    dist2: str,
+    dist2: str | Metric,
     tie_desc_id: bool = False,
     dedup: bool = False,
 ) -> DataFrame:
@@ -447,7 +472,8 @@ def generic_knn_join(
                         cells for multi-cell geometries).
     ``probes``        — output of :func:`probe_frame`.
     ``dist2``         — squared distance over the joined row, as Spark SQL
-                        text (a ``functions/metrics.py`` template).
+                        text or a staged :class:`Metric` (a
+                        ``functions/metrics.py`` template).
     ``tie_desc_id``   — R-tree family breaks distance ties by *largest* id
                         (``/root/reference/locus/r.py:599-606``); kd and
                         segmental by smallest.
@@ -495,7 +521,7 @@ def generic_knn_join(
         # O3 short-circuit (/root/reference/locus/kd.py:216-220 etc.)
         pairs = F.broadcast(probes.drop(*PROBE_CELL_COLS)).join(targets)
         record("cross", n_probes * n_targets, 0, 0)
-        return pairs.selectExpr("*", f"{dist2} AS dist2").selectExpr(
+        return _with_dist2(pairs, dist2, "*").selectExpr(
             *_names(out_cols),
             "CAST(row_number() OVER (PARTITION BY qid "
             f"ORDER BY dist2 ASC, `id` {tie}) AS BIGINT) AS rn",
@@ -533,18 +559,19 @@ def generic_knn_join(
         f"named_struct('_d', dist2, '_t', {'~' if tie_desc_id else ''}`id`, "
         f"'_p', named_struct({fields}))"
     )
+    # The bound check rides the aggregate's input (collect_list drops the
+    # nulls) rather than a Filter: the optimizer pushes a Filter on dist2
+    # into the join's condition, which inlines dist² there a second time.
+    # Ties at equal dist2 still pass — id order can displace.  The row
+    # structs are built in a projection (whole-stage codegen), not inside
+    # the aggregate, which evaluates its inputs interpreted.
+    cand = _build_side(_disc_cells(bounded, grid, scale), wide).join(
+        target_cells.selectExpr("*", f"{grid.pack_sql('_cx', '_cy')} AS _jc"),
+        ["_jc"],
+    )
     top = (
-        _build_side(_disc_cells(bounded, grid, scale), wide)
-        .join(
-            target_cells.selectExpr("*", f"{grid.pack_sql('_cx', '_cy')} AS _jc"),
-            ["_jc"],
-        )
-        .selectExpr("*", f"{dist2} AS dist2")
-        # ties at equal dist2 still pass — id order can displace
-        .filter("dist2 <= _scap")
-        # the row structs are built in a projection (whole-stage codegen),
-        # not inside the aggregate, which evaluates its inputs interpreted
-        .selectExpr("qid", f"{row} AS _s")
+        _with_dist2(cand, dist2, "*")
+        .selectExpr("qid", f"CASE WHEN dist2 <= _scap THEN {row} END AS _s")
         .groupBy("qid")
         .agg(F.expr("array_sort(collect_list(_s)) AS _top"))
     )

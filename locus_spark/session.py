@@ -3,7 +3,8 @@
 AQE on (runtime skew-join splitting + partition coalescing), Arrow on
 (vectorized pandas UDF transfer), shuffle partitions sized to the local core
 count instead of the 200 default, and a codegen class cache that holds the
-engine's working set, so warm operations run warm code. On a real cluster
+engine's working set under class names free of stage ids, so warm
+operations run warm code. On a real cluster
 the same builder is used with ``master`` unset (taken from spark-submit).
 """
 
@@ -19,6 +20,11 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+
+#: HotSpot never JIT-compiles a method above this many bytes of bytecode
+#: (``-XX:+DontCompileHugeMethods``, on by default): a whole-stage-codegen
+#: stage whose generated method is larger runs interpreted
+JIT_MAX_METHOD_BYTES = 8000
 
 #: repo root containing the ``locus_spark`` package — shipped to Python
 #: workers so module-level UDF kernels resolve.  On a real cluster the same
@@ -76,6 +82,13 @@ def get_spark(
         # ingest_range setup + 4 cycles at both 100 and 10000 entries;
         # 241 MB at the end of the pytest suite with all 3247 classes kept.
         .config("spark.sql.codegen.cache.maxEntries", "8000")
+        # Spark names each generated class after its whole-stage-codegen
+        # stage id, and AQE numbers the stages in the order it plans them,
+        # which can differ between runs of one plan: a warm run then
+        # recompiled code identical but for the class name (a cached
+        # point_in_polygon_join in about 1 warm run of 10; the dedup rows'
+        # warm passes on the bench.py board).
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # local mode shares one JVM between driver and executor: under full
         # CPU saturation the heartbeat thread can starve for minutes, and the
         # default 120 s timeout then kills the executor mid-job (seen in the
@@ -103,6 +116,22 @@ def codegen_counters(spark: SparkSession) -> tuple[int, float]:
     compiled = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
     return int(compiled.getCount()), nanos / 1e6
+
+
+def max_method_bytes(df: DataFrame) -> int:
+    """The largest generated method, in bytes of bytecode, over the
+    whole-stage-codegen subtrees of ``df``'s executed plan (Spark's
+    ``ByteCodeStats``; 0 with none), to compare with
+    :data:`JIT_MAX_METHOD_BYTES`.  Read after an action, it covers AQE's
+    final plan; the code comes from the codegen cache, so it runs no Spark
+    job."""
+    jvm = df.sparkSession.sparkContext._jvm
+    seq = jvm.org.apache.spark.sql.execution.debug.package.codegenStringSeq(
+        df._jdf.queryExecution().executedPlan()
+    )
+    return max(
+        (seq.apply(i)._3().maxMethodCodeSize() for i in range(seq.size())), default=0
+    )
 
 
 @contextlib.contextmanager

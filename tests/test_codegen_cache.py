@@ -5,7 +5,8 @@ The cycle is ``perfbench``'s ``ingest_range`` in small: cluster, salt hot
 cells, checkpoint, fold in an upsert batch and compact, then box, ball,
 subset and overlap joins.  With Spark's 100-entry default the cache is
 smaller than one cycle's classes, so every cycle compiled most of them
-again."""
+again.  A cached point-in-polygon join recompiled in some warm runs while
+Spark named its classes after AQE's stage ids."""
 
 from __future__ import annotations
 
@@ -13,10 +14,16 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from locus_spark.cells import cluster_by_hilbert, grid_from_boxes, grid_from_points
+from locus_spark.cells import (
+    GridSpec,
+    cluster_by_hilbert,
+    grid_from_boxes,
+    grid_from_points,
+)
 from locus_spark.operators import boxes as box_ops
 from locus_spark.operators import maintenance
 from locus_spark.operators import points as point_ops
+from locus_spark.operators.tiles import point_in_polygon_join
 from locus_spark.session import codegen_counters
 from locus_spark.skew import hot_cells, salted_repartition
 from locus_spark.sources.checkpoint import StageCheckpoint
@@ -119,3 +126,35 @@ def test_salted_repartition_code_does_not_depend_on_the_hot_cells(spark):
     assert {c for c, n in second if n > 1} == {4, 5}
     assert salts([]) == {(c, 1) for c in range(50)}
     assert compiled == 0, f"another hot set compiled {compiled} classes"
+
+
+def test_warm_cached_polygon_join_compiles_nothing(spark):
+    """With both the points and the polygon edges cached, AQE plans the
+    edges' bbox aggregate and their broadcast in either order, so the
+    stage ids differ between runs; with ids in the class names, about 1
+    warm run in 10 compiled 4 classes."""
+    assert spark.conf.get("spark.sql.codegen.useIdInClassName") == "false"
+    rng = np.random.default_rng(3)
+    xy = rng.uniform(0.0, 100.0, (4000, 2))
+    points = spark.createDataFrame(
+        pd.DataFrame({"id": np.arange(len(xy)), "x": xy[:, 0], "y": xy[:, 1]})
+    ).cache()
+    edges = []
+    for qid, (cx, cy) in enumerate(rng.uniform(10.0, 90.0, (12, 2)).tolist()):
+        ring = [(cx - 6.0, cy - 4.0), (cx + 7.0, cy - 3.0), (cx + 1.0, cy + 8.0)]
+        edges += [(qid, *a, *b) for a, b in zip(ring, ring[1:] + ring[:1])]
+    edges = spark.createDataFrame(
+        edges, "qid long, x1 double, y1 double, x2 double, y2 double"
+    ).cache()
+    grid = GridSpec(0.0, 0.0, 100.0, 100.0, 5)
+
+    def run():
+        return sorted(point_in_polygon_join(points, edges, grid).collect())
+
+    first = run()
+    before = codegen_counters(spark)[0]
+    runs = [run() for _ in range(12)]
+    compiled = codegen_counters(spark)[0] - before
+
+    assert first and all(r == first for r in runs)
+    assert compiled == 0, f"12 warm runs compiled {compiled} classes"

@@ -1,8 +1,10 @@
 #!/usr/bin/env python
 """Physical-plan audit of every registered query: one row per query with
 the plan-shape counters that matter at 100 TB (shuffles, join strategies,
-whole-stage-codegen spans, Python/Arrow boundaries, windows), plus a lint
-for join shapes that are scale hazards unless intentional.
+whole-stage-codegen spans and their largest generated method,
+Python/Arrow boundaries, windows), plus a lint for join shapes that are
+scale hazards unless intentional and for generated methods HotSpot will
+not JIT-compile.
 
 Writes PLAN_AUDIT.md.  This is the repo's standing answer to "did you
 .explain() every operator": regenerate after plan-affecting changes with
@@ -26,7 +28,11 @@ import tempfile
 REPO = pathlib.Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-from locus_spark.session import get_spark  # noqa: E402
+from locus_spark.session import (  # noqa: E402
+    JIT_MAX_METHOD_BYTES,
+    get_spark,
+    max_method_bytes,
+)
 
 #: queries whose nested-loop/cartesian joins are the DOCUMENTED small-side
 #: contract, not an accident (brute-force verifiers, 1-row scalar frames,
@@ -154,11 +160,13 @@ def main() -> None:
                 "codegen"
             )
             codegen_plan = qe.explainString(mode)
+            method_bytes = max_method_bytes(df)
         except Exception as exc:  # pragma: no cover - audit robustness
             problems.append(f"{name}: PLAN FAILED — {exc}")
             continue
         c = audit(plan, codegen_plan)
         c["rowlike_python"] = len(re.findall(r"BatchEvalPython", plan))
+        c["max_method_bytes"] = method_bytes
         rows.append((name, c))
         if c["nested_loop"] and name not in INTENTIONAL_NESTED_LOOP:
             problems.append(
@@ -174,6 +182,11 @@ def main() -> None:
             problems.append(
                 f"{name}: BatchEvalPython (row-at-a-time Python UDF) in plan"
             )
+        if method_bytes > JIT_MAX_METHOD_BYTES:
+            problems.append(
+                f"{name}: a generated method of {method_bytes} bytes, above "
+                f"HotSpot's {JIT_MAX_METHOD_BYTES}-byte JIT limit (runs interpreted)"
+            )
 
     lines = [
         "# PLAN_AUDIT — physical-plan shapes of every registered query",
@@ -182,13 +195,16 @@ def main() -> None:
         f"{len(rows)} queries.",
         "",
         "Columns: Exchange count (shuffles), join strategies, distinct",
-        "whole-stage-codegen span ids, Arrow-batched Python operators",
-        "(`ArrowEvalPython`/`MapInPandas`/grouped-map — the sanctioned UDF",
-        "surface), window operators.  Row-at-a-time `BatchEvalPython` is a",
-        "lint failure (the input_hint mandates no per-row Python).",
+        "whole-stage-codegen span ids, the largest generated method over",
+        "those spans in bytes of bytecode (Spark's `ByteCodeStats`),",
+        "Arrow-batched Python operators (`ArrowEvalPython`/`MapInPandas`/",
+        "grouped-map — the sanctioned UDF surface), window operators.",
+        "Row-at-a-time `BatchEvalPython` is a lint failure (no per-row",
+        f"Python), and so is a method above {JIT_MAX_METHOD_BYTES} bytes:",
+        "HotSpot does not JIT-compile it (`DontCompileHugeMethods`).",
         "",
-        "| query | exchanges | bcast HJ | SMJ | shuffled HJ | nested-loop | WSCG spans | arrow py | windows |",
-        "|---|---|---|---|---|---|---|---|---|",
+        "| query | exchanges | bcast HJ | SMJ | shuffled HJ | nested-loop | WSCG spans | max method B | arrow py | windows |",
+        "|---|---|---|---|---|---|---|---|---|---|",
     ]
     for name, c in rows:
         nl = str(c["nested_loop"])
@@ -200,7 +216,8 @@ def main() -> None:
         lines.append(
             f"| {name} | {c['exchanges']} | {c['broadcast_joins']} | "
             f"{smj} | {c['shuffled_hash_joins']} | {nl} | "
-            f"{c['wscg_spans']} | {c['python_arrow']} | {c['windows']} |"
+            f"{c['wscg_spans']} | {c['max_method_bytes']} | "
+            f"{c['python_arrow']} | {c['windows']} |"
         )
     lines += ["", "## Intentional nested-loop/cartesian shapes", ""]
     for name, why in sorted(INTENTIONAL_NESTED_LOOP.items()):
@@ -214,8 +231,8 @@ def main() -> None:
     else:
         lines.append(
             "- clean: no unintentional nested-loop/cartesian joins, no "
-            "unannotated SortMergeJoins, no row-at-a-time Python UDFs "
-            "anywhere in the registry."
+            "unannotated SortMergeJoins, no row-at-a-time Python UDFs, no "
+            "generated method above the JIT limit anywhere in the registry."
         )
     (REPO / "PLAN_AUDIT.md").write_text("\n".join(lines) + "\n")
     print(f"PLAN_AUDIT.md written: {len(rows)} queries, {len(problems)} lint findings")
