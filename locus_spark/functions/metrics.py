@@ -15,8 +15,15 @@ results are bit-identical, which is what the driver's value-hash comparison
 needs.
 
 Only common-dialect SQL is used: ``+ - * /``, comparisons, ``AND``/``OR``,
-``least``, ``greatest``, ``CASE WHEN``, ``abs`` — all with identical
-semantics in Spark SQL and DuckDB.
+``least``, ``greatest``, ``CASE WHEN``, ``abs``, ``coalesce``, ``floor``,
+``md5``, ``substr``, ``||`` and ``CAST(... AS DOUBLE | BIGINT | STRING)`` —
+all with identical semantics in Spark SQL and DuckDB.  The few steps the
+two engines spell differently (tokenizing a text, reading hex digits as a
+number) are the fields of a :class:`Dialect`, :data:`SPARK_SQL` or
+:data:`DUCKDB`; a template that needs one takes the dialect, and the rest of
+its text is shared.  The md5-prefix hash bucket (:meth:`Dialect.md5_bucket`)
+is one: the pseudo link graph (``operators/graph.py``) and the hash-threshold
+samplers (``operators/sampling.py``) render it, and so do their oracles.
 
 A metric whose text repeats a costly sub-expression is also defined in
 stages (:class:`Metric`): the kNN planner projects the stages as columns
@@ -29,6 +36,49 @@ from __future__ import annotations
 
 import re
 from typing import NamedTuple
+
+
+class Dialect(NamedTuple):
+    """The kernel steps that Spark SQL and DuckDB spell differently, as
+    ``str.format`` templates over one SQL argument."""
+
+    #: a text's distinct non-empty space-split tokens, one row each
+    tokens: str
+    #: 8 hex digits (an md5 half) as a non-negative BIGINT
+    hex_bigint: str
+
+    def token_hash(self) -> list[str]:
+        """(hi, lo) of a token ``tok``: the first 16 hex digits of its md5 as
+        two non-negative 32-bit halves, so every SimHash step is plain BIGINT
+        arithmetic and both engines agree bit for bit."""
+        return [
+            f"{self.hex_bigint.format(f'substr(md5(tok), {i}, 8)')} AS {half}"
+            for i, half in ((1, "hi"), (9, "lo"))
+        ]
+
+    def md5_bucket(self, prefix: str, key: str) -> str:
+        """uint32 bucket of ``key``: the first 8 hex digits of
+        ``md5(prefix || key)`` as a non-negative BIGINT."""
+        return self.hex_bigint.format(
+            f"substr(md5('{prefix}' || CAST({key} AS STRING)), 1, 8)"
+        )
+
+
+SPARK_SQL = Dialect(
+    tokens="explode(array_distinct(filter(split({}, ' '), t -> t <> '')))",
+    hex_bigint="CAST(conv({}, 16, 10) AS BIGINT)",
+)
+DUCKDB = Dialect(
+    tokens="unnest(list_distinct(list_filter(string_split({}, ' '), t -> t <> '')))",
+    hex_bigint="('0x' || {})::BIGINT",
+)
+
+
+def sql_cast_double(x: float) -> str:
+    """Parameter ``x`` as a DOUBLE literal in both engines.  A bare ``0.85``
+    is a DECIMAL(2,2) in Spark (and a DECIMAL in DuckDB), whose arithmetic
+    is not IEEE double's; ``repr`` round-trips, so the CAST is ``x`` exactly."""
+    return f"CAST({x!r} AS DOUBLE)"
 
 
 class Metric(NamedTuple):

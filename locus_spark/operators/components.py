@@ -35,12 +35,23 @@ from pyspark.sql import functions as F
 from locus_spark.session import materialize
 
 
+#: the per-round fixpoint signature, observed on the round's checkpoint job:
+#: edge count and an order-free hash sum (a decimal accumulator: a LONG sum
+#: of 2^63-scale hashes overflows under ANSI mode)
+SQL_SIGNATURE = ("count(*) AS c", "sum(CAST(xxhash64(u, v) AS DECIMAL(38,0))) AS h")
+
+
+def _bidir(edges: DataFrame) -> DataFrame:
+    """Both orientations of every edge (u, v)."""
+    return edges.union(edges.selectExpr("v AS u", "u AS v"))
+
+
 def _large_star(edges: DataFrame) -> DataFrame:
     """One large-star phase (Kiveris et al., SoCC'14): every node connects
     its STRICTLY-LARGER neighbors to the minimum of its closed
     neighborhood.  One min-aggregate + one equi-join, both map-side
     combinable / key-partitioned."""
-    bidir = edges.union(edges.selectExpr("v AS u", "u AS v"))
+    bidir = _bidir(edges)
     mins = bidir.groupBy("u").agg(F.expr("least(u, min(v)) AS _m"))
     return (
         bidir.join(mins, "u")
@@ -98,41 +109,21 @@ def connected_components(
     equality alone is collision-probabilistic — the subtract runs once
     per call, not once per round).  ``max_rounds`` is a runaway backstop;
     hitting it raises rather than returning a partial labeling."""
-    edges = (
-        pairs.select(F.col(col_a).alias("u"), F.col(col_b).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
+    edges = materialize(
+        pairs.selectExpr(f"{col_a} AS u", f"{col_b} AS v").where("u <> v").distinct()
     )
-    edges = materialize(edges)
     all_nodes = materialize(
         edges.select("u").union(edges.select("v")).distinct()
     )
+    signature = [F.expr(m) for m in SQL_SIGNATURE]
     prev_sig, prev_edges = None, None
     for _ in range(max_rounds):
-        edges, row = materialize(
-            _small_star(_large_star(edges)),
-            [
-                F.count("*").alias("c"),
-                # decimal accumulator: a LONG sum of 2^63-scale hashes
-                # overflows under ANSI mode
-                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-            ],
-        )
+        edges, row = materialize(_small_star(_large_star(edges)), signature)
         sig = (row["c"], row["h"])
         if sig == prev_sig and edges.subtract(prev_edges).isEmpty():
-            bidir = edges.union(
-                edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-            )
-            return (
-                all_nodes.join(
-                    bidir.groupBy("u").agg(F.min("v").alias("_mn")),
-                    "u",
-                    "left",
-                )
-                .select(
-                    F.col("u").alias("node"),
-                    F.least("u", F.coalesce("_mn", "u")).alias("component"),
-                )
+            mins = _bidir(edges).groupBy("u").agg(F.expr("min(v) AS _mn"))
+            return all_nodes.join(mins, "u", "left").selectExpr(
+                "u AS node", "least(u, coalesce(_mn, u)) AS component"
             )
         prev_sig, prev_edges = sig, edges
     raise RuntimeError(
@@ -153,10 +144,7 @@ def assign_clusters(
     ``cluster_id == doc_id`` marks the canonical keeper row."""
     comp = connected_components(pairs, col_a=col_a, col_b=col_b)
     return (
-        documents.select(F.col(id_col).alias("doc_id"))
-        .join(comp.withColumnRenamed("node", "doc_id"), "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("component", "doc_id").alias("cluster_id"),
-        )
+        documents.selectExpr(f"{id_col} AS doc_id")
+        .join(comp.selectExpr("node AS doc_id", "component"), "doc_id", "left")
+        .selectExpr("doc_id", "coalesce(component, doc_id) AS cluster_id")
     )

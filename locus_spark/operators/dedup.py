@@ -21,7 +21,8 @@ text (the ``sql_*`` functions below).  Spark parses that text
 (``selectExpr`` / ``F.expr``: one py4j call per expression instead of one
 per Column node), and the DuckDB oracles in :mod:`locus_spark.queries`
 render the same text.  Two steps are spelled per engine, in
-:data:`SPARK_SQL` and :data:`DUCKDB`: tokenization and parsing an md5 half.
+``functions/metrics.py``'s ``SPARK_SQL`` and ``DUCKDB`` dialects:
+tokenization and parsing an md5 half.
 (``spark.sql`` with DataFrame arguments would parse a whole step at once,
 but it registers each argument as a temp view and drops the view
 afterwards, and dropping a temp view uncaches every cached frame with the
@@ -33,41 +34,12 @@ spaces, drop empty tokens, 1-indexed element access.
 
 from __future__ import annotations
 
-from typing import NamedTuple
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from locus_spark.functions.metrics import SPARK_SQL
+
 SHINGLE = 3
-
-
-class Dialect(NamedTuple):
-    """The two kernel steps that Spark SQL and DuckDB spell differently, as
-    ``str.format`` templates over one SQL argument."""
-
-    #: a text's distinct non-empty space-split tokens, one row each
-    tokens: str
-    #: 8 hex digits (an md5 half) as a non-negative BIGINT
-    hex_bigint: str
-
-    def token_hash(self) -> list[str]:
-        """(hi, lo) of a token ``tok``: the first 16 hex digits of its md5 as
-        two non-negative 32-bit halves, so every SimHash step is plain BIGINT
-        arithmetic and both engines agree bit for bit."""
-        return [
-            f"{self.hex_bigint.format(f'substr(md5(tok), {i}, 8)')} AS {half}"
-            for i, half in ((1, "hi"), (9, "lo"))
-        ]
-
-
-SPARK_SQL = Dialect(
-    tokens="explode(array_distinct(filter(split({}, ' '), t -> t <> '')))",
-    hex_bigint="CAST(conv({}, 16, 10) AS BIGINT)",
-)
-DUCKDB = Dialect(
-    tokens="unnest(list_distinct(list_filter(string_split({}, ' '), t -> t <> '')))",
-    hex_bigint="('0x' || {})::BIGINT",
-)
 
 
 def sql_simhash_vote(j: int) -> str:

@@ -30,6 +30,14 @@ take the smallest core-neighbor label (the reference DBSCAN's
 "first-found" assignment is scan-order-dependent — min is the
 order-free equivalent).  All arithmetic is IEEE double add/sub/mul +
 integer floor-division, bit-identical in the DuckDB oracle.
+
+One text per kernel: the eps-neighbour test (``functions/metrics``'
+``sql_dist2_point_point`` against eps²), the core test and the final
+label projection are SQL text (``sql_*``/``SQL_*`` below) that Spark
+parses (``selectExpr``/``where``: one py4j call per projection) and the
+DuckDB oracle renders.  The eps literal renders as ``CAST(eps AS DOUBLE)``
+(``functions/metrics.sql_cast_double``): Spark reads a bare ``8.0`` as a
+DECIMAL, whose arithmetic is not the IEEE double math both engines share.
 """
 
 from __future__ import annotations
@@ -37,7 +45,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from locus_spark.functions.metrics import sql_cast_double, sql_dist2_point_point
 from locus_spark.session import materialize
+
+#: the label projection over a point's core cluster ``_core_c`` and border
+#: cluster ``_border_c`` (both null: noise, -1)
+SQL_LABELS = (
+    "coalesce(_core_c, _border_c, CAST(-1 AS BIGINT)) AS cluster",
+    "_core_c IS NOT NULL AS is_core",
+)
+
+
+def sql_eps_neighbors(ax: str, ay: str, bx: str, by: str, eps: float) -> str:
+    """Points a and b lie within ``eps``: dist²(a, b) <= eps²."""
+    e = sql_cast_double(float(eps))
+    return f"{sql_dist2_point_point(ax, ay, bx, by)} <= {e} * {e}"
+
+
+def sql_is_core(min_pts: int) -> str:
+    """A point with ``_n`` eps-neighbours besides itself is core."""
+    return f"_n + 1 >= {int(min_pts)}"
 
 
 def eps_neighbor_pairs(points: DataFrame, eps: float) -> DataFrame:
@@ -45,47 +72,22 @@ def eps_neighbor_pairs(points: DataFrame, eps: float) -> DataFrame:
     neighbor pair appears once per direction (what neighbor COUNTING
     wants).  Cell width == eps ⇒ the 3x3 neighborhood of a's cell covers
     every candidate b exactly once (b's cell is unique)."""
-    eps = float(eps)
+    e = sql_cast_double(float(eps))
     pts = materialize(
-        points.select(
-            "id",
-            "x",
-            "y",
-            F.floor(F.col("x") / F.lit(eps)).cast("long").alias("cx"),
-            F.floor(F.col("y") / F.lit(eps)).cast("long").alias("cy"),
+        points.selectExpr(
+            "id", "x", "y",
+            f"CAST(floor(x / {e}) AS BIGINT) AS cx",
+            f"CAST(floor(y / {e}) AS BIGINT) AS cy",
         )
     )
-    probe = pts.select(
-        "id",
-        "x",
-        "y",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        (F.col("cx") + F.lit(dx)).alias("kx"),
-                        (F.col("cy") + F.lit(dy)).alias("ky"),
-                    )
-                    for dx in (-1, 0, 1)
-                    for dy in (-1, 0, 1)
-                ]
-            )
-        ).alias("_k"),
-    ).select("id", "x", "y", F.col("_k.kx").alias("kx"), F.col("_k.ky").alias("ky"))
-    right = pts.select(
-        F.col("id").alias("b"),
-        F.col("x").alias("bx"),
-        F.col("y").alias("by"),
-        F.col("cx").alias("kx"),
-        F.col("cy").alias("ky"),
-    )
-    d2 = (F.col("x") - F.col("bx")) * (F.col("x") - F.col("bx")) + (
-        F.col("y") - F.col("by")
-    ) * (F.col("y") - F.col("by"))
+    probe = pts.selectExpr(
+        "id", "x", "y", "explode(sequence(cx - 1, cx + 1)) AS kx", "cy"
+    ).selectExpr("id", "x", "y", "kx", "explode(sequence(cy - 1, cy + 1)) AS ky")
+    right = pts.selectExpr("id AS b", "x AS _bx", "y AS _by", "cx AS kx", "cy AS ky")
     return (
         probe.join(right, ["kx", "ky"])
-        .where((F.col("id") != F.col("b")) & (d2 <= F.lit(eps * eps)))
-        .select(F.col("id").alias("a"), "b")
+        .where(f"id <> b AND {sql_eps_neighbors('x', 'y', '_bx', '_by', eps)}")
+        .selectExpr("id AS a", "b")
     )
 
 
@@ -107,47 +109,35 @@ def dbscan(points: DataFrame, eps: float, min_pts: int) -> DataFrame:
             "isolated points)"
         )
     pairs = materialize(eps_neighbor_pairs(points, eps))
-    ncnt = pairs.groupBy("a").agg(F.count("*").alias("_n"))
     core = materialize(
-        ncnt.where(F.col("_n") + 1 >= F.lit(int(min_pts))).select(
-            F.col("a").alias("id")
-        )
+        pairs.groupBy("a")
+        .agg(F.expr("count(*) AS _n"))
+        .where(sql_is_core(min_pts))
+        .selectExpr("a AS id")
     )
     from locus_spark.operators.components import connected_components
 
-    cc_edges = (
-        pairs.join(core.withColumnRenamed("id", "a"), "a", "semi")
-        .join(core.withColumnRenamed("id", "b"), "b", "semi")
+    cc_edges = pairs.join(core.selectExpr("id AS a"), "a", "semi").join(
+        core.selectExpr("id AS b"), "b", "semi"
     )
     comp = connected_components(cc_edges, col_a="a", col_b="b")
     core_labeled = materialize(
-        core.join(comp.withColumnRenamed("node", "id"), "id", "left").select(
-            "id", F.coalesce("component", "id").alias("cluster")
+        core.join(comp.selectExpr("node AS id", "component"), "id", "left").selectExpr(
+            "id", "coalesce(component, id) AS _core_c"
         )
     )
     border = (
-        pairs.join(core.withColumnRenamed("id", "a"), "a", "left_anti")
-        .join(
-            core_labeled.select(
-                F.col("id").alias("b"), F.col("cluster").alias("_bc")
-            ),
-            "b",
-        )
+        pairs.join(core.selectExpr("id AS a"), "a", "left_anti")
+        .join(core_labeled.selectExpr("id AS b", "_core_c"), "b")
         .groupBy("a")
-        .agg(F.min("_bc").alias("cluster"))
-        .select(F.col("a").alias("id"), "cluster")
+        .agg(F.expr("min(_core_c) AS _border_c"))
+        .withColumnRenamed("a", "id")
     )
     return (
         points.select("id")
-        .join(core_labeled.withColumnRenamed("cluster", "_core_c"), "id", "left")
-        .join(border.withColumnRenamed("cluster", "_border_c"), "id", "left")
-        .select(
-            "id",
-            F.coalesce("_core_c", "_border_c", F.lit(-1).cast("long")).alias(
-                "cluster"
-            ),
-            F.col("_core_c").isNotNull().alias("is_core"),
-        )
+        .join(core_labeled, "id", "left")
+        .join(border, "id", "left")
+        .selectExpr("id", *SQL_LABELS)
     )
 
 
@@ -165,19 +155,16 @@ def dbscan_oracle_sql(
     blows the CTE up — the oracle is for the driver's sf0.01 gate, where
     it runs in under a second; the Spark operator itself handles sf0.1 in
     ~9 s (bench)."""
-    e = repr(float(eps))
     return f"""
 {points_cte}
 , prs AS MATERIALIZED (
   SELECT p.id AS a, q.id AS b
   FROM points p JOIN points q
-    ON p.id <> q.id
-   AND (p.x - q.x) * (p.x - q.x) + (p.y - q.y) * (p.y - q.y)
-       <= CAST({e} AS DOUBLE) * CAST({e} AS DOUBLE)
+    ON p.id <> q.id AND {sql_eps_neighbors("p.x", "p.y", "q.x", "q.y", eps)}
 ), ncnt AS (
-  SELECT a, count(*) AS n FROM prs GROUP BY a
+  SELECT a, count(*) AS _n FROM prs GROUP BY a
 ), core AS MATERIALIZED (
-  SELECT a AS id FROM ncnt WHERE n + 1 >= {int(min_pts)}
+  SELECT a AS id FROM ncnt WHERE {sql_is_core(min_pts)}
 ), cedges AS (
   SELECT prs.a AS u, prs.b AS v FROM prs
   WHERE prs.a IN (SELECT id FROM core) AND prs.b IN (SELECT id FROM core)
@@ -186,16 +173,14 @@ def dbscan_oracle_sql(
   UNION
   SELECT e.u, r.l FROM cedges e JOIN reach r ON e.v = r.u
 ), comp AS MATERIALIZED (
-  SELECT u AS id, min(l) AS cluster FROM reach GROUP BY u
+  SELECT u AS id, min(l) AS _core_c FROM reach GROUP BY u
 ), border AS (
-  SELECT prs.a AS id, min(comp.cluster) AS cluster
+  SELECT prs.a AS id, min(_core_c) AS _border_c
   FROM prs JOIN comp ON comp.id = prs.b
   WHERE prs.a NOT IN (SELECT id FROM core)
   GROUP BY prs.a
 )
-SELECT p.id AS id,
-       coalesce(comp.cluster, border.cluster, -1) AS cluster,
-       (comp.id IS NOT NULL) AS is_core
+SELECT p.id AS id, {", ".join(SQL_LABELS)}
 FROM points p
 LEFT JOIN comp ON comp.id = p.id
 LEFT JOIN border ON border.id = p.id

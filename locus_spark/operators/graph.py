@@ -26,6 +26,17 @@ Scale shape (the Pregel shuffle pattern):
   without re-shuffling the edges; the rank frame (|V| rows) is the only
   per-round shuffle.
 
+One text per kernel: the edge weight, a round's contribution sum, the
+teleport term, the damped step, HITS' L1-normalized half-step, the
+triangle-orientation tests and the pseudo-link hash are each written once
+as SQL text (the ``sql_*``/``SQL_*`` names below).  Spark parses it
+(``selectExpr``/``F.expr``/``where``: one py4j call per projection, built
+before the round loop, instead of one per Column node per round), and the
+DuckDB oracles unroll their rounds over the same text.  Parameter literals
+render as ``CAST(x AS DOUBLE)`` (``functions/metrics.sql_cast_double``):
+Spark reads a bare ``0.85`` as DECIMAL(2,2), whose arithmetic would
+diverge from the IEEE double math both engines otherwise do bit for bit.
+
 Determinism contract: a FIXED iteration count (default 10) keeps the result
 oracle-comparable; float contributions are summed in engine-dependent order,
 so callers compare at 6-decimal rounding (drift across 10 damped rounds is
@@ -41,6 +52,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from locus_spark.functions.metrics import DUCKDB, SPARK_SQL, Dialect, sql_cast_double
 from locus_spark.session import materialize
 
 #: standard damping factor (Page et al., 1999).
@@ -50,19 +62,48 @@ PR_OUT_LINKS = 3
 #: fixed power-iteration count for oracle-deterministic runs.
 PR_ITERATIONS = 10
 
+#: per-edge weight 1/outdeg over the out-degree count ``_od``
+SQL_EDGE_WEIGHT = "CAST(1.0 AS DOUBLE) / _od"
+#: a round's incoming mass at ``dst``: source rank ``r`` times edge weight ``w``
+SQL_CONTRIB = "sum(r * w)"
+#: an edge (src, dst) as its undirected canonical pair a < b
+SQL_UNDIRECTED = ("least(src, dst) AS a", "greatest(src, dst) AS b")
+#: local clustering coefficient of a node of degree ``deg`` in ``tri_count``
+#: triangles (null: none)
+SQL_CLUSTERING = "round(CAST(2.0 AS DOUBLE) * coalesce(tri_count, 0) / (deg * (deg - 1)), 6)"
 
-def _hash_mod(prefix: str, col: F.Column, modulus: int) -> F.Column:
-    """uint32(md5(prefix || col)) % modulus — first 8 md5 hex chars, the
-    cross-engine hash contract shared with operators/sampling.py (DuckDB:
-    ``('0x' || substr(md5(...), 1, 8))::BIGINT % modulus``)."""
+
+def sql_link_target(i: int, key: str, n: str, dialect: Dialect = SPARK_SQL) -> str:
+    """Out-link ``i`` of document ``key``: the md5-prefix bucket of
+    ``'L{i}:' || key``, mod ``n``."""
+    return f"{dialect.md5_bucket(f'L{i}:', key)} % {n}"
+
+
+def sql_teleport(damping: float, n: str, p: str | None = None) -> str:
+    """The teleport mass ``(1-d) * p(v)``: ``p`` a per-node probability
+    column, or uniform ``1/n`` without one."""
+    base = sql_cast_double(1.0 - damping)
+    return f"{base} / {n}" if p is None else f"{base} * ({p})"
+
+
+def sql_seed_teleport(seed_mod: int, key: str, n_seeds: str) -> str:
+    """Teleport probability of a seed-set walk: ``1/n_seeds`` on the seeds
+    ``key % seed_mod == 0``, zero elsewhere."""
     return (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(prefix), col.cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % F.lit(modulus)
+        f"CASE WHEN {key} % {seed_mod} = 0"
+        f" THEN CAST(1.0 AS DOUBLE) / {n_seeds} ELSE CAST(0.0 AS DOUBLE) END"
     )
+
+
+def sql_init_rank(n: str, p: str | None = None) -> str:
+    """Round-0 rank: the teleport distribution ``p``, or uniform ``1/n``."""
+    return f"CAST(1.0 AS DOUBLE) / {n}" if p is None else f"({p})"
+
+
+def sql_pr_step(damping: float, teleport: str) -> str:
+    """The damped step: teleport mass plus ``d`` times the round's incoming
+    mass ``_s`` (null for a node without in-links)."""
+    return f"{teleport} + {sql_cast_double(damping)} * coalesce(_s, CAST(0.0 AS DOUBLE))"
 
 
 def derive_links(
@@ -78,21 +119,17 @@ def derive_links(
     a non-contiguous corpus needs an id-densification pass first.  Parallel
     edges and self-links are kept — they are deterministic in both engines
     and PageRank treats them as ordinary multi-edges."""
-    targets = F.array(
-        *[_hash_mod(f"L{i}:", F.col(id_col), n_docs) for i in range(n_links)]
+    targets = ", ".join(
+        sql_link_target(i, id_col, str(int(n_docs))) for i in range(n_links)
     )
-    return documents.select(
-        F.col(id_col).alias("src"), F.explode(targets).alias("dst")
-    )
+    return documents.selectExpr(f"{id_col} AS src", f"explode(array({targets})) AS dst")
 
 
 def weight_edges(edges: DataFrame) -> DataFrame:
     """(src, dst, w=1/outdeg): the static per-edge weight frame the
     iteration loop consumes — computed ONCE, never inside a round."""
-    outdeg = edges.groupBy("src").agg(F.count("*").alias("_od"))
-    return edges.join(outdeg, "src").select(
-        "src", "dst", (F.lit(1.0) / F.col("_od")).alias("w")
-    )
+    outdeg = edges.groupBy("src").agg(F.expr("count(*) AS _od"))
+    return edges.join(outdeg, "src").selectExpr("src", "dst", f"{SQL_EDGE_WEIGHT} AS w")
 
 
 def prepare_edges_bucketed(
@@ -125,9 +162,9 @@ def round_contrib(edges_w: DataFrame, ranks: DataFrame) -> DataFrame:
     aggregate before the dst shuffle is the scale-critical plan property
     (pinned in tests/test_graph.py)."""
     return (
-        edges_w.join(ranks.withColumnRenamed("v", "src"), "src")
+        edges_w.join(ranks.selectExpr("v AS src", "r"), "src")
         .groupBy("dst")
-        .agg(F.sum(F.col("r") * F.col("w")).alias("_s"))
+        .agg(F.expr(f"{SQL_CONTRIB} AS _s"))
     )
 
 
@@ -171,30 +208,20 @@ def pagerank(
     damped iteration contracts toward the unique fixpoint from ANY
     starting vector, so warm-starting affects round count, never the
     answer."""
-    if teleport_col is None:
-        base_expr = F.lit((1.0 - damping) / float(n_nodes))
-        init_expr = F.lit(1.0) / F.lit(float(n_nodes))
-    else:
-        base_expr = F.lit(1.0 - damping) * F.col(teleport_col)
-        init_expr = F.col(teleport_col)
+    n = str(int(n_nodes))
+    step = sql_pr_step(damping, sql_teleport(damping, n, teleport_col))
     edges_w = edges if edges_are_weighted else materialize(weight_edges(edges))
     if init_ranks is not None:
         ranks = materialize(init_ranks.select("v", "r"))
     else:
-        ranks = materialize(nodes.select("v", init_expr.alias("r")))
-    for _ in range(iterations):
-        contrib = round_contrib(edges_w, ranks)
-        stepped = (
-            nodes.join(contrib.withColumnRenamed("dst", "v"), "v", "left")
-            .select(
-                "v",
-                (
-                    base_expr
-                    + F.lit(damping) * F.coalesce("_s", F.lit(0.0))
-                ).alias("r"),
-            )
+        ranks = materialize(
+            nodes.selectExpr("v", f"{sql_init_rank(n, teleport_col)} AS r")
         )
-        ranks = materialize(stepped)
+    for _ in range(iterations):
+        contrib = round_contrib(edges_w, ranks).selectExpr("dst AS v", "_s")
+        ranks = materialize(
+            nodes.join(contrib, "v", "left").selectExpr("v", f"{step} AS r")
+        )
     return ranks.select("v", "r")
 
 
@@ -202,13 +229,13 @@ def undirect_edges(edges: DataFrame) -> DataFrame:
     """(a, b) canonical undirected edge set: self-loops dropped, each pair
     oriented ``a < b``, parallel edges collapsed — the simple-graph view
     triangle counting is defined over."""
-    return (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .distinct()
-    )
+    return edges.where("src <> dst").selectExpr(*SQL_UNDIRECTED).distinct()
+
+
+def sql_rank_lt(d1: str, x1: str, d2: str, x2: str) -> str:
+    """Node ``x1`` (degree ``d1``) ranks below ``x2`` (degree ``d2``) in
+    the (degree, id) order triangle counting orients its edges by."""
+    return f"({d1} < {d2} OR ({d1} = {d2} AND {x1} < {x2}))"
 
 
 def triangle_stats(edges: DataFrame) -> DataFrame:
@@ -235,61 +262,53 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     cross-engine float-division display parity)."""
     und = materialize(undirect_edges(edges))
     deg = (
-        und.select(F.col("a").alias("v"))
-        .unionByName(und.select(F.col("b").alias("v")))
+        und.selectExpr("a AS v")
+        .unionByName(und.selectExpr("b AS v"))
         .groupBy("v")
-        .agg(F.count("*").alias("deg"))
+        .agg(F.expr("count(*) AS deg"))
     )
-    e = und.join(
-        deg.select(F.col("v").alias("a"), F.col("deg").alias("da")), "a"
-    ).join(deg.select(F.col("v").alias("b"), F.col("deg").alias("db")), "b")
-    a_first = (F.col("da") < F.col("db")) | (
-        (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
+    e = und.join(deg.selectExpr("v AS a", "deg AS da"), "a").join(
+        deg.selectExpr("v AS b", "deg AS db"), "b"
     )
+    a_first = sql_rank_lt("da", "a", "db", "b")
     oriented = materialize(
-        e.select(
-            F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-            F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("w"),
-            F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("dw"),
+        e.selectExpr(
+            *(
+                f"CASE WHEN {a_first} THEN {x} ELSE {y} END AS {name}"
+                for name, x, y in (("u", "a", "b"), ("w", "b", "a"), ("dw", "db", "da"))
+            )
         )
     )
     # wedges centered at u, ordered so (v, w) matches the v->w orientation
-    w1 = oriented.select("u", F.col("w").alias("v"), F.col("dw").alias("dv"))
-    wedges = w1.join(oriented, "u").where(
-        (F.col("dv") < F.col("dw"))
-        | ((F.col("dv") == F.col("dw")) & (F.col("v") < F.col("w")))
+    wedges = (
+        oriented.selectExpr("u", "w AS v", "dw AS dv")
+        .join(oriented, "u")
+        .where(sql_rank_lt("dv", "v", "dw", "w"))
     )
-    tris = wedges.join(
-        oriented.select(F.col("u").alias("v"), "w"), ["v", "w"]
-    ).select("u", "v", "w")
+    tris = wedges.join(oriented.selectExpr("u AS v", "w"), ["v", "w"])
     per_node = (
-        tris.select(F.explode(F.array("u", "v", "w")).alias("v"))
+        tris.selectExpr("explode(array(u, v, w)) AS v")
         .groupBy("v")
-        .agg(F.count("*").alias("tri_count"))
+        .agg(F.expr("count(*) AS tri_count"))
     )
     return (
-        deg.where(F.col("deg") >= 2)
+        deg.where("deg >= 2")
         .join(per_node, "v", "left")
-        .select(
+        .selectExpr(
             "v",
-            F.col("deg").alias("degree"),
-            F.coalesce("tri_count", F.lit(0)).alias("tri_count"),
-            F.round(
-                F.lit(2.0)
-                * F.coalesce("tri_count", F.lit(0))
-                / (F.col("deg") * (F.col("deg") - F.lit(1))),
-                6,
-            ).alias("clustering"),
+            "deg AS degree",
+            "coalesce(tri_count, 0) AS tri_count",
+            f"{SQL_CLUSTERING} AS clustering",
         )
     )
 
 
 def _links_sql(n_links: int) -> str:
-    """DuckDB mirror of :func:`derive_links` over the oracles' ``nodes``
-    and ``nn`` CTEs: one md5-hashed SELECT per out-link, UNION ALL'd."""
+    """The DuckDB rendering of :func:`derive_links` over the oracles'
+    ``nodes`` and ``nn`` CTEs: one SELECT per out-link, UNION ALL'd."""
     return "\n  UNION ALL ".join(
-        f"SELECT v AS src, (('0x' || substr(md5('L{i}:' || CAST(v AS VARCHAR)), 1, 8))::BIGINT"
-        " % nn.ni) AS dst FROM nodes CROSS JOIN nn"
+        f"SELECT v AS src, {sql_link_target(i, 'v', 'nn.ni', DUCKDB)} AS dst"
+        " FROM nodes CROSS JOIN nn"
         for i in range(n_links)
     )
 
@@ -306,10 +325,10 @@ links AS (
   {_links_sql(n_links)}
 ),
 und AS (
-  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
+  SELECT DISTINCT {", ".join(SQL_UNDIRECTED)}
   FROM links WHERE src <> dst
 ),
-deg AS (
+degs AS (
   SELECT v, count(*) AS deg
   FROM (SELECT a AS v FROM und UNION ALL SELECT b AS v FROM und)
   GROUP BY v
@@ -326,13 +345,70 @@ per_node AS (
         UNION ALL SELECT z AS v FROM tri)
   GROUP BY v
 )
-SELECT deg.v AS doc_id, deg.deg AS degree,
-       coalesce(per_node.tri_count, 0) AS tri_count,
-       round(2.0 * coalesce(per_node.tri_count, 0)
-             / (deg.deg * (deg.deg - 1)), 6) AS clustering
-FROM deg LEFT JOIN per_node ON per_node.v = deg.v
-WHERE deg.deg >= 2
+SELECT degs.v AS doc_id, deg AS degree,
+       coalesce(tri_count, 0) AS tri_count,
+       {SQL_CLUSTERING} AS clustering
+FROM degs LEFT JOIN per_node ON per_node.v = degs.v
+WHERE deg >= 2
 """
+
+
+def _pr_weight_ctes(tag: str) -> list[str]:
+    """The oracle's ``outdeg{tag}`` and ``ew{tag}`` (weighted edges) CTEs
+    over ``links{tag}``."""
+    links = f"links{tag}"
+    return [
+        f"outdeg{tag} AS (SELECT src, count(*) AS _od FROM {links} GROUP BY src)",
+        f"ew{tag} AS (SELECT {links}.src, {links}.dst, {SQL_EDGE_WEIGHT} AS w"
+        f" FROM {links} JOIN outdeg{tag} USING (src))",
+    ]
+
+
+def _pr_round_cte(name: str, prev: str, ew: str, step: str, cross: str) -> str:
+    """One unrolled power-iteration round: rank ``name`` from rank
+    ``prev`` over the weighted edges ``ew``."""
+    return f"""{name} AS (
+  SELECT nodes.v, {step} AS r
+  FROM nodes {cross}
+  LEFT JOIN (SELECT {ew}.dst AS v, {SQL_CONTRIB} AS _s
+             FROM {ew} JOIN {prev} p ON p.v = {ew}.src GROUP BY {ew}.dst) c
+    ON c.v = nodes.v
+)"""
+
+
+def _pagerank_oracle(
+    damping: float,
+    links: dict[str, int],
+    phases: list[tuple[str, str, int]],
+    seed_mod: int | None = None,
+) -> str:
+    """DuckDB SQL unrolling ``pagerank``'s rounds over the shared texts.
+    ``links`` maps a tag to the out-link count of graph ``links{tag}``;
+    each phase ``(prefix, tag, rounds)`` runs ``rounds`` rounds over graph
+    ``tag`` from the previous phase's last rank."""
+    ctes = [
+        "nodes AS (SELECT doc_id AS v FROM documents)",
+        "nn AS (SELECT CAST(count(*) AS DOUBLE) AS n, count(*) AS ni FROM nodes)",
+    ]
+    for tag, n_links in links.items():
+        ctes.append(f"links{tag} AS (\n  {_links_sql(n_links)}\n)")
+    for tag in links:
+        ctes += _pr_weight_ctes(tag)
+    p, cross = None, "CROSS JOIN nn"
+    if seed_mod is not None:
+        ctes.append(
+            "ns AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes"
+            f" WHERE v % {seed_mod} = 0)"
+        )
+        p, cross = sql_seed_teleport(seed_mod, "nodes.v", "ns.n"), "CROSS JOIN ns"
+    ctes.append(f"r0 AS (SELECT nodes.v, {sql_init_rank('nn.n', p)} AS r FROM nodes {cross})")
+    step = sql_pr_step(damping, sql_teleport(damping, "nn.n", p))
+    prev = "r0"
+    for prefix, tag, rounds in phases:
+        for t in range(1, rounds + 1):
+            ctes.append(_pr_round_cte(f"{prefix}{t}", prev, f"ew{tag}", step, cross))
+            prev = f"{prefix}{t}"
+    return "WITH " + ",\n".join(ctes) + f"\nSELECT v AS doc_id, round(r, 6) AS pr FROM {prev}"
 
 
 def pagerank_oracle_sql(
@@ -341,65 +417,48 @@ def pagerank_oracle_sql(
     iterations: int = PR_ITERATIONS,
     seed_mod: int | None = None,
 ) -> str:
-    """DuckDB SQL unrolling the fixed-round power iteration with the EXACT
-    expression shapes of ``pagerank`` over ``derive_links`` — parameter
-    literals CAST to DOUBLE so DuckDB's decimal arithmetic never diverges
-    from Spark's double math; results compare at 6-decimal rounding.
+    """DuckDB SQL unrolling the fixed-round power iteration of ``pagerank``
+    over ``derive_links``, in the same texts; results compare at 6-decimal
+    rounding.
 
     With ``seed_mod`` the unrolled iteration is the PERSONALIZED variant:
     teleport mass ``1/|S|`` on the seed set ``v % seed_mod == 0``, zero
     elsewhere (mirroring ``teleport_col``)."""
-    ctes = [
-        "nodes AS (SELECT doc_id AS v FROM documents)",
-        "nn AS (SELECT CAST(count(*) AS DOUBLE) AS n, count(*) AS ni FROM nodes)",
-        f"links AS (\n  {_links_sql(n_links)}\n)",
-        "outdeg AS (SELECT src, count(*) AS _od FROM links GROUP BY src)",
-        "ew AS (SELECT links.src, links.dst, CAST(1.0 AS DOUBLE) / outdeg._od AS w"
-        " FROM links JOIN outdeg USING (src))",
-    ]
-    base_lit = repr((1.0 - damping))
-    if seed_mod is None:
-        ctes.append(
-            "r0 AS (SELECT v, CAST(1.0 AS DOUBLE) / nn.n AS r"
-            " FROM nodes CROSS JOIN nn)"
-        )
-        base_term = f"CAST({base_lit} AS DOUBLE) / nn.n"
-        extra_from = "CROSS JOIN nn"
-    else:
-        ctes.append(
-            "ns AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes"
-            f" WHERE v % {seed_mod} = 0)"
-        )
-        p_case = (
-            f"CASE WHEN nodes.v % {seed_mod} = 0"
-            " THEN CAST(1.0 AS DOUBLE) / ns.n ELSE CAST(0.0 AS DOUBLE) END"
-        )
-        ctes.append(
-            f"r0 AS (SELECT nodes.v, {p_case} AS r FROM nodes CROSS JOIN ns)"
-        )
-        base_term = f"CAST({base_lit} AS DOUBLE) * ({p_case})"
-        extra_from = "CROSS JOIN ns"
-    for t in range(1, iterations + 1):
-        ctes.append(
-            f"""r{t} AS (
-  SELECT nodes.v,
-         {base_term}
-         + CAST({damping!r} AS DOUBLE) * coalesce(c._s, CAST(0.0 AS DOUBLE)) AS r
-  FROM nodes {extra_from}
-  LEFT JOIN (SELECT ew.dst AS v, sum(p.r * ew.w) AS _s
-             FROM ew JOIN r{t - 1} p ON p.v = ew.src GROUP BY ew.dst) c
-    ON c.v = nodes.v
-)"""
-        )
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f"\nSELECT v AS doc_id, round(r, 6) AS pr FROM r{iterations}"
+    return _pagerank_oracle(damping, {"": n_links}, [("r", "", iterations)], seed_mod)
+
+
+def pagerank_incremental_oracle_sql(
+    damping: float = PR_DAMPING,
+    base_links: int = PR_OUT_LINKS,
+    delta_links: int = 1,
+    full_iterations: int = PR_ITERATIONS,
+    warm_iterations: int = 3,
+) -> str:
+    """DuckDB SQL for the warm-start path: unroll ``full_iterations``
+    rounds over the base ``base_links``-per-doc graph, then
+    ``warm_iterations`` rounds over the grown graph
+    (``base_links + delta_links`` per doc) STARTING from the base
+    fixpoint — the exact mirror of ``pagerank(init_ranks=...)`` after a
+    delta of derived edges lands."""
+    return _pagerank_oracle(
+        damping,
+        {"a": base_links, "b": base_links + delta_links},
+        [("r", "a", full_iterations), ("s", "b", warm_iterations)],
     )
 
 
 #: fixed HITS iteration count for oracle-deterministic runs.
 HITS_ITERATIONS = 8
+
+
+def sql_l1_normalized(x: str) -> str:
+    """Score ``x`` (null: no in-mass) over the half-step's L1 mass
+    ``_norm``.  A null or zero mass (an edgeless graph) gives 0.0, never a
+    null division."""
+    return (
+        f"CASE WHEN _norm IS NOT NULL AND _norm <> 0"
+        f" THEN coalesce({x}, CAST(0.0 AS DOUBLE)) / _norm ELSE CAST(0.0 AS DOUBLE) END"
+    )
 
 
 def hits(
@@ -440,49 +499,31 @@ def hits(
     if iterations < 1:
         raise ValueError("hits: iterations must be >= 1")
 
-    def _l1_normalized(raw: DataFrame, key: str, col: str) -> DataFrame:
-        """nodes left-joined with ``raw`` (keyed ``key``), divided by the
-        global L1 mass carried as a one-row broadcast column.  Null/zero
-        mass (edgeless graph) => all-zero scores, never a null division."""
-        norm = raw.agg(F.sum(col).alias("_norm"))
+    def half_step(state: DataFrame, x: str, out: str, key: str, other: str) -> DataFrame:
+        """Sum score ``x`` along the edges from ``other`` to ``key`` into
+        ``out``, then L1-normalize it over every node."""
+        raw = (
+            e.join(state.selectExpr(f"v AS {other}", x), other)
+            .groupBy(key)
+            .agg(F.expr(f"sum({x}) AS {out}"))
+        )
         return (
-            nodes.join(raw.withColumnRenamed(key, "v"), "v", "left")
-            .crossJoin(F.broadcast(norm))
-            .select(
-                "v",
-                F.when(
-                    F.col("_norm").isNotNull() & (F.col("_norm") != 0.0),
-                    F.coalesce(col, F.lit(0.0)) / F.col("_norm"),
-                )
-                .otherwise(0.0)
-                .alias(col),
-            )
+            nodes.join(raw.selectExpr(f"{key} AS v", out), "v", "left")
+            .crossJoin(F.broadcast(raw.selectExpr(f"sum({out}) AS _norm")))
+            .selectExpr("v", f"{sql_l1_normalized(out)} AS {out}")
         )
 
     e = materialize(edges.select("src", "dst"))
-    state = materialize(
-        nodes.select("v", F.lit(1.0).alias("h"))
-    )
+    state = materialize(nodes.selectExpr("v", "CAST(1.0 AS DOUBLE) AS h"))
     for _ in range(iterations):
-        a_raw = (
-            e.join(state.withColumnRenamed("v", "src"), "src")
-            .groupBy("dst")
-            .agg(F.sum("h").alias("a"))
-        )
-        auth = _l1_normalized(a_raw, "dst", "a")
-        h_raw = (
-            e.join(auth.withColumnRenamed("v", "dst"), "dst")
-            .groupBy("src")
-            .agg(F.sum("a").alias("h"))
-        )
+        auth = half_step(state, "h", "a", "dst", "src")
         # checkpoint once per iteration — NOT less often: chaining two
         # iterations before materializing re-executes the shared auth/a_raw
         # subplans in every consumer branch (measured 6.2 s vs 4.7 s at
         # sf0.1 with an every-2nd-iteration cadence)
-        state = materialize(_l1_normalized(h_raw, "src", "h"))
-        last_auth = auth
-    return state.join(last_auth, "v").select(
-        "v", F.round("h", 6).alias("hub"), F.round("a", 6).alias("auth")
+        state = materialize(half_step(auth, "a", "h", "src", "dst"))
+    return state.join(auth, "v").selectExpr(
+        "v", "round(h, 6) AS hub", "round(a, 6) AS auth"
     )
 
 
@@ -502,94 +543,25 @@ def hits_oracle_sql(
         f"links AS MATERIALIZED (\n  {_links_sql(n_links)}\n)",
         "h0 AS (SELECT v, CAST(1.0 AS DOUBLE) AS h FROM nodes)",
     ]
-    prev_h = "h0"
     for t in range(1, iterations + 1):
-        ctes.append(
-            f"araw{t} AS MATERIALIZED (SELECT links.dst AS v, sum(p.h) AS a"
-            f" FROM links JOIN {prev_h} p ON p.v = links.src GROUP BY links.dst)"
-        )
-        ctes.append(f"asum{t} AS (SELECT sum(a) AS s FROM araw{t})")
-        ctes.append(
-            f"a{t} AS MATERIALIZED (SELECT nodes.v,"
-            f" coalesce(araw{t}.a, CAST(0.0 AS DOUBLE)) / asum{t}.s AS a"
-            f" FROM nodes CROSS JOIN asum{t}"
-            f" LEFT JOIN araw{t} ON araw{t}.v = nodes.v)"
-        )
-        ctes.append(
-            f"hraw{t} AS MATERIALIZED (SELECT links.src AS v, sum(q.a) AS h"
-            f" FROM links JOIN a{t} q ON q.v = links.dst GROUP BY links.src)"
-        )
-        ctes.append(f"hsum{t} AS (SELECT sum(h) AS s FROM hraw{t})")
-        ctes.append(
-            f"h{t} AS MATERIALIZED (SELECT nodes.v,"
-            f" coalesce(hraw{t}.h, CAST(0.0 AS DOUBLE)) / hsum{t}.s AS h"
-            f" FROM nodes CROSS JOIN hsum{t}"
-            f" LEFT JOIN hraw{t} ON hraw{t}.v = nodes.v)"
-        )
-        prev_h = f"h{t}"
+        for x, out, key, other, prev in (
+            ("h", "a", "dst", "src", f"h{t - 1}"),
+            ("a", "h", "src", "dst", f"a{t}"),
+        ):
+            ctes += [
+                f"{out}raw{t} AS MATERIALIZED (SELECT links.{key} AS v, sum({x}) AS {out}"
+                f" FROM links JOIN {prev} p ON p.v = links.{other} GROUP BY links.{key})",
+                f"{out}sum{t} AS (SELECT sum({out}) AS _norm FROM {out}raw{t})",
+                f"{out}{t} AS MATERIALIZED (SELECT nodes.v, {sql_l1_normalized(out)} AS {out}"
+                f" FROM nodes CROSS JOIN {out}sum{t}"
+                f" LEFT JOIN {out}raw{t} ON {out}raw{t}.v = nodes.v)",
+            ]
     return (
         "WITH "
         + ",\n".join(ctes)
         + f"\nSELECT h{iterations}.v AS doc_id, round(h{iterations}.h, 6) AS hub,"
         f" round(a{iterations}.a, 6) AS auth"
         f"\nFROM h{iterations} JOIN a{iterations} ON a{iterations}.v = h{iterations}.v"
-    )
-
-
-def pagerank_incremental_oracle_sql(
-    damping: float = PR_DAMPING,
-    base_links: int = PR_OUT_LINKS,
-    delta_links: int = 1,
-    full_iterations: int = PR_ITERATIONS,
-    warm_iterations: int = 3,
-) -> str:
-    """DuckDB SQL for the warm-start path: unroll ``full_iterations``
-    rounds over the base ``base_links``-per-doc graph, then
-    ``warm_iterations`` rounds over the grown graph
-    (``base_links + delta_links`` per doc) STARTING from the base
-    fixpoint — the exact mirror of ``pagerank(init_ranks=...)`` after a
-    delta of derived edges lands."""
-
-    def weight_ctes(links: str, tag: str) -> list[str]:
-        return [
-            f"outdeg{tag} AS (SELECT src, count(*) AS _od FROM {links} GROUP BY src)",
-            f"ew{tag} AS (SELECT {links}.src, {links}.dst,"
-            f" CAST(1.0 AS DOUBLE) / outdeg{tag}._od AS w"
-            f" FROM {links} JOIN outdeg{tag} USING (src))",
-        ]
-
-    def round_cte(name: str, prev: str, ew: str) -> str:
-        base_lit = repr((1.0 - damping))
-        return f"""{name} AS (
-  SELECT nodes.v,
-         CAST({base_lit} AS DOUBLE) / nn.n
-         + CAST({damping!r} AS DOUBLE) * coalesce(c._s, CAST(0.0 AS DOUBLE)) AS r
-  FROM nodes CROSS JOIN nn
-  LEFT JOIN (SELECT {ew}.dst AS v, sum(p.r * {ew}.w) AS _s
-             FROM {ew} JOIN {prev} p ON p.v = {ew}.src GROUP BY {ew}.dst) c
-    ON c.v = nodes.v
-)"""
-
-    ctes = [
-        "nodes AS (SELECT doc_id AS v FROM documents)",
-        "nn AS (SELECT CAST(count(*) AS DOUBLE) AS n, count(*) AS ni FROM nodes)",
-        f"linksa AS (\n  {_links_sql(base_links)}\n)",
-        f"linksb AS (\n  {_links_sql(base_links + delta_links)}\n)",
-        *weight_ctes("linksa", "a"),
-        *weight_ctes("linksb", "b"),
-        "r0 AS (SELECT v, CAST(1.0 AS DOUBLE) / nn.n AS r FROM nodes CROSS JOIN nn)",
-    ]
-    prev = "r0"
-    for t in range(1, full_iterations + 1):
-        ctes.append(round_cte(f"r{t}", prev, "ewa"))
-        prev = f"r{t}"
-    for t in range(1, warm_iterations + 1):
-        ctes.append(round_cte(f"s{t}", prev, "ewb"))
-        prev = f"s{t}"
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f"\nSELECT v AS doc_id, round(r, 6) AS pr FROM {prev}"
     )
 
 

@@ -5,28 +5,22 @@ quotas) with REPRODUCIBLE sampling: the keep/drop decision must be a pure
 function of (row key, seed), not of Spark's RNG or partition layout —
 otherwise a rerun, a retry, or a different partitioning samples a different
 corpus.  ``df.sample()`` gives none of those guarantees; hash-threshold
-sampling gives all of them and is a stateless Column expression (codegen'd,
+sampling gives all of them and is a stateless SQL predicate (codegen'd,
 embarrassingly parallel, no shuffle).
 
 Keep rule: ``uint32(md5(seed ':' key)[:8]) < floor(rate * 2^32)`` — the
 threshold is an exact integer so Spark and any oracle engine agree
 bit-for-bit, and rates compose monotonically (a 0.2 sample is a subset of a
 0.5 sample at the same seed, which makes downscaling a mix reproducible).
+The rule is one SQL text, :func:`sql_sample_predicate`: Spark filters on
+it, and the oracles render the same text in DuckDB's dialect.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-
-def _bucket(key: Column, seed: str) -> Column:
-    """uint32 hash bucket of a row key: first 8 md5 hex chars as a long."""
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(f"{seed}:"), key.cast("string"))), 1, 8),
-        16,
-        10,
-    ).cast("long")
+from locus_spark.functions.metrics import SPARK_SQL, Dialect
 
 
 def threshold(rate: float) -> int:
@@ -34,11 +28,34 @@ def threshold(rate: float) -> int:
     return int(max(0.0, min(1.0, rate)) * (1 << 32))
 
 
+def sql_sample_predicate(
+    strata_col: str | None,
+    rates: dict[str, float],
+    key_col: str,
+    default_rate: float = 0.0,
+    seed: str = "locus",
+    dialect: Dialect = SPARK_SQL,
+) -> str:
+    """The keep rule as SQL text: the md5-prefix bucket of ``key_col``
+    below its stratum's integer threshold (``rates[s]`` for stratum ``s``,
+    ``default_rate`` otherwise; with no ``rates``, ``default_rate`` for
+    every row).  :func:`stratified_sample` filters on it and the
+    oracles render it with :data:`~locus_spark.functions.metrics.DUCKDB`."""
+    thr = str(threshold(default_rate))
+    if rates:
+        cases = " ".join(
+            f"WHEN {strata_col} = '{s}' THEN {threshold(rates[s])}"
+            for s in sorted(rates)  # deterministic plan text
+        )
+        thr = f"(CASE {cases} ELSE {thr} END)"
+    return f"{dialect.md5_bucket(f'{seed}:', key_col)} < {thr}"
+
+
 def hash_sample(
     df: DataFrame, rate: float, key_col: str, seed: str = "locus"
 ) -> DataFrame:
     """Deterministic ``rate``-fraction sample keyed on ``key_col``."""
-    return df.filter(_bucket(F.col(key_col), seed) < F.lit(threshold(rate)))
+    return df.where(sql_sample_predicate(None, {}, key_col, rate, seed))
 
 
 def stratified_sample(
@@ -53,28 +70,6 @@ def stratified_sample(
     ``rates[s]`` (``default_rate`` otherwise).  One filter expression — no
     shuffle, no per-stratum pass; the mix rebalance a 100-TB corpus needs.
     """
-    thr: Column = F.lit(threshold(default_rate))
-    for stratum in sorted(rates):  # deterministic plan text
-        thr = F.when(
-            F.col(strata_col) == F.lit(stratum), F.lit(threshold(rates[stratum]))
-        ).otherwise(thr)
-    return df.filter(_bucket(F.col(key_col), seed) < thr)
-
-
-def sample_oracle_predicate(
-    strata_col: str,
-    rates: dict[str, float],
-    key_col: str,
-    default_rate: float = 0.0,
-    seed: str = "locus",
-) -> str:
-    """DuckDB WHERE-clause equivalent of :func:`stratified_sample` — same
-    md5-prefix bucket, same integer thresholds."""
-    cases = " ".join(
-        f"WHEN {strata_col} = '{s}' THEN {threshold(rates[s])}"
-        for s in sorted(rates)
-    )
-    return (
-        f"('0x' || substr(md5('{seed}:' || CAST({key_col} AS VARCHAR)), 1, 8))::BIGINT"
-        f" < (CASE {cases} ELSE {threshold(default_rate)} END)"
+    return df.where(
+        sql_sample_predicate(strata_col, rates, key_col, default_rate, seed)
     )

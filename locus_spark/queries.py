@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from locus_spark.cells import GridSpec
 from locus_spark.functions.metrics import (
+    DUCKDB,
     sql_box_contains_point,
     sql_box_is_subset,
     sql_boxes_overlap,
@@ -905,7 +906,6 @@ def q_raster_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from locus_spark.operators.ann import cosine_topk, lsh_topk  # noqa: E402
 from locus_spark.operators.dedup import (  # noqa: E402
-    DUCKDB,
     exact_dedup,
     minhash_lsh_pairs,
     simhash_near_dups,
@@ -1261,15 +1261,15 @@ SAMPLE_RATES = {"en": 0.5, "de": 1.0, "fr": 0.25, "es": 0.125}
 SAMPLE_DEFAULT = 0.1
 
 from locus_spark.operators.sampling import (  # noqa: E402
-    sample_oracle_predicate,
+    sql_sample_predicate,
     stratified_sample,
 )
 
 _SAMPLE_ORACLE = f"""
 SELECT doc_id, lang, source, n_chars
 FROM documents
-WHERE {sample_oracle_predicate('lang', SAMPLE_RATES, 'doc_id',
-                               default_rate=SAMPLE_DEFAULT)}
+WHERE {sql_sample_predicate('lang', SAMPLE_RATES, 'doc_id',
+                            default_rate=SAMPLE_DEFAULT, dialect=DUCKDB)}
 """
 
 
@@ -1656,8 +1656,8 @@ SELECT doc_id, lang, quality FROM top WHERE {sample_pred}
     "pipeline_training_mix",
     _TRAINING_MIX_ORACLE_TMPL.format(
         frac=MIX_TOP_FRAC,
-        sample_pred=sample_oracle_predicate(
-            "lang", SAMPLE_RATES, "doc_id", default_rate=SAMPLE_DEFAULT
+        sample_pred=sql_sample_predicate(
+            "lang", SAMPLE_RATES, "doc_id", default_rate=SAMPLE_DEFAULT, dialect=DUCKDB
         ),
     ),
 )
@@ -3177,20 +3177,14 @@ def q_doc_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     every 50th doc): identical loop and shuffle shape as `doc_pagerank`,
     the per-node teleport probability just rides the |V|-row node frame
     the round join already touches (operators/graph.py teleport_col)."""
-    from locus_spark.operators.graph import derive_links, pagerank
+    from locus_spark.operators.graph import derive_links, pagerank, sql_seed_teleport
 
     derived.register_base_tables(spark, sf_dir)
     docs = spark.table("documents")
     n = docs.count()
-    n_seeds = docs.filter(F.col("doc_id") % PPR_SEED_MOD == 0).count()
-    nodes = docs.select(
-        F.col("doc_id").alias("v"),
-        F.when(
-            F.col("doc_id") % PPR_SEED_MOD == 0,
-            F.lit(1.0) / F.lit(float(n_seeds)),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("p"),
+    n_seeds = docs.where(f"doc_id % {PPR_SEED_MOD} = 0").count()
+    nodes = docs.selectExpr(
+        "doc_id AS v", f"{sql_seed_teleport(PPR_SEED_MOD, 'doc_id', str(n_seeds))} AS p"
     )
     edges = derive_links(docs, n)
     out = pagerank(nodes, edges, n, teleport_col="p")
