@@ -162,8 +162,12 @@ def sql_double(v: float) -> str:
 
 
 def _cell_sql(v: str, origin: float, width: float, n: int) -> str:
-    raw = f"floor((({v}) - {sql_double(origin)}) / {sql_double(width)})"
-    return f"CAST(least({n - 1}, greatest(0, {raw})) AS BIGINT)"
+    """Cell index of ``v`` on one axis, clamped to [0, n-1] before the floor:
+    both engines order NaN above every double, but Spark's floor reads NaN
+    as 0, so only the clamp-first text puts a NaN coordinate in cell n-1 in
+    Spark and in DuckDB alike."""
+    raw = f"(({v}) - {sql_double(origin)}) / {sql_double(width)}"
+    return f"CAST(floor(least({n - 1}, greatest(0, {raw}))) AS BIGINT)"
 
 
 #: auto-resolution target: mean points per cell.  Hot-cell occupancy is what

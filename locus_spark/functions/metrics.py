@@ -15,15 +15,20 @@ results are bit-identical, which is what the driver's value-hash comparison
 needs.
 
 Only common-dialect SQL is used: ``+ - * /``, comparisons, ``AND``/``OR``,
-``least``, ``greatest``, ``CASE WHEN``, ``abs``, ``coalesce``, ``floor``,
-``md5``, ``substr``, ``||`` and ``CAST(... AS DOUBLE | BIGINT | STRING)`` —
-all with identical semantics in Spark SQL and DuckDB.  The few steps the
-two engines spell differently (tokenizing a text, reading hex digits as a
-number) are the fields of a :class:`Dialect`, :data:`SPARK_SQL` or
-:data:`DUCKDB`; a template that needs one takes the dialect, and the rest of
-its text is shared.  The md5-prefix hash bucket (:meth:`Dialect.md5_bucket`)
-is one: the pseudo link graph (``operators/graph.py``) and the hash-threshold
-samplers (``operators/sampling.py``) render it, and so do their oracles.
+``IN``, ``least``, ``greatest``, ``CASE WHEN``, ``abs``, ``coalesce``,
+``floor``, ``md5``, ``substr``, ``||``, ``split``, ``filter`` and
+``array_distinct`` with a ``t -> ...`` lambda, and
+``CAST(... AS DOUBLE | BIGINT | INT | STRING)`` — all with identical
+semantics in Spark SQL and DuckDB.  The whitespace tokenizer is one such
+text, :func:`sql_tokens`, which every text operator and every text oracle
+renders.  The few steps the two engines spell differently (an array's
+size, unnesting an array into rows, reading hex digits as a number) are the
+fields of a :class:`Dialect`, :data:`SPARK_SQL` or :data:`DUCKDB`; a
+template that needs one takes the dialect, and the rest of its text is
+shared.  The md5-prefix hash bucket (:meth:`Dialect.md5_bucket`) is one:
+the pseudo link graph (``operators/graph.py``), the hash-threshold samplers
+(``operators/sampling.py``) and the mix priority (``operators/mixing.py``)
+render it, and so do their oracles.
 
 A metric whose text repeats a costly sub-expression is also defined in
 stages (:class:`Metric`): the kNN planner projects the stages as columns
@@ -38,14 +43,31 @@ import re
 from typing import NamedTuple
 
 
-class Dialect(NamedTuple):
-    """The kernel steps that Spark SQL and DuckDB spell differently, as
-    ``str.format`` templates over one SQL argument."""
+def sql_tokens(text: str) -> str:
+    """The array of a text's non-empty single-space-split tokens, in order."""
+    return f"filter(split({text}, ' '), t -> t <> '')"
 
-    #: a text's distinct non-empty space-split tokens, one row each
-    tokens: str
-    #: 8 hex digits (an md5 half) as a non-negative BIGINT
+
+class Dialect(NamedTuple):
+    """The kernel steps that Spark SQL and DuckDB spell differently."""
+
+    #: element count of an array (Spark's ``len`` takes strings only;
+    #: DuckDB has no ``size`` and its ``cardinality`` takes maps only)
+    size: str
+    #: the set-returning function of an array: one row per element
+    unnest: str
+    #: 8 hex digits (an md5 half) as a non-negative BIGINT, a ``str.format``
+    #: template over one SQL argument
     hex_bigint: str
+
+    def tokens(self, text: str) -> str:
+        """A text's distinct tokens (:func:`sql_tokens`), one row each."""
+        return f"{self.unnest}(array_distinct({sql_tokens(text)}))"
+
+    def count_in(self, arr: str, words) -> str:
+        """How many elements of the array ``arr`` are among ``words``."""
+        listed = ", ".join(f"'{w}'" for w in words)
+        return f"{self.size}(filter({arr}, t -> t IN ({listed})))"
 
     def token_hash(self) -> list[str]:
         """(hi, lo) of a token ``tok``: the first 16 hex digits of its md5 as
@@ -65,13 +87,9 @@ class Dialect(NamedTuple):
 
 
 SPARK_SQL = Dialect(
-    tokens="explode(array_distinct(filter(split({}, ' '), t -> t <> '')))",
-    hex_bigint="CAST(conv({}, 16, 10) AS BIGINT)",
+    size="size", unnest="explode", hex_bigint="CAST(conv({}, 16, 10) AS BIGINT)"
 )
-DUCKDB = Dialect(
-    tokens="unnest(list_distinct(list_filter(string_split({}, ' '), t -> t <> '')))",
-    hex_bigint="('0x' || {})::BIGINT",
-)
+DUCKDB = Dialect(size="len", unnest="unnest", hex_bigint="('0x' || {})::BIGINT")
 
 
 def sql_cast_double(x: float) -> str:

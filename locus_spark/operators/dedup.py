@@ -20,9 +20,10 @@ distance, MinHash's permutations and band keys — is written once, as SQL
 text (the ``sql_*`` functions below).  Spark parses that text
 (``selectExpr`` / ``F.expr``: one py4j call per expression instead of one
 per Column node), and the DuckDB oracles in :mod:`locus_spark.queries`
-render the same text.  Two steps are spelled per engine, in
-``functions/metrics.py``'s ``SPARK_SQL`` and ``DUCKDB`` dialects:
-tokenization and parsing an md5 half.
+render the same text.  The tokenizer is ``functions/metrics.sql_tokens``,
+and the steps spelled per engine (unnesting the distinct tokens, parsing an
+md5 half) are ``functions/metrics.py``'s ``SPARK_SQL`` and ``DUCKDB``
+dialects.
 (``spark.sql`` with DataFrame arguments would parse a whole step at once,
 but it registers each argument as a temp view and drops the view
 afterwards, and dropping a temp view uncaches every cached frame with the
@@ -37,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from locus_spark.functions.metrics import SPARK_SQL
+from locus_spark.functions.metrics import SPARK_SQL, sql_tokens
 
 SHINGLE = 3
 
@@ -99,10 +100,9 @@ def exact_dedup(documents: DataFrame) -> DataFrame:
 def _doc_shingles(documents: DataFrame, shingle: int = SHINGLE) -> DataFrame:
     """Distinct (doc_id, shingle) rows: word n-grams over space-split tokens
     (1-indexed element_at, matching the oracle's 1-indexed lists)."""
-    toks = documents.select(
-        "doc_id",
-        F.filter(F.split("text", " "), lambda t: t != F.lit("")).alias("ts"),
-    ).filter(F.size("ts") >= shingle)
+    toks = documents.selectExpr("doc_id", f"{sql_tokens('text')} AS ts").where(
+        f"size(ts) >= {shingle}"
+    )
     # the length guard above is load-bearing: sequence(1, size - k) with
     # size - k < 1 generates a DESCENDING sequence in Spark (default step
     # -1), so a too-short document would index element_at out of bounds
@@ -412,7 +412,7 @@ def simhash_fingerprints(documents: DataFrame) -> DataFrame:
     integer sums — partial aggregation does the heavy lifting; no row
     blowup beyond the token explode and no Python workers."""
     fps = (
-        documents.selectExpr("doc_id", f"{SPARK_SQL.tokens.format('text')} AS tok")
+        documents.selectExpr("doc_id", f"{SPARK_SQL.tokens('text')} AS tok")
         .selectExpr("doc_id", *SPARK_SQL.token_hash())
         .groupBy("doc_id")
         .agg(F.expr(f"{sql_simhash_fp()} AS fp"))
@@ -570,10 +570,9 @@ def span_dup_stats(documents: DataFrame, w: int = SPAN_W) -> DataFrame:
     per-doc rollup.  Span text never leaves the first projection: joins and
     aggregations carry the 32-hex md5 only.
     """
-    toks = documents.select(
-        "doc_id",
-        F.filter(F.split("text", " "), lambda t: t != F.lit("")).alias("ts"),
-    ).filter(F.size("ts") >= w)
+    toks = documents.selectExpr("doc_id", f"{sql_tokens('text')} AS ts").where(
+        f"size(ts) >= {w}"
+    )
     joined = " || ' ' || ".join(
         f"element_at(ts, CAST(i + {j} AS INT))" for j in range(w)
     )

@@ -25,6 +25,8 @@ import operator
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from locus_spark.functions.metrics import sql_tokens
+
 #: number of token-hash partitions of the persisted posting layout —
 #: a term query reads |terms| directories regardless of corpus size.
 POSTING_BUCKETS = 64
@@ -37,12 +39,7 @@ BM25_B = 0.75
 def build_postings(documents: DataFrame, text_col: str = "text") -> DataFrame:
     """(tok, doc_id, tf) posting rows — explode + one hash aggregation
     (map-side combine collapses within-partition repeats before shuffle)."""
-    toks = documents.select(
-        "doc_id",
-        F.explode(
-            F.filter(F.split(text_col, " "), lambda t: t != F.lit(""))
-        ).alias("tok"),
-    )
+    toks = documents.selectExpr("doc_id", f"explode({sql_tokens(text_col)}) AS tok")
     return toks.groupBy("tok", "doc_id").agg(F.count("*").alias("tf"))
 
 
@@ -115,11 +112,8 @@ def build_positional_postings(
     """(tok, doc_id, pos) rows with 1-based token positions — the layout
     phrase queries need.  Rows (not per-doc arrays) for the same skew
     reason as ``build_postings``."""
-    toks = documents.select(
-        "doc_id",
-        F.posexplode(
-            F.filter(F.split(text_col, " "), lambda t: t != F.lit(""))
-        ).alias("pos0", "tok"),
+    toks = documents.selectExpr(
+        "doc_id", f"posexplode({sql_tokens(text_col)}) AS (pos0, tok)"
     )
     return toks.select("doc_id", "tok", (F.col("pos0") + 1).alias("pos"))
 
@@ -160,7 +154,7 @@ def phrase_oracle_sql(phrase: tuple[str, ...]) -> str:
     )
     return f"""
 WITH toks AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS ts
+  SELECT doc_id, {sql_tokens('text')} AS ts
   FROM documents
 ), pos AS (
   SELECT doc_id, unnest(ts) AS tok,
@@ -187,10 +181,9 @@ def build_scored_postings(
     ranked (BM25) queries then never join the corpus-sized doc-length
     table at query time; the only query-time join is against the
     |terms|-row document-frequency side, which broadcasts."""
-    toks = documents.select(
-        "doc_id",
-        F.filter(F.split(text_col, " "), lambda t: t != F.lit("")).alias("_ts"),
-    ).select("doc_id", F.size("_ts").alias("dl"), F.explode("_ts").alias("tok"))
+    toks = documents.selectExpr("doc_id", f"{sql_tokens(text_col)} AS _ts").selectExpr(
+        "doc_id", "size(_ts) AS dl", "explode(_ts) AS tok"
+    )
     return toks.groupBy("tok", "doc_id", "dl").agg(F.count("*").alias("tf"))
 
 
@@ -198,11 +191,7 @@ def corpus_stats(documents: DataFrame, text_col: str = "text") -> tuple[int, flo
     """(n_docs, avgdl): one aggregation producing two scalars — bounded
     driver work, same contract as the IVF n_probe centroid collect."""
     row = (
-        documents.select(
-            F.size(
-                F.filter(F.split(text_col, " "), lambda t: t != F.lit(""))
-            ).alias("dl")
-        )
+        documents.selectExpr(f"size({sql_tokens(text_col)}) AS dl")
         .agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl"))
         .first()
     )
@@ -286,8 +275,7 @@ def bm25_oracle_sql(
     )
     return f"""
 WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split(text, ' '), t -> t <> '') AS ts
+  SELECT doc_id, {sql_tokens('text')} AS ts
   FROM documents
 ), posting AS (
   SELECT doc_id, len(ts) AS dl, unnest(ts) AS tok FROM toks
@@ -297,8 +285,7 @@ WITH toks AS (
   GROUP BY tok, doc_id, dl
 ), stats AS (
   SELECT CAST(count(*) AS DOUBLE) AS n,
-         avg(CAST(len(list_filter(string_split(text, ' '), t -> t <> ''))
-                  AS BIGINT)) AS avgdl
+         avg(CAST(len({sql_tokens('text')}) AS BIGINT)) AS avgdl
   FROM documents
 ), dfreq AS (
   SELECT tok, count(*) AS df FROM tf GROUP BY tok

@@ -35,18 +35,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from locus_spark.functions.metrics import DUCKDB, SPARK_SQL, Dialect, sql_cast_double
+
 #: fixed-point scale of the sqrt weights (6 decimal digits)
 WEIGHT_SCALE = 1_000_000
 
 
-def _hash01(col) -> F.Column:
-    """md5-derived double in [0, 1) — first 8 md5 hex chars over 2^32, the
-    cross-engine contract (DuckDB: ``('0x' || substr(md5(x), 1, 8))::BIGINT
-    / 4294967296.0``)."""
-    return (
-        F.conv(F.substring(F.md5(col.cast("string")), 1, 8), 16, 10).cast("long")
-        / F.lit(4294967296.0)
-    )
+def sql_priority(id_col: str, dialect: Dialect = SPARK_SQL) -> str:
+    """md5-derived double in [0, 1) of ``id_col``: its md5 bucket over 2^32."""
+    return f"{dialect.md5_bucket('', id_col)} / {sql_cast_double(2.0**32)}"
 
 
 def temperature_allocation(
@@ -99,9 +96,7 @@ def temperature_mix(
     from locus_spark.operators.selection import top_alloc_per_group
 
     alloc = temperature_allocation(documents, group_col, total)
-    src = documents.select(
-        id_col, group_col, _hash01(F.col(id_col)).alias("_pri")
-    )
+    src = documents.selectExpr(id_col, group_col, f"{sql_priority(id_col)} AS _pri")
     out = top_alloc_per_group(
         src, group_col, "_pri", alloc, id_col, lo=0.0, hi=1.0
     )
@@ -132,8 +127,7 @@ WITH counts AS (
   FROM base CROSS JOIN lo
 ), pri AS (
   SELECT {id_col}, {group_col} AS g,
-         ('0x' || substr(md5(CAST({id_col} AS VARCHAR)), 1, 8))::BIGINT
-           / 4294967296.0 AS p
+         {sql_priority(id_col, DUCKDB)} AS p
   FROM documents
 ), ranked AS (
   SELECT {id_col}, g,
@@ -148,6 +142,7 @@ WHERE ranked.rn <= alloc.n
 
 __all__ = [
     "WEIGHT_SCALE",
+    "sql_priority",
     "temperature_allocation",
     "temperature_mix",
     "temperature_mix_oracle_sql",

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from locus_spark.operators.textops import _tokens
+from locus_spark.functions.metrics import sql_tokens
 
 #: default context-window budget (whitespace tokens, the fixture's unit)
 PACK_BUDGET = 256
@@ -42,10 +42,10 @@ def pack_sequences(
     token stream; ``seq_id = floor(start_tok / budget)`` is the training
     sequence its first token falls into (documents may straddle windows —
     standard concat-then-split semantics, no padding waste)."""
-    toks = documents.select(
+    toks = documents.selectExpr(
         "doc_id",
-        (F.col("doc_id") % n_shards).alias("pack_group"),
-        F.size(_tokens()).alias("n_tokens"),
+        f"doc_id % {int(n_shards)} AS pack_group",
+        f"size({sql_tokens('text')}) AS n_tokens",
     )
     w = Window.partitionBy("pack_group").orderBy("doc_id")
     return (

@@ -34,6 +34,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from locus_spark.functions.metrics import sql_tokens
+
 #: relative standard deviation for the HLL++ sketch; the check allows
 #: 4 sigma — at sf<=0.1 cardinalities HLL++ sits in sparse (exact) mode,
 #: so the bound is slack there and tightens exactly where HLL engages.
@@ -213,11 +215,7 @@ def heavy_hitters(
         )
         .distinct()
     )
-    toks = documents.select(
-        F.explode(
-            F.filter(F.split(text_col, " "), lambda t: t != F.lit(""))
-        ).alias("tok")
-    )
+    toks = documents.selectExpr(f"explode({sql_tokens(text_col)}) AS tok")
     total = toks.agg(F.count("*").alias("_total"))
     counted = (
         toks.join(F.broadcast(cand), "tok")

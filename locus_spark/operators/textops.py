@@ -1,16 +1,23 @@
 """Text-analysis operators for the training-data pipeline (documents table).
 
-All pure Column expressions (codegen'd): token counting, quality scoring,
-n-gram-marker language ID, content fingerprinting.  Ratios are divisions of
-exact integers → bit-identical in any IEEE engine (oracle parity)."""
+Token counting, quality scoring, marker-based language ID and content
+fingerprinting are SQL text: the whitespace tokenizer is
+``functions/metrics.sql_tokens``, and the counts, the quality arithmetic
+and the language argmax are the ``sql_*``/``SQL_*`` texts below.  Spark runs
+them through ``selectExpr`` (parsed JVM-side, one py4j call per
+projection), and the DuckDB oracles in :mod:`locus_spark.queries` render
+the same texts.  Ratios are divisions of exact integers → bit-identical in
+any IEEE engine (oracle parity)."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from locus_spark.functions.metrics import SPARK_SQL, Dialect, sql_tokens
+
 #: marker tokens per language for the heuristic classifier — deterministic
-#: and dialect-portable (list_filter/filter + lambda in both engines).
+#: and dialect-portable (filter + lambda in both engines).
 LANG_MARKERS: dict[str, tuple[str, ...]] = {
     "de": ("der", "die", "und", "nicht", "das"),
     "en": ("the", "a", "of", "and", "is"),
@@ -21,9 +28,58 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 
 STOPWORDS = ("the", "a", "of", "and", "is", "to", "in")
 
+#: BPE-style pre-tokenizer shape: alphanumeric runs + individual non-space
+#: punctuation — the unit a byte-pair tokenizer would split further.  Simple
+#: character classes only, so Java regex (Spark) and RE2 (DuckDB) agree.
+SUBTOKEN_RE = "[A-Za-z0-9]+|[^A-Za-z0-9 ]"
 
-def _tokens(col: str = "text"):
-    return F.filter(F.split(col, " "), lambda t: t != F.lit(""))
+
+def sql_token_stats(dialect: Dialect = SPARK_SQL) -> list[str]:
+    """``token_stats``' columns over the token array ``ts`` and ``text``."""
+    n, u = f"{dialect.size}(ts)", f"{dialect.size}(array_distinct(ts))"
+    subtokens = f"regexp_extract_all(text, '{SUBTOKEN_RE}', 0)"
+    return [
+        f"CAST({n} AS INT) AS n_tokens",
+        f"CAST({u} AS INT) AS n_uniq",
+        f"CAST({u} AS DOUBLE) / CAST({n} AS DOUBLE) AS uniq_ratio",
+        f"CAST({dialect.size}({subtokens}) AS INT) AS n_subtokens",
+    ]
+
+
+def sql_token_counts(dialect: Dialect = SPARK_SQL) -> list[str]:
+    """``n_tokens`` and ``n_stop`` (the :data:`STOPWORDS` among them) of the
+    token array ``ts``."""
+    return [
+        f"CAST({dialect.size}(ts) AS INT) AS n_tokens",
+        f"{dialect.count_in('ts', STOPWORDS)} AS n_stop",
+    ]
+
+
+_STOP_RATIO = "CAST(n_stop AS DOUBLE) / CAST(n_tokens AS DOUBLE)"
+#: the quality columns over ``n_tokens``, ``n_stop`` and ``n_chars``
+SQL_QUALITY = (
+    f"{_STOP_RATIO} AS stop_ratio",
+    "CAST(n_chars AS DOUBLE) / CAST(n_tokens AS DOUBLE) AS mean_tok_len",
+    f"least(CAST(n_tokens AS DOUBLE) / 100.0e0, 1.0e0) * (1.0e0 - {_STOP_RATIO}) AS quality",
+)
+
+
+def sql_marker_counts(dialect: Dialect = SPARK_SQL) -> list[str]:
+    """``_s_<lang>``: each language's marker hits in the token array ``ts``."""
+    return [
+        f"{dialect.count_in('ts', markers)} AS _s_{lang}"
+        for lang, markers in sorted(LANG_MARKERS.items())
+    ]
+
+
+#: the top marker count over the ``_s_<lang>`` columns
+SQL_BEST_LANG = f"greatest({', '.join(f'_s_{lang}' for lang in sorted(LANG_MARKERS))})"
+#: the language whose count is ``_best``, lexicographically first on ties
+SQL_PRED_LANG = (
+    "CASE "
+    + " ".join(f"WHEN _s_{lang} = _best THEN '{lang}'" for lang in sorted(LANG_MARKERS))
+    + " END"
+)
 
 
 def doc_fingerprint(documents: DataFrame) -> DataFrame:
@@ -31,28 +87,11 @@ def doc_fingerprint(documents: DataFrame) -> DataFrame:
     return documents.select("doc_id", F.md5("text").alias("fp"), "n_chars")
 
 
-#: BPE-style pre-tokenizer shape: alphanumeric runs + individual non-space
-#: punctuation — the unit a byte-pair tokenizer would split further.  Simple
-#: character classes only, so Java regex (Spark) and RE2 (DuckDB) agree.
-SUBTOKEN_RE = "[A-Za-z0-9]+|[^A-Za-z0-9 ]"
-
-
 def token_stats(documents: DataFrame) -> DataFrame:
     """(doc_id, n_tokens, n_uniq, uniq_ratio, n_subtokens) — whitespace
     tokenization plus the BPE-ish regex subtoken count."""
-    toks = documents.select("doc_id", "text", _tokens().alias("ts"))
-    return toks.select(
-        "doc_id",
-        F.size("ts").alias("n_tokens"),
-        F.size(F.array_distinct("ts")).alias("n_uniq"),
-        (
-            F.size(F.array_distinct("ts")).cast("double")
-            / F.size("ts").cast("double")
-        ).alias("uniq_ratio"),
-        F.size(F.expr(f"regexp_extract_all(text, '{SUBTOKEN_RE}', 0)")).alias(
-            "n_subtokens"
-        ),
-    )
+    toks = documents.selectExpr("doc_id", "text", f"{sql_tokens('text')} AS ts")
+    return toks.selectExpr("doc_id", *sql_token_stats())
 
 
 def quality_score(documents: DataFrame, keep_cols: tuple[str, ...] = ()) -> DataFrame:
@@ -61,59 +100,24 @@ def quality_score(documents: DataFrame, keep_cols: tuple[str, ...] = ()) -> Data
     ints.  ``keep_cols`` are carried through unchanged so downstream stages
     (per-language selection, mix rebalance) don't need a join back to the
     source — one narrow projection instead of a self-join."""
-    toks = documents.select("doc_id", *keep_cols, "n_chars", _tokens().alias("ts"))
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
-    scored = toks.select(
-        "doc_id",
-        *keep_cols,
-        F.size("ts").alias("n_tokens"),
-        F.size(F.filter("ts", lambda t: F.array_contains(stop_arr, t))).alias("n_stop"),
-        F.col("n_chars"),
-    )
-    return scored.select(
-        "doc_id",
-        *keep_cols,
-        "n_tokens",
-        (F.col("n_stop").cast("double") / F.col("n_tokens").cast("double")).alias(
-            "stop_ratio"
-        ),
-        (F.col("n_chars").cast("double") / F.col("n_tokens").cast("double")).alias(
-            "mean_tok_len"
-        ),
-        (
-            F.least(F.col("n_tokens").cast("double") / F.lit(100.0), F.lit(1.0))
-            * (
-                F.lit(1.0)
-                - F.col("n_stop").cast("double") / F.col("n_tokens").cast("double")
-            )
-        ).alias("quality"),
+    keep = ("doc_id", *keep_cols)
+    return (
+        documents.selectExpr(*keep, "n_chars", f"{sql_tokens('text')} AS ts")
+        .selectExpr(*keep, "n_chars", *sql_token_counts())
+        .selectExpr(*keep, "n_tokens", *SQL_QUALITY)
     )
 
 
 def lang_id(documents: DataFrame) -> DataFrame:
     """Marker-based language ID: count marker-token hits per language, argmax
     with lexicographic tie-break.  Returns (doc_id, lang, pred_lang, n_hits)."""
-    toks = documents.select("doc_id", "lang", _tokens().alias("ts"))
-
-    def _marker_counter(markers: tuple[str, ...]):
-        arr = F.array(*[F.lit(w) for w in markers])
-        return F.size(F.filter("ts", lambda t: F.array_contains(arr, t)))
-
-    scores = toks.select(
-        "doc_id",
-        "lang",
-        *[
-            _marker_counter(markers).alias(f"_s_{lang}")
-            for lang, markers in sorted(LANG_MARKERS.items())
-        ],
-    )
-    best = F.greatest(*[F.col(f"_s_{lang}") for lang in sorted(LANG_MARKERS)])
-    pred = F.lit(None).cast("string")
-    # lexicographic preference on ties: fold from the last language backwards
-    for lang in sorted(LANG_MARKERS, reverse=True):
-        pred = F.when(F.col(f"_s_{lang}") == best, F.lit(lang)).otherwise(pred)
-    return scores.select(
-        "doc_id", "lang", pred.alias("pred_lang"), best.cast("long").alias("n_hits")
+    return (
+        documents.selectExpr("doc_id", "lang", f"{sql_tokens('text')} AS ts")
+        .selectExpr("doc_id", "lang", *sql_marker_counts())
+        .selectExpr("*", f"{SQL_BEST_LANG} AS _best")
+        .selectExpr(
+            "doc_id", "lang", f"{SQL_PRED_LANG} AS pred_lang", "CAST(_best AS BIGINT) AS n_hits"
+        )
     )
 
 
@@ -130,8 +134,8 @@ def repetition_stats(documents: DataFrame) -> DataFrame:
     combine on both, embarrassingly parallel, no window/sort.  Documents
     with fewer than 2 tokens carry no bigram and emit no row (mirrored by
     the oracle)."""
-    toks = documents.select("doc_id", _tokens().alias("ts")).filter(
-        F.size("ts") >= 2
+    toks = documents.selectExpr("doc_id", f"{sql_tokens('text')} AS ts").where(
+        "size(ts) >= 2"
     )
     bigram = (
         "transform(sequence(1, size(ts) - 1), "
@@ -226,8 +230,8 @@ def remove_boilerplate_passages(
     # token-less documents are excluded (mirrors the SQL oracle, where the
     # empty position range drops the group) — disclosed, matches the
     # media_features empty-payload convention
-    toks = documents.select("doc_id", _tokens().alias("ts")).filter(
-        F.size("ts") >= 1
+    toks = documents.selectExpr("doc_id", f"{sql_tokens('text')} AS ts").where(
+        "size(ts) >= 1"
     )
     passages = toks.select(
         "doc_id",
@@ -274,7 +278,7 @@ def corpus_token_totals(documents: DataFrame) -> tuple[int, int]:
     """(total unigrams, total bigrams) — one aggregation, two scalars
     (bounded driver work, the corpus_stats contract)."""
     row = (
-        documents.select(F.size(_tokens()).alias("nt"))
+        documents.selectExpr(f"size({sql_tokens('text')}) AS nt")
         .agg(
             F.sum("nt").alias("nu"),
             F.sum(F.greatest(F.col("nt") - 1, F.lit(0))).alias("nb"),
@@ -287,7 +291,7 @@ def corpus_token_totals(documents: DataFrame) -> tuple[int, int]:
 def _bigrams(col: str = "text"):
     """1-based adjacent-pair strings; Spark's sequence(2, n) DESCENDS when
     n < 2, so short docs are guarded to an empty array explicitly."""
-    ts = _tokens(col)
+    ts = F.expr(sql_tokens(col))
     pairs = F.transform(
         F.sequence(F.lit(2), F.size(ts)),
         lambda i: F.concat(
@@ -318,7 +322,7 @@ def pmi_collocations(
     ranked at 6-decimal rounding (ties by bigram text) for cross-engine
     ``ln`` reproducibility, same contract as BM25."""
     uni = (
-        documents.select(F.explode(_tokens()).alias("tok"))
+        documents.selectExpr(f"explode({sql_tokens('text')}) AS tok")
         .groupBy("tok")
         .agg(F.count("*").alias("c"))
     )
@@ -351,7 +355,7 @@ def pmi_oracle_sql(min_count: int = PMI_MIN_COUNT, k: int = 20) -> str:
     shapes (counts divided by DOUBLE totals; shared 6-decimal rounding)."""
     return f"""
 WITH toks AS (
-  SELECT list_filter(string_split(text, ' '), t -> t <> '') AS ts
+  SELECT {sql_tokens('text')} AS ts
   FROM documents
 ), nu AS (
   SELECT CAST(sum(len(ts)) AS DOUBLE) AS n,
@@ -432,7 +436,7 @@ def bigram_lm_scores(
         .agg(F.count("*").alias("_cu"))
     )
     vocab = (
-        ref.select(F.explode(_tokens(text_col)).alias("t"))
+        ref.selectExpr(f"explode({sql_tokens(text_col)}) AS t")
         .agg(F.countDistinct("t"))
         .first()[0]
         + 1
@@ -462,7 +466,7 @@ def bigram_lm_oracle_sql(ref_mod: int = LM_REF_MOD, k: float = 1.0) -> str:
     6-decimal rounding)."""
     return f"""
 WITH toks AS MATERIALIZED (
-  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS ts
+  SELECT doc_id, {sql_tokens('text')} AS ts
   FROM documents
 ), refbg AS MATERIALIZED (
   SELECT unnest(list_transform(generate_series(2, len(ts)),

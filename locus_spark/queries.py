@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from locus_spark.cells import GridSpec
 from locus_spark.functions.metrics import (
     DUCKDB,
+    sql_tokens,
     sql_box_contains_point,
     sql_box_is_subset,
     sql_boxes_overlap,
@@ -916,9 +917,15 @@ from locus_spark.operators.dedup import (  # noqa: E402
     sql_simhash_fp,
 )
 from locus_spark.operators.textops import (  # noqa: E402
+    SQL_BEST_LANG,
+    SQL_PRED_LANG,
+    SQL_QUALITY,
     doc_fingerprint,
     lang_id,
     quality_score,
+    sql_marker_counts,
+    sql_token_counts,
+    sql_token_stats,
     token_stats,
 )
 
@@ -972,9 +979,9 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # at least one OTHER document.  Same tokenization contract as every shingle
 # oracle (single-space split, empties dropped, 1-indexed lists); sums are
 # cast back to BIGINT because DuckDB widens SUM(BIGINT) to HUGEINT.
-_SPAN_DEDUP_ORACLE = """
+_SPAN_DEDUP_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS ts
+  SELECT doc_id, {sql_tokens('text')} AS ts
   FROM documents
 ), sp AS (
   SELECT doc_id,
@@ -1050,12 +1057,12 @@ WITH corpus AS (
   SELECT fp, min(text) AS text FROM batch GROUP BY fp
 ), csh AS (
   SELECT DISTINCT rep_id, ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2] AS shingle
-  FROM (SELECT rep_id, list_filter(string_split(text, ' '), t -> t <> '') AS ts
+  FROM (SELECT rep_id, {sql_tokens('text')} AS ts
         FROM creps) u, unnest(range(1, len(ts) - 1)) AS uu(i)
   WHERE len(ts) >= 3
 ), bsh AS (
   SELECT DISTINCT fp, ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2] AS shingle
-  FROM (SELECT fp, list_filter(string_split(text, ' '), t -> t <> '') AS ts
+  FROM (SELECT fp, {sql_tokens('text')} AS ts
         FROM breps) u, unnest(range(1, len(ts) - 1)) AS uu(i)
   WHERE len(ts) >= 3
 ), cbands AS (
@@ -1106,7 +1113,7 @@ def q_dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _MINHASH_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS ts
+  SELECT doc_id, {sql_tokens('text')} AS ts
   FROM documents
 ), sh AS (
   SELECT DISTINCT doc_id, ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2] AS shingle
@@ -1146,7 +1153,7 @@ NGRAM_MIN_JACCARD = 0.5
 # complete candidate generator: every pair sharing at least one shingle.
 _NGRAM_JACCARD_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS ts
+  SELECT doc_id, {sql_tokens('text')} AS ts
   FROM documents
 ), sh AS (
   SELECT DISTINCT doc_id, ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2] AS shingle
@@ -1193,7 +1200,7 @@ def _simhash_oracle(max_hamming: int) -> str:
     h = sql_hamming("a.fp", "c.fp")
     return f"""
 WITH toks AS (
-  SELECT doc_id, {DUCKDB.tokens.format("text")} AS tok FROM documents
+  SELECT doc_id, {DUCKDB.tokens("text")} AS tok FROM documents
 ), f AS (
   SELECT doc_id, {sql_simhash_fp()} AS fp
   FROM (SELECT doc_id, {", ".join(DUCKDB.token_hash())} FROM toks) h
@@ -1298,17 +1305,12 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return doc_fingerprint(spark.table("documents"))
 
 
-from locus_spark.operators.textops import SUBTOKEN_RE  # noqa: E402
-
 _TOKEN_STATS_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, text, list_filter(string_split(text, ' '), t -> t <> '') AS ts
+  SELECT doc_id, text, {sql_tokens('text')} AS ts
   FROM documents
 )
-SELECT doc_id, CAST(len(ts) AS INT) AS n_tokens,
-       CAST(len(list_distinct(ts)) AS INT) AS n_uniq,
-       CAST(len(list_distinct(ts)) AS DOUBLE) / CAST(len(ts) AS DOUBLE) AS uniq_ratio,
-       CAST(len(regexp_extract_all(text, '{SUBTOKEN_RE}')) AS INT) AS n_subtokens
+SELECT doc_id, {", ".join(sql_token_stats(DUCKDB))}
 FROM toks
 """
 
@@ -1319,23 +1321,19 @@ def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return token_stats(spark.table("documents"))
 
 
-_QUALITY_ORACLE = """
-WITH toks AS (
-  SELECT doc_id, n_chars, list_filter(string_split(text, ' '), t -> t <> '') AS ts
-  FROM documents
+def _quality_ctes(src: str, keep: str = "doc_id") -> str:
+    """DuckDB CTEs ``toks``, ``counts`` and ``scored``: ``quality_score`` over
+    ``src`` (doc_id, text, n_chars and the columns ``keep`` names)."""
+    return f"""toks AS (
+  SELECT {keep}, n_chars, {sql_tokens('text')} AS ts FROM {src}
+), counts AS (
+  SELECT {keep}, n_chars, {", ".join(sql_token_counts(DUCKDB))} FROM toks
 ), scored AS (
-  SELECT doc_id, CAST(len(ts) AS INT) AS n_tokens,
-         CAST(len(list_filter(ts, t -> list_contains(['the','a','of','and','is','to','in'], t))) AS INT) AS n_stop,
-         n_chars
-  FROM toks
-)
-SELECT doc_id, n_tokens,
-       CAST(n_stop AS DOUBLE) / CAST(n_tokens AS DOUBLE) AS stop_ratio,
-       CAST(n_chars AS DOUBLE) / CAST(n_tokens AS DOUBLE) AS mean_tok_len,
-       least(CAST(n_tokens AS DOUBLE) / 100.0e0, 1.0e0)
-         * (1.0e0 - CAST(n_stop AS DOUBLE) / CAST(n_tokens AS DOUBLE)) AS quality
-FROM scored
-"""
+  SELECT {keep}, n_tokens, {", ".join(SQL_QUALITY)} FROM counts
+)"""
+
+
+_QUALITY_ORACLE = f"WITH {_quality_ctes('documents')}\nSELECT * FROM scored"
 
 
 @register("doc_quality", _QUALITY_ORACLE)
@@ -1352,16 +1350,7 @@ TOP_QUALITY_FRAC = 0.25
 # so bucket membership and the (quality desc, doc_id asc) boundary rank
 # decide identically.
 _TOP_QUALITY_ORACLE = f"""
-WITH toks AS (
-  SELECT doc_id, lang, n_chars, list_filter(string_split(text, ' '), t -> t <> '') AS ts
-  FROM documents
-), scored AS (
-  SELECT doc_id, lang,
-         least(CAST(len(ts) AS DOUBLE) / 100.0e0, 1.0e0)
-           * (1.0e0 - CAST(len(list_filter(ts, t -> list_contains(['the','a','of','and','is','to','in'], t))) AS DOUBLE)
-                      / CAST(len(ts) AS DOUBLE)) AS quality
-  FROM toks
-), ranked AS (
+WITH {_quality_ctes('documents', 'doc_id, lang')}, ranked AS (
   SELECT doc_id, lang, quality,
          row_number() OVER (PARTITION BY lang ORDER BY quality DESC, doc_id ASC) AS rn,
          count(*) OVER (PARTITION BY lang) AS n
@@ -1399,7 +1388,7 @@ PASSAGE_MIN_DF = 3
 
 _PASSAGE_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS ts
+  SELECT doc_id, {sql_tokens('text')} AS ts
   FROM documents
 ), p AS (
   SELECT doc_id, i, array_to_string(ts[i:i+{PASSAGE_TOKENS - 1}], ' ') AS pass_
@@ -1442,16 +1431,7 @@ HOST_CAP_N = 10
 # of the two-pass histogram selection (same bit-equal quality doubles and
 # (quality desc, doc_id asc) boundary rank as doc_top_quality)
 _HOST_CAP_ORACLE = f"""
-WITH toks AS (
-  SELECT doc_id, source, list_filter(string_split(text, ' '), t -> t <> '') AS ts
-  FROM documents
-), scored AS (
-  SELECT doc_id, source,
-         least(CAST(len(ts) AS DOUBLE) / 100.0e0, 1.0e0)
-           * (1.0e0 - CAST(len(list_filter(ts, t -> list_contains(['the','a','of','and','is','to','in'], t))) AS DOUBLE)
-                      / CAST(len(ts) AS DOUBLE)) AS quality
-  FROM toks
-), ranked AS (
+WITH {_quality_ctes('documents', 'doc_id, source')}, ranked AS (
   SELECT doc_id, source, quality,
          row_number() OVER (PARTITION BY source ORDER BY quality DESC, doc_id ASC) AS rn
   FROM scored
@@ -1492,7 +1472,7 @@ DECON_EVAL_MOD = 97
 
 _DECON_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS ts
+  SELECT doc_id, {sql_tokens('text')} AS ts
   FROM documents
 ), sh AS (
   SELECT DISTINCT doc_id,
@@ -1528,9 +1508,9 @@ def q_dedup_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decontaminate(train, eval_docs).drop("text")
 
 
-_REPETITION_ORACLE = """
+_REPETITION_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS ts
+  SELECT doc_id, {sql_tokens('text')} AS ts
   FROM documents
 ), bi AS (
   SELECT doc_id, ts[i] || ' ' || ts[i+1] AS bigram
@@ -1594,7 +1574,7 @@ from locus_spark.operators.packing import PACK_BUDGET, PACK_SHARDS  # noqa: E402
 _PACK_ORACLE = f"""
 WITH toks AS (
   SELECT doc_id, doc_id % {PACK_SHARDS} AS pack_group,
-         CAST(len(list_filter(string_split(text, ' '), t -> t <> '')) AS INT)
+         CAST(len({sql_tokens('text')}) AS INT)
            AS n_tokens
   FROM documents
 ), packed AS (
@@ -1626,41 +1606,26 @@ def q_doc_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: registered queries exercise different boundary buckets
 MIX_TOP_FRAC = 0.5
 
-_TRAINING_MIX_ORACLE_TMPL = """
+_TRAINING_MIX_ORACLE = f"""
 WITH keep AS (
   SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)
 ), surv AS (
-  SELECT d.doc_id, d.lang, d.text FROM documents d JOIN keep USING (doc_id)
-), toks AS (
-  SELECT doc_id, lang, list_filter(string_split(text, ' '), t -> t <> '') AS ts
-  FROM surv
-), scored AS (
-  SELECT doc_id, lang,
-         least(CAST(len(ts) AS DOUBLE) / 100.0e0, 1.0e0)
-           * (1.0e0 - CAST(len(list_filter(ts, t -> list_contains(['the','a','of','and','is','to','in'], t))) AS DOUBLE)
-                      / CAST(len(ts) AS DOUBLE)) AS quality
-  FROM toks
-), ranked AS (
+  SELECT d.doc_id, d.lang, d.n_chars, d.text FROM documents d JOIN keep USING (doc_id)
+), {_quality_ctes('surv', 'doc_id, lang')}, ranked AS (
   SELECT doc_id, lang, quality,
          row_number() OVER (PARTITION BY lang ORDER BY quality DESC, doc_id ASC) AS rn,
          count(*) OVER (PARTITION BY lang) AS n
   FROM scored
 ), top AS (
-  SELECT doc_id, lang, quality FROM ranked WHERE rn <= ceil({frac} * n)
+  SELECT doc_id, lang, quality FROM ranked WHERE rn <= ceil({MIX_TOP_FRAC} * n)
 )
-SELECT doc_id, lang, quality FROM top WHERE {sample_pred}
+SELECT doc_id, lang, quality FROM top WHERE {sql_sample_predicate(
+    "lang", SAMPLE_RATES, "doc_id", default_rate=SAMPLE_DEFAULT, dialect=DUCKDB
+)}
 """
 
 
-@register(
-    "pipeline_training_mix",
-    _TRAINING_MIX_ORACLE_TMPL.format(
-        frac=MIX_TOP_FRAC,
-        sample_pred=sql_sample_predicate(
-            "lang", SAMPLE_RATES, "doc_id", default_rate=SAMPLE_DEFAULT, dialect=DUCKDB
-        ),
-    ),
-)
+@register("pipeline_training_mix", _TRAINING_MIX_ORACLE)
 def q_pipeline_training_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full training-data curation flow as ONE declarative plan:
     exact dedup (md5 content hash, keep smallest doc_id) → quality scoring →
@@ -1696,30 +1661,18 @@ def q_pipeline_training_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lang_score_sql(lang: str, markers: tuple[str, ...]) -> str:
-    lst = ", ".join(f"'{m}'" for m in markers)
-    return (
-        f"CAST(len(list_filter(ts, t -> list_contains([{lst}], t))) AS INT) AS _s_{lang}"
-    )
-
-
-from locus_spark.operators.textops import LANG_MARKERS  # noqa: E402
-
 _LANG_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, lang, list_filter(string_split(text, ' '), t -> t <> '') AS ts
+  SELECT doc_id, lang, {sql_tokens('text')} AS ts
   FROM documents
 ), scores AS (
-  SELECT doc_id, lang,
-         {", ".join(_lang_score_sql(l, m) for l, m in sorted(LANG_MARKERS.items()))}
+  SELECT doc_id, lang, {", ".join(sql_marker_counts(DUCKDB))}
   FROM toks
 ), best AS (
-  SELECT *, greatest({", ".join(f"_s_{l}" for l in sorted(LANG_MARKERS))}) AS _best
+  SELECT *, {SQL_BEST_LANG} AS _best
   FROM scores
 )
-SELECT doc_id, lang,
-       CASE {" ".join(f"WHEN _s_{l} = _best THEN '{l}'" for l in sorted(LANG_MARKERS))} END AS pred_lang,
-       CAST(_best AS BIGINT) AS n_hits
+SELECT doc_id, lang, {SQL_PRED_LANG} AS pred_lang, CAST(_best AS BIGINT) AS n_hits
 FROM best
 """
 
@@ -2885,7 +2838,7 @@ from locus_spark.operators.sketches import HH_SUPPORT  # noqa: E402
 
 _HH_ORACLE = f"""
 WITH toks AS (
-  SELECT unnest(list_filter(string_split(text, ' '), t -> t <> '')) AS tok
+  SELECT unnest({sql_tokens('text')}) AS tok
   FROM documents
 ), tot AS (SELECT count(*) AS n FROM toks)
 SELECT tok, CAST(count(*) AS BIGINT) AS cnt
@@ -2917,7 +2870,7 @@ SEARCH_TERMS = ("scan", "merge", "data")
 
 _SEARCH_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, unnest(list_filter(string_split(text, ' '), t -> t <> ''))
+  SELECT doc_id, unnest({sql_tokens('text')})
            AS tok
   FROM documents
 ), tf AS (

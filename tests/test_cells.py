@@ -131,9 +131,9 @@ SPECIALS = (0.0, -0.0, 5e-324, -5e-324, 2.2250738585072014e-308, 1e308, -1e308,
 
 
 def _column_cell(c, origin: float, width: float, n: int):
-    """The Column formula GridSpec rendered before its SQL text."""
-    raw = F.floor((c - F.lit(origin)) / F.lit(width))
-    return F.least(F.lit(n - 1), F.greatest(F.lit(0), raw)).cast("long")
+    """GridSpec's cell formula as a Column: clamp to [0, n-1], then floor."""
+    raw = (c - F.lit(origin)) / F.lit(width)
+    return F.floor(F.least(F.lit(n - 1), F.greatest(F.lit(0), raw))).cast("long")
 
 
 def _bits(v: float) -> bytes:
@@ -182,3 +182,15 @@ def test_sql_cell_ids_match_the_column_formula_bit_for_bit(spark, origin, extent
     assert [_bits(v) for v in back] == [_bits(v) for v in lits]
     duck = duckdb.sql("SELECT " + ", ".join(sql_double(v) for v in lits)).fetchone()
     assert [_bits(v) for v in duck] == [_bits(v) for v in lits]
+
+
+def test_nan_cell_is_the_last_cell_in_spark_and_duckdb(spark):
+    """Both engines order NaN above every double, so the one cell text puts
+    a NaN coordinate in cell n-1 in Spark and in DuckDB, and every other
+    coordinate in the same cell in both."""
+    g = GridSpec(0.0, 0.0, 64.0, 64.0, 6)
+    vals = [NAN, INF, -INF, -5.0, 0.0, 31.5, 63.999, 64.0, 1e300]
+    texts = [g.cell_x_sql(sql_double(v)) for v in vals]
+    got_spark = list(spark.range(1).selectExpr(*texts).first())
+    got_duck = list(duckdb.sql("SELECT " + ", ".join(texts)).fetchone())
+    assert got_spark == got_duck == [63, 63, 0, 0, 0, 31, 63, 63, 63]

@@ -3,9 +3,8 @@ semantics, tail up-weighting, and the under-fill contract."""
 
 from __future__ import annotations
 
+import hashlib
 import math
-
-from pyspark.sql import functions as F
 
 from locus_spark.operators.mixing import (
     WEIGHT_SCALE,
@@ -53,11 +52,11 @@ def test_mix_selects_exact_quota_members(spark):
     for r in out:
         by_g.setdefault(r["source"], set()).add(r["doc_id"])
     assert {g: len(s) for g, s in by_g.items()} == alloc
-    # membership = top-n by md5 priority desc (id asc ties)
-    from locus_spark.operators.mixing import _hash01
+    # membership = top-n by md5 priority desc (id asc ties): the first 8
+    # hex digits of md5(str(id)) over 2^32
     pri = {
-        r["doc_id"]: r["p"]
-        for r in docs.select("doc_id", _hash01(F.col("doc_id")).alias("p")).collect()
+        r["doc_id"]: int(hashlib.md5(str(r["doc_id"]).encode()).hexdigest()[:8], 16) / 2**32
+        for r in docs.select("doc_id").collect()
     }
     for g, members in by_g.items():
         group_ids = [r for r in pri if (r < 50) == (g == "a")]

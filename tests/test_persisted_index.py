@@ -100,6 +100,35 @@ def test_boxes_layout_parity_and_pushdown(spark, tmp_path):
     assert "PushedFilters" in plan and "In(cell" in plan
 
 
+def test_nan_upper_bound_probe_layout_parity(spark, tmp_path):
+    """A NaN upper bound is above every coordinate (Spark orders NaN
+    largest), so the probe (-10, NaN, 0, 10) reaches the grid's last column:
+    the persisted point and box scans cover the cells the in-memory joins
+    do and return the same rows."""
+    from locus_spark.operators.boxes import find_subsets_join, find_subsets_over_layout
+
+    rng = np.random.RandomState(17)
+    xy = rng.uniform(-80, 80, (2000, 2))
+    pts = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(xy)], "id long, x double, y double"
+    )
+    boxes = spark.createDataFrame(
+        [(i, float(x), float(x + 2.0), float(y), float(y + 1.0)) for i, (x, y) in enumerate(xy)],
+        "id long, min_x double, max_x double, min_y double, max_y double",
+    )
+    grid = GridSpec(-80.0, -80.0, 80.0, 80.0, 5)
+    qb = spark.createDataFrame([(7, -10.0, NAN, 0.0, 10.0)], BOX_SCHEMA)
+    for name, df, x, y, over_layout, join in (
+        ("points", pts, "x", "y", find_box_over_layout, find_box_join),
+        ("boxes", boxes, "min_x", "min_y", find_subsets_over_layout, find_subsets_join),
+    ):
+        path = str(tmp_path / name)
+        cluster_by_hilbert(df, grid, x=x, y=y, num_partitions=4).write.parquet(path)
+        got = sorted(r.id for r in over_layout(spark.read.parquet(path), qb, grid).collect())
+        want = sorted(r.id for r in join(df, qb, grid=grid).collect())
+        assert got == want and len(want) > 0, name
+
+
 def test_segments_layout_resume_and_parity(spark, tmp_path):
     """Persisted segments layout: StageCheckpoint build-once/resume plus kNN
     parity between the layout read and the original frame (the segmental

@@ -25,7 +25,8 @@ from locus_spark.functions.metrics import (
     sql_ray_crosses_edge,
 )
 from locus_spark.operators import boxes as box_ops
-from locus_spark.operators import dedup, density, graph
+from locus_spark.functions import metrics
+from locus_spark.operators import dedup, density, graph, mixing, selection, textops
 from locus_spark.operators import points as point_ops
 from locus_spark.operators import segments as seg_ops
 from locus_spark.operators import tiles as tile_ops
@@ -377,4 +378,75 @@ def test_graph_oracles_render_the_engine_kernels():
         "pipeline_training_mix": sample,
     }.items():
         for text in kernels:
+            assert text in oracles[row], f"{row} does not render {text[:60]!r}"
+
+
+@pytest.fixture(scope="module")
+def text_docs(spark):
+    """200 documents of 5-40 words drawn from the stopwords, every
+    language's markers and 100 other words, in five languages."""
+    rng = np.random.default_rng(13)
+    vocab = [*textops.STOPWORDS, *(m for ms in textops.LANG_MARKERS.values() for m in ms)]
+    vocab += [f"w{i}" for i in range(100)]
+    rows = []
+    for i in range(200):
+        text = " ".join(rng.choice(vocab, rng.integers(5, 41)))
+        rows.append((i, sorted(textops.LANG_MARKERS)[i % 5], len(text), text))
+    return spark.createDataFrame(rows, "doc_id long, lang string, n_chars long, text string").cache()
+
+
+#: py4j commands per warm text operation, plan + run + collect.  Measured on
+#: this corpus (local[4], four warm runs each): quality_score 34, lang_id 43,
+#: quality_score -> top_fraction_per_group (the training mix's selection)
+#: 822-922, of which the selection's own histogram plan is most.  With the
+#: tokenizer, the stopword count, the quality arithmetic and the language
+#: argmax built as Column trees they sent 496-943, 775-1,468 and
+#: 1,403-1,441.
+TEXT_MAX_CALLS = {"quality_score": 300, "lang_id": 300, "quality_top_fraction": 1200}
+
+
+@pytest.mark.parametrize("op", sorted(TEXT_MAX_CALLS))
+def test_text_op_plans_in_few_py4j_calls(spark, text_docs, op):
+    def top_fraction():
+        scored = textops.quality_score(text_docs, keep_cols=("lang",))
+        return selection.top_fraction_per_group(
+            scored.select("doc_id", "lang", "quality"), "lang", "quality", 0.5, "doc_id"
+        )
+
+    run = {
+        "quality_score": lambda: textops.quality_score(text_docs),
+        "lang_id": lambda: textops.lang_id(text_docs),
+        "quality_top_fraction": top_fraction,
+    }[op]
+    rows, calls, _ = _warm_bill(spark, run)
+
+    assert len(rows) == (100 if op == "quality_top_fraction" else 200)
+    assert calls <= TEXT_MAX_CALLS[op], f"{op} sent {calls} py4j commands"
+
+
+def test_text_oracles_render_the_engine_kernels():
+    """The oracle rows of the text pipeline run the engine's tokenizer,
+    quality, language-ID and mix-priority texts."""
+    duck = metrics.DUCKDB
+    quality = [", ".join(textops.sql_token_counts(duck)), ", ".join(textops.SQL_QUALITY)]
+    tokenized = [
+        "dedup_clusters", "dedup_decontaminate", "dedup_incremental_minhash",
+        "dedup_minhash_lsh", "dedup_ngram_jaccard", "dedup_simhash",
+        "doc_heavy_hitters", "doc_host_cap", "doc_lang_id", "doc_lm_score",
+        "doc_pack_sequences", "doc_passage_dedup", "doc_pmi_collocations",
+        "doc_quality", "doc_repetition", "doc_search_and", "doc_search_bm25",
+        "doc_search_bm25_persisted", "doc_search_persisted", "doc_search_phrase",
+        "doc_span_dedup", "doc_token_stats", "doc_top_quality", "pipeline_training_mix",
+    ]
+    kernels = {row: [metrics.sql_tokens("text")] for row in tokenized}
+    for row in ("doc_quality", "doc_top_quality", "doc_host_cap", "pipeline_training_mix"):
+        kernels[row] += quality
+    kernels["doc_lang_id"] += [
+        ", ".join(textops.sql_marker_counts(duck)), textops.SQL_BEST_LANG, textops.SQL_PRED_LANG,
+    ]
+    kernels["doc_token_stats"] += [", ".join(textops.sql_token_stats(duck))]
+    kernels["doc_mix_temperature"] = [mixing.sql_priority("doc_id", duck)]
+    oracles = oracle_sql()
+    for row, texts in kernels.items():
+        for text in texts:
             assert text in oracles[row], f"{row} does not render {text[:60]!r}"

@@ -8,8 +8,10 @@ Usage: python tools/check_oracle.py [--json OUT] [sf_dir] [query ...]
 ``--json OUT`` also writes the run as JSON: the git sha (and whether the
 tree had uncommitted changes), the sf dir, and per query its status
 (``pass``, ``fail`` or ``rows-only``), Spark row count, Spark and DuckDB
-seconds, any mismatch details, and its ``closure``: the
-``locus_spark.queries.closure_hash`` of the code and oracle it ran.  A
+seconds, any mismatch details, its ``closure``: the
+``locus_spark.queries.closure_hash`` of the code and oracle it ran, and its
+``oracle_sha256``: the sha256 of its oracle SQL text (null without one), so
+diffing two runs names the rows whose oracle text changed.  A
 passing row vouches for that hash when the run is committed as
 ``ORACLE_*.json``, which is what orders ``queries()`` for the correctness
 harness's bounded check window.
@@ -18,6 +20,7 @@ harness's bounded check window.
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
 import pathlib
 import subprocess
@@ -100,7 +103,9 @@ def main() -> int:
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        oracle = oracles.get(name)
         row = {"name": name, "closure": closure_hash(name),
+               "oracle_sha256": oracle and hashlib.sha256(oracle.encode()).hexdigest(),
                "status": "fail", "rows": None,
                "spark_s": None, "duckdb_s": None, "problems": []}
         results.append(row)
@@ -114,13 +119,13 @@ def main() -> int:
             continue
         row["spark_s"] = round(time.perf_counter() - t0, 3)
         row["rows"] = len(spark_pdf)
-        if name not in oracles:
+        if oracle is None:
             row["status"] = "rows-only"
             print(f"rows-only {name}: {len(spark_pdf)} rows")
             continue
         t0 = time.perf_counter()
         try:
-            duck_pdf = con.execute(oracles[name]).df()
+            duck_pdf = con.execute(oracle).df()
         except Exception as exc:  # noqa: BLE001
             row["problems"] = [f"duckdb raised {type(exc).__name__}: {exc}"]
             print(f"FAIL {name}: {row['problems'][0]}")
